@@ -9,9 +9,7 @@ import org.apache.spark.sql.functions._
   * Headline: end-to-end parse+extract throughput (docs/sec) on the
   * interleaved text+media corpus (BASELINE.json metric), measured over an
   * amplified deterministic corpus so the kernel dominates scheduling
-  * overhead. `scaling` mode runs the identical extraction job at N=8 and
-  * 4N=32 local cores (the sandbox proxy for two cluster sizes —
-  * BASELINE.md protocol) and reports throughput at both plus efficiency.
+  * overhead.
   */
 object Bench {
 
@@ -119,7 +117,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val amp = sys.env.getOrElse("SPARK_GRAFT_AMP", "20").toInt
 
-    if (args.headOption.contains("scaling")) { runScaling(sfDir, amp); return }
     if (args.headOption.contains("extract")) { runExtractOnly(sfDir, amp); return }
     if (args.headOption.contains("gen")) { // corpus generation only (excluded from timing)
       val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
@@ -324,26 +321,5 @@ object Bench {
     val (salted, saltedTasks) = trials.map(_._2).minBy(_._1)
     println(f"""{"metric":"skew_speedup","value":${naive / salted}%.2f,"unit":"x","queries":{"naive_hash_sec":$naive%.2f,"size_aware_sec":$salted%.2f,"whales":${2 * n},"naive_max_whales_per_task":$naiveLoad,"salted_max_whales_per_task":$saltedLoad,"naive_task_p50_ms":${pct(naiveTasks, 0.5)},"naive_task_p99_ms":${pct(naiveTasks, 0.99)},"naive_task_max_ms":${pct(naiveTasks, 1.0)},"salted_task_p50_ms":${pct(saltedTasks, 0.5)},"salted_task_p99_ms":${pct(saltedTasks, 0.99)},"salted_task_max_ms":${pct(saltedTasks, 1.0)},"tasks":${naiveTasks.length}},"sf":"$sfDir"}""")
     spark.stop()
-  }
-
-  /** Two-parallelism scaling evidence (north rule proxy): identical input
-    * and job at local[8] then local[32]; efficiency =
-    * (docs/s @32) / (4 × docs/s @8). */
-  private def runScaling(sfDir: String, amp: Int): Unit = {
-    def measure(cpus: String): Double = {
-      val spark = session(cpus)
-      try {
-        extractionRun(spark, sfDir, math.max(1, amp / 4)) // warm-up
-        val best = (1 to 2).map { _ =>
-          val (docs, _, secs) = extractionRun(spark, sfDir, amp)
-          docs / secs
-        }.max // best-of-2 guards against one-off GC pauses in-JVM
-        best
-      } finally { spark.stop(); System.gc() }
-    }
-    val tp8 = measure("8")
-    val tp32 = measure("32")
-    val eff = tp32 / (4.0 * tp8)
-    println(f"""{"metric":"scaling_efficiency","value":$eff%.3f,"unit":"ratio","queries":{"n_cores":8,"docs_per_sec_n":$tp8%.0f,"4n_cores":32,"docs_per_sec_4n":$tp32%.0f},"sf":"$sfDir"}""")
   }
 }

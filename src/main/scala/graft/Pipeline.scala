@@ -103,13 +103,13 @@ object Pipeline {
 
   /** Contract table (doc_id, spans) → curated (doc_id, text, predicted_lang,
     * n_words). */
-  def curate(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    val repart =
-      if (cfg.partitions > 0)
-        SgmlExtract.sizeAwareRepartition(docs, cfg.partitions)
-      else docs
-    curateExtracted(SgmlExtract.extractDf(repart, cfg.extract), cfg)
-  }
+  def curate(docs: DataFrame, cfg: Config = Config()): DataFrame =
+    curateExtracted(SgmlExtract.extractDf(repartitioned(docs, cfg), cfg.extract), cfg)
+
+  /** Stage 1's placement: size-aware when `cfg.partitions` asks for it. */
+  private def repartitioned(docs: DataFrame, cfg: Config): DataFrame =
+    if (cfg.partitions > 0) SgmlExtract.sizeAwareRepartition(docs, cfg.partitions)
+    else docs
 
   /** Stage 2: span-concat + error count + quality gate — shared verbatim
     * by the streaming leg (StreamingExtract.curatedStream), so the batch
@@ -184,11 +184,7 @@ object Pipeline {
     * pairs) on top of curate's four shuffles; the p2 oracle replays it
     * with a recursive-CTE transitive closure. */
   def curateClustered(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    val repart =
-      if (cfg.partitions > 0)
-        SgmlExtract.sizeAwareRepartition(docs, cfg.partitions)
-      else docs
-    val extracted = SgmlExtract.extractDf(repart, cfg.extract)
+    val extracted = SgmlExtract.extractDf(repartitioned(docs, cfg), cfg.extract)
     val quality = qualityStage(extracted)
     val exact = Dedup.swapCache("p2-exact", exactStage(quality))
     val pairs = Dedup.verifiedPairsOf(exact, "doc_id", "text",
@@ -281,11 +277,7 @@ object Pipeline {
       log.info(s"resume: reusing committed extract at $outPath/extracted")
     else {
       val docs = SgmlExtract.readDocs(spark, inPath, format).toDF()
-      val repart =
-        if (cfg.partitions > 0)
-          SgmlExtract.sizeAwareRepartition(docs, cfg.partitions)
-        else docs
-      SgmlExtract.extractDf(repart, cfg.extract)
+      SgmlExtract.extractDf(repartitioned(docs, cfg), cfg.extract)
         .withColumn("__pid", spark_partition_id())
         .write.mode("overwrite").parquet(s"$outPath/extracted")
       val out = fs.create(metaPath, true)
@@ -293,13 +285,8 @@ object Pipeline {
       finally out.close()
     }
     val extracted = spark.read.parquet(s"$outPath/extracted")
-    val extractRows = extracted
-      .groupBy(col("__pid").as("partition_id"))
-      .agg(count(lit(1)).as("docs"),
-        sum(expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))")).as("bytes"),
-        sum(size(col("spans")).cast("long")).as("spans"),
-        sum(size(col("errors")).cast("long")).as("errors"))
-      .select(lit(runId).as("run_id"), lit("extract").as("stage"),
+    val extractRows = SgmlExtract.partitionRows(extracted, runId)
+      .select(col("run_id"), lit("extract").as("stage"),
         col("partition_id"), col("docs"), col("bytes"), col("spans"),
         col("errors"),
         lit(null).cast("long").as("dropped_buckets"),

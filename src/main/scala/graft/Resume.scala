@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * chunks; each chunk is one parallel Spark job that
   *   1. reads ONLY that chunk's files (explicit file list → no rescan of
   *      completed data, real I/O pruning at any scale),
-  *   2. extracts spans via the narrow mapPartitions kernel,
+  *   2. extracts spans via the `extract_spans` expression,
   *   3. overwrites `out/data/chunk=<id>/` (idempotent: a re-run of a
   *      half-written chunk replaces it, never duplicates it),
   *   4. appends one manifest row per completed file plus per-partition
@@ -84,8 +84,6 @@ object Resume {
       // is sized to occupy the cluster, so caching one chunk at a time is
       // bounded (MEMORY_AND_DISK: eviction falls back to a narrow
       // recompute, never a wrong answer).
-      if (!spark.catalog.functionExists("extract_spans"))
-        graft.functions.ExtractSpansExpr.register(spark)
       val extracted = spark.read.parquet(files: _*)
         .select(
           col("doc_id").cast("string").as("doc_id"),
@@ -94,8 +92,7 @@ object Resume {
             lit(null).cast("string").as("media_ref"), lit(0).as("offset"))).as("spans"),
           input_file_name().as("__file"))
         .select(col("doc_id"),
-          expr(s"extract_spans(spans, '${cfg.dialect}', '${cfg.space}', " +
-            s"${cfg.boilerplate})").as("r"),
+          SgmlExtract.extractCol(spark, cfg).as("r"),
           col("__file"))
         .select(col("doc_id"), col("r.spans").as("spans"), col("r.errors").as("errors"),
           col("__file"), spark_partition_id().as("__pid"))
@@ -110,7 +107,7 @@ object Resume {
         val g = extracted.groupBy(col("__file"), col("__pid"))
           .agg(
             count(lit(1)).as("docs"),
-            sum(expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))")).as("bytes"),
+            sum(SgmlExtract.spanChars).as("bytes"),
             sum(size(col("spans")).cast("long")).as("spans"),
             sum(size(col("errors")).cast("long")).as("errors"))
           .collect()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sgml._
 
@@ -16,11 +16,11 @@ final case class Extracted(doc_id: String, spans: Seq[OutSpan], errors: Seq[ErrR
 
 /** The Spark surface of the extraction engine (SURVEY.md §1.2, §3 E1).
   *
-  * One narrow `mapPartitions` stage: decode → tokenize → build → emit, one
-  * doc per row, events never leave the task. Columnar at rest (Parquet/
-  * Iceberg), row-oriented only inside the kernel. No shuffle on the bulk
-  * path; shuffles exist only before (size-aware repartition for skew) and
-  * after (writes / aggregations).
+  * One Catalyst expression, `extract_spans` (graft.functions.ExtractSpansExpr):
+  * decode → tokenize → build → emit, one doc per row, events never leave
+  * the task. Columnar at rest (Parquet/Iceberg), row-oriented only inside
+  * the kernel. No shuffle on the bulk path; shuffles exist only before
+  * (size-aware repartition for skew) and after (writes / aggregations).
   */
 object SgmlExtract {
 
@@ -39,54 +39,30 @@ object SgmlExtract {
       boilerplate = boilerplate)
   }
 
-  /** Parse one interleaved doc with the GIVEN parser instance (reset
-    * first): text spans feed the incremental parser in order, media spans
-    * pass through at their offsets (F14). The parser is reused across the
-    * partition's docs — per-doc construction of the tokenizer/builder/
-    * buffers dominated small-doc throughput (measured: GC-bound at 32
-    * cores before reuse). */
-  def parseDocWith(p: SgmlParser, doc: Doc, cfg: ParserConfig): Extracted = {
-    p.reset()
+  /** Push one interleaved doc into a reset parser: text spans feed the
+    * incremental parser in order, media spans pass through at their
+    * offsets (F14). */
+  private def feedDoc(doc: Doc)(p: SgmlParser): Unit =
     if (doc.spans != null) doc.spans.foreach { s =>
-      s.kind match {
-        case "media" => p.media(s.media_ref, s.offset)
-        case _       => if (s.text != null) p.feed(s.text, s.offset)
-      }
+      if (s.kind == "media") p.media(s.media_ref, s.offset)
+      else if (s.text != null) p.feed(s.text, s.offset)
     }
-    val r = p.finish()
-    Extracted(
-      doc.doc_id,
-      r.spans(cfg).map(s => OutSpan(s.kind, s.text, s.media_ref, s.offset)),
-      r.errors.map(e => ErrRow(e.code, e.off, e.detail)))
-  }
 
-  /** Single-doc convenience (fresh parser). */
+  /** Single-doc parse outside Spark (streaming chunk assembly, tests). */
   def parseDoc(doc: Doc, cfg: ParserConfig): Extracted =
-    try parseDocWith(new SgmlParser(cfg), doc, cfg)
-    catch {
-      case e: Throwable =>
-        Extracted(doc.doc_id, Seq.empty,
-          Seq(ErrRow("internal-error", 0, String.valueOf(e.getMessage).take(200))))
-    }
+    new ParseDriver(cfg).apply(feedDoc(doc)) { r =>
+      Extracted(doc.doc_id,
+        r.spans(cfg).map(s => OutSpan(s.kind, s.text, s.media_ref, s.offset)),
+        r.errors.map(e => ErrRow(e.code, e.off, e.detail)))
+    }.fold(detail =>
+      Extracted(doc.doc_id, Seq.empty, Seq(ErrRow("internal-error", 0, detail))),
+      identity)
 
-  /** The flagship transform: Dataset[Doc] → Dataset[Extracted], one narrow
-    * stage (SURVEY.md §3: no shuffle; ParserConfig + ONE reused parser per
-    * partition, DTD cached once per JVM via HtmlDtd's lazy val). */
+  /** The flagship transform, typed: a view over `extractDf`, so both
+    * surfaces run the same expression. */
   def extract(ds: Dataset[Doc], config: Config): Dataset[Extracted] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val cfg = config.toParserConfig // per-partition, not per-doc
-      var parser = new SgmlParser(cfg)
-      it.map { doc =>
-        try parseDocWith(parser, doc, cfg)
-        catch {
-          case e: Throwable => // poisoned doc → error row, never a failed
-            parser = new SgmlParser(cfg) // state unknown after throw: replace
-            Extracted(doc.doc_id, Seq.empty,
-              Seq(ErrRow("internal-error", 0, String.valueOf(e.getMessage).take(200))))
-        }
-      }
-    }
+    extractDf(ds.toDF(), config).as[Extracted]
   }
 
   /** Production source: read a contract-schema table `(doc_id, spans)`
@@ -107,7 +83,7 @@ object SgmlExtract {
   /** Wrap the driver corpus (`documents.parquet`: doc_id int64, text, lang,
     * source, n_chars) into the contract schema — one text span at offset 0.
     * Columns pruned BEFORE the opaque kernel so the parquet scan reads only
-    * doc_id+text (pushdown stops at mapPartitions — SURVEY.md §4). */
+    * doc_id+text (pushdown stops at the kernel — SURVEY.md §4). */
   def wrapDocuments(spark: SparkSession, sfDir: String): Dataset[Doc] =
     wrapDocsDf(spark.read.parquet(s"$sfDir/documents.parquet"))
 
@@ -230,16 +206,19 @@ object SgmlExtract {
   /** Columnar extraction via the native Catalyst expression
     * (graft.functions.ExtractSpansExpr): no Doc/Extracted encoder
     * round-trip, inputs stay UTF8String off the vectorized Parquet
-    * reader. Preferred at scale; `extract` (typed) has identical
-    * semantics. Registers the function on the session if absent. */
-  def extractDf(df: DataFrame, config: Config): DataFrame = {
-    val spark = df.sparkSession
+    * reader. Registers the function on the session if absent. */
+  def extractDf(df: DataFrame, config: Config): DataFrame =
+    df.select(col("doc_id"), extractCol(df.sparkSession, config).as("r"))
+      .select(col("doc_id"), col("r.spans").as("spans"), col("r.errors").as("errors"))
+
+  /** `extract_spans(spans, …)` with every `Config` field as a literal
+    * argument (the expression node itself cannot be wrapped in a Column
+    * from outside `org.apache.spark.sql`). */
+  private[graft] def extractCol(spark: SparkSession, config: Config): Column = {
     if (!spark.catalog.functionExists("extract_spans"))
       graft.functions.ExtractSpansExpr.register(spark)
-    df.select(col("doc_id"),
-        expr(s"extract_spans(spans, '${config.dialect}', '${config.space}', " +
-          s"${config.boilerplate})").as("r"))
-      .select(col("doc_id"), col("r.spans").as("spans"), col("r.errors").as("errors"))
+    expr(s"extract_spans(spans, '${config.dialect}', '${config.space}', " +
+      s"${config.boilerplate}, ${config.maxErrors}, ${config.maxDocChars})")
   }
 
   /** Serialization sink (SURVEY.md §2.8 W1/W5): parse each doc and write
@@ -250,25 +229,13 @@ object SgmlExtract {
   def serializeCanonical(ds: Dataset[Doc], config: Config): DataFrame = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
-      val cfg = config.toParserConfig
-      var parser = new SgmlParser(cfg)
+      val driver = new ParseDriver(config.toParserConfig)
+      // a poisoned doc surfaces as (xml_out = null, error != null), never
+      // as a silently serialized ''
       it.map { doc =>
-        // mirror extract(): a throw replaces the possibly-corrupt reused
-        // parser and surfaces as (xml_out = null, error != null) instead
-        // of silently serializing a poisoned doc as ''
-        try {
-          parser.reset()
-          if (doc.spans != null) doc.spans.foreach { s =>
-            if (s.kind == "media") parser.media(s.media_ref, s.offset)
-            else if (s.text != null) parser.feed(s.text, s.offset)
-          }
-          val r = parser.finish()
-          (doc.doc_id, Serializer.xml(r.content, canonical = true), null: String)
-        } catch {
-          case e: Throwable =>
-            parser = new SgmlParser(cfg) // state unknown after throw
-            (doc.doc_id, null: String,
-              "internal-error: " + String.valueOf(e.getMessage).take(200))
+        driver(feedDoc(doc))(r => Serializer.xml(r.content, canonical = true)) match {
+          case Right(xml) => (doc.doc_id, xml, null: String)
+          case Left(detail) => (doc.doc_id, null: String, "internal-error: " + detail)
         }
       }
     }.toDF("doc_id", "xml_out", "error")
@@ -317,20 +284,15 @@ object SgmlExtract {
     * `hash(doc_id)` — uniform over all partitions). The previous
     * branch/window/union design funnelled whale BYTES through a
     * single-partition window and re-read the source per branch — it cost
-    * more than it balanced once the parse kernel got fast.
-    *
-    * `whalePartitions` is retained for API compatibility; whales now
-    * share the one partition space with the uniformly-spread normals, so
-    * a dedicated whale band no longer helps. */
+    * more than it balanced once the parse kernel got fast. */
   def sizeAwareRepartition(df: DataFrame, numPartitions: Int,
-      whaleChars: Long = 8L << 20, whalePartitions: Int = 0): DataFrame = {
-    val chars = expr("aggregate(spans, 0L, (acc, s) -> acc + length(coalesce(s.text, '')))")
+      whaleChars: Long = 8L << 20): DataFrame = {
     // limit BEFORE collect: the cap must bound the driver transfer itself,
     // not just check it after the fact (a corpus where most docs are
     // whales would otherwise OOM the driver before the check ran)
     val whaleIds = df
       .select(col("doc_id"))
-      .where(chars >= whaleChars)
+      .where(spanChars >= whaleChars)
       .limit(MaxDriverWhales + 1)
       .collect().map(_.getString(0)).sorted
     if (whaleIds.isEmpty || whaleIds.length > MaxDriverWhales)
@@ -380,24 +342,30 @@ object SgmlExtract {
       count(lit(1)).as("docs"),
       sum(size(col("spans")).cast("long")).as("spans"),
       sum(size(col("errors")).cast("long")).as("errors"),
-      sum(expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))"))
-        .as("chars"))
+      sum(spanChars).as("chars"))
   }
 
-  /** Per-partition lineage rows (run_id, partition_id, docs, spans, errors,
-    * bytes) — computed in the same narrow stage as the parse, so
+  /** Text chars over a row's `spans` (a null text counts 0). */
+  private[graft] def spanChars: Column =
+    expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))")
+
+  /** Per-partition lineage rows (run_id, partition_id, docs, bytes, spans,
+    * errors) — computed in the same narrow stage as the parse, so
     * spark_partition_id() is the parse partition (FIXTURES.md lineage
     * schema; north rule "per-partition lineage + metrics"). */
-  def lineage(extracted: Dataset[Extracted], runId: String): DataFrame = {
+  def lineage(extracted: Dataset[Extracted], runId: String): DataFrame =
+    partitionRows(extracted.withColumn("__pid", spark_partition_id()), runId)
+
+  /** `lineage` over a frame that already carries its parse partition in
+    * `__pid` (Pipeline.run stores it with the extracted product). */
+  private[graft] def partitionRows(extracted: DataFrame, runId: String): DataFrame =
     extracted
-      .withColumn("__pid", spark_partition_id())
       .groupBy(col("__pid").as("partition_id"))
       .agg(
         count(lit(1)).as("docs"),
-        sum(expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))")).as("bytes"),
+        sum(spanChars).as("bytes"),
         sum(size(col("spans")).cast("long")).as("spans"),
         sum(size(col("errors")).cast("long")).as("errors"))
-      .withColumn("run_id", lit(runId))
-      .select("run_id", "partition_id", "docs", "bytes", "spans", "errors")
-  }
+      .select(lit(runId).as("run_id"), col("partition_id"), col("docs"),
+        col("bytes"), col("spans"), col("errors"))
 }

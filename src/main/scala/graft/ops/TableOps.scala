@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Doc, SgmlExtract}
-import graft.sgml.{Node, SgmlParser}
+import graft.sgml.{Node, ParseDriver, ParseResult}
 
 /** Structured extraction: HTML tables → relational rows.
   *
@@ -16,8 +16,8 @@ import graft.sgml.{Node, SgmlParser}
   * the correct DOM per the HTML4 content model), then walks the
   * task-local DOM collecting cells in document order.
   *
-  * Scale shape: identical to the flagship — ONE narrow mapPartitions
-  * stage, parser reused across the partition's docs, trees never leave
+  * Scale shape: ONE narrow mapPartitions stage, one ParseDriver (parser
+  * reused across the partition's docs) per partition, trees never leave
   * the task, output is a flat frame whose row count is the corpus cell
   * count. No shuffle, no driver involvement.
   */
@@ -55,27 +55,22 @@ object TableOps {
     val spark = ds.sparkSession
     import spark.implicits._
     ds.mapPartitions { it =>
-      val cfg = config.toParserConfig
-      var parser = new SgmlParser(cfg)
+      val driver = new ParseDriver(config.toParserConfig)
       it.flatMap { doc =>
-        try cellsOfDoc(parser, doc)
-        catch {
-          case e: Throwable => // poisoned doc → sentinel row, never a failed task
-            parser = new SgmlParser(cfg) // state unknown after throw: replace
-            Vector((doc.doc_id, -1, -1, -1, "error",
-              String.valueOf(e.getMessage).take(200)))
-        }
+        // media spans carry no cells: only text is fed
+        driver { p =>
+          if (doc.spans != null) doc.spans.foreach { s =>
+            if (s.kind != "media" && s.text != null) p.feed(s.text, s.offset)
+          }
+        }(cellsOf(doc.doc_id, _))
+          // poisoned doc → sentinel row, never a failed task
+          .fold(detail => Vector((doc.doc_id, -1, -1, -1, "error", detail)), identity)
       }
     }.toDF("doc_id", "tbl_idx", "row_idx", "col_idx", "cell_tag", "cell")
   }
 
-  private def cellsOfDoc(parser: SgmlParser,
-      doc: Doc): Vector[(String, Int, Int, Int, String, String)] = {
-    parser.reset()
-    if (doc.spans != null) doc.spans.foreach { s =>
-      if (s.kind != "media" && s.text != null) parser.feed(s.text, s.offset)
-    }
-    val r = parser.finish()
+  private def cellsOf(docId: String,
+      r: ParseResult): Vector[(String, Int, Int, Int, String, String)] = {
     val out = Vector.newBuilder[(String, Int, Int, Int, String, String)]
     var tblIdx = 0
     // descendant text concatenation; an undeclared entity keeps its
@@ -100,7 +95,7 @@ object TableOps {
             var colIdx = 0
             def cells(c: Node): Unit = c match {
               case cell: Node.Elem if cell.name == "td" || cell.name == "th" =>
-                out += ((doc.doc_id, tbl, rowIdx, colIdx, cell.name, textOf(cell)))
+                out += ((docId, tbl, rowIdx, colIdx, cell.name, textOf(cell)))
                 colIdx += 1
                 cell.children.foreach(visit) // nested tables inside a cell
               case e2: Node.Elem if e2.name == "table" => visit(e2)

@@ -159,49 +159,6 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
     }
   }
 
-  /** Array twin of feed() — the Spark kernel's hot path. */
-  def feedArr(a: Array[Char], n: Int): Unit = {
-    var i = 0
-    while (i < n) {
-      if (state == S_TEXT && !log.overflowed && !frozen && !pendingCr) {
-        val msActive = msDepth > 0
-        val netActive = netDepth > 0
-        var j = i
-        var break = false
-        while (j < n && !break) {
-          val cc = a(j)
-          if (cc == '<' || cc == '&' || cc == '\r' ||
-              (msActive && cc == ']') || (netActive && cc == '/')) break = true
-          else j += 1
-        }
-        if (j > i) {
-          if (textBuf.length() == 0) textStart = pos
-          textBuf.append(a, i, j - i)
-          pos += j - i
-          i = j
-        }
-        if (i < n) { push(a(i)); i += 1 }
-      } else if (state == S_RAW && !log.overflowed && !frozen && !pendingCr) {
-        val rcdata = !rawIsCdata
-        var j = i
-        var break = false
-        while (j < n && !break) {
-          val cc = a(j)
-          if (cc == '<' || cc == '\r' || (rcdata && cc == '&')) break = true
-          else j += 1
-        }
-        if (j > i) {
-          rawBuf.append(a, i, j - i)
-          pos += j - i
-          i = j
-        }
-        if (i < n) { push(a(i)); i += 1 }
-      } else {
-        push(a(i)); i += 1
-      }
-    }
-  }
-
   /** Interleaved media passthrough: flush pending text, emit in order. */
   def media(ref: String, off: Int): Unit = {
     if (state == S_TEXT) { srProcess(); flushText() }

@@ -32,7 +32,7 @@ final case class DocBuffer(chunks: Seq[Chunk], done: Boolean = false)
   * Two shapes (SURVEY.md §2.7 "grouping/streaming state" row):
   *
   * 1. Whole docs on the stream → the batch kernel applied verbatim: the
-  *    `mapPartitions` parse stage is stateless per row, so the same typed
+  *    `extract_spans` expression is stateless per row, so the same typed
   *    transform runs under `readStream` unchanged (no watermark needed).
   * 2. Chunked docs → `flatMapGroupsWithState` keyed by doc_id buffers
   *    chunks until `last=true`, then parses the assembled doc and emits

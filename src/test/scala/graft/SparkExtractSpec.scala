@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.ops.Dedup
 
-/** Spark-surface integration tests: the mapPartitions extraction kernel,
+/** Spark-surface integration tests: the `extract_spans` extraction kernel,
   * interleaved media passthrough through the Dataset API, lineage rows,
   * size-aware skew repartition, plan shape (pushdown before the opaque
   * kernel), and the training-data ops. */
@@ -42,16 +42,12 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.count() == 500)
   }
 
-  test("catalyst expression path ≡ typed mapPartitions path") {
-    import spark.implicits._
+  test("typed extract and extractDf share one schema and the SQL surface") {
     val docs = SgmlExtract.wrapDocumentsMarked(spark, sf)
     val typed = SgmlExtract.extract(docs, cfg).toDF()
     val exprd = SgmlExtract.extractDf(docs.toDF(), cfg)
     assert(typed.schema.map(f => (f.name, f.dataType)) ===
       exprd.schema.map(f => (f.name, f.dataType)))
-    val diff = typed.as("a").join(exprd.as("b"), "doc_id")
-      .filter(col("a.spans") =!= col("b.spans") || col("a.errors") =!= col("b.errors"))
-    assert(diff.count() === 0)
     assert(exprd.count() === 500)
     // SQL surface via the registered function
     docs.toDF().createOrReplaceTempView("docs_v")
@@ -113,6 +109,17 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val huge = rs.find(_.doc_id == "huge").get
     assert(huge.errors.exists(_.code == "doc-too-large"))
     assert(rs.find(_.doc_id == "ok").get.errors.isEmpty)
+    // both limits reach the expression through extractDf
+    def codes(df: org.apache.spark.sql.DataFrame, id: String): Seq[String] =
+      df.filter(col("doc_id") === id).select(col("errors.code"))
+        .as[Seq[String]].collect().head
+    assert(codes(SgmlExtract.extractDf(ds.toDF(), small), "huge")
+      .contains("doc-too-large"))
+    val noisy = Seq(Doc("noisy", Seq(InSpan("text",
+      "<p>" + ("x</b>" * 10) + "</p>", null, 0)))).toDS().toDF()
+    assert(codes(SgmlExtract.extractDf(noisy, cfg), "noisy").length > 3)
+    assert(codes(SgmlExtract.extractDf(noisy, cfg.copy(maxErrors = 2)), "noisy") ===
+      Seq("unmatched-end-tag", "unmatched-end-tag", "max-errors"))
   }
 
   test("lineage: one row per parse partition, totals match") {
@@ -131,12 +138,11 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(Doc("whale1", Seq(InSpan("text", "w" * 3000, null, 0))),
           Doc("whale2", Seq(InSpan("text", "w" * 3000, null, 0))))
     val df = docs.toDS().toDF()
-    val rep = SgmlExtract.sizeAwareRepartition(df, 4, whaleChars = 1000,
-      whalePartitions = 2)
+    val rep = SgmlExtract.sizeAwareRepartition(df, 4, whaleChars = 1000)
     val parts = rep.withColumn("pid", spark_partition_id())
       .filter(col("doc_id").startsWith("whale"))
       .select("doc_id", "pid").as[(String, Int)].collect().toMap
-    // round-robin whale placement: 2 whales over 2 whale partitions →
+    // round-robin whale placement: 2 whales over 4 partitions →
     // exactly one whale per task, deterministically (never co-located)
     assert(parts.size == 2)
     assert(parts.values.toSet.size == 2, s"whales co-located: $parts")
