@@ -7,9 +7,19 @@
 # so each behaves like a real 2-core executor — otherwise a level borrows
 # the idle cores for GC/compilation and the efficiency ratio is meaningless.
 #
+# The 4N level keeps 8 cores busy, so a host with fewer than 8 cores
+# cannot supply it without oversubscribing: the script then prints
+# "unmeasurable" and exits 0 instead of reporting a meaningless ratio.
+#
 # Usage: scripts/bench_scaling.sh [sf_dir] [amp]
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+NPROC="$(nproc)"
+if [ "$NPROC" -lt 8 ]; then
+  echo "[scaling] unmeasurable on this host (needs ≥ 8 cores, has $NPROC)"
+  exit 0
+fi
 
 SF_DIR="${1:-/root/testdata/sf0.1}"
 AMP="${2:-1000}"
@@ -26,7 +36,7 @@ CP="$JAR:/opt/spark/jars/*"
 #
 # Why 2-core executors: the per-executor resources must be IDENTICAL at
 # both levels and the host must be able to supply 4N executors without
-# cross-executor interference. With 4×2=8 of 32 cores busy, per-core
+# cross-executor interference. On a 32-core host with 4×2=8 cores busy, per-core
 # speed is the same at both levels (measured); at 4×7=28 busy cores the
 # box itself saturates (shared memory bandwidth / L3 / frequency) and
 # per-core speed drops ~28% — an artifact a real 4N-executor cluster,
@@ -42,9 +52,10 @@ run_level() { # n_executors
     -cp "$CP" graft.Bench extract 2>/dev/null | tail -1
 }
 
-echo "[scaling] corpus warm-up / generation (32 cores)" >&2
-SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_AMP="$AMP" SPARK_GRAFT_CPUS=32 \
-  java -Xmx48g -cp "$CP" graft.Bench gen 2>/dev/null || true
+# warm-up uses every core, with 1.5 GiB of heap per core
+echo "[scaling] corpus warm-up / generation ($NPROC cores)" >&2
+SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_AMP="$AMP" SPARK_GRAFT_CPUS="$NPROC" \
+  java "-Xmx$((NPROC * 3 / 2))g" -cp "$CP" graft.Bench gen 2>/dev/null || true
 
 echo "[scaling] N=1 executor (2 cores)" >&2
 J8=$(run_level 1)

@@ -13,16 +13,20 @@ import graft.ops.{Dedup, TextOps}
   * Stage shapes (each documented at its operator):
   *  1. extract: skew-isolated narrow parse (SgmlExtract.extractDf over
   *     sizeAwareRepartition) — shuffle 0 (the repartition).
-  *  2. text + quality: narrow column ops (TextOps.withQuality), filter.
+  *  2. text + quality: narrow — span concat, then one Scala pass per doc
+  *     for the word/stopword/letter counts (TextOps.withQuality), filter.
   *  3. exact dedup: row_number over a window keyed by md5(text), keep
   *     the lowest doc_id — shuffle 1, no join.
   *  4. fuzzy dedup: MinHash band bucket-collect → Jaccard-verified pairs
-  *     (Dedup.verifiedPairsOf) — shuffle 2 (band groupBy); survivors via
-  *     left-anti join on the losers (every doc that is the GREATER member
-  *     of a verified pair — deterministic, order-free) — shuffle 3.
+  *     (Dedup.verifiedPairsOf; a capped run first prunes singleton and
+  *     over-cap buckets, Dedup.capBuckets) — shuffle 2 (band groupBy);
+  *     survivors via left-anti join on the losers (every doc that is the
+  *     GREATER member of a verified pair — deterministic, order-free) —
+  *     shuffle 3.
   *     Losers are bounded by the duplicate rate, so the anti-join's
   *     small side broadcasts in practice (Spark decides; no hint forced).
-  *  5. language annotation: narrow (TextOps.withLangId).
+  *  5. language annotation: narrow — one Scala pass per doc over
+  *     `lower(text)` (TextOps.withLangId).
   *
   * Deterministic end to end, and SQL-expressible stage by stage — the
   * p1_curate query is value-verified against a DuckDB oracle that

@@ -49,10 +49,14 @@ object Resume {
   /** Files of `inputPath` not yet recorded complete in the manifest. */
   def pendingFiles(spark: SparkSession, inputPath: String, outDir: String): Seq[String] = {
     val all = spark.read.parquet(inputPath).inputFiles.toSeq.sorted
+    val manifest = new org.apache.hadoop.fs.Path(manifestPath(outDir))
+    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // no manifest = first attempt; an unreadable one must fail, not be
+    // mistaken for a first attempt that reprocesses every file
     val done: Set[String] =
-      try spark.read.parquet(manifestPath(outDir))
+      if (!fs.exists(manifest)) Set.empty
+      else spark.read.parquet(manifest.toString)
         .select("file").distinct.collect().map(_.getString(0)).toSet
-      catch { case _: Throwable => Set.empty } // first attempt: no manifest yet
     all.filterNot(done)
   }
 

@@ -24,6 +24,8 @@ final case class Extracted(doc_id: String, spans: Seq[OutSpan], errors: Seq[ErrR
   */
 object SgmlExtract {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Serializable parse options for executors. */
   final case class Config(
       dialect: String = "html4",
@@ -295,6 +297,11 @@ object SgmlExtract {
       .where(spanChars >= whaleChars)
       .limit(MaxDriverWhales + 1)
       .collect().map(_.getString(0)).sorted
+    if (whaleIds.length > MaxDriverWhales)
+      log.warn(s"sizeAwareRepartition: ${whaleIds.length}+ whales (docs of " +
+        s">= $whaleChars chars; counting stops past the cap) exceed " +
+        s"MaxDriverWhales = $MaxDriverWhales; falling back to plain hash " +
+        "partitioning on doc_id, so whales may share a task")
     if (whaleIds.isEmpty || whaleIds.length > MaxDriverWhales)
       return df.repartition(numPartitions, col("doc_id"))
     val probes = partitionProbeKeys(numPartitions)

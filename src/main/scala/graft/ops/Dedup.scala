@@ -47,7 +47,7 @@ object Dedup {
 
   /** The mega-bucket valve, shared by every bucket-collect operator
     * (verifiedPairsOf, simhashPairs, Similarity.embeddingNearDupsOf):
-    * keep only rows whose `keyCols` group has ≤ maxBucket members.
+    * keep only rows whose `keyCols` group has 2..maxBucket members.
     *
     * The pre-pass matters: filtering collect_list OUTPUT by size still
     * materializes the mega bucket inside one aggregation buffer first —
@@ -57,9 +57,14 @@ object Dedup {
     * the extra shuffle is the price of the guarantee and is only paid
     * when the valve is ON. Dropped buckets are dropped WHOLE — their
     * members are boilerplate/template mass better handled by exact dedup
-    * upstream; droppedBucketStats counts what the cap discarded. At the
-    * default Int.MaxValue this is the identity (oracle parity at test
-    * SFs: zero plan change). */
+    * upstream; droppedBucketStats counts what the cap discarded.
+    * Singleton buckets are pruned in the same pre-pass (LSH "block
+    * purging"): they can never yield a pair, every caller drops them
+    * after the collect anyway, and on a mostly-unique corpus they are
+    * nearly all the buckets — keeping them bloats the semi-join's key
+    * side and the collect_list input for nothing. At the default
+    * Int.MaxValue this is the identity (oracle parity at test SFs: zero
+    * plan change). */
   private[ops] def capBuckets(banded: DataFrame, keyCols: Seq[String],
       maxBucket: Int): DataFrame =
     if (maxBucket == Int.MaxValue) banded
@@ -72,7 +77,7 @@ object Dedup {
       val b = swapCache(s"capBuckets:${keyCols.mkString(",")}", banded)
       val ok = b.groupBy(keyCols.map(col): _*)
         .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBucket)
+        .filter(col("__n") >= 2 && col("__n") <= maxBucket)
         .select(keyCols.map(col): _*)
       b.join(ok, keyCols, "left_semi")
     }
@@ -152,24 +157,45 @@ object Dedup {
     * string), and duplicates need no removal because min() over each
     * hash function is duplicate-insensitive — the Set and the string
     * concatenations were measured overhead (~20% of d3/p1), not
-    * semantics. */
+    * semantics. Words are likewise index ranges of the lowered text, not
+    * a regex split's copies (that split was ~43% of this kernel). */
   def minhash(text: String): Array[Long] = {
     val sig = Array.fill(NumHashes)(Long.MaxValue)
     if (text == null) return sig
-    val words = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-    if (words.length == 0) return sig
-    val windowLen = math.min(3, words.length)
-    val nWindows = if (words.length < 3) 1 else words.length - 2
+    val t = text.toLowerCase
+    // words as [starts(w), ends(w)) ranges of `t`: the maximal non-\s runs,
+    // i.e. exactly the pieces split("\\s+").filter(_.nonEmpty) would copy
+    var starts = new Array[Int](64)
+    var ends = new Array[Int](64)
+    var nWords = 0
+    var p = 0
+    while (p < t.length) {
+      if (TextOps.isRegexSpace(t.charAt(p))) p += 1
+      else {
+        if (nWords == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, nWords * 2)
+          ends = java.util.Arrays.copyOf(ends, nWords * 2)
+        }
+        starts(nWords) = p
+        while (p < t.length && !TextOps.isRegexSpace(t.charAt(p))) p += 1
+        ends(nWords) = p
+        nWords += 1
+      }
+    }
+    if (nWords == 0) return sig
+    val windowLen = math.min(3, nWords)
+    val nWindows = if (nWords < 3) 1 else nWords - 2
     var s0 = 0
     while (s0 < nWindows) {
       var h = 0L
       var w = s0
       while (w < s0 + windowLen) {
         if (w > s0) h = (h * 31 + ' ') & 0xFFFFFFFFL
-        val s = words(w)
-        var i = 0
-        while (i < s.length) {
-          val cp = s.codePointAt(i)
+        // a word never ends on half a surrogate pair (its successor is
+        // whitespace), so codePointAt over `t` ≡ over the copied word
+        var i = starts(w)
+        while (i < ends(w)) {
+          val cp = t.codePointAt(i)
           h = (h * 31 + cp) & 0xFFFFFFFFL
           i += Character.charCount(cp)
         }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pdf.{Pdf, PdfWriter}
+import scala.util.control.NonFatal
 
 /** Spark surface of the PDF leg (north rule "PDF/layout parse").
   *
@@ -66,7 +67,7 @@ object PdfOps {
               off += s.length + 1 // the inter-page '\n'
               sp
             }
-          } catch { case _: Throwable => Vector.empty[graft.InSpan] }
+          } catch { case NonFatal(_) => Vector.empty[graft.InSpan] }
         graft.Doc(id, spans)
       })
       .toDF("doc_id", "spans")

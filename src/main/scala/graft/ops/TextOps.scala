@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a large-scale training-data pipeline over
   * the `documents` table: quality stats, token counting, language ID,
-  * document fingerprinting. Everything shuffle-free per row (narrow,
-  * whole-stage-codegen'd built-ins where possible; a deterministic Scala
-  * kernel only where built-ins can't express it).
+  * document fingerprinting. Everything shuffle-free per row: whole-stage-
+  * codegen'd built-ins where they compile to a loop, and a deterministic
+  * one-pass Scala kernel where the built-in form would run interpreted
+  * (a higher-order `filter` over split words is `CodegenFallback`) or
+  * can't express the operator at all.
   */
 object TextOps {
 
@@ -32,18 +34,71 @@ object TextOps {
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "der", "die", "das", "und", "le", "la", "les", "et", "el", "los", "y")
 
-  /** Append the quality metric columns to ANY frame with `textCol`
-    * (codegen'd built-ins, no UDF) — reusable by the curation pipeline. */
+  /** Append the quality metric columns to ANY frame with `textCol` —
+    * reusable by the curation pipeline. `n_words`, `stopword_hits` and
+    * `alpha_chars` come from ONE pass of `qualityCounts` (a Scala UDF);
+    * they equal, bit for bit, `size(split(trim(text), "\\s+"))`, the
+    * count of those words that are (case-sensitively) `stopwords`, and
+    * `length(regexp_replace(text, "[^a-zA-Z]", ""))` — the definitions
+    * the t3/p1/p2/st1 oracles replay in SQL.
+    *
+    * The UDF is marked nondeterministic only as an optimizer fence: a
+    * filter on these columns (the pipeline's quality gate) would
+    * otherwise be pushed below the projection and the UDF inlined once
+    * per referenced field — four calls per row, where one suffices. */
   def withQuality(d: DataFrame, textCol: String = "text"): DataFrame = {
-    val words = split(trim(col(textCol)), "\\s+")
-    d.withColumn("n_words", size(words))
-      // stopword hits via higher-order filter (codegen, no UDF)
-      .withColumn("stopword_hits", size(filter(words, w => w.isin(stopwords: _*))))
-      .withColumn("alpha_chars", length(regexp_replace(col(textCol), "[^a-zA-Z]", "")))
+    val counts = udf((t: String) => qualityCounts(t)).asNondeterministic()
+    d.withColumn("__q", counts(col(textCol)))
+      .withColumn("n_words", col("__q._1"))
+      .withColumn("stopword_hits", col("__q._2"))
+      .withColumn("alpha_chars", col("__q._3"))
+      .drop("__q")
       .withColumn("n_chars", length(col(textCol)))
       .withColumn("is_quality",
         (col("n_words") >= 10) && (col("stopword_hits") > 0) &&
         (col("alpha_chars") * 100 >= col("n_chars") * 50))
+  }
+
+  /** Java regex `\s` without UNICODE_CHARACTER_CLASS: `[ \t\n\x0B\f\r]`. */
+  @inline private[ops] def isRegexSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  private val StopSet = stopwords.toSet
+  private val StopMaxLen = stopwords.map(_.length).max
+
+  /** (n_words, stopword_hits, alpha_chars) of `t` in one scan; null for
+    * null text. Words are the pieces of Spark's `split(trim(t), "\\s+")`:
+    * `trim` strips only U+0020, so a leading tab still opens an empty
+    * first piece, and every whitespace run inside the trimmed range adds
+    * exactly one piece ("" is one piece). Empty pieces never match a
+    * stopword; non-empty pieces are the maximal non-`\s` runs. Letters
+    * are ASCII only (`[a-zA-Z]`), and none lie in the trimmed spaces. */
+  private def qualityCounts(t: String): (Int, Int, Int) = {
+    if (t == null) return null
+    var s = 0
+    var e = t.length
+    while (s < e && t.charAt(s) == ' ') s += 1
+    while (e > s && t.charAt(e - 1) == ' ') e -= 1
+    var words = 1
+    var hits = 0
+    var alpha = 0
+    var i = s
+    while (i < e) {
+      if (isRegexSpace(t.charAt(i))) {
+        words += 1
+        while (i < e && isRegexSpace(t.charAt(i))) i += 1
+      } else {
+        val from = i
+        while (i < e && !isRegexSpace(t.charAt(i))) {
+          val c = t.charAt(i)
+          if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')) alpha += 1
+          i += 1
+        }
+        if (i - from <= StopMaxLen && StopSet.contains(t.substring(from, i)))
+          hits += 1
+      }
+    }
+    (words, hits, alpha)
   }
 
   def qualityScore(spark: SparkSession, sfDir: String): DataFrame =
@@ -66,30 +121,60 @@ object TextOps {
     * deterministic heuristic (SURVEY-mandated text-analysis op); compared
     * against the corpus `lang` label for an agreement metric. */
   /** Append `predicted_lang` to ANY frame with `textCol` — reusable by
-    * the curation pipeline; drops its scratch score columns. */
+    * the curation pipeline. One `langOf` pass over Spark's `lower(text)`
+    * (the lower-casing stays the built-in, so it is Spark's exactly). */
   def withLangId(d: DataFrame, textCol: String = "text"): DataFrame = {
-    val markers: Map[String, Seq[String]] = Map(
-      "en" -> Seq("the", "and", "of", "is", "to", "in", "that", "it"),
-      "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "zu"),
-      "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "dans"),
-      "es" -> Seq("el", "los", "las", "es", "un", "una", "que", "por"))
-    val words = split(lower(col(textCol)), "\\s+")
-    val scored = markers.foldLeft(d) { case (df, (l, ms)) =>
-      df.withColumn(s"score_$l", size(filter(words, w => w.isin(ms: _*))))
+    val lang = udf((t: String) => langOf(t))
+    d.withColumn("predicted_lang", lang(lower(col(textCol))))
+  }
+
+  private val LangMarkers: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "and", "of", "is", "to", "in", "that", "it"),
+    "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "zu"),
+    "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "dans"),
+    "es" -> Seq("el", "los", "las", "es", "un", "una", "que", "por"))
+  /** Marker word → bit l set when language l lists it ("un" is both fr
+    * and es). */
+  private val MarkerLangs: Map[String, Int] = LangMarkers.zipWithIndex
+    .flatMap { case ((_, ms), l) => ms.map(_ -> (1 << l)) }
+    .groupMapReduce(_._1)(_._2)(_ | _)
+  private val MarkerMaxLen = LangMarkers.flatMap(_._2).map(_.length).max
+
+  /** The language of an already lower-cased text `t`: "zh" if any char lies
+    * in `[\u4e00-\u9fff]` (no case mapping enters or leaves that block,
+    * so testing the lower-cased text ≡ testing the original), else the
+    * argmax of marker hits over the maximal non-`\s` runs (≡ the
+    * non-empty pieces of `split(t, "\\s+")`), ties resolved
+    * en > de > fr > es. Null text scores null everywhere, which the
+    * argmax chain has always resolved to "es". */
+  private def langOf(t: String): String = {
+    if (t == null) return "es"
+    val score = new Array[Int](4)
+    var i = 0
+    val n = t.length
+    while (i < n) {
+      val c = t.charAt(i)
+      if (isRegexSpace(c)) i += 1
+      else {
+        val from = i
+        while (i < n && !isRegexSpace(t.charAt(i))) {
+          val ch = t.charAt(i)
+          if (ch >= '\u4e00' && ch <= '\u9fff') return "zh"
+          i += 1
+        }
+        val m: Int = if (i - from > MarkerMaxLen) 0
+          else MarkerLangs.getOrElse(t.substring(from, i), 0)
+        if (m != 0) {
+          var l = 0
+          while (l < 4) { if ((m & (1 << l)) != 0) score(l) += 1; l += 1 }
+        }
+      }
     }
-    val hasCjk = col(textCol).rlike("[\\u4e00-\\u9fff]")
-    scored
-      .withColumn("predicted_lang",
-        when(hasCjk, lit("zh")).otherwise(
-          // deterministic argmax with fixed tie order en>de>fr>es
-          when(col("score_en") >= col("score_de") &&
-               col("score_en") >= col("score_fr") &&
-               col("score_en") >= col("score_es"), "en")
-            .when(col("score_de") >= col("score_fr") &&
-                  col("score_de") >= col("score_es"), "de")
-            .when(col("score_fr") >= col("score_es"), "fr")
-            .otherwise("es")))
-      .drop("score_en", "score_de", "score_fr", "score_es")
+    val en = score(0); val de = score(1); val fr = score(2); val es = score(3)
+    if (en >= de && en >= fr && en >= es) "en"
+    else if (de >= fr && de >= es) "de"
+    else if (fr >= es) "fr"
+    else "es"
   }
 
   def langId(spark: SparkSession, sfDir: String): DataFrame =

@@ -1,6 +1,7 @@
 package graft.pdf
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Minimal PDF object model + parser — the "PDF/layout parse" leg of the
   * extraction pipeline (BASELINE.json north rule; the SGML/HTML leg is
@@ -612,7 +613,7 @@ object Pdf {
       }
       TextResult(sb.toString, ps.length, doc.errors)
     } catch {
-      case e: Throwable => // absolute backstop: a poisoned doc is data, not a crash
+      case NonFatal(e) => // backstop: a poisoned doc is data, not a crash
         TextResult("", 0, Vector(PdfError("pdf-internal", 0,
           String.valueOf(e.getMessage).take(120))))
     }

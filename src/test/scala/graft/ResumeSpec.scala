@@ -104,4 +104,23 @@ class ResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.count() === 20)
     assert(got.select("doc_id").distinct.count() === 20)
   }
+
+  test("resume: a corrupt manifest fails loudly, not as a first attempt") {
+    val tmp = Files.createTempDirectory("resume3").toString
+    val in = s"$tmp/in"; val out = s"$tmp/out"
+    mkInput(in, nFiles = 2, docsPerFile = 5)
+    val input = tableOf(in)
+    Resume.runAttempt(spark, input, out, filesPerChunk = 1)
+    // overwrite every manifest part with junk (and drop the checksums, so
+    // the failure is the parquet read, not the local-FS checksum)
+    val parts = new java.io.File(Resume.manifestPath(out)).listFiles()
+    assert(parts.exists(_.getName.endsWith(".parquet")))
+    parts.foreach { f =>
+      if (f.getName.endsWith(".crc")) f.delete()
+      else if (f.getName.endsWith(".parquet"))
+        Files.write(f.toPath, "not parquet".getBytes("UTF-8"))
+    }
+    intercept[Exception](Resume.pendingFiles(spark, input, out))
+    intercept[Exception](Resume.runAttempt(spark, input, out, filesPerChunk = 1))
+  }
 }
