@@ -245,15 +245,12 @@ object Bench {
       .limit(2 * n).select("doc_id").as[String].collect()
     val small = spark.range(0, 5000)
       .select(concat(lit("s"), col("id")).as("doc_id"),
-        array(struct(lit("text").as("kind"),
-          concat(lit("<html><body><p>doc "), col("id"), lit("</p></body></html>")).as("text"),
-          lit(null).cast("string").as("media_ref"), lit(0).as("offset"))).as("spans"))
+        SgmlExtract.textSpans(
+          concat(lit("<html><body><p>doc "), col("id"), lit("</p></body></html>"))).as("spans"))
     val whales = collidingIds.toSeq.toDF("doc_id")
       .select(col("doc_id"),
-        array(struct(lit("text").as("kind"),
-          concat(lit("<html><body>"), repeat(lit(para), 30000),
-            lit("</body></html>")).as("text"),
-          lit(null).cast("string").as("media_ref"), lit(0).as("offset"))).as("spans"))
+        SgmlExtract.textSpans(concat(lit("<html><body>"), repeat(lit(para), 30000),
+          lit("</body></html>"))).as("spans"))
     val corpus = small.union(whales)
     corpus.write.mode("overwrite").parquet("/tmp/graft_bench/skew_corpus")
     val docs = spark.read.parquet("/tmp/graft_bench/skew_corpus")

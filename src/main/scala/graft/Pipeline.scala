@@ -18,8 +18,9 @@ import graft.ops.{Dedup, TextOps}
   *  3. exact dedup: row_number over a window keyed by md5(text), keep
   *     the lowest doc_id — shuffle 1, no join.
   *  4. fuzzy dedup: MinHash band bucket-collect → Jaccard-verified pairs
-  *     (Dedup.verifiedPairsOf; a capped run first prunes singleton and
-  *     over-cap buckets, Dedup.capBuckets) — shuffle 2 (band groupBy);
+  *     (Dedup.bandsOf → Dedup.verifiedPairsFromBands; a capped run first
+  *     prunes singleton and over-cap buckets, Dedup.capBuckets) — shuffle
+  *     2 (band groupBy);
   *     survivors via left-anti join on the losers (every doc that is the
   *     GREATER member of a verified pair — deterministic, order-free) —
   *     shuffle 3.
@@ -27,6 +28,10 @@ import graft.ops.{Dedup, TextOps}
   *     small side broadcasts in practice (Spark decides; no hint forced).
   *  5. language annotation: narrow — one Scala pass per doc over
   *     `lower(text)` (TextOps.withLangId).
+  *
+  * Stages 2-4 are built in one place (`stages`); `curate`,
+  * `curateExtracted`, `curateClustered`, `run` and `dropAudit` all go
+  * through it and differ only in the keeper rule applied to its pairs.
   *
   * Deterministic end to end, and SQL-expressible stage by stage — the
   * p1_curate query is value-verified against a DuckDB oracle that
@@ -40,20 +45,18 @@ object Pipeline {
     * {{{
     * spark-submit --class graft.Pipeline <jar> <inPath> <outPath> \
     *   [dialect=html4] [space=preserve] [minJaccard=0.5] [partitions=0] \
-    *   [runId=run-0] [format=parquet] [resume=true]
+    *   [maxBucket=1000] [runId=run-0] [format=parquet] [resume=true]
     * }}}
-    * Writes `<outPath>/{extracted,curated,lineage}`. */
+    * Writes `<outPath>/{extracted,curated,lineage}`. An argument that is
+    * not `k=v` with one of these keys, or an unknown dialect/space, fails
+    * before a SparkSession is built. */
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Pipeline <inPath> <outPath> [k=v …]")
-    val kv = args.drop(2).flatMap(_.split("=", 2) match {
-      case Array(k, v) => Some(k -> v)
-      case _ => None
+    val kv = args.drop(2).map(a => a.split("=", 2) match {
+      case Array(k, v) if MainKeys.contains(k) => k -> v
+      case _ => throw new IllegalArgumentException(s"Pipeline: bad argument " +
+        s"'$a' (expected k=v with k one of ${MainKeys.mkString(", ")})")
     }).toMap
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .getOrCreate()
     val cfg = Config(
       extract = SgmlExtract.Config(
         dialect = kv.getOrElse("dialect", "html4"),
@@ -62,12 +65,21 @@ object Pipeline {
       partitions = kv.getOrElse("partitions", "0").toInt,
       maxBucket = kv.get("maxBucket").map(_.toInt)
         .getOrElse(Config().maxBucket))
+    cfg.extract.toParserConfig
+    val spark = SparkSession.builder()
+      .appName("graft-pipeline")
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .getOrCreate()
     run(spark, args(0), args(1), cfg,
       runId = kv.getOrElse("runId", "run-0"),
       format = kv.getOrElse("format", "parquet"),
       resume = kv.getOrElse("resume", "true").toBoolean)
     spark.stop()
   }
+
+  private val MainKeys = Seq("dialect", "space", "minJaccard", "partitions",
+    "maxBucket", "runId", "format", "resume")
 
   final case class Config(
       extract: SgmlExtract.Config = SgmlExtract.Config(dialect = "html4", space = "preserve"),
@@ -77,14 +89,10 @@ object Pipeline {
         * valve, ON by default: a bucket holding >1000 docs is template/
         * boilerplate mass whose Σ|bucket|² pair explosion can stall a
         * stage, and exact dedup upstream already collapsed true copies.
-        * BREAKING since r4 for library callers: the default was
-        * Int.MaxValue (uncapped) through r3 — curate/curateExtracted/
-        * curateClustered results can differ on corpora with >1000-doc
-        * near-dup cohorts unless Int.MaxValue is passed explicitly.
-        * Every capped run is auditable — `run` writes a
-        * `fuzzy_dedup_cap` lineage row with dropped_buckets/dropped_rows,
-        * and library callers of curate* get the same numbers from
-        * `Pipeline.dropAudit`. The oracle entries (p1/p2) pass
+        * Int.MaxValue disables it. Every capped run is auditable — `run`
+        * writes a `fuzzy_dedup_cap` lineage row with dropped_buckets/
+        * dropped_rows, and library callers of curate* get the same numbers
+        * from `Pipeline.dropAudit`. The oracle entries (p1/p2) pass
         * Int.MaxValue explicitly: the uncapped path stays value-verified
         * against DuckDB. */
       maxBucket: Int = 1000)
@@ -95,15 +103,13 @@ object Pipeline {
     * builds, so a capped run never silently reads as "covered
     * everything". One row: (dropped_buckets, dropped_rows) — zeros when
     * nothing was over the cap. Callers of `curate(docs, cfg)` pass
-    * `SgmlExtract.extractDf(docs, cfg.extract)` as `extracted`; the
-    * banded frame is served from the capBuckets swapCache when the
-    * curation ran on this session, so the audit does not re-pay the
-    * signature pass. */
-  def dropAudit(extracted: DataFrame, cfg: Config = Config()): DataFrame = {
-    val exact = exactStage(qualityStage(extracted))
-    Dedup.droppedBucketStats(Dedup.bandsOf(exact, "doc_id", "text"),
+    * `SgmlExtract.extractDf(docs, cfg.extract)` as `extracted`. The
+    * exact frame is left uncached here, so when the curation ran on this
+    * session its plan (and the banded frame's) is served from the copies
+    * that run cached, and the audit does not re-pay the signature pass. */
+  def dropAudit(extracted: DataFrame, cfg: Config = Config()): DataFrame =
+    Dedup.droppedBucketStats(stages(extracted, cfg, cacheTag = None).banded,
       Seq("band", "band_hash"), cfg.maxBucket)
-  }
 
   /** Contract table (doc_id, spans) → curated (doc_id, text, predicted_lang,
     * n_words). */
@@ -143,39 +149,51 @@ object Pipeline {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Stages 2-5 over an ALREADY-extracted frame (doc_id, spans, errors) —
-    * lets `run` parse once and feed several consumers. */
-  def curateExtracted(extracted: DataFrame, cfg: Config = Config()): DataFrame = {
-    // 2: concat text + quality metrics, drop failed/junk docs
-    val quality = qualityStage(extracted)
-    // 3: exact dedup — keep the lowest doc_id per content hash.
-    // CACHED (Dedup.swapCache): the fuzzy stage references this subtree
-    // four times (bands, both verify-join text sides, anti-join left);
-    // without the cache each branch re-executes the parse kernel — the
-    // dominant cost — under a different column pruning, which also
-    // defeats exchange reuse. swapCache releases the copy a previous
-    // invocation cached, so repeated calls on a long-lived session hold
-    // at most one copy. MEMORY_AND_DISK holds the post-quality text
-    // corpus; at sizes where that is unwelcome, materialize to a table
-    // (Pipeline.run's extracted product plays that role for the parse
-    // leg) and curate from the re-read.
-    val exact = Dedup.swapCache("p1-exact", exactStage(quality))
-    // 4+5: fuzzy dedup (drop the greater member of every verified pair)
-    // + language annotation — shared with `run`
-    finishCurate(exact,
-      Dedup.verifiedPairsOf(exact, "doc_id", "text",
-        cfg.minJaccard, cfg.maxBucket))
+  /** Stages 2-4 as every entry point composes them: quality → exact dedup
+    * → MinHash bands → Jaccard-verified pairs. The stage boundaries live
+    * here and nowhere else; entry points differ only in their keeper rule.
+    * `pairs` is lazy so `dropAudit`, which needs only `banded`, never
+    * registers a capBuckets cache of its own. */
+  private final class Stages(val exact: DataFrame, val banded: DataFrame,
+      pairsOf: => DataFrame) {
+    lazy val pairs: DataFrame = pairsOf
   }
 
-  /** Stages 4-5 given the exact-deduped frame and its verified pairs:
-    * losers (the greater member of each pair) drop via anti-join, then
-    * language annotation and the curated column contract. ONE home for
-    * this tail — `curateExtracted` and `run` must not drift. */
-  private def finishCurate(exact: DataFrame, pairs: DataFrame): DataFrame = {
-    val losers = pairs.select(col("id_b").as("doc_id")).distinct()
-    TextOps.withLangId(exact.join(losers, Seq("doc_id"), "left_anti"))
-      .select(col("doc_id"), col("text"), col("predicted_lang"), col("n_words"))
+  /** `cacheTag`: the exact frame is persisted under this Dedup.swapCache
+    * tag. The fuzzy stage references that subtree four times (bands,
+    * both verify-join text sides, the keeper join); without the cache
+    * each branch re-executes the parse kernel — the dominant cost — under
+    * a different column pruning, which also defeats exchange reuse.
+    * swapCache releases the copy a previous invocation cached, so repeated
+    * calls on a long-lived session hold at most one copy per tag.
+    * MEMORY_AND_DISK holds the post-quality text corpus; at sizes where
+    * that is unwelcome, materialize to a table (Pipeline.run's extracted
+    * product plays that role for the parse leg) and curate from the
+    * re-read. */
+  private def stages(extracted: DataFrame, cfg: Config,
+      cacheTag: Option[String]): Stages = {
+    val built = exactStage(qualityStage(extracted))
+    val exact = cacheTag.fold(built)(Dedup.swapCache(_, built))
+    val banded = Dedup.bandsOf(exact, "doc_id", "text")
+    new Stages(exact, banded, Dedup.verifiedPairsFromBands(banded, exact,
+      "doc_id", "text", cfg.minJaccard, cfg.maxBucket))
   }
+
+  /** Stage 4's pairwise keeper: drop the greater member of every verified
+    * pair (deterministic, order-free) via anti-join. */
+  private def pairwiseKept(st: Stages): DataFrame =
+    st.exact.join(st.pairs.select(col("id_b").as("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti")
+
+  /** Stage 5 and the curated column contract, one tail for every entry. */
+  private def withLang(deduped: DataFrame): DataFrame =
+    TextOps.withLangId(deduped)
+      .select(col("doc_id"), col("text"), col("predicted_lang"), col("n_words"))
+
+  /** Stages 2-5 over an ALREADY-extracted frame (doc_id, spans, errors) —
+    * lets `run` parse once and feed several consumers. */
+  def curateExtracted(extracted: DataFrame, cfg: Config = Config()): DataFrame =
+    withLang(pairwiseKept(stages(extracted, cfg, Some("p1-exact"))))
 
   /** Cluster-keeper curation: stages 1–3 as `curate`, but fuzzy dedup
     * keeps exactly ONE doc per CONNECTED COMPONENT of the verified-pair
@@ -188,16 +206,11 @@ object Pipeline {
     * pairs) on top of curate's four shuffles; the p2 oracle replays it
     * with a recursive-CTE transitive closure. */
   def curateClustered(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    val extracted = SgmlExtract.extractDf(repartitioned(docs, cfg), cfg.extract)
-    val quality = qualityStage(extracted)
-    val exact = Dedup.swapCache("p2-exact", exactStage(quality))
-    val pairs = Dedup.verifiedPairsOf(exact, "doc_id", "text",
-      cfg.minJaccard, cfg.maxBucket)
-    val keepers = Dedup.clustersOf(pairs, exact.select(col("doc_id")))
+    val st = stages(SgmlExtract.extractDf(repartitioned(docs, cfg), cfg.extract),
+      cfg, Some("p2-exact"))
+    val keepers = Dedup.clustersOf(st.pairs, st.exact.select(col("doc_id")))
       .filter(col("is_keeper")).select(col("doc_id"))
-    val deduped = exact.join(keepers, Seq("doc_id"), "left_semi")
-    TextOps.withLangId(deduped)
-      .select(col("doc_id"), col("text"), col("predicted_lang"), col("n_words"))
+    withLang(st.exact.join(keepers, Seq("doc_id"), "left_semi"))
   }
 
   /** Listing digest of an input path for the resume fingerprint: file
@@ -234,8 +247,7 @@ object Pipeline {
     * extracted product, then derive curated output + per-partition
     * lineage from the cheap columnar re-read — the expensive leg (the
     * parse kernel) never runs twice (same single-scan discipline as
-    * graft.Resume; the r1 review flagged exactly this 2× amplification
-    * pattern). */
+    * graft.Resume). */
   def run(spark: SparkSession, inPath: String, outPath: String,
       cfg: Config = Config(), runId: String = "run-0",
       format: String = "parquet", resume: Boolean = true): Unit = {
@@ -295,15 +307,11 @@ object Pipeline {
         col("errors"),
         lit(null).cast("long").as("dropped_buckets"),
         lit(null).cast("long").as("dropped_rows"))
-    // Stages 3-5 inlined (vs curateExtracted) so the banded frame is
-    // SHARED between pair generation and the cap-audit lineage row —
-    // a capped run must be auditable without a second signature pass.
-    val exact = Dedup.swapCache("run-exact",
-      exactStage(qualityStage(extracted.drop("__pid"))))
-    val banded = Dedup.bandsOf(exact, "doc_id", "text")
-    finishCurate(exact,
-      Dedup.verifiedPairsFromBands(banded, exact, "doc_id", "text",
-        cfg.minJaccard, cfg.maxBucket))
+    // the banded frame is SHARED between pair generation and the
+    // cap-audit lineage row — a capped run is auditable without a second
+    // signature pass
+    val st = stages(extracted.drop("__pid"), cfg, Some("run-exact"))
+    withLang(pairwiseKept(st))
       .write.mode("overwrite").parquet(s"$outPath/curated")
     // Lineage LAST: per-partition extract metrics, plus the valve audit
     // row whenever a cap is active (zeros when nothing was dropped — the
@@ -313,7 +321,7 @@ object Pipeline {
     val lineage =
       if (cfg.maxBucket == Int.MaxValue) extractRows
       else extractRows.unionByName(
-        Dedup.droppedBucketStats(banded, Seq("band", "band_hash"),
+        Dedup.droppedBucketStats(st.banded, Seq("band", "band_hash"),
             cfg.maxBucket)
           .select(lit(runId).as("run_id"),
             lit("fuzzy_dedup_cap").as("stage"),

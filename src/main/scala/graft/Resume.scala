@@ -91,9 +91,7 @@ object Resume {
       val extracted = spark.read.parquet(files: _*)
         .select(
           col("doc_id").cast("string").as("doc_id"),
-          array(struct(
-            lit("text").as("kind"), col("text").as("text"),
-            lit(null).cast("string").as("media_ref"), lit(0).as("offset"))).as("spans"),
+          SgmlExtract.textSpans(col("text")).as("spans"),
           input_file_name().as("__file"))
         .select(col("doc_id"),
           SgmlExtract.extractCol(spark, cfg).as("r"),

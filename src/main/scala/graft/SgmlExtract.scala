@@ -95,15 +95,18 @@ object SgmlExtract {
     * contract shapes cannot drift. */
   def wrapDocsDf(df: DataFrame): Dataset[Doc] = {
     import df.sparkSession.implicits._
-    df.select(
-        col("doc_id").cast("string").as("doc_id"),
-        array(struct(
-          lit("text").as("kind"),
-          col("text").as("text"),
-          lit(null).cast("string").as("media_ref"),
-          lit(0).as("offset"))).as("spans"))
+    df.select(col("doc_id").cast("string").as("doc_id"),
+        textSpans(col("text")).as("spans"))
       .as[Doc]
   }
+
+  /** The contract `spans` value of a plain-text doc: one text span at
+    * offset 0, `array<struct<kind, text, media_ref, offset>>`. */
+  def textSpans(text: Column): Column = array(textSpan(text))
+
+  private def textSpan(text: Column): Column =
+    struct(lit("text").as("kind"), text.as("text"),
+      lit(null).cast("string").as("media_ref"), lit(0).as("offset"))
 
   // Wrapper constants, shared between the synthetic-markup wrappers below
   // and SparkEntry's DuckDB oracles: every oracle offset is DERIVED from
@@ -140,12 +143,8 @@ object SgmlExtract {
       .select(
         col("doc_id").cast("string").as("doc_id"),
         array(
-          struct(
-            lit("text").as("kind"),
-            concat(lit(MarkedPrefix), col("text"),
-              lit(MarkedTail), lit(MarkedSuffix)).as("text"),
-            lit(null).cast("string").as("media_ref"),
-            lit(0).as("offset")),
+          textSpan(concat(lit(MarkedPrefix), col("text"),
+            lit(MarkedTail), lit(MarkedSuffix))),
           struct(
             lit("media").as("kind"),
             lit("").as("text"),
@@ -163,12 +162,8 @@ object SgmlExtract {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(
         col("doc_id").cast("string").as("doc_id"),
-        array(struct(
-          lit("text").as("kind"),
-          concat(lit(MarkedPrefix), col("text"),
-            lit(MalformedInfix + MalformedSuffix)).as("text"),
-          lit(null).cast("string").as("media_ref"),
-          lit(0).as("offset"))).as("spans"))
+        textSpans(concat(lit(MarkedPrefix), col("text"),
+          lit(MalformedInfix + MalformedSuffix))).as("spans"))
   }
 
   /** Wrap as an SGML document whose internal DTD declares a SHORTREF map
@@ -178,11 +173,8 @@ object SgmlExtract {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(
         col("doc_id").cast("string").as("doc_id"),
-        array(struct(
-          lit("text").as("kind"),
-          concat(lit(ShortrefProlog), col("text"), lit(ShortrefClose)).as("text"),
-          lit(null).cast("string").as("media_ref"),
-          lit(0).as("offset"))).as("spans"))
+        textSpans(concat(lit(ShortrefProlog), col("text"), lit(ShortrefClose)))
+          .as("spans"))
   }
 
   /** Wrap with realistic page chrome (head/style, nav of links, footer)
@@ -192,17 +184,13 @@ object SgmlExtract {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(
         col("doc_id").cast("string").as("doc_id"),
-        array(struct(
-          lit("text").as("kind"),
-          concat(
-            lit("<html><head><title>Page</title><style>p{color:red}</style>" +
-              "</head><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About</a>" +
-              " <a href=\"/b\">More</a></nav><div><a href=\"/x\">Related one</a>" +
-              " <a href=\"/y\">Related two</a></div><p>"),
-            col("text"),
-            lit("<footer>(c) corp</footer></body></html>")).as("text"),
-          lit(null).cast("string").as("media_ref"),
-          lit(0).as("offset"))).as("spans"))
+        textSpans(concat(
+          lit("<html><head><title>Page</title><style>p{color:red}</style>" +
+            "</head><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About</a>" +
+            " <a href=\"/b\">More</a></nav><div><a href=\"/x\">Related one</a>" +
+            " <a href=\"/y\">Related two</a></div><p>"),
+          col("text"),
+          lit("<footer>(c) corp</footer></body></html>"))).as("spans"))
   }
 
   /** Columnar extraction via the native Catalyst expression
@@ -215,8 +203,10 @@ object SgmlExtract {
 
   /** `extract_spans(spans, …)` with every `Config` field as a literal
     * argument (the expression node itself cannot be wrapped in a Column
-    * from outside `org.apache.spark.sql`). */
+    * from outside `org.apache.spark.sql`). Dialect and space are checked
+    * against their known names first, so only those reach the SQL text. */
   private[graft] def extractCol(spark: SparkSession, config: Config): Column = {
+    config.toParserConfig
     if (!spark.catalog.functionExists("extract_spans"))
       graft.functions.ExtractSpansExpr.register(spark)
     expr(s"extract_spans(spans, '${config.dialect}', '${config.space}', " +

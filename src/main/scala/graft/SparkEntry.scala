@@ -329,7 +329,7 @@ object SparkEntry {
       val stream = s.readStream.schema(schema)
         .parquet(s"$dir/[d]ocuments.parquet")
       val curated = streaming.StreamingExtract.curatedStream(
-        streaming.StreamingExtract.extractStream(
+        SgmlExtract.extract(
           SgmlExtract.wrapDocsDf(stream),
           SgmlExtract.Config(dialect = "html4", space = "preserve")))
       val out = curated.select(md5(col("text")).as("content_hash"),
@@ -586,11 +586,8 @@ object SparkEntry {
       |  WHEN ${bucketSql(idExpr)} < 950 THEN 'val'
       |  ELSE 'test' END""".stripMargin
 
-  // Shared CTE chain: word 3-shingles (same as d6) → code-point polynomial
-  // shingle hashes → 64-way minhash signature → banded hashes. Mirrors
-  // graft.ops.Dedup bit-for-bit (closed-form coefficients, mod-P integer
-  // arithmetic — HUGEINT where the product exceeds 2^63).
-  private def minhashCtesFrom(src: String): String =
+  // Word 3-shingle sets of `src` (g.sh), as Dedup.shingles builds them.
+  private def shingleCtesFrom(src: String): String =
     s"""w AS (
       |  SELECT doc_id,
       |    list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS words
@@ -602,7 +599,21 @@ object SparkEntry {
       |         ELSE list_distinct(list_transform(range(1, len(words) - 1),
       |                i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
       |    END AS sh
-      |  FROM w),
+      |  FROM w)""".stripMargin
+
+  // Dedup.ngramJaccard of the shingle sets of g-rows `a` and `b`, rounded
+  // to 6 places like the Spark side.
+  private def jaccardSql(a: String, b: String): String =
+    s"""ROUND(CASE WHEN len($a.sh) = 0 AND len($b.sh) = 0 THEN 1.0
+      |    ELSE CAST(len(list_intersect($a.sh, $b.sh)) AS DOUBLE)
+      |         / (len($a.sh) + len($b.sh) - len(list_intersect($a.sh, $b.sh))) END, 6)""".stripMargin
+
+  // Shared CTE chain: word 3-shingles → code-point polynomial shingle
+  // hashes → 64-way minhash signature → banded hashes. Mirrors
+  // graft.ops.Dedup bit-for-bit (closed-form coefficients, mod-P integer
+  // arithmetic — HUGEINT where the product exceeds 2^63).
+  private def minhashCtesFrom(src: String): String =
+    s"""${shingleCtesFrom(src)},
       |u AS (
       |  SELECT doc_id, list_reduce(list_prepend(0::BIGINT,
       |      list_transform(regexp_extract_all(s, '.'), c -> ord(c)::BIGINT)),
@@ -626,6 +637,60 @@ object SparkEntry {
       |    list_reduce(list_prepend(0::BIGINT, list(v ORDER BY i)),
       |      (acc, x) -> (acc * ${ops.Dedup.BandB} + x % ${ops.Dedup.HashP}) % ${ops.Dedup.HashP}) AS band_hash
       |  FROM sig GROUP BY doc_id, i // ${ops.Dedup.RowsPerBand})""".stripMargin
+
+  // The minhash chain, then band-collision candidates (cand) and the
+  // Jaccard-verified pairs (vp: id_a < id_b, jaccard >= 0.5) —
+  // Dedup.verifiedPairsFromBands uncapped.
+  private def pairCtesFrom(src: String): String =
+    s"""${minhashCtesFrom(src)},
+      |cand AS (
+      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM bands a JOIN bands b
+      |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+      |vp AS (
+      |  SELECT id_a, id_b, jaccard FROM (
+      |    SELECT c.id_a, c.id_b, ${jaccardSql("ga", "gb")} AS jaccard
+      |    FROM cand c JOIN g ga ON ga.doc_id = c.id_a JOIN g gb ON gb.doc_id = c.id_b) t
+      |  WHERE jaccard >= 0.5)""".stripMargin
+
+  // Connected components of the vp graph over the doc_ids of `nodes`:
+  // cluster_id = the smallest doc_id reachable (Dedup.clustersOf's
+  // fixpoint), by transitive closure — needs WITH RECURSIVE.
+  private def clusterCtesFrom(nodes: String): String =
+    s"""edges AS (
+      |  SELECT id_a AS esrc, id_b AS edst FROM vp
+      |  UNION ALL SELECT id_b AS esrc, id_a AS edst FROM vp),
+      |reach AS (
+      |  SELECT doc_id AS rsrc, doc_id AS rdst FROM $nodes
+      |  UNION
+      |  SELECT r.rsrc, e.edst FROM reach r JOIN edges e ON e.esrc = r.rdst),
+      |clusters AS (
+      |  SELECT rsrc AS doc_id, MIN(rdst) AS cluster_id, (rsrc = MIN(rdst)) AS is_keeper
+      |  FROM reach GROUP BY rsrc)""".stripMargin
+
+  // TextOps.withLangId over `src`: lid = src's columns + predicted_lang
+  // (CJK → zh, else the argmax of marker-word hits in lower(text) split on
+  // \s+, ties en > de > fr > es).
+  private def langIdCteFrom(src: String): String = {
+    val hits = Seq(
+      "en" -> "'the','and','of','is','to','in','that','it'",
+      "de" -> "'der','die','das','und','ist','nicht','ein','zu'",
+      "fr" -> "'le','la','les','et','est','un','une','dans'",
+      "es" -> "'el','los','las','es','un','una','que','por'")
+      .map { case (l, ws) =>
+        s"""len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+          |      x -> list_contains([$ws], x))) AS s_$l""".stripMargin }
+    s"""lid AS (
+      |  SELECT *,
+      |    CASE WHEN regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') THEN 'zh'
+      |         WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
+      |         WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
+      |         WHEN s_fr >= s_es THEN 'fr'
+      |         ELSE 'es' END AS predicted_lang
+      |  FROM (SELECT *,
+      |    ${hits.mkString(",\n    ")}
+      |  FROM $src) sl)""".stripMargin
+  }
 
   // xq6 template, shared shape with its oracle's string_agg reconstruction
   private val PwpRegionTemplate =
@@ -709,6 +774,18 @@ object SparkEntry {
       |    AND LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 100 >= LENGTH(text) * 50)"""
       .stripMargin
   }
+
+  // Pipeline stages 2-4 (p1/p2): quality (q) → exact-dedup keeper (ex:
+  // lowest doc_id per md5(text), VARCHAR-ordered like the contract's
+  // string doc_id) → minhash bands → verified pairs (vp).
+  private def curateStageCtes: String =
+    s"""$qualitySrcCtes,
+      |ex AS (
+      |  SELECT doc_id, text, n_words FROM (
+      |    SELECT doc_id, text, n_words,
+      |      ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+      |    FROM q) t WHERE rn = 1),
+      |${pairCtesFrom("ex")}""".stripMargin
 
   // Synthetic media assets + decode rebuilt in SQL (mirrors
   // graft.ops.MediaOps: base-31 seed over the decimal doc_id). Every
@@ -1163,98 +1240,21 @@ object SparkEntry {
     // keeper, mirroring the contract's string doc_id) → banded minhash →
     // Jaccard-verified losers → lang-id — stage for stage what
     // Pipeline.curate plans in Spark
-    "p1_curate" -> {
-      s"""WITH $qualitySrcCtes,
-        |ex AS (
-        |  SELECT doc_id, text, n_words FROM (
-        |    SELECT doc_id, text, n_words,
-        |      ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |    FROM q) t WHERE rn = 1),
-        |${minhashCtesFrom("ex")},
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-        |losers AS (
-        |  SELECT DISTINCT c.id_b AS doc_id
-        |  FROM cand c JOIN g ga ON ga.doc_id = c.id_a JOIN g gb ON gb.doc_id = c.id_b
-        |  WHERE ROUND(CASE WHEN len(ga.sh) = 0 AND len(gb.sh) = 0 THEN 1.0
-        |    ELSE CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE)
-        |         / (len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh))) END, 6) >= 0.5),
-        |surv AS (
-        |  SELECT * FROM ex WHERE doc_id NOT IN (SELECT doc_id FROM losers)),
-        |sl AS (
-        |  SELECT doc_id, text, n_words,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-        |      x -> list_contains(['the','and','of','is','to','in','that','it'], x))) AS s_en,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-        |      x -> list_contains(['der','die','das','und','ist','nicht','ein','zu'], x))) AS s_de,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-        |      x -> list_contains(['le','la','les','et','est','un','une','dans'], x))) AS s_fr,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-        |      x -> list_contains(['el','los','las','es','un','una','que','por'], x))) AS s_es
-        |  FROM surv)
-        |SELECT doc_id, text,
-        |  CASE WHEN regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') THEN 'zh'
-        |       WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-        |       WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-        |       WHEN s_fr >= s_es THEN 'fr'
-        |       ELSE 'es' END AS predicted_lang,
-        |  n_words
-        |FROM sl""".stripMargin
-    },
+    "p1_curate" ->
+      s"""WITH $curateStageCtes,
+        |surv AS (SELECT * FROM ex WHERE doc_id NOT IN (SELECT id_b FROM vp)),
+        |${langIdCteFrom("surv")}
+        |SELECT doc_id, text, predicted_lang, n_words FROM lid""".stripMargin,
     // p2: p1's quality + exact-dedup stages, then CLUSTER-keeper fuzzy
     // dedup — survivors are the docs equal to the minimum doc_id reachable
     // through verified pairs (recursive transitive closure), then lang-id
-    "p2_curate_clustered" -> {
-      s"""WITH RECURSIVE $qualitySrcCtes,
-        |ex AS (
-        |  SELECT doc_id, text, n_words FROM (
-        |    SELECT doc_id, text, n_words,
-        |      ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |    FROM q) t WHERE rn = 1),
-        |${minhashCtesFrom("ex")},
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-        |vp AS (
-        |  SELECT c.id_a, c.id_b
-        |  FROM cand c JOIN g ga ON ga.doc_id = c.id_a JOIN g gb ON gb.doc_id = c.id_b
-        |  WHERE ROUND(CASE WHEN len(ga.sh) = 0 AND len(gb.sh) = 0 THEN 1.0
-        |    ELSE CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE)
-        |         / (len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh))) END, 6) >= 0.5),
-        |edges AS (
-        |  SELECT id_a AS esrc, id_b AS edst FROM vp
-        |  UNION ALL SELECT id_b AS esrc, id_a AS edst FROM vp),
-        |reach AS (
-        |  SELECT doc_id AS rsrc, doc_id AS rdst FROM ex
-        |  UNION
-        |  SELECT r.rsrc, e.edst FROM reach r JOIN edges e ON e.esrc = r.rdst),
-        |keepers AS (
-        |  SELECT rsrc AS doc_id FROM reach GROUP BY rsrc HAVING rsrc = MIN(rdst)),
+    "p2_curate_clustered" ->
+      s"""WITH RECURSIVE $curateStageCtes,
+        |${clusterCtesFrom("ex")},
         |surv AS (
-        |  SELECT ex.* FROM ex JOIN keepers k ON k.doc_id = ex.doc_id),
-        |sl AS (
-        |  SELECT doc_id, text, n_words,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-        |      x -> list_contains(['the','and','of','is','to','in','that','it'], x))) AS s_en,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-        |      x -> list_contains(['der','die','das','und','ist','nicht','ein','zu'], x))) AS s_de,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-        |      x -> list_contains(['le','la','les','et','est','un','une','dans'], x))) AS s_fr,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-        |      x -> list_contains(['el','los','las','es','un','una','que','por'], x))) AS s_es
-        |  FROM surv)
-        |SELECT doc_id, text,
-        |  CASE WHEN regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') THEN 'zh'
-        |       WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-        |       WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-        |       WHEN s_fr >= s_es THEN 'fr'
-        |       ELSE 'es' END AS predicted_lang,
-        |  n_words
-        |FROM sl""".stripMargin
-    },
+        |  SELECT * FROM ex WHERE doc_id IN (SELECT doc_id FROM clusters WHERE is_keeper)),
+        |${langIdCteFrom("surv")}
+        |SELECT doc_id, text, predicted_lang, n_words FROM lid""".stripMargin,
     // t10: shared-shingle contamination vs the doc_id < 10 held-out set —
     // overlap counted over the SAME closed-form shingle hashes (the u CTE
     // of the minhash chain)
@@ -1384,10 +1384,7 @@ object SparkEntry {
         |    END AS f
         |  FROM cps),
         |j AS (
-        |  SELECT a.doc_id,
-        |    ROUND(CASE WHEN len(a.sh) = 0 AND len(b.sh) = 0 THEN 1.0
-        |      ELSE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |           / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) END, 6) AS j_next
+        |  SELECT a.doc_id, ${jaccardSql("a", "b")} AS j_next
         |  FROM g a JOIN g b ON b.doc_id = a.doc_id + 1)
         |SELECT j.doc_id, sh2.simhash, s0.v AS mh0,
         |  CAST(len(g.sh) AS INTEGER) AS n_shingles, fp.f[1] AS fp_min, j.j_next
@@ -1398,43 +1395,14 @@ object SparkEntry {
         |JOIN fp ON fp.doc_id = j.doc_id""".stripMargin
     },
     "d3_minhash_pairs" ->
-      s"""WITH ${minhashCtesFrom("documents")},
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, jaccard FROM (
-        |  SELECT c.id_a, c.id_b,
-        |    ROUND(CASE WHEN len(ga.sh) = 0 AND len(gb.sh) = 0 THEN 1.0
-        |      ELSE CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE)
-        |           / (len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh))) END, 6) AS jaccard
-        |  FROM cand c JOIN g ga ON ga.doc_id = c.id_a JOIN g gb ON gb.doc_id = c.id_b) t
-        |WHERE jaccard >= 0.5""".stripMargin,
+      s"WITH ${pairCtesFrom("documents")} SELECT id_a, id_b, jaccard FROM vp",
     // d7: the Spark side's iterative min-label propagation must reach the
     // same fixpoint as the oracle's transitive closure (recursive CTE):
     // cluster_id = smallest doc_id reachable through verified pairs
     "d7_dedup_clusters" ->
-      s"""WITH RECURSIVE ${minhashCtesFrom("documents")},
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-        |vp AS (
-        |  SELECT c.id_a, c.id_b
-        |  FROM cand c JOIN g ga ON ga.doc_id = c.id_a JOIN g gb ON gb.doc_id = c.id_b
-        |  WHERE ROUND(CASE WHEN len(ga.sh) = 0 AND len(gb.sh) = 0 THEN 1.0
-        |    ELSE CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE)
-        |         / (len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh))) END, 6) >= 0.5),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM vp
-        |  UNION ALL SELECT id_b AS src, id_a AS dst FROM vp),
-        |reach AS (
-        |  SELECT doc_id AS src, doc_id AS dst FROM documents
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst)
-        |SELECT src AS doc_id, MIN(dst) AS cluster_id,
-        |  (src = MIN(dst)) AS is_keeper
-        |FROM reach GROUP BY src""".stripMargin,
+      s"""WITH RECURSIVE ${pairCtesFrom("documents")},
+        |${clusterCtesFrom("documents")}
+        |SELECT doc_id, cluster_id, is_keeper FROM clusters""".stripMargin,
     "t2_token_count" ->
       """SELECT doc_id,
         | CAST(LEN(regexp_split_to_array(TRIM(text), '\s+')) AS INTEGER) AS ws_tokens,
@@ -1766,19 +1734,7 @@ object SparkEntry {
         |WHERE rank <= 20""".stripMargin,
     // a1: the d3 pair machinery verbatim, then the split CASE on both ids
     "a1_split_leakage" ->
-      s"""WITH ${minhashCtesFrom("documents")},
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-        |vp AS (
-        |  SELECT id_a, id_b, jaccard FROM (
-        |    SELECT c.id_a, c.id_b,
-        |      ROUND(CASE WHEN len(ga.sh) = 0 AND len(gb.sh) = 0 THEN 1.0
-        |        ELSE CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE)
-        |             / (len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh))) END, 6) AS jaccard
-        |    FROM cand c JOIN g ga ON ga.doc_id = c.id_a JOIN g gb ON gb.doc_id = c.id_b) t
-        |  WHERE jaccard >= 0.5)
+      s"""WITH ${pairCtesFrom("documents")}
         |SELECT id_a, ${splitCaseSql("id_a")} AS split_a,
         |  id_b, ${splitCaseSql("id_b")} AS split_b, jaccard
         |FROM vp
@@ -1872,44 +1828,12 @@ object SparkEntry {
         | CAST(LENGTH(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS vowel_count
         |FROM documents""".stripMargin,
     "d6_ngram_jaccard" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(words) = 0 THEN []::VARCHAR[]
-        |         WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-        |         ELSE list_distinct(list_transform(range(1, len(words) - 1),
-        |                i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
-        |    END AS sh
-        |  FROM w)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  ROUND(CASE WHEN len(a.sh) = 0 AND len(b.sh) = 0 THEN 1.0
-        |       ELSE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |            / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) END, 6) AS jaccard
+      s"""WITH ${shingleCtesFrom("documents")}
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, ${jaccardSql("a", "b")} AS jaccard
         |FROM g a JOIN g b ON b.doc_id = a.doc_id + 1""".stripMargin,
     "t4_lang_id" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang, text,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> list_contains(['the','and','of','is','to','in','that','it'], x))) AS s_en,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> list_contains(['der','die','das','und','ist','nicht','ein','zu'], x))) AS s_de,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> list_contains(['le','la','les','et','est','un','une','dans'], x))) AS s_fr,
-        |    len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> list_contains(['el','los','las','es','un','una','que','por'], x))) AS s_es
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, lang,
-        |    CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-        |         WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-        |         WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-        |         WHEN s_fr >= s_es THEN 'fr'
-        |         ELSE 'es' END AS predicted_lang
-        |  FROM s)
-        |SELECT doc_id, lang, predicted_lang, (lang = predicted_lang) AS agree FROM p""".stripMargin,
+      s"""WITH ${langIdCteFrom("documents")}
+        |SELECT doc_id, lang, predicted_lang, (lang = predicted_lang) AS agree FROM lid""".stripMargin,
     "e1_knn_exact" ->
       """SELECT query_id, rank, neighbor_id FROM (
         | SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,

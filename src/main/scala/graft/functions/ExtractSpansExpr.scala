@@ -141,15 +141,8 @@ object ExtractSpansExpr {
     StructField("spans", ArrayType(SpanType)),
     StructField("errors", ArrayType(ErrType))))
 
-  private val Dialects = graft.sgml.Dialect.all.map(_.name) :+ "html"
-  private val Spaces = Seq("preserve", "sgml", "default", "remove", "strict")
-
-  private def litStr(e: Expression, what: String, valid: Seq[String]): String = e match {
-    case Literal(v: UTF8String, StringType) =>
-      val s = v.toString.toLowerCase
-      if (!valid.contains(s)) throw new IllegalArgumentException(
-        s"extract_spans: unknown $what '$s' (expected one of ${valid.mkString(", ")})")
-      s
+  private def litStr(e: Expression, what: String): String = e match {
+    case Literal(v: UTF8String, StringType) => v.toString.toLowerCase
     case other => throw new IllegalArgumentException(
       s"extract_spans: $what must be a string literal, got $other")
   }
@@ -181,12 +174,14 @@ object ExtractSpansExpr {
         "takes 1-6 arguments")
     val arg = args.lift
     val limits = SgmlExtract.Config()
-    ExtractSpansExpr(args.head, SgmlExtract.Config(
-      dialect = arg(1).fold("html4")(litStr(_, "dialect", Dialects)),
-      space = arg(2).fold("preserve")(litStr(_, "space", Spaces)),
+    val config = SgmlExtract.Config(
+      dialect = arg(1).fold("html4")(litStr(_, "dialect")),
+      space = arg(2).fold("preserve")(litStr(_, "space")),
       boilerplate = arg(3).exists(litBool(_, "boilerplate")),
       maxErrors = arg(4).fold(limits.maxErrors)(litInt(_, "maxErrors")),
-      maxDocChars = arg(5).fold(limits.maxDocChars)(litInt(_, "maxDocChars"))))
+      maxDocChars = arg(5).fold(limits.maxDocChars)(litInt(_, "maxDocChars")))
+    config.toParserConfig // an unknown dialect or space fails at analysis
+    ExtractSpansExpr(args.head, config)
   }
 
   val info: ExpressionInfo = new ExpressionInfo(

@@ -34,16 +34,12 @@ object TableOps {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(
         col("doc_id").cast("string").as("doc_id"),
-        array(org.apache.spark.sql.functions.struct(
-          lit("text").as("kind"),
-          concat(
-            lit("<html><body><table><tr><th>lang<th>source"),
-            lit("<tr><td>"), col("lang"), lit("<td>"), col("source"),
-            lit("<tr><td>"), substring_index(col("text"), " ", 1),
-            lit("<td>"), col("doc_id"),
-            lit("</table></body></html>")).as("text"),
-          lit(null).cast("string").as("media_ref"),
-          lit(0).as("offset"))).as("spans"))
+        SgmlExtract.textSpans(concat(
+          lit("<html><body><table><tr><th>lang<th>source"),
+          lit("<tr><td>"), col("lang"), lit("<td>"), col("source"),
+          lit("<tr><td>"), substring_index(col("text"), " ", 1),
+          lit("<td>"), col("doc_id"),
+          lit("</table></body></html>"))).as("spans"))
       .as[Doc]
   }
 

@@ -41,11 +41,12 @@ object Dialect {
   case object Xhtml5 extends Dialect("xhtml5", false, true,  true,  true,  false)
 
   val all: Seq[Dialect] = Seq(Sgml, Html4, Html5, Xml, Xmlns, Xhtml, Xhtml5)
-  def parse(s: String): Dialect =
-    all.find(_.name == s.toLowerCase).getOrElse(s.toLowerCase match {
-      case "html" => Html4
-      case _      => Xml
-    })
+  /** Case-insensitive; `html` is an alias of `html4`. */
+  def parse(s: String): Dialect = s.toLowerCase match {
+    case "html" => Html4
+    case n => all.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+      s"unknown dialect '$s' (expected one of ${all.map(_.name).mkString(", ")}, html)"))
+  }
 }
 
 /** Whitespace policy (`parser.c — option space(...)` [V]; SURVEY.md D6).
@@ -66,12 +67,15 @@ object SpaceMode {
   case object Default  extends SpaceMode
   case object Remove   extends SpaceMode
   case object Strict   extends SpaceMode
+  /** Case-insensitive. */
   def parse(s: String): SpaceMode = s.toLowerCase match {
     case "preserve" => Preserve
-    case "remove"   => Remove
+    case "sgml"     => SgmlMode
     case "default"  => Default
+    case "remove"   => Remove
     case "strict"   => Strict
-    case _          => SgmlMode
+    case _ => throw new IllegalArgumentException(s"unknown space mode '$s' " +
+      "(expected one of preserve, sgml, default, remove, strict)")
   }
 }
 

@@ -31,9 +31,10 @@ final case class DocBuffer(chunks: Seq[Chunk], done: Boolean = false)
   *
   * Two shapes (SURVEY.md §2.7 "grouping/streaming state" row):
   *
-  * 1. Whole docs on the stream → the batch kernel applied verbatim: the
-  *    `extract_spans` expression is stateless per row, so the same typed
-  *    transform runs under `readStream` unchanged (no watermark needed).
+  * 1. Whole docs on the stream → `SgmlExtract.extract` applied verbatim:
+  *    the `extract_spans` expression is stateless per row, so the same
+  *    typed transform runs under `readStream` unchanged (no watermark
+  *    needed).
   * 2. Chunked docs → `flatMapGroupsWithState` keyed by doc_id buffers
   *    chunks until `last=true`, then parses the assembled doc and emits
   *    one `Extracted` row (append mode). A processing-time timeout flushes
@@ -41,11 +42,6 @@ final case class DocBuffer(chunks: Seq[Chunk], done: Boolean = false)
   *    at scale, state is per *in-flight* doc only, never the corpus.
   */
 object StreamingExtract {
-
-  /** Shape 1: whole docs per row — identical kernel, streaming Dataset in,
-    * streaming Dataset out. */
-  def extractStream(docs: Dataset[Doc], cfg: SgmlExtract.Config): Dataset[Extracted] =
-    SgmlExtract.extract(docs, cfg)
 
   /** Shape 2: chunked-doc assembly + parse.
     *

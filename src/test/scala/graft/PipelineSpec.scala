@@ -69,6 +69,40 @@ class PipelineSpec extends AnyFunSuite {
     assert(text == quality)
   }
 
+  test("entry points agree: run ≡ curate, curateClustered ⊆ curate") {
+    // c1 and c3 each cover 28 of c9's 40 chain words: (c1,c9) and (c3,c9)
+    // verify, the (c1,c3) edge does not — the pairwise rule keeps c1 and
+    // c3, the cluster rule only c1
+    val w = (0 until 40).map(i => s"chain${('a' + i / 26).toChar}${('a' + i % 26).toChar}")
+    def chain(from: Int, until: Int) = ("the" +: w.slice(from, until)).mkString(" ")
+    val docs = docsOf(
+      "e1" -> quality, "e2" -> quality, "e3" -> quality, // exact-copy cohort
+      "n1" -> "der hund und die katze sind nicht in dem haus und das ist gut so",
+      "n2" -> "der hund und die katze sind nicht in dem haus und das ist gut so ja",
+      "c1" -> chain(0, 28), "c3" -> chain(12, 40), "c9" -> chain(0, 40),
+      "j1" -> "short junk",
+      "m1" -> s"<p>$quality <b>bold</p>") // parse error
+    val dir = java.nio.file.Files.createTempDirectory("pipeline").toString
+    docs.write.mode("overwrite").parquet(s"$dir/in")
+    Pipeline.run(spark, s"$dir/in", s"$dir/out", runId = "parity")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "text", "predicted_lang", "n_words").collect().map(_.toSeq).toSet
+    val curated = rows(Pipeline.curate(docs))
+    assert(rows(spark.read.parquet(s"$dir/out/curated")) == curated)
+    val clustered = rows(Pipeline.curateClustered(docs))
+    assert(clustered.subsetOf(curated))
+    assert(curated.map(_.head) == Set("e1", "n1", "c1", "c3"), curated)
+    assert(clustered.map(_.head) == Set("e1", "n1", "c1"), clustered)
+  }
+
+  test("main rejects unknown keys and bare arguments before starting Spark") {
+    val before = spark
+    for (bad <- Seq("minjaccard=0.8", "resume", "maxBucket", "dialect=htlm4",
+        "space=presrve", "minJaccard=half"))
+      intercept[IllegalArgumentException](Pipeline.main(Array("in", "out", bad)))
+    assert(!before.sparkContext.isStopped)
+  }
+
   test("run(): curated + lineage parquet written in one call") {
     val dir = java.nio.file.Files.createTempDirectory("pipeline").toString
     docsOf("a" -> quality, "b" -> quality)

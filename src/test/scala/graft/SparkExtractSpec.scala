@@ -57,6 +57,23 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       exprd.select(sum(size(col("spans")))).collect()(0).getLong(0))
   }
 
+  test("unknown dialect or space names fail on the driver, listing the valid ones") {
+    import graft.sgml.{Dialect, SpaceMode}
+    val d = intercept[IllegalArgumentException](Dialect.parse("htlm4"))
+    assert(d.getMessage.contains("html4") && d.getMessage.contains("xhtml5"))
+    val sp = intercept[IllegalArgumentException](SpaceMode.parse("presrve"))
+    assert(sp.getMessage.contains("preserve") && sp.getMessage.contains("sgml"))
+    // case-insensitive, `html` alias, `sgml` (Config's default) explicit
+    assert(Dialect.parse("HTML") == Dialect.Html4 && Dialect.parse("Xml") == Dialect.Xml)
+    assert(SpaceMode.parse("SGML") == SpaceMode.SgmlMode)
+    assert(SgmlExtract.Config().toParserConfig.space == SpaceMode.SgmlMode)
+    // a quote in either name is rejected before it reaches the SQL text
+    val docs = SgmlExtract.wrapDocuments(spark, sf).toDF()
+    intercept[IllegalArgumentException](SgmlExtract.extractDf(docs, cfg.copy(dialect = "x'ml")))
+    intercept[IllegalArgumentException](SgmlExtract.extractDf(docs, cfg.copy(space = "pre'serve")))
+    intercept[IllegalArgumentException](SgmlExtract.extractDf(docs, cfg.copy(space = "presrve")))
+  }
+
   test("boilerplate strip: chrome removed, main text + inline links survive") {
     import graft.sgml._
     val html = "<html><head><title>T</title><style>x{}</style></head><body>" +

@@ -111,7 +111,7 @@ class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mem = MemoryStream[Doc](spark)
     mem.addData(Seq(Doc("W", Seq(InSpan("text", html2, null, 0)))))
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt2").toString
-    val q = StreamingExtract.extractStream(mem.toDS(), cfg)
+    val q = SgmlExtract.extract(mem.toDS(), cfg)
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_whole").option("checkpointLocation", ckpt).start()
     q.processAllAvailable(); q.stop()
@@ -131,7 +131,7 @@ class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       Doc("c3", Seq(InSpan("text", "<p>junk</p>", null, 0))))) // quality-dropped
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt3").toString
     val q = StreamingExtract.curatedStream(
-        StreamingExtract.extractStream(mem.toDS(), cfg))
+        SgmlExtract.extract(mem.toDS(), cfg))
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_curated").option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
