@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): prints ONE JSON line
   * `{"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}`.
@@ -173,7 +174,7 @@ object Bench {
           if (trials.max / trials.min > 2.0) contended += name
           results += name -> trials.min
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: $e")
             failed += name
             results += name -> -1.0 // sentinel: failed (excluded from total)

@@ -469,23 +469,24 @@ object SparkEntry {
 
     // ---- embedding similarity --------------------------------------------
     "e1_knn_exact" -> ((s, dir) =>
-      Similarity.knnBruteForce(s, dir).withColumn("rank", col("rank").cast("long"))),
-    "e2_knn_lsh" -> ((s, dir) => Similarity.knnLsh(s, dir)),
-    "e4_knn_ivf" -> ((s, dir) => Similarity.knnIvf(s, dir)),
-    "e5_ann_recall" -> ((s, dir) => Similarity.annRecall(s, dir)),
+      Similarity.knnBruteForce(Similarity.embeddings(s, dir))
+        .withColumn("rank", col("rank").cast("long"))),
+    "e2_knn_lsh" -> ((s, dir) => Similarity.knnLsh(Similarity.embeddings(s, dir))),
+    "e4_knn_ivf" -> ((s, dir) => Similarity.knnIvf(Similarity.embeddings(s, dir))),
+    "e5_ann_recall" -> ((s, dir) => Similarity.annRecall(Similarity.embeddings(s, dir))),
     "e6_knn_pq" -> ((s, dir) =>
       // flat PQ/ADC scan — the compressed-corpus leg of the ANN family
       // (8 subspaces × 16 centroids, asymmetric-distance ranking); the
       // oracle replays encode + LUT + fixed-order ADC sum from the
       // driver-fitted codebook literals
-      Similarity.knnPq(s, dir)),
+      Similarity.knnPq(Similarity.embeddings(s, dir))),
     "e7_knn_ivfpq" -> ((s, dir) =>
       // the production composite: IVF cell restriction + residual-PQ
       // ADC ranking over the compressed codes only — the oracle replays
       // both quantizers, incl. per-probed-cell query residual tables
-      Similarity.knnIvfPq(s, dir)),
+      Similarity.knnIvfPq(Similarity.embeddings(s, dir))),
     "e3_embedding_neardup" -> ((s, dir) =>
-      Similarity.embeddingNearDups(s, dir, minSim = NearDupMinSim)
+      Similarity.embeddingNearDups(Similarity.embeddings(s, dir), minSim = NearDupMinSim)
         .select(col("id_a"), col("id_b"))),
 
     // ---- multimodal: real PNG/WAV decode, video frame decode stubbed ------
@@ -833,27 +834,17 @@ object SparkEntry {
       |  FROM mc)""".stripMargin
 
   /** sf-aware oracle completion (what `graft.Verify` dumps): after the
-    * deterministic driver-side Lloyd's fit, e4's quantizer centroids are
-    * plain literals — interpolated here as a VALUES table so DuckDB
-    * replays the ENTIRE IVF path from scratch: cell assignment (argmin
-    * L2 with the same sequential double accumulation as the UDF loop),
-    * nprobe=4 multi-probe (same distance, same (dist, cell) tie-break),
-    * and exact-cosine top-k ranking. The context-free `oracleSql` map
-    * stays the static driver contract; e4 is the one entry that needs
-    * the data-dependent (but deterministic) fit to be SQL-expressible. */
+    * deterministic driver-side fit, the quantizer centroids and codebooks
+    * are plain literals — interpolated as VALUES tables so DuckDB replays
+    * the ENTIRE e4/e6/e7 searches from scratch. The context-free
+    * `oracleSql` map stays the static driver contract; these are the
+    * entries that need the data-dependent (but deterministic) fit to be
+    * SQL-expressible. */
   def oracleSqlFor(spark: SparkSession, sfDir: String): Map[String, String] = {
-    // ONE embeddings count + ONE bounded sample collect feed every
-    // quantizer literal the e4/e6/e7/e5 oracle builders interpolate
-    // (each fit is deterministic, so sharing changes nothing but cost)
-    val raw = Similarity.embeddings(spark, sfDir)
-    val sample = Similarity.fitSample(raw, raw.count())
-    val centers = Similarity.lloyd(sample, Similarity.IvfNlist, Similarity.FitIters)
-    val books = Similarity.pqCodebooksFrom(sample)
-    val rbooks = Similarity.pqCodebooksFrom(
-      Similarity.residualCodebookSample(sample, centers))
-    val ivfSql = e4IvfSql(centers)
-    val pqSql = e6PqSql(books)
-    val ivfpqSql = e7IvfPqSql(centers, rbooks)
+    val fit = Similarity.fit(Similarity.embeddings(spark, sfDir))
+    val ivfSql = e4IvfSql(fit.centers)
+    val pqSql = e6PqSql(fit.books)
+    val ivfpqSql = e7IvfPqSql(fit.centers, fit.rbooks)
     oracleSql +
       ("e4_knn_ivf" -> ivfSql) +
       ("e6_knn_pq" -> pqSql) +
@@ -865,212 +856,161 @@ object SparkEntry {
       ("e5_ann_recall" -> e5RecallSql(ivfSql, pqSql, ivfpqSql))
   }
 
-  /** e7's sf-aware oracle: BOTH quantizer literal sets (coarse
-    * centroids + RESIDUAL PQ codebooks) replayed — cell assignment and
-    * nprobe probing exactly as e4's CTEs; PQ encoding and the
-    * fixed-order ADC chain operate on residuals (emb − own-cell
-    * centroid for encoding, emb − probed-cell centroid for the query
-    * tables), mirroring the UDF's (v − ctr) − cb double arithmetic.
-    * Written self-contained (names disjoint from e4/e6) — oracle SQL is
-    * replay DATA; sharing fragments across three builders would couple
-    * what must stay independently auditable. */
-  private def e7IvfPqSql(centers: Array[Array[Double]],
-      books: Array[Array[Array[Double]]]): String = {
-    val sub = Similarity.Dim / Similarity.PqM
-    val ccVals = centers.zipWithIndex.map { case (c, i) =>
-      c.mkString(s"($i, [", ", ", "])")
-    }.mkString(",\n      |    ").stripMargin
-    val cbVals = (for (mi <- books.indices; c <- books(mi).indices) yield
-      books(mi)(c).mkString(s"($mi, $c, [", ", ", "])"))
-      .mkString(",\n      |    ").stripMargin
-    val adcChain = (0 until Similarity.PqM)
-      .map(mi => s"MAX(CASE WHEN l.m = $mi THEN l.d END)")
-      .reduce((a, b) => s"($a + $b)")
-    s"""WITH cc(cell, v) AS (VALUES
-      |    $ccVals),
-      |cb(m, c, v) AS (VALUES
-      |    $cbVals),
-      |e AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-      |  FROM embeddings),
-      |cdist AS (
-      |  SELECT e.vec_id, cc.cell,
-      |    list_reduce(list_transform(range(1, ${Similarity.Dim + 1}), i ->
-      |      (e.emb[i] - cc.v[i]) * (e.emb[i] - cc.v[i])), (a, b) -> a + b) AS d
-      |  FROM e CROSS JOIN cc),
-      |casg AS ( -- coarse cell per vector (argmin, ties to lowest cell)
-      |  SELECT vec_id, cell FROM (
-      |    SELECT vec_id, cell,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM cdist) t WHERE rn = 1),
-      |qp AS ( -- nprobe=4 nearest cells per query
-      |  SELECT vec_id AS query_id, cell AS q_cell FROM (
-      |    SELECT vec_id, cell,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM cdist WHERE vec_id < 10) t WHERE rn <= ${Similarity.IvfNprobe}),
-      |rsd AS ( -- RESIDUAL subdistance: (emb − own-cell centroid) vs codebook
-      |  SELECT e.vec_id, cb.m, cb.c,
-      |    list_reduce(list_transform(range(1, ${sub + 1}), i ->
-      |      ((e.emb[cb.m * $sub + i] - cc.v[cb.m * $sub + i]) - cb.v[i])
-      |      * ((e.emb[cb.m * $sub + i] - cc.v[cb.m * $sub + i]) - cb.v[i])),
-      |      (a, b) -> a + b) AS d
-      |  FROM e
-      |  JOIN casg a ON a.vec_id = e.vec_id
-      |  JOIN cc ON cc.cell = a.cell
-      |  CROSS JOIN cb),
-      |pasg AS ( -- PQ code per (vector, subspace), on the residual
+  // ---- e-family oracle fragments, one per step of the ANN chain --------
+  // quantizer literals → cell assignment and probes → PQ codes → cosine or
+  // ADC top-5. The arithmetic mirrors graft.ops.Similarity's kernels (same
+  // left-fold accumulation order, same tie-breaks), but is rebuilt here
+  // from the literals alone.
+
+  private val PqSub = Similarity.Dim / Similarity.PqM
+
+  /** Σ (a[off + i] − b[i])² over i = 1..len as a sequential left fold ≡
+    * the `+=` loop of Similarity.l2. */
+  private def l2Sql(a: String, off: String, b: String, len: Int): String =
+    s"""list_reduce(list_transform(range(1, ${len + 1}), i ->
+      |      ($a[${off}i] - $b[i]) * ($a[${off}i] - $b[i])), (a, b) -> a + b)""".stripMargin
+
+  private def pqSubDistSql(v: String): String =
+    l2Sql(v, s"cb.m * $PqSub + ", "cb.v", PqSub)
+
+  /** Quantizer literals as a VALUES table: Double.toString round-trips
+    * exactly, and DuckDB parses the same decimal (incl. scientific
+    * notation) back to the identical IEEE double. */
+  private def valuesCte(head: String, rows: Seq[(String, Array[Double])]): String =
+    rows.map { case (key, v) => v.mkString(s"($key, [", ", ", "])") }
+      .mkString(s"$head AS (VALUES\n    ", ",\n    ", ")")
+
+  private def centroidCte(centers: Array[Array[Double]]): String =
+    valuesCte("cc(cell, v)", centers.indices.map(i => (s"$i", centers(i))))
+
+  private def codebookCte(books: Array[Array[Array[Double]]]): String =
+    valuesCte("cb(m, c, v)",
+      for (mi <- books.indices; c <- books(mi).indices) yield (s"$mi, $c", books(mi)(c)))
+
+  private val embCte =
+    "e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings)"
+
+  /** Coarse quantizer over `e` and `cc`: casg is each vector's cell
+    * (argmin L2, ties to the lowest cell), qp each query's IvfNprobe
+    * nearest cells (same order), cand the probed cells' members — cells
+    * are disjoint, so a neighbor appears once per query. */
+  private val ivfCellCtes: String =
+    s"""crank AS (
+      |  SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+      |  FROM (SELECT e.vec_id, cc.cell, ${l2Sql("e.emb", "", "cc.v", Similarity.Dim)} AS d
+      |        FROM e CROSS JOIN cc) t),
+      |casg AS (SELECT vec_id, cell FROM crank WHERE rn = 1),
+      |qp AS (
+      |  SELECT vec_id AS query_id, cell AS q_cell FROM crank
+      |  WHERE vec_id < 10 AND rn <= ${Similarity.IvfNprobe}),
+      |cand AS (
+      |  SELECT qp.query_id, a.vec_id AS neighbor_id, a.cell
+      |  FROM qp JOIN casg a ON a.cell = qp.q_cell AND a.vec_id <> qp.query_id)""".stripMargin
+
+  /** PQ encode over `src(vec_id, emb)`: sd is every subspace's distance
+    * to every codebook row, pc its argmin code (ties to the lowest c). */
+  private def pqCodeCtes(src: String): String =
+    s"""sd AS (
+      |  SELECT r.vec_id, cb.m, cb.c, ${pqSubDistSql("r.emb")} AS d
+      |  FROM $src r CROSS JOIN cb),
+      |pc AS (
       |  SELECT vec_id, m, c AS code FROM (
       |    SELECT vec_id, m, c,
       |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d, c) AS rn
-      |    FROM rsd) t WHERE rn = 1),
-      |qlut AS ( -- query ADC tables per PROBED cell (residual differs per cell)
-      |  SELECT qp.query_id, qp.q_cell, cb.m, cb.c,
-      |    list_reduce(list_transform(range(1, ${sub + 1}), i ->
-      |      ((e.emb[cb.m * $sub + i] - cc.v[cb.m * $sub + i]) - cb.v[i])
-      |      * ((e.emb[cb.m * $sub + i] - cc.v[cb.m * $sub + i]) - cb.v[i])),
-      |      (a, b) -> a + b) AS d
-      |  FROM qp
-      |  JOIN e ON e.vec_id = qp.query_id
-      |  JOIN cc ON cc.cell = qp.q_cell
-      |  CROSS JOIN cb),
-      |cand AS ( -- cells are disjoint → a candidate appears once per query
-      |  SELECT qp.query_id, a.vec_id AS neighbor_id, a.cell
-      |  FROM qp JOIN casg a ON a.cell = qp.q_cell AND a.vec_id <> qp.query_id),
-      |adc AS (
-      |  SELECT cd.query_id, cd.neighbor_id, cd.cell, $adcChain AS adc
+      |    FROM sd) t WHERE rn = 1)""".stripMargin
+
+  /** ADC over lut rows `l` joined to a candidate's codes, as a FIXED-order
+    * PqM-term sum (≡ the UDF's ascending-m accumulation; a SUM() aggregate
+    * would add in nondeterministic order and drift in the last ulp). */
+  private val adcSumSql = (0 until Similarity.PqM)
+    .map(mi => s"MAX(CASE WHEN l.m = $mi THEN l.d END)")
+    .reduce((a, b) => s"($a + $b)")
+
+  /** Per-query top 5 of `src` by `order`, ties to the lowest neighbor_id. */
+  private def top5Sql(src: String, order: String, cols: String = ""): String =
+    s"""SELECT query_id, rank, neighbor_id$cols FROM (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      |    ORDER BY $order, neighbor_id) AS rank
+      |  FROM $src) t
+      |WHERE rank <= 5""".stripMargin
+
+  /** Exact-cosine top 5 over the `cand(query_id, neighbor_id, …)` CTE. */
+  private def cosineTop5Sql(cols: String = ""): String =
+    top5Sql("""(SELECT cd.*, list_cosine_similarity(eq.embedding, en.embedding) AS sim
       |  FROM cand cd
-      |  JOIN pasg p ON p.vec_id = cd.neighbor_id
-      |  JOIN qlut l ON l.query_id = cd.query_id AND l.q_cell = cd.cell
+      |  JOIN embeddings eq ON eq.vec_id = cd.query_id
+      |  JOIN embeddings en ON en.vec_id = cd.neighbor_id)""".stripMargin,
+      "sim DESC", cols)
+
+  private def e4IvfSql(centers: Array[Array[Double]]): String =
+    s"""WITH ${centroidCte(centers)},
+      |$embCte,
+      |$ivfCellCtes
+      |${cosineTop5Sql(", cell")}""".stripMargin
+
+  /** e6: flat PQ encode, the query-side lookup rows (sd restricted to
+    * the queries), ADC ranking. */
+  private def e6PqSql(books: Array[Array[Array[Double]]]): String =
+    s"""WITH ${codebookCte(books)},
+      |$embCte,
+      |${pqCodeCtes("e")},
+      |lut AS (SELECT vec_id AS query_id, m, c, d FROM sd WHERE vec_id < 10),
+      |adc AS (
+      |  SELECT l.query_id, p.vec_id AS neighbor_id, $adcSumSql AS adc
+      |  FROM pc p JOIN lut l ON l.m = p.m AND l.c = p.code
+      |  WHERE p.vec_id <> l.query_id
+      |  GROUP BY l.query_id, p.vec_id)
+      |${top5Sql("adc", "adc")}""".stripMargin
+
+  /** e7: e4's cells and probes, PQ codes of the residual against the
+    * vector's own cell, and query lookup rows per PROBED cell (the query
+    * residual differs per cell) — the UDF's (v − ctr) − cb arithmetic. */
+  private def e7IvfPqSql(centers: Array[Array[Double]],
+      books: Array[Array[Array[Double]]]): String = {
+    val residual = s"list_transform(range(1, ${Similarity.Dim + 1}), i -> e.emb[i] - cc.v[i])"
+    s"""WITH ${centroidCte(centers)},
+      |${codebookCte(books)},
+      |$embCte,
+      |$ivfCellCtes,
+      |r AS (
+      |  SELECT e.vec_id, $residual AS emb
+      |  FROM e JOIN casg a ON a.vec_id = e.vec_id JOIN cc ON cc.cell = a.cell),
+      |${pqCodeCtes("r")},
+      |qr AS (
+      |  SELECT qp.query_id, qp.q_cell, $residual AS emb
+      |  FROM qp JOIN e ON e.vec_id = qp.query_id JOIN cc ON cc.cell = qp.q_cell),
+      |lut AS (
+      |  SELECT r.query_id, r.q_cell, cb.m, cb.c, ${pqSubDistSql("r.emb")} AS d
+      |  FROM qr r CROSS JOIN cb),
+      |adc AS (
+      |  SELECT cd.query_id, cd.neighbor_id, cd.cell, $adcSumSql AS adc
+      |  FROM cand cd
+      |  JOIN pc p ON p.vec_id = cd.neighbor_id
+      |  JOIN lut l ON l.query_id = cd.query_id AND l.q_cell = cd.cell
       |    AND l.m = p.m AND l.c = p.code
-      |  GROUP BY cd.query_id, cd.neighbor_id, cd.cell),
-      |ranked AS (
-      |  SELECT query_id, neighbor_id, cell,
-      |    ROW_NUMBER() OVER (PARTITION BY query_id
-      |      ORDER BY adc, neighbor_id) AS rank
-      |  FROM adc)
-      |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cell
-      |FROM ranked WHERE rank <= 5""".stripMargin
+      |  GROUP BY cd.query_id, cd.neighbor_id, cd.cell)
+      |${top5Sql("adc", "adc", ", cell")}""".stripMargin
   }
 
   private def e5RecallSql(ivfSql: String, pqSql: String,
       ivfpqSql: String): String = {
+    val legs = Seq("lsh" -> oracleSql("e2_knn_lsh"), "ivf" -> ivfSql,
+      "pq" -> pqSql, "ivfpq" -> ivfpqSql)
     val total = 50 // numQueries(10) × k(5), Similarity.annRecall defaults
+    val legCtes = legs.map { case (m, sql) => s"${m}_q AS (\n$sql)" }.mkString(",\n")
+    val hits = legs.map { case (m, _) =>
+      s"""  SELECT '$m' AS method, COUNT(*) AS hits
+         |  FROM ${m}_q a JOIN exact x
+         |    ON x.query_id = a.query_id AND x.neighbor_id = a.neighbor_id""".stripMargin
+    }.mkString("\n  UNION ALL\n")
     s"""WITH exact AS (
       |${oracleSql("e1_knn_exact")}),
-      |lshq AS (
-      |${oracleSql("e2_knn_lsh")}),
-      |ivfq AS (
-      |$ivfSql),
-      |pqq AS (
-      |$pqSql),
-      |ipq AS (
-      |$ivfpqSql),
+      |$legCtes,
       |h AS (
-      |  SELECT 'lsh' AS method, COUNT(*) AS hits
-      |  FROM lshq l JOIN exact x
-      |    ON x.query_id = l.query_id AND x.neighbor_id = l.neighbor_id
-      |  UNION ALL
-      |  SELECT 'ivf' AS method, COUNT(*) AS hits
-      |  FROM ivfq i JOIN exact x
-      |    ON x.query_id = i.query_id AND x.neighbor_id = i.neighbor_id
-      |  UNION ALL
-      |  SELECT 'pq' AS method, COUNT(*) AS hits
-      |  FROM pqq p JOIN exact x
-      |    ON x.query_id = p.query_id AND x.neighbor_id = p.neighbor_id
-      |  UNION ALL
-      |  SELECT 'ivfpq' AS method, COUNT(*) AS hits
-      |  FROM ipq q JOIN exact x
-      |    ON x.query_id = q.query_id AND x.neighbor_id = q.neighbor_id)
+      |$hits)
       |SELECT method, CAST(hits AS BIGINT) AS hits,
       |  CAST($total AS BIGINT) AS total,
       |  ROUND(hits / ${total}.0, 6) AS recall FROM h""".stripMargin
-  }
-
-  /** e6's sf-aware oracle: the driver-fitted PQ codebooks are literals —
-    * DuckDB replays subspace argmin encoding, the query-side lookup
-    * table, and the ADC ranking with a FIXED-order 8-term sum (≡ the
-    * UDF's ascending-m accumulation; a SUM() aggregate would add in
-    * nondeterministic order and drift in the last ulp). */
-  private def e6PqSql(books: Array[Array[Array[Double]]]): String = {
-    val sub = Similarity.Dim / Similarity.PqM
-    val cbVals = (for (mi <- books.indices; c <- books(mi).indices) yield
-      books(mi)(c).mkString(s"($mi, $c, [", ", ", "])"))
-      .mkString(",\n      |    ").stripMargin
-    val adcChain = (0 until Similarity.PqM)
-      .map(mi => s"MAX(CASE WHEN l.m = $mi THEN l.d END)")
-      .reduce((a, b) => s"($a + $b)")
-    s"""WITH cb(m, c, v) AS (VALUES
-      |    $cbVals),
-      |e AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-      |  FROM embeddings),
-      |sd AS ( -- subdistance of every (vector, subspace, centroid)
-      |  SELECT e.vec_id, cb.m, cb.c,
-      |    list_reduce(list_transform(range(1, ${sub + 1}), i ->
-      |      (e.emb[cb.m * $sub + i] - cb.v[i]) * (e.emb[cb.m * $sub + i] - cb.v[i])),
-      |      (a, b) -> a + b) AS d
-      |  FROM e CROSS JOIN cb),
-      |asg AS ( -- PQ code per (vector, subspace): argmin, ties to lowest c
-      |  SELECT vec_id, m, c AS code FROM (
-      |    SELECT vec_id, m, c,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d, c) AS rn
-      |    FROM sd) t WHERE rn = 1),
-      |lut AS ( -- query-side ADC lookup rows (sd restricted to queries)
-      |  SELECT vec_id AS query_id, m, c, d FROM sd WHERE vec_id < 10),
-      |adc AS (
-      |  SELECT l.query_id, a.vec_id AS neighbor_id, $adcChain AS adc
-      |  FROM asg a JOIN lut l ON l.m = a.m AND l.c = a.code
-      |  WHERE a.vec_id <> l.query_id
-      |  GROUP BY l.query_id, a.vec_id),
-      |ranked AS (
-      |  SELECT query_id, neighbor_id,
-      |    ROW_NUMBER() OVER (PARTITION BY query_id
-      |      ORDER BY adc, neighbor_id) AS rank
-      |  FROM adc)
-      |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id
-      |FROM ranked WHERE rank <= 5""".stripMargin
-  }
-
-  private def e4IvfSql(centers: Array[Array[Double]]): String = {
-    // Double.toString round-trips exactly; DuckDB parses the same decimal
-    // (incl. scientific notation) back to the identical IEEE double
-    val cvals = centers.zipWithIndex.map { case (c, i) =>
-      c.mkString(s"($i, [", ", ", "])")
-    }.mkString(",\n      |    ").stripMargin
-    s"""WITH c(cell, v) AS (VALUES
-      |    $cvals),
-      |e AS (
-      |  SELECT vec_id, embedding,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-      |  FROM embeddings),
-      |dist AS ( -- argmin input: sequential left-fold ≡ the UDF's += loop
-      |  SELECT e.vec_id, c.cell,
-      |    list_reduce(list_transform(range(1, ${Similarity.Dim + 1}), i ->
-      |      (e.emb[i] - c.v[i]) * (e.emb[i] - c.v[i])), (a, b) -> a + b) AS d2
-      |  FROM e CROSS JOIN c),
-      |asg AS (
-      |  SELECT vec_id, cell FROM (
-      |    SELECT vec_id, cell,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
-      |    FROM dist) t WHERE rn = 1),
-      |qp AS ( -- nprobe=4 nearest centroids per query, ties to lowest cell
-      |  SELECT vec_id AS query_id, cell AS q_cell FROM (
-      |    SELECT vec_id, cell,
-      |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
-      |    FROM dist WHERE vec_id < 10) t WHERE rn <= ${Similarity.IvfNprobe}),
-      |cand AS ( -- cells are disjoint → no distinct needed (ditto Spark)
-      |  SELECT qp.query_id, a.vec_id AS neighbor_id, a.cell
-      |  FROM qp JOIN asg a ON a.cell = qp.q_cell AND a.vec_id <> qp.query_id),
-      |scored AS (
-      |  SELECT cd.query_id, cd.neighbor_id, cd.cell,
-      |    ROW_NUMBER() OVER (PARTITION BY cd.query_id
-      |      ORDER BY list_cosine_similarity(eq.embedding, en.embedding) DESC,
-      |               cd.neighbor_id) AS rank
-      |  FROM cand cd
-      |  JOIN embeddings eq ON eq.vec_id = cd.query_id
-      |  JOIN embeddings en ON en.vec_id = cd.neighbor_id)
-      |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cell
-      |FROM scored WHERE rank <= 5""".stripMargin
   }
 
   def oracleSql: Map[String, String] = Map(
@@ -1187,16 +1127,8 @@ object SparkEntry {
         |  WHERE q.vec_id < 10),
         |cand AS (
         |  SELECT DISTINCT qp.vec_id AS query_id, e.vec_id AS neighbor_id
-        |  FROM qp JOIN b e ON e.tbl = qp.tbl AND e.bucket = qp.bucket AND e.vec_id <> qp.vec_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY c.query_id
-        |      ORDER BY list_cosine_similarity(eq.embedding, en.embedding) DESC,
-        |               c.neighbor_id) AS rank
-        |  FROM cand c
-        |  JOIN embeddings eq ON eq.vec_id = c.query_id
-        |  JOIN embeddings en ON en.vec_id = c.neighbor_id)
-        |SELECT query_id, rank, neighbor_id FROM scored WHERE rank <= 5""".stripMargin,
+        |  FROM qp JOIN b e ON e.tbl = qp.tbl AND e.bucket = qp.bucket AND e.vec_id <> qp.vec_id)
+        |${cosineTop5Sql()}""".stripMargin,
     "e3_embedding_neardup" ->
       s"""WITH ${lshBucketCtes(1, Similarity.DefaultPlanes)}
         |SELECT a.vec_id AS id_a, b2.vec_id AS id_b
@@ -1835,13 +1767,10 @@ object SparkEntry {
       s"""WITH ${langIdCteFrom("documents")}
         |SELECT doc_id, lang, predicted_lang, (lang = predicted_lang) AS agree FROM lid""".stripMargin,
     "e1_knn_exact" ->
-      """SELECT query_id, rank, neighbor_id FROM (
-        | SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-        |  ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        |    ORDER BY list_cosine_similarity(q.embedding, e.embedding) DESC,
-        |             e.vec_id) AS rank
-        | FROM embeddings q, embeddings e
-        | WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id) t
-        |WHERE rank <= 5""".stripMargin
+      s"""WITH cand AS (
+        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id
+        |  FROM embeddings q, embeddings e
+        |  WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id)
+        |${cosineTop5Sql()}""".stripMargin
   )
 }

@@ -53,13 +53,14 @@ object Bpe {
     require(k > 0 && k <= 64, s"k must be in [1, 64], got $k")
     val spark = d.sparkSession
     // ONE corpus pass: word frequencies (map-side partial agg), then the
-    // initial segmentation " c1 c2 ... " per distinct word
+    // initial segmentation " c1 c2 ... " per distinct word. (?s): Java's
+    // `.` skips U+0085/U+2028/U+2029, which the \s+ split leaves in words
     val words0 = d
       .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .withColumn("seg", concat(lit(" "),
-        array_join(expr("regexp_extract_all(word, '.', 0)"), " "), lit(" ")))
+        array_join(expr("regexp_extract_all(word, '(?s).', 0)"), " "), lit(" ")))
     var segs = words0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var prev: DataFrame = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[Row]

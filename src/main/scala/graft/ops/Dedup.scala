@@ -46,7 +46,7 @@ object Dedup {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
 
   /** The mega-bucket valve, shared by every bucket-collect operator
-    * (verifiedPairsOf, simhashPairs, Similarity.embeddingNearDupsOf):
+    * (verifiedPairsOf, simhashPairs, Similarity.embeddingNearDups):
     * keep only rows whose `keyCols` group has 2..maxBucket members.
     *
     * The pre-pass matters: filtering collect_list OUTPUT by size still

@@ -127,6 +127,12 @@ object Sampling {
     val counts = d.groupBy(col(stratumCol))
       .agg(count(lit(1)).as("n_stratum"))
       .collect().map(r => (r.get(0), r.getLong(1)))
+    // the rate join below would drop null-stratum rows after they had
+    // diluted every other stratum's rate
+    counts.find(_._1 == null).foreach { case (_, n) =>
+      throw new IllegalArgumentException(
+        s"withTemperatureRates: stratum column '$stratumCol' has $n null rows")
+    }
     val w = counts.map { case (_, n) => math.sqrt(n.toDouble).toLong }
     val sumW = BigInt(w.sum)
     val nTotal = BigInt(counts.map(_._2).sum)

@@ -1,16 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label).
   *
-  * Baseline: brute-force cosine top-k with higher-order array functions
+  * Every search takes a (vec_id, embedding) frame and is one chain:
+  * blocking (sign-LSH bucket or IVF cell — none for the exhaustive e1/e6
+  * scans), a candidate join, then exact-cosine or ADC ranking. Baseline:
+  * brute-force cosine top-k with higher-order array functions
   * (`zip_with` + `aggregate` — whole-stage codegen, no UDF). Scale path:
-  * random-hyperplane LSH bucketing so each query only scans its bucket —
-  * the equi-join on bucket key replaces the cross join (at 100 TB the
-  * cross join is the bottleneck; bucketing makes candidate generation a
+  * bucketing so each query only scans its bucket or cell — the
+  * equi-join on the block key replaces the cross join (at 100 TB the
+  * cross join is the bottleneck; blocking makes candidate generation a
   * shuffled hash join, and the small query side broadcasts).
   */
 object Similarity {
@@ -19,7 +23,7 @@ object Similarity {
     spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   /** cosine(a, b) as a codegen'd Column expression (no UDF). */
-  def cosine(a: Column, b: Column): Column = {
+  private def cosine(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) => x * y),
       lit(0.0), (acc, v) => acc + v)
     val na = sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
@@ -27,28 +31,28 @@ object Similarity {
     dot / (na * nb)
   }
 
+  private def queryVectors(emb: DataFrame, numQueries: Int): DataFrame =
+    emb.filter(col("vec_id") < numQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+
+  /** The ranking step of e1/e2/e4: per-query exact-cosine top-k over
+    * (query_id, q_emb, neighbor_id, embedding) candidates, ties to the
+    * lowest neighbor_id. `rank` is row_number's int. */
+  private def cosineTopK(cands: DataFrame, k: Int, keep: Column*): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    cands.withColumn("sim", cosine(col("q_emb"), col("embedding")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(Seq(col("query_id"), col("rank"), col("neighbor_id")) ++ keep: _*)
+  }
+
   /** Brute-force cosine top-k: queries × corpus; the query side is tiny
     * and broadcast, ranking via a window partitioned by query. */
-  def knnBruteForce(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5): DataFrame =
-    knnBruteForceOf(embeddings(spark, sfDir), numQueries, k)
-
-  /** knnBruteForce over ANY (vec_id, embedding) frame — annRecall threads
-    * ONE persisted frame through every leg this way (one corpus scan for
-    * the whole recall gate instead of one per leg). */
-  def knnBruteForceOf(emb: DataFrame,
-      numQueries: Int = 10, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val queries = emb.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"))
-  }
+  def knnBruteForce(emb: DataFrame, numQueries: Int = 10, k: Int = 5): DataFrame =
+    cosineTopK(emb.select(col("vec_id").as("neighbor_id"), col("embedding"))
+      .join(broadcast(queryVectors(emb, numQueries)),
+        col("neighbor_id") =!= col("query_id")), k)
 
   // ---- sign-LSH, shared bit-for-bit with the DuckDB oracle -------------
   // Hyperplane components are CLOSED-FORM pseudo-random values in [-1, 1]
@@ -56,26 +60,8 @@ object Similarity {
   // e2/e3 oracles rebuild the exact planes with integer SQL and verify
   // the whole ANN path end-to-end.
   val Dim = 64 // embeddings table dimension (TESTDATA.md)
-  val DefaultPlanes = 6 // bits per table → 64 buckets (test-SF pin; see derivedPlanes)
+  val DefaultPlanes = 6 // bits per table → 64 buckets
   val DefaultTables = 8 // multi-table LSH: recall 1-(1-p)^L vs p
-
-  /** Production LSH width from corpus size: the smallest nPlanes giving an
-    * expected bucket occupancy ≤ targetBucket under a uniform-hash model —
-    * ceil(log2(n / targetBucket)), floored at DefaultPlanes (the pinned
-    * oracle width, correct at test SFs) and capped at 30 (≈10⁹ buckets —
-    * beyond that, bucket keys stop fitting comfortable shuffle-partition
-    * counts and more TABLES, not more planes, is the recall-safe lever).
-    * At 10¹² rows and targetBucket=1000 this derives 30; the fixed default
-    * of 6 (64 buckets) would make every query's candidate set O(N) — the
-    * parameter, not the plan shape, was the r2 scale gap. */
-  def derivedPlanes(n: Long, targetBucket: Long = 1000L): Int = {
-    require(targetBucket > 0, s"targetBucket must be positive, got $targetBucket")
-    if (n <= targetBucket) DefaultPlanes
-    else {
-      val ratioCeilLog = 64 - java.lang.Long.numberOfLeadingZeros((n - 1) / targetBucket)
-      math.min(30, math.max(DefaultPlanes, ratioCeilLog))
-    }
-  }
 
   /** XOR masks of Hamming weight 0..probeBits over nPlanes bit positions —
     * the multi-probe key set (weight-0 mask = the bucket itself). Any
@@ -95,24 +81,18 @@ object Similarity {
   val PlaneRange = 2001L
 
   /** plane(t, p, i) ∈ [-1, 1], deterministic and SQL-replicable. */
-  def planeVal(table: Int, plane: Int, i: Int): Double = {
+  private def planeVal(table: Int, plane: Int, i: Int): Double = {
     val idx = (table.toLong * 64 + plane) * 64 + i + 1
     (idx * PlaneCoefK % PlaneCoefP % PlaneRange - 1000L) / 1000.0
   }
 
   /** Sign-LSH bucket per (vector, table): nPlanes sign bits per table,
-    * nTables independent tables. One narrow stage (generator + UDF). */
-  def lshBuckets(spark: SparkSession, sfDir: String,
-      nPlanes: Int = DefaultPlanes, nTables: Int = DefaultTables): DataFrame =
-    lshBucketsOf(embeddings(spark, sfDir), nPlanes, nTables)
-
-  /** Same bucketing over ANY (vec_id, embedding) frame. ALL tables'
-    * buckets come from ONE UDF call per vector (then posexplode) — the
-    * per-(vector, table) shape paid the UDF serialization boundary and
-    * the Seq→indexed access nTables times per vector (measured ~25% of
-    * e2's latency at 8 tables); bucket VALUES are bit-identical, so the
-    * e2/e3 oracles are unaffected. */
-  def lshBucketsOf(emb: DataFrame,
+    * nTables independent tables. ALL tables' buckets come from ONE UDF
+    * call per vector (then posexplode) — the per-(vector, table) shape
+    * paid the UDF serialization boundary and the Seq→indexed access
+    * nTables times per vector (measured ~25% of e2's latency at 8
+    * tables). */
+  def lshBuckets(emb: DataFrame,
       nPlanes: Int = DefaultPlanes, nTables: Int = DefaultTables): DataFrame = {
     val planes = Array.tabulate(nTables, nPlanes, Dim)(planeVal)
     val bucketsOf = udf((v: Seq[Float]) => {
@@ -143,32 +123,18 @@ object Similarity {
   }
 
   /** Approximate top-k via multi-table sign-LSH with query-side
-    * MULTI-PROBE: each query probes its own bucket plus every ≤2-bit
-    * flip of it per table (the standard recall lever — a near neighbor
-    * on the wrong side of one or two hyperplanes still surfaces),
-    * candidates = equi-join on (table, bucket), distinct, ranked by
-    * exact cosine. Probing multiplies only the tiny broadcast query side
-    * ((1 + nPlanes + C(nPlanes,2))× rows — 22× at the default 6 planes),
-    * never the corpus; at 100 TB the bucketed corpus can live
-    * bucketed-at-rest so repeated query batches skip the exchange. */
-  def knnLsh(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5,
-      nPlanes: Int = DefaultPlanes, nTables: Int = DefaultTables,
-      probeBits: Int = 2): DataFrame =
-    knnLshOf(embeddings(spark, sfDir), numQueries, k, nPlanes, nTables,
-      probeBits)
-
-  /** knnLsh over ANY (vec_id, embedding) frame (see knnBruteForceOf). */
-  def knnLshOf(emb: DataFrame,
-      numQueries: Int = 10, k: Int = 5,
-      nPlanes: Int = DefaultPlanes, nTables: Int = DefaultTables,
-      probeBits: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucketed = lshBucketsOf(emb, nPlanes, nTables)
-    // probeBits tunes the recall/latency trade: 0 = exact-bucket only,
-    // 1 = +single-plane flips, 2 = +plane-pair flips (default; 22 keys
-    // per table at 6 planes, recall@5 0.92 on the pinned corpus); any
-    // radius up to nPlanes is honored (probe count Σ C(nPlanes, i))
+    * MULTI-PROBE: each query probes its own bucket plus every
+    * ≤probeBits-bit flip of it per table (the standard recall lever — a
+    * near neighbor on the wrong side of one or two hyperplanes still
+    * surfaces), candidates = equi-join on (table, bucket), distinct,
+    * ranked by exact cosine. Probing multiplies only the tiny broadcast
+    * query side (Σ C(nPlanes, i) keys per table — 22 at the default 6
+    * planes and 2 bits, recall@5 0.92 on the pinned corpus), never the
+    * corpus; at 100 TB the bucketed corpus can live bucketed-at-rest so
+    * repeated query batches skip the exchange. */
+  def knnLsh(emb: DataFrame, numQueries: Int = 10, k: Int = 5,
+      nPlanes: Int = DefaultPlanes, probeBits: Int = 2): DataFrame = {
+    val bucketed = lshBuckets(emb, nPlanes)
     val probeCols: Seq[Column] =
       probeMasks(nPlanes, probeBits).map(m => col("bucket").bitwiseXOR(lit(m)))
     val queryBuckets = bucketed.filter(col("vec_id") < numQueries)
@@ -180,69 +146,81 @@ object Similarity {
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
       .distinct()
-    val qEmb = emb.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = cands
+    cosineTopK(cands
       .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")), "neighbor_id")
-      .join(broadcast(qEmb), "query_id")
-      .withColumn("sim", cosine(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"))
+      .join(broadcast(queryVectors(emb, numQueries)), "query_id"), k)
+      .withColumn("rank", col("rank").cast("long"))
   }
 
-  /** Production entry point: knnLsh with nPlanes DERIVED from the corpus
-    * row count (parquet metadata count — no data scan), so bucket
-    * occupancy stays O(targetBucket) at any corpus size instead of
-    * degenerating to O(N) candidates at the fixed test-SF width. The
-    * pinned-width `knnLsh` remains the oracle path. */
-  def knnLshAuto(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5,
-      targetBucket: Long = 1000L, nTables: Int = DefaultTables,
-      probeBits: Int = 2): DataFrame = {
-    val n = embeddings(spark, sfDir).count()
-    knnLsh(spark, sfDir, numQueries, k,
-      nPlanes = derivedPlanes(n, targetBucket), nTables, probeBits)
+  // ------------------------------------------------ quantizers (e4/e6/e7)
+
+  private val FitSampleCap = 100000L
+  private val FitIters = 5
+  private val IvfTargetCell = 100000L
+
+  // PQ code size is PqM codes of log2(PqKs) bits: 8 codes of 4 bits per
+  // vector. m and ks trade RECALL against CODE BYTES, not corpus size, so
+  // they stay fixed while nlist tracks corpus size to keep probe-side
+  // cell scans bounded.
+  val PqM = 8
+  val PqKs = 16
+  val IvfNprobe = 4
+
+  /** IVF list count from corpus size: ceil(n / 100k) cells, keeping
+    * expected cell occupancy near 100k rows, clamped to [16, 65536]
+    * (beyond ~64k cells the coarse-quantizer fit itself needs sharding).
+    * Every test SF lands on the floor, 16. */
+  def derivedNlist(n: Long): Int =
+    math.min(65536L, math.max(16L, (n + IvfTargetCell - 1) / IvfTargetCell)).toInt
+
+  /** The quantizers fitted from one `fit` sample. Each is fitted on first
+    * read, so a search fits only what it uses (e4 never fits codebooks). */
+  final class Fit private[Similarity] (n: Long, sample: Array[Array[Float]]) {
+    /** Coarse IVF centroids, derivedNlist(n) of them. */
+    lazy val centers: Array[Array[Double]] = lloyd(sample, derivedNlist(n), FitIters)
+    /** Flat PQ codebooks (e6): Lloyd's per subspace over the raw sample. */
+    lazy val books: Array[Array[Array[Double]]] = pqCodebooks(sample)
+    /** Residual PQ codebooks (e7): fitted on x − centroid(x). Residuals
+      * are narrowed to Float for lloyd's input: codebooks are arbitrary
+      * deterministic literals (the oracle replays them, never refits). */
+    lazy val rbooks: Array[Array[Array[Double]]] = pqCodebooks(sample.map { v =>
+      val ctr = centers(nearest(v, 0, Zero, centers))
+      Array.tabulate(v.length)(i => (v(i) - ctr(i)).toFloat)
+    })
   }
 
-  /** IVF (inverted-file) ANN: k-means coarse quantizer partitions the
-    * corpus into nlist cells; a query scans only its own cell(s), ranked
-    * by exact cosine. The scale path complement to sign-LSH (knnLsh):
-    * cells adapt to the data distribution where hyperplanes are oblivious.
-    *
-    * Quantizer fit: a seeded sample capped at `FitSampleCap` rows,
-    * ordered by vec_id, trained DRIVER-SIDE with plain Lloyd iterations
-    * (deterministic init = first nlist sampled vectors; ties break to the
-    * lowest cell). A coarse quantizer needs only a sketch of the
-    * distribution — standard IVF practice — and the in-process fit costs
-    * zero Spark jobs (the previous MLlib KMeans spent several fixed-
-    * overhead jobs per fit). At 100 TB the sample stays ≤ FitSampleCap
-    * (≈25 MB driver-side at Dim=64); assignment ships the tiny centroid
-    * table in the closure and runs as a narrow map. Candidate generation
-    * is an equi-join on cell id — same shuffle shape as the LSH bucket
-    * join, and the cell table can live bucketed at rest so repeated
-    * query batches skip the exchange. At test SFs the corpus is under the
+  /** Quantizer fit: one count and one seeded sample capped at
+    * `FitSampleCap` rows, ordered by vec_id, trained DRIVER-SIDE with
+    * plain Lloyd iterations (deterministic init = first k sampled
+    * vectors; ties break to the lowest cell). A coarse quantizer needs
+    * only a sketch of the distribution — standard IVF practice — and the
+    * in-process fit costs zero Spark jobs beyond the sample collect. At
+    * 100 TB the sample stays ≤ FitSampleCap (≈25 MB driver-side at
+    * Dim=64); the fitted centroids/codebooks are plain literals
+    * afterwards, which is what lets the e4/e6/e7 oracles replay the whole
+    * search as DuckDB VALUES tables. At test SFs the corpus is under the
     * cap, so the fit sees every row and results are exactly stable. */
-  val FitSampleCap = 100000L
-  val FitIters = 5
+  def fit(emb: DataFrame): Fit = {
+    val n = emb.count() // parquet metadata count, or the cached frame's
+    val sample =
+      (if (n <= FitSampleCap) emb
+       else emb.sample(withReplacement = false, FitSampleCap.toDouble / n, seed = 42L))
+        .select(col("vec_id"), col("embedding"))
+        .orderBy(col("vec_id")).limit(FitSampleCap.toInt)
+        .collect()
+        .map(_.getSeq[Float](1).toArray)
+    new Fit(n, sample)
+  }
 
-  /** Production IVF list count from corpus size: nlist ≈ √(n/nprobe-ish
-    * constant) is the standard heuristic; here the smallest power-feel
-    * value keeping expected cell occupancy ≤ targetCell —
-    * ceil(n / targetCell), clamped to [16, 65536] (beyond ~64k cells the
-    * coarse-quantizer fit itself needs sharding). The pinned default 16
-    * remains the test-SF/oracle path. */
-  def derivedNlist(n: Long, targetCell: Long = 100000L): Int = {
-    require(targetCell > 0, s"targetCell must be positive, got $targetCell")
-    val cells = (n + targetCell - 1) / targetCell
-    math.min(65536L, math.max(16L, cells)).toInt
+  private def pqCodebooks(sample: Array[Array[Float]]): Array[Array[Array[Double]]] = {
+    val sub = Dim / PqM
+    Array.tabulate(PqM)(mi => lloyd(
+      sample.map(v => java.util.Arrays.copyOfRange(v, mi * sub, (mi + 1) * sub)),
+      PqKs, FitIters))
   }
 
   /** Plain Lloyd's: deterministic for a fixed input order. */
-  private[graft] def lloyd(xs: Array[Array[Float]], k: Int, iters: Int): Array[Array[Double]] = {
+  private def lloyd(xs: Array[Array[Float]], k: Int, iters: Int): Array[Array[Double]] = {
     val dim = if (xs.isEmpty) Dim else xs(0).length
     val centers = Array.tabulate(k)(c =>
       if (xs.isEmpty) new Array[Double](dim)
@@ -255,7 +233,7 @@ object Similarity {
       var j = 0
       while (j < xs.length) {
         val x = xs(j)
-        val c = nearestCenter(x, centers)
+        val c = nearest(x, 0, Zero, centers)
         val s = sums(c)
         var i = 0
         while (i < dim && i < x.length) { s(i) += x(i); i += 1 }
@@ -275,164 +253,123 @@ object Similarity {
     centers
   }
 
-  private def nearestCenter(v: Array[Float], centers: Array[Array[Double]]): Int = {
+  // ---- the distance kernels, one each ----------------------------------
+  // The oracle replays the same double arithmetic as a left fold, so a
+  // drifted copy would desync encode from ranking and surface only as an
+  // oracle failure.
+
+  private val Zero = new Array[Double](Dim)
+
+  /** ‖(v − ctr0) − cb‖² over cb's dims, v read from offset `base` and
+    * accumulated in index order. ctr0 = Zero gives the plain distance
+    * (x − 0.0 is exact), so coarse assignment, flat PQ and residual PQ
+    * share this one loop. */
+  @inline private def l2(v: Array[Float], base: Int, ctr0: Array[Double],
+      cb: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < cb.length) {
+      val d = (v(base + i) - ctr0(base + i)) - cb(i)
+      s += d * d; i += 1
+    }
+    s
+  }
+
+  /** argmin over `cbs` of l2 — strict <, so the lowest index wins ties,
+    * matching the oracle's ROW_NUMBER (d, index) ordering. */
+  private def nearest(v: Array[Float], base: Int, ctr0: Array[Double],
+      cbs: Array[Array[Double]]): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
-    while (c < centers.length) {
-      val ctr = centers(c)
-      var s = 0.0
-      var i = 0
-      while (i < ctr.length && i < v.length) {
-        val diff = v(i) - ctr(i); s += diff * diff; i += 1
-      }
+    while (c < cbs.length) {
+      val s = l2(v, base, ctr0, cbs(c))
       if (s < bestD) { bestD = s; best = c }
       c += 1
     }
     best
   }
 
-  /** Production entry point: knnIvf with nlist DERIVED from the corpus
-    * row count (metadata-only count), keeping expected cell occupancy
-    * near targetCell at any scale; the pinned nlist=16 `knnIvf` remains
-    * the test-SF/e5 path. */
-  def knnIvfAuto(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5,
-      targetCell: Long = 100000L, nprobe: Int = 4): DataFrame = {
-    val n = embeddings(spark, sfDir).count()
-    knnIvf(spark, sfDir, numQueries, k,
-      nlist = derivedNlist(n, targetCell), nprobe = nprobe,
-      knownCount = Some(n)) // metadata-only, but don't pay it twice
-  }
+  /** The IvfNprobe cells nearest to v, ties to the lowest cell. */
+  private def probeCells(v: Array[Float], centers: Array[Array[Double]]): Array[Int] =
+    centers.indices.map(c => (l2(v, 0, Zero, centers(c)), c))
+      .sortBy(identity).take(IvfNprobe).map(_._2).toArray
 
-  /** The shared deterministic fit sample: seeded, vec_id-ordered,
-    * bounded at FitSampleCap rows (one bounded collect). Callers that
-    * need several quantizers (IVF + PQ, or the oracle builders) should
-    * collect this ONCE and fit from it; the fitted centroids/codebooks
-    * are plain literals afterwards, which is what lets the e4/e6/e7
-    * oracles replay the whole search as DuckDB VALUES tables. */
-  private[graft] def fitSample(raw: DataFrame, n: Long): Array[Array[Float]] =
-    (if (n <= FitSampleCap) raw
-     else raw.sample(withReplacement = false, FitSampleCap.toDouble / n, seed = 42L))
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(FitSampleCap.toInt)
-      .collect()
-      .map(_.getSeq[Float](1).toArray)
+  /** PQ code of v: the nearest codebook row per subspace, on the
+    * residual v − ctr0. */
+  private def pqEncode(v: Array[Float], ctr0: Array[Double],
+      books: Array[Array[Array[Double]]]): Array[Int] =
+    Array.tabulate(PqM)(mi => nearest(v, mi * (Dim / PqM), ctr0, books(mi)))
 
-  def fitCenters(raw: DataFrame, n: Long, nlist: Int): Array[Array[Double]] =
-    lloyd(fitSample(raw, n), nlist, FitIters)
+  /** ADC lookup table of query q against residual cell ctr0:
+    * lut(m)(c) = ‖(q − ctr0)_m − codebook(m)(c)‖². */
+  private def pqLut(q: Array[Float], ctr0: Array[Double],
+      books: Array[Array[Array[Double]]]): Array[Array[Double]] =
+    Array.tabulate(PqM, PqKs)((mi, c) => l2(q, mi * (Dim / PqM), ctr0, books(mi)(c)))
 
-  // ------------------------------------------- product quantization (e6)
-
-  val PqM = 8   // subspaces (Dim/PqM dims each)
-  val PqKs = 16 // centroids per subspace → 4 bits/subspace, 8× compression
-  // Coarse-quantizer defaults shared by knnIvf / knnIvfPq / annRecall's
-  // shared fit / the oracle builders — ONE name so they cannot drift.
-  val IvfNlist = 16
-  val IvfNprobe = 4
-
-  /** PQ codebooks: an independent deterministic Lloyd's per subspace
-    * over the SAME bounded fit sample (driver-side, zero Spark jobs
-    * beyond the one sample collect — the codebooks are plain literals
-    * afterwards, which is what lets the oracle replay the whole search
-    * in SQL). */
-  def fitPqCodebooks(raw: DataFrame, n: Long, m: Int = PqM,
-      ks: Int = PqKs): Array[Array[Array[Double]]] =
-    pqCodebooksFrom(fitSample(raw, n), m, ks)
-
-  private[graft] def pqCodebooksFrom(sample: Array[Array[Float]],
-      m: Int = PqM, ks: Int = PqKs): Array[Array[Array[Double]]] = {
-    val sub = Dim / m
-    Array.tabulate(m)(mi => lloyd(
-      sample.map(v => java.util.Arrays.copyOfRange(v, mi * sub, (mi + 1) * sub)),
-      ks, FitIters))
-  }
-
-  /** PQ encode UDF for the FLAT path (e6) — raw-vector codebooks. e7's
-    * residual variant lives in knnIvfPq and shares `residualSubDist`
-    * with its query tables. Strict < in the argmin: lowest index wins
-    * ties, matching the SQL ROW_NUMBER (d, c) ordering. */
-  private def pqEncodeUdf(books: Array[Array[Array[Double]]], m: Int,
-      ks: Int, sub: Int) = udf((v: Seq[Float]) => {
-    val codes = new Array[Int](m)
+  /** Asymmetric distance: LUT entries summed in ascending subspace order. */
+  private def adc(lut: Array[Array[Double]], codes: Seq[Int]): Double = {
+    var s = 0.0
     var mi = 0
-    while (mi < m) {
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < ks) {
-        val ctr = books(mi)(c)
-        var s = 0.0
-        var i = 0
-        while (i < sub) { val d = v(mi * sub + i) - ctr(i); s += d * d; i += 1 }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      codes(mi) = best
-      mi += 1
-    }
-    codes
-  })
+    while (mi < PqM) { s += lut(mi)(codes(mi)); mi += 1 }
+    s
+  }
 
-  /** Query-side ADC lookup tables: lut(qi)(m)(c) = ‖q_sub − codebook‖². */
-  private def pqLutOf(queries: Array[(Long, Array[Float])],
-      books: Array[Array[Array[Double]]], m: Int, ks: Int,
-      sub: Int): Array[Array[Array[Double]]] =
-    queries.map { case (_, qv) =>
-      Array.tabulate(m)(mi => Array.tabulate(ks) { c =>
-        val ctr = books(mi)(c)
-        var s = 0.0
-        var i = 0
-        while (i < sub) { val d = qv(mi * sub + i) - ctr(i); s += d * d; i += 1 }
-        s
-      })
-    }
-
-  private def collectQueries(raw: DataFrame,
+  private def collectQueries(emb: DataFrame,
       numQueries: Int): Array[(Long, Array[Float])] =
-    raw.filter(col("vec_id") < numQueries)
+    emb.filter(col("vec_id") < numQueries)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
-  /** Flat PQ/ADC top-k — the COMPRESSED exhaustive scan, the 100 TB
-    * memory play: the corpus is encoded once to m 4-bit-ish codes per
-    * vector (8× smaller than the float vectors) and every query ranks by
-    * asymmetric distance (query-to-codebook lookup tables, built
-    * driver-side per query and shipped in the closure — numQueries is
-    * bounded). Encode and ADC are narrow maps; the per-row ADC explode is
-    * a generator (NOT a join); the only exchange is the per-query top-k
-    * window. L2/ADC metric by construction (PQ quantizes distances, not
-    * angles); e1/e2/e4 stay the cosine family and e5 measures recall
-    * across all of them against e1. */
-  def knnPq(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5, m: Int = PqM, ks: Int = PqKs,
-      knownCount: Option[Long] = None,
-      fittedBooks: Option[Array[Array[Array[Double]]]] = None): DataFrame =
-    knnPqOf(embeddings(spark, sfDir), numQueries, k, m, ks, knownCount,
-      fittedBooks)
+  /** IVF (inverted-file) ANN: the k-means coarse quantizer partitions the
+    * corpus into nlist cells; a query scans only its IvfNprobe nearest
+    * cells (same euclidean metric as the assignment), ranked by exact
+    * cosine. The scale-path complement to sign-LSH: cells adapt to the
+    * data distribution where hyperplanes are oblivious. Centroids are
+    * tiny and ship in the UDF closure — a narrow map, then the same
+    * equi-join on cell id as the LSH bucket join; a neighbor appears at
+    * most once per query because cells are disjoint, so no distinct is
+    * needed. */
+  def knnIvf(emb: DataFrame, numQueries: Int = 10, k: Int = 5): DataFrame =
+    ivfTopK(emb, fit(emb), numQueries, k)
 
-  /** knnPq over ANY (vec_id, embedding) frame (see knnBruteForceOf). */
-  def knnPqOf(raw: DataFrame,
-      numQueries: Int = 10, k: Int = 5, m: Int = PqM, ks: Int = PqKs,
-      knownCount: Option[Long] = None,
-      fittedBooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val books = fittedBooks.getOrElse {
-      val n = knownCount.getOrElse(raw.count())
-      fitPqCodebooks(raw, n, m, ks)
-    }
-    val sub = Dim / m
-    val encode = pqEncodeUdf(books, m, ks, sub)
-    val queries = collectQueries(raw, numQueries)
-    val lut = pqLutOf(queries, books, m, ks, sub)
+  private def ivfTopK(emb: DataFrame, f: Fit, numQueries: Int, k: Int): DataFrame = {
+    val centers = f.centers
+    val cellOf = udf((v: Seq[Float]) => nearest(v.toArray, 0, Zero, centers))
+    val probesOf = udf((v: Seq[Float]) => probeCells(v.toArray, centers))
+    val cells = emb
+      .select(col("vec_id").as("neighbor_id"), col("embedding"))
+      .withColumn("cell", cellOf(col("embedding")))
+    val queries = cells.filter(col("neighbor_id") < numQueries)
+      .select(col("neighbor_id").as("query_id"), col("embedding").as("q_emb"),
+        explode(probesOf(col("embedding"))).as("q_cell"))
+    cosineTopK(cells.join(broadcast(queries),
+      col("cell") === col("q_cell") && col("neighbor_id") =!= col("query_id")),
+      k, col("cell"))
+      .withColumn("rank", col("rank").cast("long"))
+  }
+
+  /** Flat PQ/ADC top-k — the COMPRESSED exhaustive scan, the 100 TB
+    * memory play: the corpus is encoded once to PqM 4-bit codes per
+    * vector and every query ranks by asymmetric distance (query-to-
+    * codebook lookup tables, built driver-side per query and shipped in
+    * the closure — numQueries is bounded). Encode and ADC are narrow
+    * maps; the per-row ADC explode is a generator (NOT a join); the only
+    * exchange is the per-query top-k window. L2/ADC metric by
+    * construction (PQ quantizes distances, not angles); e1/e2/e4 stay the
+    * cosine family and e5 measures recall across all of them against e1. */
+  def knnPq(emb: DataFrame, numQueries: Int = 10, k: Int = 5): DataFrame =
+    pqTopK(emb, fit(emb), numQueries, k)
+
+  private def pqTopK(emb: DataFrame, f: Fit, numQueries: Int, k: Int): DataFrame = {
+    val books = f.books
+    val encode = udf((v: Seq[Float]) => pqEncode(v.toArray, Zero, books))
+    val queries = collectQueries(emb, numQueries)
+    val luts = queries.map { case (_, qv) => pqLut(qv, Zero, books) }
     val qids = queries.map(_._1)
     val adcAll = udf((codes: Seq[Int]) =>
-      qids.indices.map { qi =>
-        var s = 0.0
-        var mi = 0
-        while (mi < m) { s += lut(qi)(mi)(codes(mi)); mi += 1 }
-        (qids(qi), s)
-      })
-    val scored = raw
+      qids.indices.map(qi => (qids(qi), adc(luts(qi), codes))))
+    val scored = emb
       .select(col("vec_id"), encode(col("embedding")).as("codes"))
       .select(col("vec_id"), explode(adcAll(col("codes"))).as("qa"))
       .select(col("qa._1").as("query_id"), col("vec_id"), col("qa._2").as("adc"))
@@ -493,73 +430,12 @@ object Similarity {
   /** The global per-query merge over localTopK's bounded candidates: the
     * only exchange of the ADC rankers. */
   private def globalTopK(cands: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc, col("vec_id").asc)
     cands.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("vec_id"), col("cell"))
-  }
-
-  def knnIvf(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5, nlist: Int = IvfNlist,
-      nprobe: Int = IvfNprobe, knownCount: Option[Long] = None,
-      fittedCenters: Option[Array[Array[Double]]] = None): DataFrame =
-    knnIvfOf(embeddings(spark, sfDir), numQueries, k, nlist, nprobe,
-      knownCount, fittedCenters)
-
-  /** knnIvf over ANY (vec_id, embedding) frame (see knnBruteForceOf). */
-  def knnIvfOf(raw: DataFrame,
-      numQueries: Int = 10, k: Int = 5, nlist: Int = IvfNlist,
-      nprobe: Int = IvfNprobe, knownCount: Option[Long] = None,
-      fittedCenters: Option[Array[Array[Double]]] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // fittedCenters: a caller fitting several quantizers (annRecall)
-    // shares ONE sample collect instead of refitting per leg — the fit
-    // is deterministic, so this changes cost only
-    val centers = fittedCenters.getOrElse {
-      val n = knownCount.getOrElse(raw.count()) // parquet metadata count
-      fitCenters(raw, n, nlist)
-    }
-    val cellOf = udf((v: Seq[Float]) => nearestCenter(v.toArray, centers))
-    val cells = raw
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("cell", cellOf(col("embedding")))
-    // multi-probe search: each query probes its nprobe nearest centroids
-    // (same euclidean metric as the assignment). Centroids are tiny and
-    // ship in the UDF closure — a narrow map, then the same equi-join on
-    // cell id; a neighbor appears at most once per query because cells
-    // are disjoint, so no distinct is needed.
-    val probesOf = udf((v: Seq[Float]) => {
-      val d = new Array[Double](centers.length)
-      var c = 0
-      while (c < centers.length) {
-        val ctr = centers(c)
-        var s = 0.0
-        var i = 0
-        while (i < ctr.length && i < v.length) {
-          val diff = v(i) - ctr(i); s += diff * diff; i += 1
-        }
-        d(c) = s
-        c += 1
-      }
-      d.zipWithIndex.sortBy { case (dist, idx) => (dist, idx) }
-        .take(nprobe).map(_._2)
-    })
-    val queries = cells.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        explode(probesOf(col("embedding"))).as("q_cell"))
-    val scored = cells
-      .join(broadcast(queries),
-        col("cell") === col("q_cell") && col("vec_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), col("cell"))
   }
 
   /** IVF-restricted PQ search — the production ANN composite at 100 TB,
@@ -569,95 +445,41 @@ object Similarity {
     * the variance is), and the query-side ADC tables are built per
     * (query, probed cell) since the query residual differs per cell.
     * Candidate generation is e4's cell equi-join (query probes its
-    * nprobe nearest coarse cells — computed driver-side here, since the
-    * bounded query set is collected for the ADC tables anyway), but
-    * ranking reads ONLY the m-byte PQ codes: the search never touches
-    * the float vectors, so at scale the scan is the compressed corpus
-    * plus one int cell id per row. Exchanges: the broadcast probe join
-    * is shuffle-free; the per-query top-k window is the only exchange. */
-  def knnIvfPq(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5, nlist: Int = IvfNlist,
-      nprobe: Int = IvfNprobe, m: Int = PqM, ks: Int = PqKs,
-      knownCount: Option[Long] = None,
-      fitted: Option[(Array[Array[Double]], Array[Array[Array[Double]]])] =
-        None): DataFrame =
-    knnIvfPqOf(embeddings(spark, sfDir), numQueries, k, nlist, nprobe,
-      m, ks, knownCount, fitted)
+    * IvfNprobe nearest coarse cells — computed driver-side here, since
+    * the bounded query set is collected for the ADC tables anyway), but
+    * ranking reads ONLY the PQ codes: the search never touches the float
+    * vectors, so at scale the scan is the compressed corpus plus one int
+    * cell id per row. Exchanges: the broadcast probe join is
+    * shuffle-free; the per-query top-k window is the only exchange. */
+  def knnIvfPq(emb: DataFrame, numQueries: Int = 10, k: Int = 5): DataFrame =
+    ivfPqTopK(emb, fit(emb), numQueries, k)
 
-  /** knnIvfPq over ANY (vec_id, embedding) frame (see knnBruteForceOf). */
-  def knnIvfPqOf(raw: DataFrame,
-      numQueries: Int = 10, k: Int = 5, nlist: Int = IvfNlist,
-      nprobe: Int = IvfNprobe, m: Int = PqM, ks: Int = PqKs,
-      knownCount: Option[Long] = None,
-      fitted: Option[(Array[Array[Double]], Array[Array[Array[Double]]])] =
-        None): DataFrame = {
-    val sp = raw.sparkSession
+  private def ivfPqTopK(emb: DataFrame, f: Fit, numQueries: Int, k: Int): DataFrame = {
+    val sp = emb.sparkSession
     import sp.implicits._
-    // ONE bounded sample collect feeds BOTH quantizer fits; the PQ
-    // codebooks are fitted on RESIDUALS (x − centroid(x)) — true IVF+PQ
-    val (centers, books) = fitted.getOrElse {
-      val n = knownCount.getOrElse(raw.count())
-      val sample = fitSample(raw, n)
-      val cs = lloyd(sample, nlist, FitIters)
-      (cs, pqCodebooksFrom(residualCodebookSample(sample, cs), m, ks))
-    }
-    val sub = Dim / m
+    val (centers, books) = (f.centers, f.rbooks)
     // one UDF emits (cell, codes): the coarse assignment is needed for
     // the residual anyway, so it is never computed twice
     val encode = udf((v: Seq[Float]) => {
       val va = v.toArray
-      val cell = nearestCenter(va, centers)
-      val ctr0 = centers(cell)
-      val codes = new Array[Int](m)
-      var mi = 0
-      while (mi < m) {
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < ks) {
-          val s = residualSubDist(va, ctr0, books(mi)(c), mi * sub, sub)
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        codes(mi) = best
-        mi += 1
-      }
-      (cell, codes)
+      val cell = nearest(va, 0, Zero, centers)
+      (cell, pqEncode(va, centers(cell), books))
     })
-    val coded = raw.select(col("vec_id"), encode(col("embedding")).as("cc"))
+    val coded = emb.select(col("vec_id"), encode(col("embedding")).as("cc"))
       .select(col("vec_id"), col("cc._1").as("cell"), col("cc._2").as("codes"))
-    val queries = collectQueries(raw, numQueries)
-    // nprobe nearest coarse cells per query — same metric and (dist,
-    // cell) tie-break as e4's probesOf, evaluated on the driver
+    val queries = collectQueries(emb, numQueries)
     val probeRows: Seq[(Long, Int, Int)] = queries.zipWithIndex.flatMap {
-      case ((qid, qv), qi) =>
-        centers.indices.map { c =>
-          val ctr = centers(c)
-          var s = 0.0
-          var i = 0
-          while (i < ctr.length && i < qv.length) {
-            val d = qv(i) - ctr(i); s += d * d; i += 1
-          }
-          (s, c)
-        }.sortBy(identity).take(nprobe).map { case (_, c) => (qid, c, qi) }
+      case ((qid, qv), qi) => probeCells(qv, centers).map(c => (qid, c, qi))
     }.toSeq
     // ADC tables are per (query, PROBED CELL): the query residual
     // differs per cell. 40-entry map (numQueries × nprobe), closure-tiny.
     val lutByQC: Map[(Int, Int), Array[Array[Double]]] =
       probeRows.map { case (_, cell, qi) =>
-        val qv = queries(qi)._2
-        val ctr0 = centers(cell)
-        (qi, cell) -> Array.tabulate(m)(mi => Array.tabulate(ks)(c =>
-          residualSubDist(qv, ctr0, books(mi)(c), mi * sub, sub)))
+        (qi, cell) -> pqLut(queries(qi)._2, centers(cell), books)
       }.toMap
     val probes = probeRows.toDF("query_id", "q_cell", "qi")
-    val adcOf = udf((qi: Int, cell: Int, codes: Seq[Int]) => {
-      val lut = lutByQC((qi, cell))
-      var s = 0.0
-      var mi = 0
-      while (mi < m) { s += lut(mi)(codes(mi)); mi += 1 }
-      s
-    })
+    val adcOf = udf((qi: Int, cell: Int, codes: Seq[Int]) =>
+      adc(lutByQC((qi, cell)), codes))
     val scored = coded
       .join(broadcast(probes),
         col("cell") === col("q_cell") && col("vec_id") =!= col("query_id"))
@@ -668,81 +490,25 @@ object Similarity {
         col("cell"))
   }
 
-  /** Production entry point for the composite — the search you'd actually
-    * run at 100 TB: nlist DERIVED from the corpus row count (metadata-only
-    * count, same ceil(n/targetCell) clamp as knnIvfAuto) so expected cell
-    * occupancy stays near targetCell at any scale; the pinned nlist=16
-    * `knnIvfPq` remains the test-SF/e7 oracle path.
-    *
-    * The m/ks trade-off (why they stay pinned): m subspaces × log2(ks)
-    * bits is the code size — m=8, ks=16 stores 8 codes of 4 bits = 8
-    * bytes/vector (32× smaller than 64 floats) with 8 independent
-    * codebooks of 16×8 doubles each, fitted from the SAME bounded sample
-    * at any corpus size. Raising ks (16→256) improves ADC resolution but
-    * grows every LUT and codebook 16× and needs a proportionally larger
-    * fit sample per centroid; raising m halves each subspace (finer
-    * quantization, bigger codes). Corpus size argues for neither — they
-    * trade RECALL against CODE BYTES, so they are a quality knob the
-    * caller sets, while nlist tracks corpus size to keep probe-side cell
-    * scans bounded. */
-  def knnIvfPqAuto(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5,
-      targetCell: Long = 100000L, nprobe: Int = IvfNprobe,
-      m: Int = PqM, ks: Int = PqKs): DataFrame = {
-    val raw = embeddings(spark, sfDir)
-    val n = raw.count() // parquet metadata count, no data scan
-    knnIvfPqOf(raw, numQueries, k,
-      nlist = derivedNlist(n, targetCell), nprobe = nprobe, m = m, ks = ks,
-      knownCount = Some(n))
-  }
-
-  /** The residual-PQ distance kernel — ‖(v − ctr0)_sub − cb‖² over one
-    * subspace starting at `base`. ONE definition shared by e7's encode
-    * UDF and its query ADC tables (the oracle replays the identical
-    * ((v−ctr)−cb) double chain; a drifted copy would desync encode from
-    * ranking and only surface as an oracle failure). */
-  @inline private def residualSubDist(v: Array[Float], ctr0: Array[Double],
-      cb: Array[Double], base: Int, sub: Int): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < sub) {
-      val d = (v(base + i) - ctr0(base + i)) - cb(i)
-      s += d * d; i += 1
-    }
-    s
-  }
-
-  /** Residual fit sample for IVF-PQ: x − centroid(x) per sample vector.
-    * Codebooks are arbitrary deterministic literals (the oracle replays
-    * them as VALUES, never refits), so narrowing residuals to Float for
-    * lloyd's input costs nothing. */
-  private[graft] def residualCodebookSample(sample: Array[Array[Float]],
-      centers: Array[Array[Double]]): Array[Array[Float]] =
-    sample.map { v =>
-      val ctr = centers(nearestCenter(v, centers))
-      Array.tabulate(v.length)(i => (v(i) - ctr(i)).toFloat)
-    }
-
   /** Recall gate for the approximate paths (the judge's "measured, not
-    * just runs" bar): recall@k of sign-LSH (e2) and IVF (e4) against the
-    * exact top-k (e1), all inside one job. Every seed is fixed and the
-    * IVF fit is single-partition (see knnIvf), so the emitted numbers are
-    * deterministic and the e5 oracle pins them. */
-  def annRecall(spark: SparkSession, sfDir: String,
-      numQueries: Int = 10, k: Int = 5): DataFrame = {
+    * just runs" bar): recall@k of sign-LSH, IVF, PQ and IVF-PQ against
+    * the exact top-k (e1), all inside one job. Every seed is fixed and the
+    * quantizer fit is driver-side over an ordered sample, so the emitted
+    * numbers are deterministic and the e5 oracle pins them. */
+  def annRecall(emb: DataFrame, numQueries: Int = 10, k: Int = 5): DataFrame = {
+    val spark = emb.sparkSession
     import spark.implicits._
     val total = numQueries.toLong * k
     // ONE persisted corpus frame threads through EVERY leg (ground truth,
     // all four approximate searches, the shared quantizer fit): uncached,
-    // each leg re-scanned embeddings independently — 5+ parquet scans for
-    // one recall number, the slowest r4 bench entry. swapCache evicts the
+    // each leg re-scanned embeddings independently. swapCache evicts the
     // previous invocation's copy, so a long-lived session holds one copy.
-    val raw = Dedup.swapCache("e5-embeddings", embeddings(spark, sfDir))
-    val n = raw.count() // materializes the cache before the legs fan out
+    val raw = Dedup.swapCache("e5-embeddings", emb)
+    val f = fit(raw) // its count materializes the cache before the legs fan out
     // ground truth is numQueries×k rows — materialize ONCE driver-side
     // (bounded by construction) instead of re-running the brute-force
     // scan for each approximate method's semi-join
-    val exact = knnBruteForceOf(raw, numQueries, k)
+    val exact = knnBruteForce(raw, numQueries, k)
       .select(col("query_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       .toDF("query_id", "neighbor_id")
@@ -752,18 +518,10 @@ object Similarity {
         .agg(count(lit(1)).as("hits"))
         .select(lit(method).as("method"), col("hits"), lit(total).as("total"),
           round(col("hits") / total, 6).as("recall"))
-    // ONE sample collect + count feed every fitted leg's quantizers
-    val sample = fitSample(raw, n)
-    val centers = lloyd(sample, IvfNlist, FitIters)
-    val books = pqCodebooksFrom(sample)
-    val rbooks = pqCodebooksFrom(residualCodebookSample(sample, centers))
-    recallOf(knnLshOf(raw, numQueries, k), "lsh")
-      .unionAll(recallOf(knnIvfOf(raw, numQueries, k,
-        fittedCenters = Some(centers)), "ivf"))
-      .unionAll(recallOf(knnPqOf(raw, numQueries, k,
-        fittedBooks = Some(books)), "pq"))
-      .unionAll(recallOf(knnIvfPqOf(raw, numQueries, k,
-        fitted = Some((centers, rbooks))), "ivfpq"))
+    recallOf(knnLsh(raw, numQueries, k), "lsh")
+      .unionAll(recallOf(ivfTopK(raw, f, numQueries, k), "ivf"))
+      .unionAll(recallOf(pqTopK(raw, f, numQueries, k), "pq"))
+      .unionAll(recallOf(ivfPqTopK(raw, f, numQueries, k), "ivfpq"))
   }
 
   /** Embedding-cosine near-duplicate pairs: single-table bucketing +
@@ -776,19 +534,11 @@ object Similarity {
     * Dedup.verifiedPairsOf): buckets larger than the cap are dropped
     * WHOLE — before any collect_list materializes them, so a hot bucket
     * can never OOM an executor (see Dedup.capBuckets). Default uncapped
-    * for oracle parity at test SFs; production sets O(10³) and derives
-    * nPlanes from corpus size (derivedPlanes) so buckets stay small in
-    * the first place. */
-  def embeddingNearDups(spark: SparkSession, sfDir: String,
-      minSim: Double = 0.95, nPlanes: Int = DefaultPlanes,
-      maxBucket: Int = Int.MaxValue): DataFrame =
-    embeddingNearDupsOf(embeddings(spark, sfDir), minSim, nPlanes, maxBucket)
-
-  /** embeddingNearDups over ANY (vec_id, embedding) frame. */
-  def embeddingNearDupsOf(emb: DataFrame, minSim: Double = 0.95,
-      nPlanes: Int = DefaultPlanes, maxBucket: Int = Int.MaxValue): DataFrame = {
+    * for oracle parity at test SFs; production sets O(10³). */
+  def embeddingNearDups(emb: DataFrame, minSim: Double = 0.95,
+      maxBucket: Int = Int.MaxValue): DataFrame = {
     val bucketed = Dedup.capBuckets(
-      lshBucketsOf(emb, nPlanes, nTables = 1), Seq("bucket"), maxBucket)
+      lshBuckets(emb, nTables = 1), Seq("bucket"), maxBucket)
     bucketed
       .groupBy(col("bucket"))
       .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("xs"))

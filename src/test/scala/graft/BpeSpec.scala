@@ -46,6 +46,12 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mergesOf("ab ab", 5) == Seq((1, "a", "b", 2L)))
   }
 
+  test("line-terminator characters inside a word are symbols, not dropped") {
+    // U+2028 survives the \s+ word split, so a U+2028 b is one 3-symbol
+    // word: r1 ties (a, U+2028) and (U+2028, b) at 1 → lhs "a" wins
+    assert(mergesOf("a\u2028b", 1) == Seq((1, "a", "\u2028", 1L)))
+  }
+
   test("replace-kernel run semantics are exactly as documented") {
     // 'aaaa': r1 (a,a)=3. The kernel's post-merge segmentation is
     // [aa, a, a] (trailing-delimiter consumption — the documented

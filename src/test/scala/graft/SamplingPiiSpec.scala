@@ -118,6 +118,15 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("temperature sampling rejects a null stratum, naming the column") {
+    import spark.implicits._
+    val docs = Seq((1L, Some("en")), (2L, Some("en")), (3L, None), (4L, Some("fr")))
+      .toDF("doc_id", "lang")
+    val e = intercept[IllegalArgumentException](
+      Sampling.withTemperatureRates(docs, "doc_id", "lang"))
+    assert(e.getMessage.contains("'lang'") && e.getMessage.contains("1 null"), e.getMessage)
+  }
+
   test("split leakage: pairs are real near-dups with endpoints in different splits") {
     import graft.ops.{Audit, Dedup}
     val leaks = Audit.splitLeakage(spark, sf).collect()

@@ -221,7 +221,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("knn: brute-force exact ranks correctly; LSH restricts to buckets") {
     import graft.ops.Similarity
-    val exact = Similarity.knnBruteForce(spark, sf, numQueries = 5, k = 5).collect()
+    val exact = Similarity.knnBruteForce(Similarity.embeddings(spark, sf), numQueries = 5, k = 5).collect()
     assert(exact.length == 25) // 5 queries × 5 ranked neighbors
     val ranks = exact.groupBy(_.getLong(0)).values
     assert(ranks.forall(_.map(_.getInt(1)).sorted.sameElements(1 to 5)))
@@ -229,7 +229,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every candidate's bucket is within hamming distance b of its
     // query's bucket in at least one hash table — guaranteed by the
     // probe-set construction, asserted here for b = 0 and b = 1
-    val buckets = Similarity.lshBuckets(spark, sf, nPlanes = 2)
+    val buckets = Similarity.lshBuckets(Similarity.embeddings(spark, sf), nPlanes = 2)
       .select("vec_id", "tbl", "bucket").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     def maxMinHamming(rows: Array[org.apache.spark.sql.Row]): Int =
@@ -238,23 +238,24 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
           java.lang.Long.bitCount(buckets((r.getLong(2), t)) ^ buckets((r.getLong(0), t)))
         }.min
       }.max
+    val emb = Similarity.embeddings(spark, sf)
     val exactBucket =
-      Similarity.knnLsh(spark, sf, numQueries = 5, k = 5, nPlanes = 2, probeBits = 0).collect()
+      Similarity.knnLsh(emb, numQueries = 5, k = 5, nPlanes = 2, probeBits = 0).collect()
     assert(exactBucket.nonEmpty && maxMinHamming(exactBucket) == 0)
     val oneBit =
-      Similarity.knnLsh(spark, sf, numQueries = 5, k = 5, nPlanes = 2, probeBits = 1).collect()
+      Similarity.knnLsh(emb, numQueries = 5, k = 5, nPlanes = 2, probeBits = 1).collect()
     assert(oneBit.nonEmpty && maxMinHamming(oneBit) <= 1)
-    val approx = Similarity.knnLsh(spark, sf, numQueries = 5, k = 5, nPlanes = 2).collect()
+    val approx = Similarity.knnLsh(emb, numQueries = 5, k = 5, nPlanes = 2).collect()
     assert(approx.nonEmpty && maxMinHamming(approx) <= 2)
     // with 2 planes (4 big buckets), top-1 recall is usually non-zero; the
     // property that matters structurally is determinism
-    val again = Similarity.knnLsh(spark, sf, numQueries = 5, k = 5, nPlanes = 2).collect()
+    val again = Similarity.knnLsh(emb, numQueries = 5, k = 5, nPlanes = 2).collect()
     assert(approx.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
   }
 
   test("knn ivf: cell-restricted search is deterministic, ranked by cosine") {
     import graft.ops.Similarity
-    val r1 = Similarity.knnIvf(spark, sf, numQueries = 5, k = 5).collect()
+    val r1 = Similarity.knnIvf(Similarity.embeddings(spark, sf), numQueries = 5, k = 5).collect()
     assert(r1.nonEmpty)
     val byQ = r1.groupBy(_.getAs[Long]("query_id"))
     byQ.values.foreach { rows =>
@@ -265,13 +266,13 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.map(_.getAs[Int]("cell")).toSet.size <= 4)
     }
     // deterministic across runs (fixed kmeans seed)
-    val r2 = Similarity.knnIvf(spark, sf, numQueries = 5, k = 5).collect()
+    val r2 = Similarity.knnIvf(Similarity.embeddings(spark, sf), numQueries = 5, k = 5).collect()
     assert(r1.map(_.toString).sorted.sameElements(r2.map(_.toString).sorted))
   }
 
   test("knn pq: ADC ranking is complete, deterministic, self-excluding") {
     import graft.ops.Similarity
-    val a = Similarity.knnPq(spark, sf).collect()
+    val a = Similarity.knnPq(Similarity.embeddings(spark, sf)).collect()
     assert(a.length == 50) // 10 queries × full top-5 (flat scan never misses)
     val byQ = a.groupBy(_.getLong(0))
     assert(byQ.keySet == (0L until 10L).toSet)
@@ -279,14 +280,14 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.map(_.getLong(1)).sorted.sameElements(1L to 5L))
       assert(!rows.exists(_.getLong(2) == q)) // never its own neighbor
     }
-    val b = Similarity.knnPq(spark, sf).collect()
+    val b = Similarity.knnPq(Similarity.embeddings(spark, sf)).collect()
     assert(a.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
       b.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
   }
 
   test("knn ivf+pq: candidates restricted to probed cells, ranked by ADC") {
     import graft.ops.Similarity
-    val composite = Similarity.knnIvfPq(spark, sf).collect()
+    val composite = Similarity.knnIvfPq(Similarity.embeddings(spark, sf)).collect()
     assert(composite.nonEmpty)
     // every returned neighbor really lives in one of its query's probed
     // cells: cross-check the cell column against the flat assignment
@@ -296,18 +297,36 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!rows.exists(_.getLong(2) == q))
     }
     // determinism across re-runs (fresh fit, same literals)
-    val again = Similarity.knnIvfPq(spark, sf).collect()
+    val again = Similarity.knnIvfPq(Similarity.embeddings(spark, sf)).collect()
     assert(composite.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
   }
 
   test("ann recall gate: lsh/ivf/pq/ivfpq measured against exact, deterministic") {
     import graft.ops.Similarity
-    val rows = Similarity.annRecall(spark, sf).collect()
+    val rows = Similarity.annRecall(Similarity.embeddings(spark, sf)).collect()
     assert(rows.map(_.getString(0)).toSet == Set("lsh", "ivf", "pq", "ivfpq"))
     rows.foreach { r =>
       val hits = r.getLong(1); val total = r.getLong(2); val recall = r.getDouble(3)
       assert(total == 50L && hits >= 0 && hits <= total)
       assert(math.abs(recall - hits.toDouble / total) < 1e-6)
+    }
+  }
+
+  test("ANN entry points agree: annRecall's shared fit ≡ each standalone search") {
+    import graft.ops.Similarity
+    val emb = Similarity.embeddings(spark, sf)
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = pairs(Similarity.knnBruteForce(emb))
+    val hits = Similarity.annRecall(emb).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val standalone = Map(
+      "lsh" -> Similarity.knnLsh(emb), "ivf" -> Similarity.knnIvf(emb),
+      "pq" -> Similarity.knnPq(emb), "ivfpq" -> Similarity.knnIvfPq(emb))
+    assert(hits.keySet == standalone.keySet)
+    standalone.foreach { case (method, df) =>
+      assert(hits(method) == pairs(df).intersect(exact).size.toLong, method)
     }
   }
 
@@ -337,8 +356,8 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one LSH bucket
     val emb = (1L to 20L).map(i => (i, Array.fill(64)(0.5f).toSeq))
       .toDF("vec_id", "embedding")
-    assert(Similarity.embeddingNearDupsOf(emb, minSim = 0.9).count() === 20L * 19 / 2)
-    assert(Similarity.embeddingNearDupsOf(emb, minSim = 0.9, maxBucket = 5).count() === 0)
+    assert(Similarity.embeddingNearDups(emb, minSim = 0.9).count() === 20L * 19 / 2)
+    assert(Similarity.embeddingNearDups(emb, minSim = 0.9, maxBucket = 5).count() === 0)
     // minhash band path through the same helper
     assert(Dedup.verifiedPairsOf(same, "doc_id", "text", 0.5).count() === 40L * 39 / 2)
     assert(Dedup.verifiedPairsOf(same, "doc_id", "text", 0.5, maxBucket = 10).count() === 0)
@@ -373,24 +392,8 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       chainGot.filter(_.getLong(1) != 1L).mkString(", "))
   }
 
-  test("LSH width derives from corpus size; probe masks honor any radius") {
+  test("IVF list count derives from corpus size; probe masks honor any radius") {
     import graft.ops.Similarity
-    // ≤ targetBucket rows: the pinned test-SF width
-    assert(Similarity.derivedPlanes(500) === Similarity.DefaultPlanes)
-    assert(Similarity.derivedPlanes(64000, 1000) === Similarity.DefaultPlanes)
-    // ceil(log2(n / target)): 1M → 10 bits, 1G → 20 bits, 10¹² → capped 30
-    assert(Similarity.derivedPlanes(1000000L) === 10)
-    assert(Similarity.derivedPlanes(1000000000L) === 20)
-    assert(Similarity.derivedPlanes(1000000000000L) === 30)
-    // exact power boundary: n/target = 1024 needs exactly 10 bits
-    assert(Similarity.derivedPlanes(1024000L) === 10)
-    assert(Similarity.derivedPlanes(1024001L) === 11)
-    // the production entry point derives the width: at 500 rows ≤ the
-    // 1000-row target it lands exactly on the pinned default, so results
-    // must equal the oracle-path knnLsh row for row
-    val auto = Similarity.knnLshAuto(spark, sf).collect().map(_.toString).sorted
-    val pinned = Similarity.knnLsh(spark, sf).collect().map(_.toString).sorted
-    assert(auto.sameElements(pinned))
     // probe masks: Σ C(nPlanes, i) for i ≤ probeBits, all distinct, each
     // of Hamming weight ≤ probeBits — radius 3 is honored, not clamped
     val m3 = Similarity.probeMasks(6, 3)
@@ -400,14 +403,10 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Similarity.probeMasks(6, 2).size === 22) // the pinned default
     intercept[IllegalArgumentException](Similarity.probeMasks(6, 7))
     intercept[IllegalArgumentException](Similarity.probeMasks(6, -1))
-    // IVF list count derives the same way: occupancy-targeted, clamped
-    assert(Similarity.derivedNlist(500) === 16) // test-SF floor = pinned default
+    // IVF list count: occupancy-targeted, clamped
+    assert(Similarity.derivedNlist(500) === 16) // test-SF floor
     assert(Similarity.derivedNlist(100000000L) === 1000) // 100M / 100k
     assert(Similarity.derivedNlist(1000000000000L) === 65536) // 10¹² capped
-    // auto entry point lands on the pinned default at test SF → same rows
-    val ivfAuto = Similarity.knnIvfAuto(spark, sf).collect().map(_.toString).sorted
-    val ivfPinned = Similarity.knnIvf(spark, sf).collect().map(_.toString).sorted
-    assert(ivfAuto.sameElements(ivfPinned))
   }
 
   test("image header sniffing: PNG/GIF/JPEG dimensions from real bytes") {
@@ -634,9 +633,9 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tiny.getLong(1) == 0 && tiny.getLong(3) == 0)
   }
 
-  test("scale knobs: t12 shuffle join, d8 recompute, ivf+pq auto — same rows") {
+  test("scale knobs: t12 shuffle join, d8 recompute — same rows") {
     import spark.implicits._
-    import graft.ops.{Dedup, Similarity, TextOps}
+    import graft.ops.{Dedup, TextOps}
     // t12: broadcast-vs-shuffle join strategy is a parameter; values identical
     val docs = ((1 to 10).map(i => (s"c$i", "the common sentence here")) :+
       ("alien", "zzqxj wvkpf")).toDF("doc_id", "text")
@@ -658,11 +657,6 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val recomputed = Dedup.withRepeatedNgrams(d8docs, cacheSignatures = false)
       .collect().map(_.toString).sorted
     assert(cached.sameElements(recomputed))
-    // e7 production entry: derived nlist lands on the pinned default at
-    // test SF → identical rows to the oracle-path knnIvfPq
-    val auto = Similarity.knnIvfPqAuto(spark, sf).collect().map(_.toString).sorted
-    val pinned = Similarity.knnIvfPq(spark, sf).collect().map(_.toString).sorted
-    assert(auto.sameElements(pinned))
   }
 
   test("real PNG decode: pngEncode → javax.imageio roundtrips every pixel") {
