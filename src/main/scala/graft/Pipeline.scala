@@ -8,7 +8,10 @@ import graft.ops.{Dedup, TextOps}
 /** End-to-end training-data curation over a contract-schema table — the
   * composition proof that the engine's pieces are one pipeline, not a
   * bag of demos: extract → quality-filter → exact dedup → fuzzy dedup →
-  * language annotation, in FOUR shuffles total at any scale.
+  * language annotation. Shuffles: the repartition, the exact-dedup
+  * window, the band aggregation and the pair distinct; the two verify
+  * text joins and the keeper anti-join add one per side that does not
+  * broadcast.
   *
   * Stage shapes (each documented at its operator):
   *  1. extract: skew-isolated narrow parse (SgmlExtract.extractDf over
@@ -17,15 +20,19 @@ import graft.ops.{Dedup, TextOps}
   *     for the word/stopword/letter counts (TextOps.withQuality), filter.
   *  3. exact dedup: row_number over a window keyed by md5(text), keep
   *     the lowest doc_id — shuffle 1, no join.
-  *  4. fuzzy dedup: MinHash band bucket-collect → Jaccard-verified pairs
-  *     (Dedup.bandsOf → Dedup.verifiedPairsFromBands; a capped run first
-  *     prunes singleton and over-cap buckets, Dedup.capBuckets) — shuffle
-  *     2 (band groupBy);
-  *     survivors via left-anti join on the losers (every doc that is the
-  *     GREATER member of a verified pair — deterministic, order-free) —
-  *     shuffle 3.
+  *  4. fuzzy dedup: one Scala kernel per doc gives its 16 MinHash band
+  *     hashes (Dedup.bandsOf); ONE band aggregation, bucket_collect,
+  *     gives each bucket of ≥ 2 docs its exact size and at most
+  *     maxBucket + 1 ids (Dedup.buckets) — shuffle 2. The buckets within
+  *     the cap explode into id pairs, deduplicated across bands by a
+  *     distinct — shuffle 3 — and joined to both texts for the word-scan
+  *     Jaccard check (Dedup.verifiedPairsFromBuckets). Survivors via
+  *     left-anti join on the losers (every doc that is the GREATER member
+  *     of a verified pair — deterministic, order-free, no distinct).
   *     Losers are bounded by the duplicate rate, so the anti-join's
   *     small side broadcasts in practice (Spark decides; no hint forced).
+  *     A capped run caches the bucket frame once: the lineage audit of
+  *     the over-cap buckets reads it, with no second band shuffle.
   *  5. language annotation: narrow — one Scala pass per doc over
   *     `lower(text)` (TextOps.withLangId).
   *
@@ -98,18 +105,17 @@ object Pipeline {
       maxBucket: Int = 1000)
 
   /** Valve audit for library callers of curate/curateExtracted (the
-    * `run` entry writes this into lineage automatically): the
-    * dropped-bucket stats of the SAME banded frame the fuzzy stage
-    * builds, so a capped run never silently reads as "covered
-    * everything". One row: (dropped_buckets, dropped_rows) — zeros when
-    * nothing was over the cap. Callers of `curate(docs, cfg)` pass
-    * `SgmlExtract.extractDf(docs, cfg.extract)` as `extracted`. The
-    * exact frame is left uncached here, so when the curation ran on this
-    * session its plan (and the banded frame's) is served from the copies
-    * that run cached, and the audit does not re-pay the signature pass. */
+    * `run` entry writes this into lineage automatically): the over-cap
+    * buckets of the SAME bucket frame the fuzzy stage builds, so a capped
+    * run never silently reads as "covered everything". One row:
+    * (dropped_buckets, dropped_rows) — zeros when nothing was over the
+    * cap. Callers of `curate(docs, cfg)` pass
+    * `SgmlExtract.extractDf(docs, cfg.extract)` as `extracted`. Nothing
+    * is cached here, so when the curation ran on this session its plan
+    * (and the bucket frame's) is served from the copies that run cached,
+    * and the audit re-pays neither the signature pass nor the shuffle. */
   def dropAudit(extracted: DataFrame, cfg: Config = Config()): DataFrame =
-    Dedup.droppedBucketStats(stages(extracted, cfg, cacheTag = None).banded,
-      Seq("band", "band_hash"), cfg.maxBucket)
+    Dedup.droppedOf(stages(extracted, cfg, cacheTag = None).buckets, cfg.maxBucket)
 
   /** Contract table (doc_id, spans) → curated (doc_id, text, predicted_lang,
     * n_words). */
@@ -150,13 +156,12 @@ object Pipeline {
   }
 
   /** Stages 2-4 as every entry point composes them: quality → exact dedup
-    * → MinHash bands → Jaccard-verified pairs. The stage boundaries live
-    * here and nowhere else; entry points differ only in their keeper rule.
-    * `pairs` is lazy so `dropAudit`, which needs only `banded`, never
-    * registers a capBuckets cache of its own. */
-  private final class Stages(val exact: DataFrame, val banded: DataFrame,
-      pairsOf: => DataFrame) {
-    lazy val pairs: DataFrame = pairsOf
+    * → MinHash band buckets → Jaccard-verified pairs. The stage
+    * boundaries live here and nowhere else; entry points differ only in
+    * their keeper rule. */
+  private final case class Stages(exact: DataFrame, buckets: DataFrame, cfg: Config) {
+    def pairs: DataFrame = Dedup.verifiedPairsFromBuckets(buckets, exact,
+      "doc_id", "text", cfg.minJaccard, cfg.maxBucket)
   }
 
   /** `cacheTag`: the exact frame is persisted under this Dedup.swapCache
@@ -169,21 +174,25 @@ object Pipeline {
     * MEMORY_AND_DISK holds the post-quality text corpus; at sizes where
     * that is unwelcome, materialize to a table (Pipeline.run's extracted
     * product plays that role for the parse leg) and curate from the
-    * re-read. */
+    * re-read. A capped run also persists the bucket frame (keys, sizes
+    * and at most maxBucket + 1 ids per bucket of ≥ 2 docs), which both
+    * the pairs and the valve audit read. */
   private def stages(extracted: DataFrame, cfg: Config,
       cacheTag: Option[String]): Stages = {
     val built = exactStage(qualityStage(extracted))
     val exact = cacheTag.fold(built)(Dedup.swapCache(_, built))
-    val banded = Dedup.bandsOf(exact, "doc_id", "text")
-    new Stages(exact, banded, Dedup.verifiedPairsFromBands(banded, exact,
-      "doc_id", "text", cfg.minJaccard, cfg.maxBucket))
+    val buckets = Dedup.buckets(Dedup.bandsOf(exact, "doc_id", "text"),
+      Seq("band", "band_hash"), col("doc_id"), cfg.maxBucket)
+    val shared = if (cfg.maxBucket == Int.MaxValue) buckets
+      else cacheTag.fold(buckets)(t => Dedup.swapCache(s"$t-buckets", buckets))
+    Stages(exact, shared, cfg)
   }
 
   /** Stage 4's pairwise keeper: drop the greater member of every verified
-    * pair (deterministic, order-free) via anti-join. */
+    * pair (deterministic, order-free) via anti-join, which needs no
+    * distinct on its right side. */
   private def pairwiseKept(st: Stages): DataFrame =
-    st.exact.join(st.pairs.select(col("id_b").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
+    st.exact.join(st.pairs.select(col("id_b").as("doc_id")), Seq("doc_id"), "left_anti")
 
   /** Stage 5 and the curated column contract, one tail for every entry. */
   private def withLang(deduped: DataFrame): DataFrame =
@@ -307,22 +316,21 @@ object Pipeline {
         col("errors"),
         lit(null).cast("long").as("dropped_buckets"),
         lit(null).cast("long").as("dropped_rows"))
-    // the banded frame is SHARED between pair generation and the
+    // the bucket frame is SHARED between pair generation and the
     // cap-audit lineage row — a capped run is auditable without a second
-    // signature pass
+    // signature pass or band shuffle
     val st = stages(extracted.drop("__pid"), cfg, Some("run-exact"))
     withLang(pairwiseKept(st))
       .write.mode("overwrite").parquet(s"$outPath/curated")
     // Lineage LAST: per-partition extract metrics, plus the valve audit
     // row whenever a cap is active (zeros when nothing was dropped — the
-    // row's presence is the audit; reads banded from the capBuckets
-    // cache, no second signature pass). Uncapped runs have no valve to
-    // audit and skip the row rather than pay an extra banded pass.
+    // row's presence is the audit; reads the cached bucket frame).
+    // Uncapped runs have no valve to audit and skip the row rather than
+    // pay an extra band aggregation.
     val lineage =
       if (cfg.maxBucket == Int.MaxValue) extractRows
       else extractRows.unionByName(
-        Dedup.droppedBucketStats(st.banded, Seq("band", "band_hash"),
-            cfg.maxBucket)
+        Dedup.droppedOf(st.buckets, cfg.maxBucket)
           .select(lit(runId).as("run_id"),
             lit("fuzzy_dedup_cap").as("stage"),
             lit(null).cast("int").as("partition_id"),

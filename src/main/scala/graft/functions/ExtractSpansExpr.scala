@@ -201,5 +201,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((FunctionIdentifier("extract_spans"),
       ExtractSpansExpr.info, ExtractSpansExpr.fromArgs _))
+    e.injectFunction((FunctionIdentifier("bucket_collect"),
+      BucketCollect.info, BucketCollect.fromArgs _))
   }
 }

@@ -45,54 +45,48 @@ object Dedup {
   private val cacheReg =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
 
-  /** The mega-bucket valve, shared by every bucket-collect operator
-    * (verifiedPairsOf, simhashPairs, Similarity.embeddingNearDups):
-    * keep only rows whose `keyCols` group has 2..maxBucket members.
-    *
-    * The pre-pass matters: filtering collect_list OUTPUT by size still
-    * materializes the mega bucket inside one aggregation buffer first —
-    * the exact OOM the valve exists to prevent. So when a cap is set, a
-    * count aggregation (map-side partials, tiny (key, n) result) runs
-    * first and a left-semi join keeps only rows of surviving buckets;
-    * the extra shuffle is the price of the guarantee and is only paid
-    * when the valve is ON. Dropped buckets are dropped WHOLE — their
-    * members are boilerplate/template mass better handled by exact dedup
-    * upstream; droppedBucketStats counts what the cap discarded.
-    * Singleton buckets are pruned in the same pre-pass (LSH "block
-    * purging"): they can never yield a pair, every caller drops them
-    * after the collect anyway, and on a mostly-unique corpus they are
-    * nearly all the buckets — keeping them bloats the semi-join's key
-    * side and the collect_list input for nothing. At the default
-    * Int.MaxValue this is the identity (oracle parity at test SFs: zero
-    * plan change). */
-  private[ops] def capBuckets(banded: DataFrame, keyCols: Seq[String],
-      maxBucket: Int): DataFrame =
-    if (maxBucket == Int.MaxValue) banded
-    else {
-      // The banded frame feeds BOTH the count pre-pass and the semi-join
-      // probe; uncached that runs the signature UDF pass (the dominant
-      // cost) over every document twice. swapCache bounds it to ~one
-      // computation + a small (doc_id, band, hash) cache — banded rows
-      // are a few dozen bytes/doc, tiny next to the text they derive from.
-      val b = swapCache(s"capBuckets:${keyCols.mkString(",")}", banded)
-      val ok = b.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") >= 2 && col("__n") <= maxBucket)
-        .select(keyCols.map(col): _*)
-      b.join(ok, keyCols, "left_semi")
-    }
+  /** The bucket aggregation shared by every LSH-style operator
+    * (verifiedPairsFromBands, simhashPairsOf, Similarity.embeddingNearDups):
+    * one group-by on `keyCols` → (keyCols…, n, items), where `n` is the
+    * bucket's exact row count and `items` holds `item` of at most
+    * `cap + 1` of its rows (graft.functions.BucketCollect). Buckets with
+    * n < 2 can never yield a pair and are pruned here (LSH block
+    * purging). A bucket of more than `cap` rows is the mega-bucket valve's
+    * case: `bucketPairs` drops it WHOLE — its members are boilerplate/
+    * template mass better handled by exact dedup upstream — and
+    * `droppedOf` counts it, both from this one frame. No buffer
+    * ever holds a whole mega bucket, so the valve needs no pre-pass.
+    * At cap = Int.MaxValue this is collect_list plus a count. */
+  private[graft] def buckets(banded: DataFrame, keyCols: Seq[String], item: Column,
+      cap: Int): DataFrame = {
+    if (!banded.sparkSession.catalog.functionExists("bucket_collect"))
+      graft.functions.BucketCollect.register(banded.sparkSession)
+    banded.groupBy(keyCols.map(col): _*)
+      .agg(call_function("bucket_collect", item, lit(cap)).as("b"))
+      .select(keyCols.map(col) :+ col("b.n").as("n") :+ col("b.items").as("items"): _*)
+      .filter(col("n") >= 2)
+  }
 
-  /** Audit row for a capped run: how many buckets/rows the valve dropped
-    * (one aggregate over the same banded frame — production pipelines log
-    * this next to the pair output so a silent cap never reads as "covered
-    * everything"). */
+  /** Every ordered (a, b) item pair, self-pairs included, of the buckets
+    * of at most `maxBucket` rows; callers keep a < b. */
+  private[graft] def bucketPairs(buckets: DataFrame, maxBucket: Int): DataFrame =
+    buckets.filter(col("n") <= maxBucket)
+      .select(explode(col("items")).as("a"), col("items"))
+      .select(col("a"), explode(col("items")).as("b"))
+
+  /** Audit row of a capped run over a buckets frame: how many buckets and
+    * rows the valve dropped (production pipelines log this next to the
+    * pair output so a silent cap never reads as "covered everything"). */
+  private[graft] def droppedOf(buckets: DataFrame, maxBucket: Int): DataFrame =
+    buckets.filter(col("n") > maxBucket)
+      .agg(count(lit(1)).as("dropped_buckets"),
+        coalesce(sum(col("n")), lit(0L)).as("dropped_rows"))
+
+  /** `droppedOf` over a banded frame: the same aggregation, collecting
+    * one item per bucket (cap 0) since only the counts are read. */
   def droppedBucketStats(banded: DataFrame, keyCols: Seq[String],
       maxBucket: Int): DataFrame =
-    banded.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket)
-      .agg(count(lit(1)).as("dropped_buckets"),
-        coalesce(sum(col("__n")), lit(0L)).as("dropped_rows"))
+    droppedOf(buckets(banded, keyCols, lit(true), cap = 0), maxBucket)
 
   /** Exact dedup: group by content hash, keep min doc_id. One shuffle on
     * md5(text) (partial aggregation map-side). */
@@ -127,12 +121,72 @@ object Dedup {
   private val HashAs: Array[Long] = Array.tabulate(NumHashes)(coefA)
   private val HashBs: Array[Long] = Array.tabulate(NumHashes)(coefB)
 
-  /** Word 3-shingles of a document (lowercased). */
+  /** The words of `text`, lowercased into `t`, as [starts(w), ends(w))
+    * ranges: its maximal non-`\s` runs, exactly the pieces
+    * `t.split("\\s+").filter(_.nonEmpty)` would copy, without the copies
+    * (that split was ~43% of minhash) — the one word scan of minhash,
+    * simhash, shingles and ngramJaccard. Window s is the k-shingle of
+    * words s until s + len (all of them when there are fewer than k). A
+    * word never ends on half a surrogate pair (its successor is
+    * whitespace), so codePointAt over `t` ≡ over the copied word. */
+  private final class Words(text: String, k: Int = 3) {
+    val t: String = if (text == null) "" else text.toLowerCase
+    var starts = new Array[Int](64)
+    var ends = new Array[Int](64)
+    var n = 0
+    locally {
+      var p = 0
+      while (p < t.length) {
+        if (TextOps.isRegexSpace(t.charAt(p))) p += 1
+        else {
+          if (n == starts.length) {
+            starts = java.util.Arrays.copyOf(starts, n * 2)
+            ends = java.util.Arrays.copyOf(ends, n * 2)
+          }
+          starts(n) = p
+          while (p < t.length && !TextOps.isRegexSpace(t.charAt(p))) p += 1
+          ends(n) = p
+          n += 1
+        }
+      }
+    }
+    val len: Int = math.min(k, n)
+    val windows: Int = if (n == 0) 0 else n - len + 1
+
+    /** shingleHash of window s's words joined by ' ', streamed over
+      * the code points. */
+    def hash(s: Int): Long = {
+      var h = 0L
+      var w = s
+      while (w < s + len) {
+        if (w > s) h = (h * 31 + ' ') & 0xFFFFFFFFL
+        var i = starts(w)
+        while (i < ends(w)) {
+          val cp = t.codePointAt(i)
+          h = (h * 31 + cp) & 0xFFFFFFFFL
+          i += Character.charCount(cp)
+        }
+        w += 1
+      }
+      h
+    }
+
+    /** Window s here and window o of `that` are the same shingle:
+      * compared word by word. */
+    def sameWindow(s: Int, that: Words, o: Int): Boolean =
+      len == that.len && (0 until len).forall { i =>
+        val l = ends(s + i) - starts(s + i)
+        l == that.ends(o + i) - that.starts(o + i) &&
+          t.regionMatches(starts(s + i), that.t, that.starts(o + i), l)
+      }
+  }
+
+  /** Word n-shingles of a document (lowercased); fewer than n words make
+    * one shingle of them all. */
   def shingles(text: String, n: Int = 3): Set[String] = {
-    if (text == null) return Set.empty
-    val words = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-    if (words.length < n) return if (words.isEmpty) Set.empty else Set(words.mkString(" "))
-    words.sliding(n).map(_.mkString(" ")).toSet
+    val w = new Words(text, n)
+    (0 until w.windows).map(s =>
+      (s until s + w.len).map(i => w.t.substring(w.starts(i), w.ends(i))).mkString(" ")).toSet
   }
 
   /** Base-31 code-point polynomial hash, mod 2^32 (oracle-replicable). */
@@ -152,80 +206,43 @@ object Dedup {
     *
     * Values are EXACTLY those of hashing `shingles(text)` (the oracle's
     * definition), computed without materializing shingle strings or a
-    * dedup set: the per-window hash streams code points of the window's
-    * words with a literal ' ' joiner (≡ shingleHash of the joined
-    * string), and duplicates need no removal because min() over each
-    * hash function is duplicate-insensitive — the Set and the string
-    * concatenations were measured overhead (~20% of d3/p1), not
-    * semantics. Words are likewise index ranges of the lowered text, not
-    * a regex split's copies (that split was ~43% of this kernel). */
+    * dedup set: each window's hash streams the code points of its words
+    * with a literal ' ' joiner (≡ shingleHash of the joined string), and
+    * duplicates need no removal because min() over each hash function is
+    * duplicate-insensitive — the Set and the string concatenations were
+    * measured overhead (~20% of d3/p1), not semantics. */
   def minhash(text: String): Array[Long] = {
     val sig = Array.fill(NumHashes)(Long.MaxValue)
-    if (text == null) return sig
-    val t = text.toLowerCase
-    // words as [starts(w), ends(w)) ranges of `t`: the maximal non-\s runs,
-    // i.e. exactly the pieces split("\\s+").filter(_.nonEmpty) would copy
-    var starts = new Array[Int](64)
-    var ends = new Array[Int](64)
-    var nWords = 0
-    var p = 0
-    while (p < t.length) {
-      if (TextOps.isRegexSpace(t.charAt(p))) p += 1
-      else {
-        if (nWords == starts.length) {
-          starts = java.util.Arrays.copyOf(starts, nWords * 2)
-          ends = java.util.Arrays.copyOf(ends, nWords * 2)
-        }
-        starts(nWords) = p
-        while (p < t.length && !TextOps.isRegexSpace(t.charAt(p))) p += 1
-        ends(nWords) = p
-        nWords += 1
-      }
-    }
-    if (nWords == 0) return sig
-    val windowLen = math.min(3, nWords)
-    val nWindows = if (nWords < 3) 1 else nWords - 2
-    var s0 = 0
-    while (s0 < nWindows) {
-      var h = 0L
-      var w = s0
-      while (w < s0 + windowLen) {
-        if (w > s0) h = (h * 31 + ' ') & 0xFFFFFFFFL
-        // a word never ends on half a surrogate pair (its successor is
-        // whitespace), so codePointAt over `t` ≡ over the copied word
-        var i = starts(w)
-        while (i < ends(w)) {
-          val cp = t.codePointAt(i)
-          h = (h * 31 + cp) & 0xFFFFFFFFL
-          i += Character.charCount(cp)
-        }
-        w += 1
-      }
+    val w = new Words(text)
+    var s = 0
+    while (s < w.windows) {
+      val h = w.hash(s)
       var i = 0
       while (i < NumHashes) {
         val v = (HashAs(i) * h + HashBs(i)) % HashP
         if (v < sig(i)) sig(i) = v
         i += 1
       }
-      s0 += 1
+      s += 1
     }
     sig
   }
 
+  /** The 16 band hashes of `minhash(text)`: band b folds its 4 signature
+    * values as a base-BandB polynomial mod P (the oracle replays the same
+    * fold in integer SQL; BandB·P < 2^63, so no step overflows). */
+  def bandHashes(text: String): Array[Long] = {
+    val sig = minhash(text)
+    Array.tabulate(Bands)(b => (0 until RowsPerBand).foldLeft(0L)((acc, r) =>
+      (acc * BandB + sig(b * RowsPerBand + r) % HashP) % HashP))
+  }
+
   /** (id, band, band_hash) rows for ANY (id, text) frame; near-dup
-    * candidates collide in ≥1 band. Band hash is a codegen'd Column fold
-    * (no UDF, no Spark-private hash — the oracle reproduces it exactly). */
+    * candidates collide in ≥1 band. One Scala kernel per doc
+    * (`bandHashes`), exploded with its band index. */
   def bandsOf(d: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val mh = udf((t: String) => minhash(t))
-    val sigd = d.select(col(idCol), mh(col(textCol)).as("sig"))
-    val bandCols = (0 until Bands).map { b =>
-      val bh = (0 until RowsPerBand).foldLeft(lit(0L): Column) { (acc, r) =>
-        (acc * BandB + col("sig")(b * RowsPerBand + r) % HashP) % HashP
-      }
-      struct(lit(b).as("band"), bh.as("band_hash"))
-    }
-    sigd.select(col(idCol), explode(array(bandCols: _*)).as("bh"))
-      .select(col(idCol), col("bh.band").as("band"), col("bh.band_hash").as("band_hash"))
+    val bh = udf((t: String) => bandHashes(t))
+    d.select(col(idCol), posexplode(bh(col(textCol))).as(Seq("band", "band_hash")))
   }
 
   /** doc_id → (band, band_hash) over the documents table. */
@@ -239,9 +256,9 @@ object Dedup {
     * `maxBucket` is the 100 TB safety valve: a boilerplate-heavy corpus
     * can put millions of docs into one band bucket, and the in-bucket
     * pair explosion is |bucket|² — a mega-bucket is both an OOM risk
-    * (collect_list) and useless for dedup (its members are better
-    * handled by exact dedup / template detection upstream). Buckets
-    * larger than the cap are dropped WHOLE; Int.MaxValue (the default,
+    * and useless for dedup (its members are better handled by exact
+    * dedup / template detection upstream). Buckets larger than the cap
+    * are dropped WHOLE (see `buckets`); Int.MaxValue (the default,
     * shared with the oracles) disables the cap. Production pipelines
     * should set it to O(10³) and count the dropped buckets. */
   def verifiedPairsOf(d: DataFrame, idCol: String, textCol: String,
@@ -249,20 +266,22 @@ object Dedup {
     verifiedPairsFromBands(bandsOf(d, idCol, textCol), d, idCol, textCol,
       minJaccard, maxBucket)
 
-  /** `verifiedPairsOf` over a PRE-BUILT banded frame — lets a caller
-    * (Pipeline.run) share one banded computation between pair generation
-    * and the droppedBucketStats lineage audit. */
+  /** `verifiedPairsOf` over a PRE-BUILT banded frame (the perfbench
+    * replay shares one). */
   def verifiedPairsFromBands(banded: DataFrame, d: DataFrame,
       idCol: String, textCol: String,
-      minJaccard: Double, maxBucket: Int = Int.MaxValue): DataFrame = {
-    val bands = capBuckets(banded, Seq("band", "band_hash"), maxBucket)
-    val cands = bands
-      .groupBy(col("band"), col("band_hash"))
-      .agg(collect_list(col(idCol)).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
+      minJaccard: Double, maxBucket: Int = Int.MaxValue): DataFrame =
+    verifiedPairsFromBuckets(buckets(banded, Seq("band", "band_hash"), col(idCol), maxBucket),
+      d, idCol, textCol, minJaccard, maxBucket)
+
+  /** `verifiedPairsOf` over a PRE-BUILT band buckets frame — lets
+    * Pipeline.run share one cached bucket aggregation between pair
+    * generation and the droppedOf lineage audit. */
+  private[graft] def verifiedPairsFromBuckets(bucketed: DataFrame, d: DataFrame,
+      idCol: String, textCol: String, minJaccard: Double, maxBucket: Int): DataFrame = {
+    val cands = bucketPairs(bucketed, maxBucket)
+      .filter(col("a") < col("b"))
+      .select(col("a").as("id_a"), col("b").as("id_b"))
       .distinct()
     val texts = d.select(col(idCol), col(textCol))
     val jac = udf((x: String, y: String) => ngramJaccard(x, y))
@@ -477,15 +496,23 @@ object Dedup {
   def repeatedNgrams(spark: SparkSession, sfDir: String, n: Int = 10): DataFrame =
     withRepeatedNgrams(documents(spark, sfDir), n = n)
 
-  /** Exact n-gram (word 3-shingle) Jaccard similarity. */
-  def ngramJaccard(a: String, b: String): Double = {
-    val sa = shingles(a)
-    val sb = shingles(b)
-    if (sa.isEmpty && sb.isEmpty) 1.0
-    else {
-      val inter = sa.intersect(sb).size
-      inter.toDouble / (sa.size + sb.size - inter)
+  /** A window of a word scan, equal to another when its words are (a
+    * shared shingle hash is not equality): a shingle without its string. */
+  private final class Shingle(val w: Words, val s: Int) {
+    override val hashCode: Int = w.hash(s).toInt
+    override def equals(o: Any): Boolean = o match {
+      case x: Shingle => x.hashCode == hashCode && w.sameWindow(s, x.w, x.s)
+      case _ => false
     }
+  }
+
+  /** Exact n-gram (word 3-shingle) Jaccard similarity: |A∩B| / |A∪B| over
+    * the `shingles` sets, from the word scan without their strings. */
+  def ngramJaccard(a: String, b: String): Double = {
+    def set(text: String) = { val w = new Words(text); (0 until w.windows).map(new Shingle(w, _)).toSet }
+    val (sa, sb) = (set(a), set(b))
+    val inter = sa.count(sb.contains)
+    if (sa.isEmpty && sb.isEmpty) 1.0 else inter.toDouble / (sa.size + sb.size - inter)
   }
 
   // -------------------------------------------------------------- SimHash
@@ -496,26 +523,26 @@ object Dedup {
     * multiply anywhere, so the d4/d5 oracles recompute the exact same
     * bits in integer SQL. */
   def simhash(text: String): Long = {
-    if (text == null) return 0L
+    val w = new Words(text)
     val acc = new Array[Int](64)
-    text.toLowerCase.split("\\s+").foreach { w =>
-      if (w.nonEmpty) {
-        var hi = 0L // base-31 poly → bits 32..63
-        var lo = 0L // base-37 poly → bits 0..31
-        var i = 0
-        while (i < w.length) {
-          val cp = w.codePointAt(i)
-          hi = (hi * 31 + cp) & 0xFFFFFFFFL
-          lo = (lo * 37 + cp) & 0xFFFFFFFFL
-          i += Character.charCount(cp)
-        }
-        var b = 0
-        while (b < 32) {
-          if (((lo >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
-          if (((hi >>> b) & 1L) == 1L) acc(b + 32) += 1 else acc(b + 32) -= 1
-          b += 1
-        }
+    var k = 0
+    while (k < w.n) {
+      var hi = 0L // base-31 poly → bits 32..63
+      var lo = 0L // base-37 poly → bits 0..31
+      var i = w.starts(k)
+      while (i < w.ends(k)) {
+        val cp = w.t.codePointAt(i)
+        hi = (hi * 31 + cp) & 0xFFFFFFFFL
+        lo = (lo * 37 + cp) & 0xFFFFFFFFL
+        i += Character.charCount(cp)
       }
+      var b = 0
+      while (b < 32) {
+        if (((lo >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
+        if (((hi >>> b) & 1L) == 1L) acc(b + 32) += 1 else acc(b + 32) -= 1
+        b += 1
+      }
+      k += 1
     }
     var out = 0L
     var i = 0
@@ -542,20 +569,11 @@ object Dedup {
   /** simhashPairs over ANY (doc_id, simhash) frame. */
   def simhashPairsOf(sh: DataFrame, maxDist: Int = 3,
       maxBucket: Int = Int.MaxValue): DataFrame = {
-    val banded0 = sh.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("simhash"), b * 16)
-            .bitwiseAND(lit(0xFFFFL)).as("band_val"))): _*)).as("bb"))
-      .select(col("doc_id"), col("simhash"),
-        col("bb.band").as("band"), col("bb.band_val").as("band_val"))
-    val banded = capBuckets(banded0, Seq("band", "band_val"), maxBucket)
-    banded
-      .groupBy(col("band"), col("band_val"))
-      .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("xs"))
-      .filter(size(col("xs")) > 1)
-      .select(explode(col("xs")).as("a"), col("xs"))
-      .select(col("a"), explode(col("xs")).as("b"))
+    val banded = sh.select(col("doc_id"), col("simhash"), posexplode(array((0 until 4).map(b =>
+      shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
+      .as(Seq("band", "band_val")))
+    bucketPairs(buckets(banded, Seq("band", "band_val"),
+        struct(col("doc_id"), col("simhash")), maxBucket), maxBucket)
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))

@@ -532,22 +532,16 @@ object Similarity {
     *
     * `maxBucket` is the 100 TB safety valve (same semantics as
     * Dedup.verifiedPairsOf): buckets larger than the cap are dropped
-    * WHOLE — before any collect_list materializes them, so a hot bucket
-    * can never OOM an executor (see Dedup.capBuckets). Default uncapped
-    * for oracle parity at test SFs; production sets O(10³). */
+    * WHOLE, and no aggregation buffer ever holds more than maxBucket + 1
+    * of their vectors (Dedup.buckets), so a hot bucket can never OOM an
+    * executor. Default uncapped for oracle parity at test SFs;
+    * production sets O(10³). */
   def embeddingNearDups(emb: DataFrame, minSim: Double = 0.95,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    val bucketed = Dedup.capBuckets(
-      lshBuckets(emb, nTables = 1), Seq("bucket"), maxBucket)
-    bucketed
-      .groupBy(col("bucket"))
-      .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("xs"))
-      .filter(size(col("xs")) > 1)
-      .select(explode(col("xs")).as("a"), col("xs"))
-      .select(col("a"), explode(col("xs")).as("b"))
+      maxBucket: Int = Int.MaxValue): DataFrame =
+    Dedup.bucketPairs(Dedup.buckets(lshBuckets(emb, nTables = 1), Seq("bucket"),
+        struct(col("vec_id"), col("embedding")), maxBucket), maxBucket)
       .filter(col("a.vec_id") < col("b.vec_id"))
       .withColumn("sim", cosine(col("a.embedding"), col("b.embedding")))
       .filter(col("sim") >= minSim)
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), col("sim"))
-  }
 }

@@ -439,17 +439,19 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
     val decls = edef.map(_.attrs).getOrElse(Map.empty)
     // tags carry a handful of attrs — an order-preserving array with a
     // linear dup scan beats per-name hashing (LinkedHashMap's anyHash was
-    // a measured ~5% of kernel CPU with the bundled attlists active)
+    // a measured ~5% of kernel CPU with the bundled attlists active); a
+    // tag that can hold more than 8 gets a name set, so an attribute
+    // flood stays linear
     val out = new mutable.ArrayBuffer[Attr](rawAttrs.length + actions.length)
-    def indexOf(name: String): Int = {
-      var i = 0
-      while (i < out.length) { if (out(i).name == name) return i; i += 1 }
-      -1
-    }
+    val names =
+      if (rawAttrs.lengthCompare(8 - actions.length) > 0) new java.util.HashSet[String] else null
+    def has(name: String): Boolean =
+      if (names != null) names.contains(name) else out.exists(_.name == name)
+    def add(a: Attr): Unit = { out += a; if (names != null) names.add(a.name) }
     rawAttrs.foreach { ra =>
       val qn = if (cfg.dialect.namespaces) qualify(ra.name, scope, isAttr = true)
                else ra.name
-      if (indexOf(qn) >= 0) log.add("duplicate-attribute", ra.off, ra.name)
+      if (has(qn)) log.add("duplicate-attribute", ra.off, ra.name)
       else {
         val rawVal = ra.value.getOrElse(ra.name) // minimized: value = name
         val decl = decls.get(localOf(ra.name))
@@ -462,7 +464,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
             currentVals.put(d, rawVal)
           case _ =>
         }
-        out += Attr(qn, convertAttr(rawVal, decl, ra.off))
+        add(Attr(qn, convertAttr(rawVal, decl, ra.off)))
       }
     }
     // attribute defaulting: #FIXED / literal / #CURRENT defaults injected;
@@ -470,13 +472,13 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
     var i = 0
     while (i < actions.length) {
       val d = actions(i)
-      if (indexOf(d.name) < 0) d.default match {
-        case AttrDefault.Fixed(v) => out += Attr(d.name, convertAttr(v, Some(d), off))
-        case AttrDefault.Value(v) => out += Attr(d.name, convertAttr(v, Some(d), off))
+      if (!has(d.name)) d.default match {
+        case AttrDefault.Fixed(v) => add(Attr(d.name, convertAttr(v, Some(d), off)))
+        case AttrDefault.Value(v) => add(Attr(d.name, convertAttr(v, Some(d), off)))
         case AttrDefault.Required => log.add("required-attribute-missing", off, s"$rawName/${d.name}")
         case AttrDefault.Current =>
           val v = currentVals.get(d)
-          if (v != null) out += Attr(d.name, convertAttr(v, Some(d), off))
+          if (v != null) add(Attr(d.name, convertAttr(v, Some(d), off)))
           // omitted before any value was specified: an error per ISO 8879
           else log.add("current-attribute-no-value", off, s"$rawName/${d.name}")
         case _ =>

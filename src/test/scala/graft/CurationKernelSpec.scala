@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Dedup, TextOps}
 
 /** The curation text kernels (TextOps.withQuality / withLangId,
-  * Dedup.minhash) against the built-in-expression and regex-split
-  * definitions they replaced — kept here, and only here, as the
-  * reference — plus the singleton-bucket pruning of Dedup.capBuckets. */
+  * Dedup.minhash / bandHashes / ngramJaccard) against the
+  * built-in-expression, Column-fold and regex-split definitions they
+  * replaced — kept here, and only here, as the reference — plus the
+  * singleton-bucket pruning and the cap of Dedup.buckets. */
 class CurationKernelSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -113,6 +114,12 @@ class CurationKernelSpec extends AnyFunSuite {
   private def coefA(i: Int): Long = ((i + 1) * 2654435761L) % 2147483629L + 1
   private def coefB(i: Int): Long = ((i + 1) * 2246822519L) % 2147483629L
 
+  /** `t` quoted, non-ASCII as \\uXXXX (a report may not hold lone surrogates). */
+  private def esc(t: String): String =
+    if (t == null) "null"
+    else t.flatMap(c => if (c >= ' ' && c < 0x7f) c.toString else f"\\u${c.toInt}%04X")
+      .mkString("'", "", "'")
+
   /** Rows of `a` and `b` (same columns, keyed by doc_id) that differ. */
   private def diffRows(a: DataFrame, b: DataFrame): Seq[String] = {
     val ra = a.collect().map(r => r.getLong(0) -> r).toMap
@@ -153,7 +160,83 @@ class CurationKernelSpec extends AnyFunSuite {
   test("minhash word scan ≡ the regex-split signature") {
     val diff = (adversarial ++ randomTexts).filterNot(t =>
       Dedup.minhash(t).sameElements(refMinhash(t)))
-    assert(diff.isEmpty, diff.take(5).map(t => s"'$t'").mkString("\n"))
+    assert(diff.isEmpty, diff.take(5).map(esc).mkString("\n"))
+  }
+
+  test("bandHashes ≡ the Column fold of the minhash signature") {
+    import spark.implicits._
+    val folds = (0 until Dedup.Bands).map { b =>
+      (0 until Dedup.RowsPerBand).foldLeft(lit(0L)) { (acc, r) =>
+        (acc * Dedup.BandB + col("sig")(b * Dedup.RowsPerBand + r) % Dedup.HashP) % Dedup.HashP
+      }
+    }
+    // signatures, not texts, go through Spark: UTF-8 cannot carry the
+    // lone surrogates of the adversarial set
+    val texts = adversarial ++ randomTexts
+    val ref = texts.map(t => Dedup.minhash(t).toSeq).toDF("sig")
+      .select(array(folds: _*)).collect().map(_.getSeq[Long](0))
+    val diff = texts.zip(ref).filterNot { case (t, r) => Dedup.bandHashes(t).toSeq == r }
+    assert(diff.isEmpty, diff.take(5).map(d => esc(d._1)).mkString("\n"))
+  }
+
+  test("ngramJaccard word scan ≡ the Set-based definition") {
+    def refJaccard(a: String, b: String): Double = {
+      val (sa, sb) = (Dedup.shingles(a), Dedup.shingles(b))
+      if (sa.isEmpty && sb.isEmpty) 1.0
+      else {
+        val inter = sa.intersect(sb).size
+        inter.toDouble / (sa.size + sb.size - inter)
+      }
+    }
+    // "az" and "b[" share a shingle hash (97·31 + 122 = 98·31 + 91) but
+    // not a shingle: equality must compare the words themselves
+    assert(Dedup.shingleHash("x y az") == Dedup.shingleHash("x y b["))
+    val collide = Seq("az", "b[", "x y az", "x y b[", "az b[ az b[ az", "b[ az b[ az b[")
+    val texts = adversarial ++ collide
+    val rnd = new scala.util.Random(11L)
+    val pairs = (for (a <- texts; b <- texts) yield (a, b)) ++
+      randomTexts.zip(randomTexts.tail) ++
+      randomTexts.map(t => (t, rnd.shuffle(t.split(" ").toSeq).mkString(" "))) ++
+      randomTexts.map(t => (t, t.toUpperCase + " the end"))
+    val diff = pairs.filterNot { case (a, b) => Dedup.ngramJaccard(a, b) == refJaccard(a, b) }
+    assert(diff.isEmpty, diff.take(5).map(p => s"${esc(p._1)} vs ${esc(p._2)}").mkString("\n"))
+    assert(Dedup.ngramJaccard("x y az", "x y b[") == 0.0)
+    assert(Dedup.ngramJaccard("az b[ az b[ az", "b[ az b[ az b[") == 1.0)
+  }
+
+  test("bucket_collect: a 100k-row bucket holds at most cap + 1 items, n is exact") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.LongType
+    import graft.functions.BucketCollect
+    val agg = BucketCollect(BoundReference(0, LongType, nullable = false), cap = 10)
+    // four partial buffers of 25k updates each, merged pairwise and
+    // round-tripped through the shuffle serialization
+    val parts = (0 until 4).map { p =>
+      val b = agg.createAggregationBuffer()
+      (0 until 25000).foreach { i =>
+        agg.update(b, InternalRow(p * 25000L + i))
+        assert(b.items.length <= 11)
+      }
+      agg.deserialize(agg.serialize(b))
+    }
+    val merged = parts.reduce { (x, y) =>
+      val m = agg.merge(x, y)
+      assert(m.items.length <= 11)
+      m
+    }
+    assert(merged.n == 100000L)
+    assert(merged.items.length == 11)
+    // the same through Spark: one bucket, dropped whole and counted
+    val rows = spark.range(100000).select(lit(0).as("k"), col("id"))
+    val b = Dedup.buckets(rows, Seq("k"), col("id"), cap = 10)
+    val r = b.collect().head
+    assert(r.getAs[Long]("n") == 100000L)
+    assert(r.getSeq[Long](r.fieldIndex("items")).length == 11)
+    assert(Dedup.bucketPairs(b, 10).count() == 0L)
+    val stats = Dedup.droppedOf(b, 10).collect().head
+    assert(stats.getAs[Long]("dropped_buckets") == 1L)
+    assert(stats.getAs[Long]("dropped_rows") == 100000L)
   }
 
   test("singleton pruning: a cap no bucket exceeds leaves pairs unchanged") {

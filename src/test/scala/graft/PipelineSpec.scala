@@ -216,4 +216,30 @@ class PipelineSpec extends AnyFunSuite {
     val none = Pipeline.dropAudit(extracted).collect().head
     assert(none.getAs[Long]("dropped_buckets") == 0L)
   }
+
+  test("the valve audit reads the fuzzy stage's cached buckets: no band shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.ops.Dedup
+    // the 12 case-variants above: every band bucket holds all 12 docs
+    val words = quality.split(" ")
+    val docs = docsOf((1 to 12).map { i =>
+      f"t$i%02d" -> words.updated(i % words.length, words(i % words.length).toUpperCase)
+        .mkString(" ")
+    }: _*)
+    val cfg = Pipeline.Config(maxBucket = 4)
+    val extracted = SgmlExtract.extractDf(docs, cfg.extract)
+    val curated = Pipeline.curateExtracted(extracted, cfg).cache()
+    assert(curated.count() == 12)
+    val audit = Pipeline.dropAudit(extracted, cfg)
+    val bandShuffles = audit.queryExecution.executedPlan.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.toString.contains("band_hash") => e
+    }
+    assert(bandShuffles.isEmpty, audit.queryExecution.executedPlan)
+    // and it counts what the count-only aggregation over the bands counts
+    val ref = Dedup.droppedBucketStats(Dedup.bandsOf(curated, "doc_id", "text"),
+      Seq("band", "band_hash"), cfg.maxBucket).collect().head
+    assert(audit.collect().head == ref)
+    assert(ref.getAs[Long]("dropped_rows") == 12L * Dedup.Bands)
+    curated.unpersist()
+  }
 }

@@ -144,26 +144,35 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ops.count(_ == "InMemoryTableScanExec") > 0, ops.mkString(", "))
   }
 
+  // The title names the valve's guarantee as first built: a hot bucket is
+  // gated out before the collect aggregation could buffer it whole. That
+  // gate is now the cap inside bucket_collect itself, so the checks below
+  // pin bucket_collect(cap = maxBucket) and the absence of any join.
   test("mega-bucket valve plans a semi-join BEFORE the collect aggregation") {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, CollectList}
+    import graft.functions.BucketCollect
     import graft.ops.Dedup
     val sh = udf((t: String) => Dedup.simhash(t))
     val hashes = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), sh(col("text")).as("simhash"))
-    def ops(maxBucket: Int): Seq[String] =
-      Dedup.simhashPairsOf(hashes, maxBucket = maxBucket)
-        .queryExecution.executedPlan.collect { case p => p.getClass.getSimpleName }
-    // valve off (default): no semi join, the pinned d5 shape
-    val uncapped = ops(Int.MaxValue)
-    assert(!uncapped.exists(n =>
-      n.contains("ShuffledHashJoin") || n.contains("SortMergeJoin")), uncapped)
-    // valve on: a size-gating join appears and nothing degrades to
-    // cartesian — the structural guarantee that a hot bucket is filtered
-    // out before any collect_list buffers it
-    val capped = ops(1000)
-    assert(capped.exists(n => n.contains("ShuffledHashJoin") ||
-      n.contains("SortMergeJoin") || n.contains("BroadcastHashJoin")), capped)
-    assert(!capped.exists(_ == "CartesianProductExec"))
+    def plan(maxBucket: Int) =
+      Dedup.simhashPairsOf(hashes, maxBucket = maxBucket).queryExecution.executedPlan
+    def aggs(maxBucket: Int): Seq[AggregateFunction] =
+      plan(maxBucket).collect { case p => p.expressions.flatMap(_.collect {
+        case f: AggregateFunction => f }) }.flatten
+    // capped or not, every bucket goes through ONE aggregation whose
+    // buffer holds at most cap + 1 items — a hot bucket is never buffered
+    // whole, and no join or count pre-pass sits in front of it
+    for (maxBucket <- Seq(Int.MaxValue, 1000)) {
+      val fs = aggs(maxBucket)
+      assert(fs.exists { case b: BucketCollect => b.cap == maxBucket; case _ => false }, fs)
+      assert(!fs.exists(_.isInstanceOf[CollectList]), fs)
+      assert(fs.collect { case b: BucketCollect => b.cap }.forall(_ == maxBucket), fs)
+      val ops = plan(maxBucket).collect { case p => p.getClass.getSimpleName }
+      assert(!ops.exists(_.contains("Join")), ops)
+      assert(!ops.exists(_ == "CartesianProductExec"))
+    }
   }
 
   test("flagship extract leg is a single stage: zero exchanges of any kind") {

@@ -341,7 +341,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // uncapped: C(40,2) identical-hash pairs
     assert(Dedup.simhashPairsOf(hashes).count() === 40L * 39 / 2)
     // capped below the bucket size: the hot bucket drops WHOLE — no pairs,
-    // no OOM path (the semi-join valve runs before any collect_list)
+    // no OOM path (its aggregation buffer never holds more than cap + 1)
     assert(Dedup.simhashPairsOf(hashes, maxBucket = 10).count() === 0)
     // the audit row makes the drop loud: 4 band buckets × 40 rows
     val banded = hashes.select(col("doc_id"),
