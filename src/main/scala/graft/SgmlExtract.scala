@@ -82,12 +82,24 @@ object SgmlExtract {
       .as[Doc]
   }
 
-  /** Wrap the driver corpus (`documents.parquet`: doc_id int64, text, lang,
-    * source, n_chars) into the contract schema — one text span at offset 0.
-    * Columns pruned BEFORE the opaque kernel so the parquet scan reads only
-    * doc_id+text (pushdown stops at the kernel — SURVEY.md §4). */
-  def wrapDocuments(spark: SparkSession, sfDir: String): Dataset[Doc] =
-    wrapDocsDf(spark.read.parquet(s"$sfDir/documents.parquet"))
+  // ---- the corpus directory: one parquet file per table ----
+  // The operators in graft.ops take frames; SparkEntry's queries read the
+  // documents and embeddings tables through these readers.
+
+  /** The `documents` table (doc_id int64, text, lang, source, n_chars). */
+  def documents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/documents.parquet")
+
+  /** The `embeddings` table (vec_id, embedding array<float>, label). */
+  def embeddings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/embeddings.parquet")
+
+  /** Wrap the `documents` table into the contract schema — one text span
+    * at offset 0. Columns pruned BEFORE the opaque kernel so the parquet
+    * scan reads only doc_id+text (pushdown stops at the kernel — SURVEY.md
+    * §4). */
+  def wrapDocuments(spark: SparkSession, dir: String): Dataset[Doc] =
+    wrapDocsDf(documents(spark, dir))
 
   /** The wrapDocuments projection over ANY (doc_id, text) frame — ONE
     * definition shared by the batch wrapper and the streaming file source
@@ -137,9 +149,9 @@ object SgmlExtract {
   /** Wrap with deterministic synthetic markup + an interleaved media span —
     * exercises tag parse, omission repair and media passthrough on the real
     * corpus while staying SQL-reconstructable for the DuckDB oracle. */
-  def wrapDocumentsMarked(spark: SparkSession, sfDir: String): Dataset[Doc] = {
+  def wrapDocumentsMarked(spark: SparkSession, dir: String): Dataset[Doc] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    documents(spark, dir)
       .select(
         col("doc_id").cast("string").as("doc_id"),
         array(
@@ -158,8 +170,8 @@ object SgmlExtract {
     * inside the paragraph) — the corpus-scale error-recovery check (D8):
     * the parse must repair at `</p>`, lose no text, and log exactly one
     * `unclosed-element` error at a computable offset. */
-  def wrapDocumentsMalformed(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/documents.parquet")
+  def wrapDocumentsMalformed(spark: SparkSession, dir: String): DataFrame = {
+    documents(spark, dir)
       .select(
         col("doc_id").cast("string").as("doc_id"),
         textSpans(concat(lit(MarkedPrefix), col("text"),
@@ -169,8 +181,8 @@ object SgmlExtract {
   /** Wrap as an SGML document whose internal DTD declares a SHORTREF map
     * (delimiter `--` → entity `mk`) activated on the root via USEMAP —
     * corpus-scale exercise of T14, SQL-reconstructable for the oracle. */
-  def wrapDocumentsShortref(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/documents.parquet")
+  def wrapDocumentsShortref(spark: SparkSession, dir: String): DataFrame = {
+    documents(spark, dir)
       .select(
         col("doc_id").cast("string").as("doc_id"),
         textSpans(concat(lit(ShortrefProlog), col("text"), lit(ShortrefClose)))
@@ -180,8 +192,8 @@ object SgmlExtract {
   /** Wrap with realistic page chrome (head/style, nav of links, footer)
     * around the document text — the boilerplate-strip stage must recover
     * exactly the main text, which keeps the DuckDB oracle trivial. */
-  def wrapDocumentsBoiler(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/documents.parquet")
+  def wrapDocumentsBoiler(spark: SparkSession, dir: String): DataFrame = {
+    documents(spark, dir)
       .select(
         col("doc_id").cast("string").as("doc_id"),
         textSpans(concat(

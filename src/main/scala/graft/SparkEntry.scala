@@ -16,6 +16,13 @@ import graft.ops._
   * Non-SQL-expressible ops have no oracleSql entry (rows-only check).
   */
 object SparkEntry {
+  import SgmlExtract.{documents, embeddings}
+
+  // The oracles' word separator, a SQL literal: Java's `\s` class
+  // `[ \t\n\x0B\f\r]`, which Spark's `split(…, "\\s+")` and the
+  // word-scan kernels (TextOps.isRegexSpace) use. RE2's `\s` leaves out
+  // U+000B, so no oracle may write `'\s+'`.
+  private val WordSep = """'[ \t\n\x0B\f\r]+'"""
 
   /** Flagship: parse the interleaved text+media corpus and explode the
     * ordered span sequences. Driver smoke-checks rows > 0 on sf0.001. */
@@ -34,6 +41,11 @@ object SparkEntry {
     SgmlExtract.extract(docs, SgmlExtract.Config(dialect = "html4", space = "preserve"))
   }
 
+  private def nation(s: SparkSession, dir: String) = s.read.parquet(s"$dir/nation.parquet")
+
+  /** Every query, from the corpus directory to its result. These lambdas
+    * are the only place a corpus table is read; the operators in
+    * graft.ops take frames. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- extraction kernel, oracle-verified end-to-end ------------------
     "x1_parse_identity" -> ((s, dir) => {
@@ -94,7 +106,7 @@ object SparkEntry {
     "x8_pdf_roundtrip" -> ((s, dir) => {
       // north-rule PDF leg: deterministic writer builds one PDF per doc,
       // the parser extracts the text back — identity against the corpus
-      PdfOps.extractText(PdfOps.syntheticPdfs(s, dir))
+      PdfOps.extractText(PdfOps.syntheticPdfs(documents(s, dir)))
         .select(col("doc_id"), col("text"),
           col("n_pages").cast("long").as("n_pages"),
           col("n_errors").cast("long").as("n_errors"))
@@ -115,7 +127,7 @@ object SparkEntry {
       // structured extraction: HTML tables (every optional end tag
       // omitted — DTD omission inference builds the grid) → relational
       // (doc, table, row, col, cell) rows; same one-stage kernel shape
-      TableOps.tableExtract(s, dir)),
+      TableOps.tableCells(TableOps.wrapDocumentsTable(documents(s, dir)))),
 
     "x5_serialize_roundtrip" -> ((s, dir) => {
       // W1/W5: parse + canonical re-serialization; the DuckDB oracle
@@ -229,7 +241,7 @@ object SparkEntry {
       // sums/counts are integer-exact so avg is too. At 100 TB swap
       // percentile → approx_percentile (t-digest) — the documented
       // sketch path; grouping stays one partial-agg exchange.
-      s.read.parquet(s"$dir/documents.parquet")
+      documents(s, dir)
         .groupBy(col("source"))
         .agg(
           count(lit(1)).as("n_docs"),
@@ -253,25 +265,24 @@ object SparkEntry {
     }),
     "t6_iso639" -> ((s, dir) =>
       // iso_639 surface: plan-literal map lookup (codegen, no join/UDF)
-      TextOps.documents(s, dir).select(col("doc_id"), col("lang"),
+      documents(s, dir).select(col("doc_id"), col("lang"),
         Iso639.nameOf(col("lang")).as("lang_name"),
         Iso639.isKnown(col("lang")).as("known"))),
 
     // ---- xpath query surface (reference xpath.pl — SURVEY.md §2.4) -------
-    "xq1_xpath_child" -> ((s, dir) => XPathOps.childAxis(s, dir)),
-    "xq2_xpath_descendant" -> ((s, dir) => XPathOps.descendantAll(s, dir)),
-    "xq3_xpath_positional" -> ((s, dir) => XPathOps.positional(s, dir)),
-    "xq4_xpath_window" -> ((s, dir) => XPathOps.positionalWindow(s, dir)),
-    "xq5_xpath_spec_interp" -> ((s, dir) => XPathOps.specInterpreter(s, dir)),
+    "xq1_xpath_child" -> ((s, dir) => XPathOps.childAxis(nation(s, dir))),
+    "xq2_xpath_descendant" -> ((s, dir) => XPathOps.descendantAll(nation(s, dir))),
+    "xq3_xpath_positional" -> ((s, dir) => XPathOps.positional(nation(s, dir))),
+    "xq4_xpath_window" -> ((s, dir) => XPathOps.positionalWindow(nation(s, dir))),
+    "xq5_xpath_spec_interp" -> ((s, dir) => XPathOps.specInterpreter(nation(s, dir))),
     "xq6_pwp_template" -> ((s, dir) => {
       // §2.5 pwp surface: one exchange builds the per-region nested row
       // set (sort_array for a deterministic solution order), then the
       // template renders in a narrow stage — pwp:ask replicates <nation>
       // per row, pwp:tag renames, pwp:use projects, $name substitutes
-      val nation = s.read.parquet(s"$dir/nation.parquet")
       val region = s.read.parquet(s"$dir/region.parquet")
       val nested = region
-        .join(nation, col("n_regionkey") === col("r_regionkey"))
+        .join(nation(s, dir), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_regionkey"), col("r_name"))
         .agg(sort_array(collect_list(struct(
           col("n_nationkey").cast("long").as("key"),
@@ -319,7 +330,7 @@ object SparkEntry {
       // deterministic at any SF and the batch oracle replays it as
       // SELECT DISTINCT over the quality stage.
       import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = documents(s, dir).schema
       // the corpus is a single parquet FILE, but a file-stream source
       // derives basePath from its path and requires a directory — so the
       // filename becomes a single-match GLOB ([d]ocuments.parquet): the
@@ -354,8 +365,7 @@ object SparkEntry {
       // (1-based) keeps empty fingerprints null under ANSI mode, matching
       // the oracle's out-of-range list index.
       OpsFunctions.register(s)
-      s.read.parquet(s"$dir/documents.parquet")
-        .createOrReplaceTempView("k1_documents")
+      documents(s, dir).createOrReplaceTempView("k1_documents")
       s.sql("""
         SELECT a.doc_id,
           simhash64(a.text) AS simhash,
@@ -367,25 +377,36 @@ object SparkEntry {
     }),
 
     // ---- deduplication ----------------------------------------------------
-    "d1_dedup_exact" -> ((s, dir) => Dedup.exact(s, dir)),
-    "d2_minhash_bands" -> ((s, dir) => Dedup.minhashBands(s, dir)),
-    "d3_minhash_pairs" -> ((s, dir) => Dedup.minhashPairs(s, dir)),
-    "d4_simhash" -> ((s, dir) => Dedup.simhashes(s, dir)),
-    "d5_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(s, dir)),
-    "d6_ngram_jaccard" -> ((s, dir) => Dedup.consecutiveJaccard(s, dir)),
-    "d7_dedup_clusters" -> ((s, dir) => Dedup.dedupClusters(s, dir)),
+    "d1_dedup_exact" -> ((s, dir) => Dedup.exact(documents(s, dir))),
+    "d2_minhash_bands" -> ((s, dir) => Dedup.bandsOf(documents(s, dir), "doc_id", "text")),
+    "d3_minhash_pairs" -> ((s, dir) =>
+      Dedup.verifiedPairsOf(documents(s, dir), "doc_id", "text", minJaccard = 0.5)),
+    "d4_simhash" -> ((s, dir) => Dedup.simhashes(documents(s, dir))),
+    "d5_simhash_pairs" -> ((s, dir) =>
+      Dedup.simhashPairsOf(Dedup.simhashes(documents(s, dir)), maxDist = 3)),
+    "d6_ngram_jaccard" -> ((s, dir) => Dedup.consecutiveJaccard(documents(s, dir))),
+    "d7_dedup_clusters" -> ((s, dir) => {
+      // minhash-verified pairs → duplicate clusters
+      val d = documents(s, dir)
+      Dedup.clustersOf(Dedup.verifiedPairsOf(d, "doc_id", "text", minJaccard = 0.5),
+        d.select(col("doc_id")))
+    }),
     "d8_repeated_ngrams" -> ((s, dir) =>
       // substring-level dedup signal: per-doc fraction of distinct word
       // 10-grams that also occur in another document
-      Dedup.repeatedNgrams(s, dir)),
-    "t10_decontaminate" -> ((s, dir) => Dedup.decontaminate(s, dir)),
+      Dedup.withRepeatedNgrams(documents(s, dir), n = 10)),
+    "t10_decontaminate" -> ((s, dir) => {
+      // the docs with doc_id < 10 stand in for a benchmark suite; any
+      // shared shingle flags a corpus doc
+      val d = documents(s, dir).select(col("doc_id"), col("text"))
+      Dedup.decontaminateAgainst(d.filter(col("doc_id") >= 10), d.filter(col("doc_id") < 10))
+    }),
     "t11_decontaminate_external" -> ((s, dir) => {
       // external-held-out shape: a synthetic benchmark whose eval passages
       // QUOTE the corpus (first 40 words of every 100th doc) — the corpus
       // keeps ALL rows (the quoted sources must flag themselves), and the
       // threshold (3 distinct shared shingles) ignores idiom-level hits
-      val d = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
+      val d = documents(s, dir).select(col("doc_id"), col("text"))
       val heldout = d.filter(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("h_id"),
           array_join(slice(split(trim(col("text")), "\\s+"), 1, 40), " ").as("text"))
@@ -396,102 +417,119 @@ object SparkEntry {
       // against corpus-wide char-trigram statistics (rare trigrams ⇒
       // perplexity-outlier candidate) — codegen'd trigram explode, one
       // count agg + one broadcast-join agg
-      TextOps.trigramNovelty(s, dir)),
+      TextOps.withTrigramNovelty(documents(s, dir))),
 
     // ---- text analysis ----------------------------------------------------
     "t1_text_stats" -> ((s, dir) => {
-      TextOps.documents(s, dir).select(
+      documents(s, dir).select(
         col("doc_id"),
         length(col("text")).cast("long").as("char_len"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("word_count"),
         length(regexp_replace(col("text"), "[^aeiou]", "")).cast("long").as("vowel_count"))
     }),
-    "t2_token_count" -> ((s, dir) => TextOps.tokenCount(s, dir)),
-    "t3_quality" -> ((s, dir) => TextOps.qualityScore(s, dir)),
-    "t4_lang_id" -> ((s, dir) => TextOps.langId(s, dir)),
+    "t2_token_count" -> ((s, dir) => TextOps.tokenCount(documents(s, dir))),
+    "t3_quality" -> ((s, dir) =>
+      TextOps.withQuality(documents(s, dir).select(col("doc_id"), col("text")))
+        .drop("text")),
+    "t4_lang_id" -> ((s, dir) =>
+      TextOps.withLangId(documents(s, dir).select(col("doc_id"), col("lang"), col("text")))
+        .select(col("doc_id"), col("lang"), col("predicted_lang"),
+          (col("lang") === col("predicted_lang")).as("agree"))),
     "t5_fingerprint" -> ((s, dir) =>
-      TextOps.fingerprints(s, dir).select(col("doc_id"),
+      TextOps.fingerprints(documents(s, dir)).select(col("doc_id"),
         col("fingerprint")(0).as("fp_min"), size(col("fingerprint")).as("fp_len"))),
-    "t7_pii_scrub" -> ((s, dir) => TextOps.piiScrub(s, dir)),
-    "t8_url_extract" -> ((s, dir) => TextOps.urlExtract(s, dir)),
-    "t9_repetition" -> ((s, dir) => TextOps.repetitionSignals(s, dir)),
+    "t7_pii_scrub" -> ((s, dir) => TextOps.piiScrub(documents(s, dir))),
+    "t8_url_extract" -> ((s, dir) => TextOps.urlExtract(documents(s, dir))),
+    "t9_repetition" -> ((s, dir) =>
+      TextOps.withRepetition(documents(s, dir).select(col("doc_id"), col("text")))
+        .drop("text")),
     "t13_chunk" -> ((s, dir) =>
       // context-length shaping: sliding 32-token windows, stride 24 —
       // map-only explode, zero shuffles (the long-doc → training-sample op)
-      Chunking.chunkDocs(s, dir)),
+      Chunking.withChunks(documents(s, dir).select(col("doc_id"), col("text")),
+          window = 32, stride = 24)
+        .select(col("doc_id"), col("chunk_idx"), col("chunk_tokens"), col("chunk_text"))),
     "t15_bpe_merges" -> ((s, dir) =>
       // BPE tokenizer training: ONE corpus pass to a word-count table,
       // then 6 merge rounds over the vocab-sized frame only — O(corpus +
       // K × vocab), the production trainer shape
-      Bpe.bpeMerges(s, dir)),
+      Bpe.mergesOf(documents(s, dir), "text", k = 6)),
     "t14_vocab_topk" -> ((s, dir) =>
       // corpus frequency table (tokenizer/stopword seed): one hash agg
       // with map-side partials + TakeOrdered top-k, total order pinned
-      TextOps.vocabTopK(s, dir)),
+      TextOps.vocabTopK(documents(s, dir), k = 100)),
     "c1_pack_sequences" -> ((s, dir) =>
       // concatenate-and-slice packing: global token prefix sum via ONE
       // range shuffle + partition-offset broadcast (distributed scan),
-      // never a single-partition window; pack id = seq_start / 256
-      Chunking.packSequences(s, dir)),
+      // never a single-partition window; pack id = seq_start / 256;
+      // tokens are space-split, as in t2
+      Chunking.withPackIds(documents(s, dir).select(col("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("tokens")), blockSize = 256L)
+        .select(col("doc_id"), col("tokens"), col("seq_start"), col("pack_id"))),
     "c2_pack_blocks" -> ((s, dir) =>
       // materialized 256-token training blocks: token arrays ride through
       // the packing pass (no join), narrow explode to (globalPos, token),
       // ONE block-id shuffle with per-group state bounded by block size
-      Chunking.packedBlocks(s, dir)),
+      Chunking.packedBlocks(documents(s, dir), blockSize = 256L)),
     "c3_interleaved_blocks" -> ((s, dir) =>
       // multimodal packing: extracted text+media span streams (REAL parse
       // kernel) flatten to tokens with <|media|> placeholders carrying
       // refs; same c1 prefix sum + ONE block shuffle as c2
-      Chunking.interleavedBlocks(s, dir)),
+      Chunking.interleavedBlocks(SgmlExtract.wrapDocumentsMarked(s, dir).toDF(),
+        blockSize = 256L)),
 
     // ---- deterministic sampling (restart-stable corpus downsampling) ------
-    "s1_stratified_sample" -> ((s, dir) => Sampling.stratifiedSample(s, dir)),
-    "s2_uniform_sample" -> ((s, dir) => Sampling.uniformSample(s, dir)),
+    "s1_stratified_sample" -> ((s, dir) => Sampling.stratifiedSample(documents(s, dir))),
+    "s2_uniform_sample" -> ((s, dir) => Sampling.uniformSample(documents(s, dir), k = 100)),
     "s3_split_assign" -> ((s, dir) =>
       // deterministic train/val/test assignment: hash bucket → cumulative
       // permille ranges, a narrow CASE at the scan (retry/restart-stable)
-      Sampling.splitAssign(s, dir)),
+      Sampling.withSplit(documents(s, dir))
+        .select(col("doc_id"), Sampling.bucket1000(col("doc_id")).as("bucket"), col("split"))),
     "s4_temperature_sample" -> ((s, dir) =>
-      // multilingual mixing: keep rates ∝ n^(1/2) per language, integer-
-      // exact (decimal div); one tiny count agg + broadcast rate join,
-      // keep decision is the closed-form bucket hash at the scan
-      Sampling.temperatureSample(s, dir)),
+      // multilingual mixing: keep rates ∝ n^(1/2) per language at a 500‰
+      // target, integer-exact (decimal div); one tiny count agg +
+      // broadcast rate join, keep decision is the closed-form bucket hash
+      // at the scan
+      Sampling.withTemperatureRates(documents(s, dir), "doc_id", "lang", targetPermille = 500)
+        .select(col("doc_id"), col("lang"), col("n_stratum"),
+          col("w_stratum"), col("rate_permille"), col("bucket"))),
     "s5_domain_cap" -> ((s, dir) =>
       // ≤20 docs per source: exact two-phase per-domain top-k (narrow
       // k-heaps, ONE candidate shuffle) — never a corpus-wide window
       // funneling each giant domain through one task
-      Sampling.domainCap(s, dir)),
+      Sampling.withDomainCap(documents(s, dir), k = 20)),
     "a1_split_leakage" -> ((s, dir) =>
       // train/test leakage audit: near-dup pairs (d3 machinery) whose
       // endpoints land in different splits — split membership evaluated
       // inline on the ids, zero joins beyond pair generation
-      Audit.splitLeakage(s, dir)),
+      Audit.splitLeakageOf(documents(s, dir), "doc_id", "text")),
 
     // ---- embedding similarity --------------------------------------------
     "e1_knn_exact" -> ((s, dir) =>
-      Similarity.knnBruteForce(Similarity.embeddings(s, dir))
+      Similarity.knnBruteForce(embeddings(s, dir))
         .withColumn("rank", col("rank").cast("long"))),
-    "e2_knn_lsh" -> ((s, dir) => Similarity.knnLsh(Similarity.embeddings(s, dir))),
-    "e4_knn_ivf" -> ((s, dir) => Similarity.knnIvf(Similarity.embeddings(s, dir))),
-    "e5_ann_recall" -> ((s, dir) => Similarity.annRecall(Similarity.embeddings(s, dir))),
+    "e2_knn_lsh" -> ((s, dir) => Similarity.knnLsh(embeddings(s, dir))),
+    "e4_knn_ivf" -> ((s, dir) => Similarity.knnIvf(embeddings(s, dir))),
+    "e5_ann_recall" -> ((s, dir) => Similarity.annRecall(embeddings(s, dir))),
     "e6_knn_pq" -> ((s, dir) =>
       // flat PQ/ADC scan — the compressed-corpus leg of the ANN family
       // (8 subspaces × 16 centroids, asymmetric-distance ranking); the
       // oracle replays encode + LUT + fixed-order ADC sum from the
       // driver-fitted codebook literals
-      Similarity.knnPq(Similarity.embeddings(s, dir))),
+      Similarity.knnPq(embeddings(s, dir))),
     "e7_knn_ivfpq" -> ((s, dir) =>
       // the production composite: IVF cell restriction + residual-PQ
       // ADC ranking over the compressed codes only — the oracle replays
       // both quantizers, incl. per-probed-cell query residual tables
-      Similarity.knnIvfPq(Similarity.embeddings(s, dir))),
+      Similarity.knnIvfPq(embeddings(s, dir))),
     "e3_embedding_neardup" -> ((s, dir) =>
-      Similarity.embeddingNearDups(Similarity.embeddings(s, dir), minSim = NearDupMinSim)
+      Similarity.embeddingNearDups(embeddings(s, dir), minSim = NearDupMinSim)
         .select(col("id_a"), col("id_b"))),
 
     // ---- multimodal: real PNG/WAV decode, video frame decode stubbed ------
     "m1_media_meta" -> ((s, dir) => {
-      MediaOps.decodeStub(MediaOps.syntheticAssets(s, dir)).toDF()
+      MediaOps.decodeStub(MediaOps.syntheticAssets(documents(s, dir))).toDF()
         .select(col("media_ref"), col("mime"), col("byte_len"),
           col("width"), col("height"), col("n_frames"),
           col("channels"), col("sample_rate"))
@@ -500,22 +538,22 @@ object SparkEntry {
       // REAL pixel path: ImageIO-decode every PNG, nearest-neighbor
       // resample the actual raster into a 64×64 box, fingerprint the
       // resized pixel stream; the oracle replays pixels from the seed
-      MediaOps.resizePixels(MediaOps.syntheticAssets(s, dir),
+      MediaOps.resizePixels(MediaOps.syntheticAssets(documents(s, dir)),
         maxW = 64, maxH = 64)),
     "m3_frame_sample" -> ((s, dir) =>
-      MediaOps.sampleFrames(MediaOps.decodeStub(MediaOps.syntheticAssets(s, dir)).toDF())
+      MediaOps.sampleFrames(MediaOps.decodeStub(MediaOps.syntheticAssets(documents(s, dir))).toDF())
         .withColumn("frame_idx", col("frame_idx").cast("long"))),
     "m4_audio_stats" -> ((s, dir) =>
       // REAL PCM path: javax.sound decodes each WAV, exact integer
       // sum-of-squares + RMS over the 16-bit samples
-      MediaOps.audioStats(MediaOps.syntheticAssets(s, dir))),
+      MediaOps.audioStats(MediaOps.syntheticAssets(documents(s, dir)))),
     "m5_video_frames" -> ((s, dir) =>
       // REAL video-frame path: each video doc's multi-frame GIF twin is
       // decoded via ImageIO — frame count read from the container, only
       // the SAMPLED frames decoded, each raster pixel-hashed; the oracle
       // replays every sampled frame's pixels from the seed (same fold
       // as m2's resize path)
-      MediaOps.videoFrameHashes(MediaOps.syntheticVideos(s, dir)))
+      MediaOps.videoFrameHashes(MediaOps.syntheticVideos(documents(s, dir))))
   )
 
   // ---- oracle offsets/fragments DERIVED from the wrapper constants ----
@@ -536,13 +574,13 @@ object SparkEntry {
   // applies). SUM is cast back to BIGINT (DuckDB SUM(BIGINT) → HUGEINT).
   private def bpeOracleSql(k: Int): String = {
     val s0 =
-      """s0 AS MATERIALIZED (
+      s"""s0 AS MATERIALIZED (
         |  SELECT word, cnt,
         |    ' ' || array_to_string(regexp_extract_all(word, '.'), ' ') || ' ' AS seg
         |  FROM (
         |    SELECT w AS word, COUNT(*) AS cnt FROM (
         |      SELECT unnest(list_filter(
-        |        regexp_split_to_array(lower(trim(text)), '\s+'),
+        |        regexp_split_to_array(lower(trim(text)), $WordSep),
         |        x -> x <> '')) AS w
         |      FROM documents) tw
         |    GROUP BY w) tc)""".stripMargin
@@ -591,7 +629,7 @@ object SparkEntry {
   private def shingleCtesFrom(src: String): String =
     s"""w AS (
       |  SELECT doc_id,
-      |    list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS words
+      |    list_filter(regexp_split_to_array(lower(text), $WordSep), x -> x <> '') AS words
       |  FROM $src),
       |g AS (
       |  SELECT doc_id,
@@ -679,7 +717,7 @@ object SparkEntry {
       "fr" -> "'le','la','les','et','est','un','une','dans'",
       "es" -> "'el','los','las','es','un','una','que','por'")
       .map { case (l, ws) =>
-        s"""len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+        s"""len(list_filter(regexp_split_to_array(lower(text), $WordSep),
           |      x -> list_contains([$ws], x))) AS s_$l""".stripMargin }
     s"""lid AS (
       |  SELECT *,
@@ -724,9 +762,9 @@ object SparkEntry {
   // per-bit majority vote, then the 64-bit value assembled in HUGEINT and
   // wrapped to the signed BIGINT two's-complement value Spark emits.
   private val simhashCtes: String =
-    """w2 AS (
+    s"""w2 AS (
       |  SELECT doc_id,
-      |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS words
+      |    list_filter(regexp_split_to_array(lower(text), $WordSep), x -> x <> '') AS words
       |  FROM documents),
       |wh AS (
       |  SELECT doc_id,
@@ -767,10 +805,10 @@ object SparkEntry {
       |  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents),
       |q AS (
       |  SELECT doc_id, text,
-      |    CAST(LEN(regexp_split_to_array(TRIM(text), '\\s+')) AS BIGINT) AS n_words
+      |    CAST(LEN(regexp_split_to_array(TRIM(text), $WordSep)) AS BIGINT) AS n_words
       |  FROM src
-      |  WHERE LEN(regexp_split_to_array(TRIM(text), '\\s+')) >= 10
-      |    AND LEN(list_filter(regexp_split_to_array(TRIM(text), '\\s+'),
+      |  WHERE LEN(regexp_split_to_array(TRIM(text), $WordSep)) >= 10
+      |    AND LEN(list_filter(regexp_split_to_array(TRIM(text), $WordSep),
       |      x -> list_contains($stop, x))) > 0
       |    AND LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 100 >= LENGTH(text) * 50)"""
       .stripMargin
@@ -841,7 +879,7 @@ object SparkEntry {
     * entries that need the data-dependent (but deterministic) fit to be
     * SQL-expressible. */
   def oracleSqlFor(spark: SparkSession, sfDir: String): Map[String, String] = {
-    val fit = Similarity.fit(Similarity.embeddings(spark, sfDir))
+    val fit = Similarity.fit(embeddings(spark, sfDir))
     val ivfSql = e4IvfSql(fit.centers)
     val pqSql = e6PqSql(fit.books)
     val ivfpqSql = e7IvfPqSql(fit.centers, fit.rbooks)
@@ -1211,7 +1249,7 @@ object SparkEntry {
         |hw AS (
         |  SELECT doc_id,
         |    list_filter(list_transform(
-        |      regexp_split_to_array(TRIM(text), '\\s+')[1:40], x -> lower(x)),
+        |      regexp_split_to_array(TRIM(text), $WordSep)[1:40], x -> lower(x)),
         |      x -> x <> '') AS words
         |  FROM documents WHERE doc_id % 100 = 7),
         |hg AS (
@@ -1264,9 +1302,9 @@ object SparkEntry {
     // repeated word-10-gram replay: same word split / <10-word collapse /
     // distinct / hash chain as the shingle CTEs, windows of 10
     "d8_repeated_ngrams" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS words
+        |    list_filter(regexp_split_to_array(lower(text), $WordSep), x -> x <> '') AS words
         |  FROM documents),
         |g AS (
         |  SELECT doc_id,
@@ -1336,8 +1374,8 @@ object SparkEntry {
         |${clusterCtesFrom("documents")}
         |SELECT doc_id, cluster_id, is_keeper FROM clusters""".stripMargin,
     "t2_token_count" ->
-      """SELECT doc_id,
-        | CAST(LEN(regexp_split_to_array(TRIM(text), '\s+')) AS INTEGER) AS ws_tokens,
+      s"""SELECT doc_id,
+        | CAST(LEN(regexp_split_to_array(TRIM(text), $WordSep)) AS INTEGER) AS ws_tokens,
         | CAST(LEN(regexp_extract_all(text, '[a-zA-Z0-9]+'))
         |   + LEN(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS INTEGER) AS bpe_tokens
         |FROM documents""".stripMargin,
@@ -1595,9 +1633,9 @@ object SparkEntry {
         |FROM u""".stripMargin
     },
     "t9_repetition" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
+        |    list_filter(regexp_split_to_array(lower(trim(text)), $WordSep),
         |      x -> x <> '') AS words
         |  FROM documents),
         |t AS (
@@ -1743,20 +1781,20 @@ object SparkEntry {
       """SELECT md5(text) AS content_hash, MIN(doc_id) AS keeper_id,
         | COUNT(*) AS dup_count FROM documents GROUP BY md5(text)""".stripMargin,
     "t3_quality" ->
-      """SELECT doc_id,
-        | CAST(LEN(regexp_split_to_array(TRIM(text), '\s+')) AS INTEGER) AS n_words,
-        | CAST(LEN(list_filter(regexp_split_to_array(TRIM(text), '\s+'),
+      s"""SELECT doc_id,
+        | CAST(LEN(regexp_split_to_array(TRIM(text), $WordSep)) AS INTEGER) AS n_words,
+        | CAST(LEN(list_filter(regexp_split_to_array(TRIM(text), $WordSep),
         |   x -> list_contains(['the','a','an','and','or','of','to','in','is','it','der','die','das','und','le','la','les','et','el','los','y'], x))) AS INTEGER) AS stopword_hits,
         | CAST(LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS INTEGER) AS alpha_chars,
         | CAST(LENGTH(text) AS INTEGER) AS n_chars,
-        | (LEN(regexp_split_to_array(TRIM(text), '\s+')) >= 10
-        |   AND LEN(list_filter(regexp_split_to_array(TRIM(text), '\s+'),
+        | (LEN(regexp_split_to_array(TRIM(text), $WordSep)) >= 10
+        |   AND LEN(list_filter(regexp_split_to_array(TRIM(text), $WordSep),
         |     x -> list_contains(['the','a','an','and','or','of','to','in','is','it','der','die','das','und','le','la','les','et','el','los','y'], x))) > 0
         |   AND LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 100 >= LENGTH(text) * 50) AS is_quality
         |FROM documents""".stripMargin,
     "t1_text_stats" ->
-      """SELECT doc_id, CAST(LENGTH(text) AS BIGINT) AS char_len,
-        | CAST(LEN(regexp_split_to_array(TRIM(text), '\s+')) AS BIGINT) AS word_count,
+      s"""SELECT doc_id, CAST(LENGTH(text) AS BIGINT) AS char_len,
+        | CAST(LEN(regexp_split_to_array(TRIM(text), $WordSep)) AS BIGINT) AS word_count,
         | CAST(LENGTH(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS vowel_count
         |FROM documents""".stripMargin,
     "d6_ngram_jaccard" ->

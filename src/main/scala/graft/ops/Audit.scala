@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-audit compositions — checks a training-data pipeline runs over
@@ -53,11 +53,4 @@ object Audit {
       .select(Seq(col("id_a"), col("split_a"), col("id_b"), col("split_b")) ++
         pairs.columns.filterNot(Set("id_a", "id_b")).map(col): _*)
   }
-
-  /** a1 oracle query: leaking pairs over the documents table under the
-    * default 900/50/50 split — replayed end-to-end by DuckDB (minhash
-    * bands, Jaccard verification, and the split CASE on both ids). */
-  def splitLeakage(spark: SparkSession, sfDir: String): DataFrame =
-    splitLeakageOf(
-      spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text")
 }

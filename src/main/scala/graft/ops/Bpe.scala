@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
@@ -33,9 +33,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   * DuckDB's binary collation for ALL strings, not just ASCII.
   */
 object Bpe {
-
-  private def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
 
   /** Learn the first `k` merge rules over ANY (textCol) frame. Returns
     * the merge table (round, left, right, pair_count) — k rows, or fewer
@@ -105,10 +102,4 @@ object Bpe {
         StructField("rhs", StringType, nullable = false), // SQL keywords
         StructField("pair_count", LongType, nullable = false))))
   }
-
-  /** t15 oracle query: the first 6 merge rules learned from the
-    * documents table — DuckDB replays all 6 rounds (pair counts, argmax
-    * with the pinned tie-break, and the same string-replace merge). */
-  def bpeMerges(spark: SparkSession, sfDir: String, k: Int = 6): DataFrame =
-    mergesOf(documents(spark, sfDir), "text", k)
 }

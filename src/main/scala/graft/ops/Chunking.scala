@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.RangePartitioner
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -19,9 +19,6 @@ import org.apache.spark.sql.types.LongType
   * narrow running-sum pass), never a single-partition window.
   */
 object Chunking {
-
-  private def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
 
   /** Scratch-column name not colliding with the frame's columns. */
   private def fresh(base: String, taken: Array[String]): String =
@@ -65,12 +62,6 @@ object Chunking {
         least(lit(window), col(nCol) - col("chunk_idx") * stride))
       .drop(toksCol, nCol)
   }
-
-  /** t13 oracle query: chunk the documents table at window=32 / stride=24
-    * (doc avg ~55 tokens → a mix of 1-chunk and multi-chunk docs). */
-  def chunkDocs(spark: SparkSession, sfDir: String): DataFrame =
-    withChunks(documents(spark, sfDir).select(col("doc_id"), col("text")))
-      .select(col("doc_id"), col("chunk_idx"), col("chunk_tokens"), col("chunk_text"))
 
   // ---- c1: token-budget sequence packing ----------------------------------
 
@@ -166,18 +157,11 @@ object Chunking {
     spark.createDataFrame(packed, outSchema)
   }
 
-  /** c1 oracle query: pack the documents corpus into 256-token blocks in
-    * doc_id order (whitespace token counts — same tokenization as t2). */
-  def packSequences(spark: SparkSession, sfDir: String): DataFrame =
-    withPackIds(
-      documents(spark, sfDir).select(col("doc_id"),
-        size(split(col("text"), " ")).cast(LongType).as("tokens")))
-      .select(col("doc_id"), col("tokens"), col("seq_start"), col("pack_id"))
-
   // ---- c2: materialized training blocks -----------------------------------
 
   /** The consumer of c1's offsets: materialize the fixed-length blocks
-    * themselves — every token of the concatenated corpus lands in block
+    * of a (doc_id, text) frame — every token of the concatenated corpus
+    * (space-split, concatenated in doc_id order) lands in block
     * floor(globalPos / blockSize), block text is the tokens in global
     * order (the "concatenate-and-slice" batch a pretraining loader
     * reads). The last block is short rather than padded.
@@ -191,9 +175,8 @@ object Chunking {
     * oracle rebuilds the same blocks from a string_agg of the whole
     * corpus (fine at oracle SF, impossible at prod SF — which is the
     * point of the distributed shape). */
-  def packedBlocks(spark: SparkSession, sfDir: String,
-      blockSize: Long = 256L): DataFrame = {
-    val d = documents(spark, sfDir)
+  def packedBlocks(docs: DataFrame, blockSize: Long): DataFrame = {
+    val d = docs
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("tokens", size(col("toks")).cast(LongType))
     withPackIds(d, "doc_id", "tokens", blockSize)
@@ -223,9 +206,10 @@ object Chunking {
 
   /** Interleaved multimodal training blocks — the packed batch a
     * text+image trainer reads: each document's EXTRACTED span sequence
-    * (through the real parse kernel over the marked corpus, media spans
-    * and all) flattens to a token stream where every media span becomes
-    * ONE `<|media|>` placeholder carrying its media_ref; streams
+    * (`docs` in the contract schema through the real parse kernel, media
+    * spans and all; doc_id must cast to long) flattens to a token stream
+    * where every media span becomes ONE `<|media|>` placeholder carrying
+    * its media_ref; streams
     * concatenate in id order and slice into `blockSize`-token blocks.
     * Output per block: the token text AND the ordered refs of the media
     * placeholders inside it — position-aligned, so the loader knows
@@ -237,8 +221,7 @@ object Chunking {
     * per-group state ≤ blockSize. The media_refs column falls out of the
     * same sorted collect (collect_list drops the text tokens' null
     * structs) — no second shuffle, no join against a media table. */
-  def interleavedBlocks(spark: SparkSession, sfDir: String,
-      blockSize: Long = 256L): DataFrame = {
+  def interleavedBlocks(docs: DataFrame, blockSize: Long): DataFrame = {
     import graft.SgmlExtract
     // The EXPRESSION form of the kernel (extractDf), not the typed
     // Dataset path: a typed map is opaque to Catalyst, so withPackIds'
@@ -246,8 +229,7 @@ object Chunking {
     // Project expression it column-prunes away — the sampling job reads
     // ids off the parquet scan and the parse runs exactly once, in the
     // shared shuffle stage. (The unused errors column prunes for free.)
-    val extracted = SgmlExtract.extractDf(
-        SgmlExtract.wrapDocumentsMarked(spark, sfDir).toDF(),
+    val extracted = SgmlExtract.extractDf(docs,
         SgmlExtract.Config(dialect = "html4", space = "preserve"))
       .select(col("doc_id"), col("spans"))
     val d = extracted.select(

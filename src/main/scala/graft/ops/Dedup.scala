@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
-
   /** Persist `df` and release the frame a PREVIOUS invocation cached
     * under the same tag. Lazy callers can't know when their consumer is
     * done with a cached subtree, so an eager unpersist would defeat the
@@ -90,9 +87,8 @@ object Dedup {
 
   /** Exact dedup: group by content hash, keep min doc_id. One shuffle on
     * md5(text) (partial aggregation map-side). */
-  def exact(spark: SparkSession, sfDir: String): DataFrame = {
-    documents(spark, sfDir)
-      .groupBy(md5(col("text")).as("content_hash"))
+  def exact(d: DataFrame): DataFrame = {
+    d.groupBy(md5(col("text")).as("content_hash"))
       .agg(min(col("doc_id")).as("keeper_id"),
         count(lit(1)).as("dup_count"))
   }
@@ -245,13 +241,14 @@ object Dedup {
     d.select(col(idCol), posexplode(bh(col(textCol))).as(Seq("band", "band_hash")))
   }
 
-  /** doc_id → (band, band_hash) over the documents table. */
-  def minhashBands(spark: SparkSession, sfDir: String): DataFrame =
-    bandsOf(documents(spark, sfDir), "doc_id", "text")
-
-  /** Jaccard-verified near-dup pairs for ANY (id, text) frame — the
-    * bucket-collect candidate generation of minhashPairs, reusable by the
-    * curation pipeline.
+  /** Jaccard-verified near-dup pairs for ANY (id, text) frame: candidate
+    * pairs from LSH buckets, verified with exact n-gram Jaccard.
+    * Candidate generation is bucket-collect, not a self-join: ONE pass
+    * computes signatures (the dominant cost — a self-join recomputes the
+    * minhash UDF on both sides), one shuffle groups by (band, band_hash),
+    * and pairs explode within each bucket. Work is Σ|bucket|² either way
+    * (inherent to LSH); a pathological all-identical corpus concentrates
+    * in one bucket under both shapes.
     *
     * `maxBucket` is the 100 TB safety valve: a boilerplate-heavy corpus
     * can put millions of docs into one band bucket, and the in-bucket
@@ -293,22 +290,12 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Candidate pairs from LSH buckets, verified with exact n-gram Jaccard.
-    * Candidate generation is bucket-collect, not a self-join: ONE pass
-    * computes signatures (the dominant cost — a self-join recomputes the
-    * minhash UDF on both sides), one shuffle groups by (band, band_hash),
-    * and pairs explode within each bucket. Work is Σ|bucket|² either way
-    * (inherent to LSH); a pathological all-identical corpus concentrates
-    * in one bucket under both shapes. */
-  def minhashPairs(spark: SparkSession, sfDir: String, minJaccard: Double = 0.5): DataFrame =
-    verifiedPairsOf(documents(spark, sfDir), "doc_id", "text", minJaccard)
-
   /** n-gram Jaccard as a standalone surfaced op: similarity of each
     * consecutive doc_id pair — a deterministic, oracle-checkable slice of
-    * the same verification kernel minhashPairs uses inside buckets. The
-    * pairing join is an equi-join on doc_id+1 (no cross join). */
-  def consecutiveJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = documents(spark, sfDir).select(col("doc_id"), col("text"))
+    * the same verification kernel verifiedPairsOf uses inside buckets.
+    * The pairing join is an equi-join on doc_id+1 (no cross join). */
+  def consecutiveJaccard(docs: DataFrame): DataFrame = {
+    val d = docs.select(col("doc_id"), col("text"))
     val jac = udf((x: String, y: String) => ngramJaccard(x, y))
     d.as("a")
       .join(d.as("b"), col("b.doc_id") === col("a.doc_id") + 1)
@@ -392,42 +379,19 @@ object Dedup {
     labels.withColumn("is_keeper", col("doc_id") === col("cluster_id"))
   }
 
-  /** d7: minhash-verified pairs → duplicate clusters over the documents
-    * table. */
-  def dedupClusters(spark: SparkSession, sfDir: String,
-      minJaccard: Double = 0.5, maxIter: Int = 20): DataFrame =
-    clustersOf(
-      minhashPairs(spark, sfDir, minJaccard),
-      documents(spark, sfDir).select(col("doc_id")), maxIter)
-
-  /** Train/test decontamination: flag every corpus document sharing ANY
-    * word 3-shingle with a held-out contamination set (here the docs with
-    * doc_id < contamIds — the synthetic stand-in for a benchmark suite).
-    * The real-pipeline shape at 100 TB: the contamination side is tiny
-    * and BROADCASTS (its distinct shingle hashes), the corpus side is one
-    * narrow shingle-hash explode + broadcast hash join + per-doc count —
-    * no corpus-side shuffle besides the count aggregation. Hash space is
-    * the shared closed-form 2^32 polynomial, so the oracle recomputes the
-    * same overlap counts in SQL. */
-  def decontaminate(spark: SparkSession, sfDir: String,
-      contamIds: Int = 10): DataFrame = {
-    val d = documents(spark, sfDir).select(col("doc_id"), col("text"))
-    decontaminateAgainst(
-      d.filter(col("doc_id") >= contamIds),
-      d.filter(col("doc_id") < contamIds))
-  }
-
-  /** Decontamination against ANY external held-out frame — the shape a
-    * real benchmark-decontam job needs: `heldout` is an arbitrary
-    * (id, `textCol`) table (a loaded eval set, NOT a slice of the
-    * corpus), and `minOverlap` sets how many distinct shared shingles
+  /** Train/test decontamination: flag every corpus document sharing
+    * `minOverlap` distinct word 3-shingles with a held-out set. `heldout`
+    * is an arbitrary (id, `textCol`) table (a loaded eval set, or a slice
+    * of the corpus standing in for one), and `minOverlap` sets how many distinct shared shingles
     * make a corpus document "contaminated" (1 = any overlap; real
-    * pipelines use 3–10 to ignore idiom-level collisions). Same plan as
-    * `decontaminate`: the held-out side reduces to a DISTINCT shingle-
-    * hash set that BROADCASTS (eval suites are ≪ corpus); the corpus
-    * side is one narrow shingle explode + broadcast hash join + per-doc
-    * distinct count — no corpus-side shuffle besides that aggregation,
-    * so the whole check is one pass over the corpus at any scale. */
+    * pipelines use 3–10 to ignore idiom-level collisions). The held-out
+    * side reduces to a DISTINCT shingle-hash set that BROADCASTS (eval
+    * suites are ≪ corpus); the corpus side is one narrow shingle explode
+    * + broadcast hash join + per-doc distinct count — no corpus-side
+    * shuffle besides that aggregation, so the whole check is one pass
+    * over the corpus at any scale. Hash space is the shared closed-form
+    * 2^32 polynomial, so the oracle recomputes the same overlap counts
+    * in SQL. */
   def decontaminateAgainst(corpus: DataFrame, heldout: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       minOverlap: Long = 1L): DataFrame = {
@@ -493,9 +457,6 @@ object Dedup {
           .as("shared_permille"))
   }
 
-  def repeatedNgrams(spark: SparkSession, sfDir: String, n: Int = 10): DataFrame =
-    withRepeatedNgrams(documents(spark, sfDir), n = n)
-
   /** A window of a word scan, equal to another when its words are (a
     * shared shingle hash is not equality): a shingle without its string. */
   private final class Shingle(val w: Words, val s: Int) {
@@ -550,23 +511,19 @@ object Dedup {
     out
   }
 
-  def simhashes(spark: SparkSession, sfDir: String): DataFrame = {
+  /** (doc_id, simhash) of a (doc_id, text) frame. */
+  def simhashes(d: DataFrame): DataFrame = {
     val sh = udf((t: String) => simhash(t))
-    documents(spark, sfDir).select(col("doc_id"), sh(col("text")).as("simhash"))
+    d.select(col("doc_id"), sh(col("text")).as("simhash"))
   }
 
-  /** Near-dup pairs with hamming distance ≤ maxDist via 4×16-bit band
-    * blocking (a pair within distance 3 must agree on ≥1 band). Same
-    * bucket-collect shape as minhashPairs: one pass + one shuffle.
-    * `maxBucket`: same whole-bucket valve as verifiedPairsOf (a
+  /** Near-dup pairs of a (doc_id, simhash) frame with hamming distance ≤
+    * maxDist via 4×16-bit band blocking (a pair within distance 3 must
+    * agree on ≥1 band). Same bucket-collect shape as verifiedPairsOf: one
+    * pass + one shuffle. `maxBucket`: same whole-bucket valve (a
     * template-heavy corpus concentrates mass in few band values — one hot
     * bucket is one OOM'd task without the cap). Default uncapped for
     * oracle parity at test SFs. */
-  def simhashPairs(spark: SparkSession, sfDir: String, maxDist: Int = 3,
-      maxBucket: Int = Int.MaxValue): DataFrame =
-    simhashPairsOf(simhashes(spark, sfDir), maxDist, maxBucket)
-
-  /** simhashPairs over ANY (doc_id, simhash) frame. */
   def simhashPairsOf(sh: DataFrame, maxDist: Int = 3,
       maxBucket: Int = Int.MaxValue): DataFrame = {
     val banded = sh.select(col("doc_id"), col("simhash"), posexplode(array((0 until 4).map(b =>

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
@@ -371,18 +371,17 @@ object MediaOps {
     out
   }
 
-  /** Synthetic deterministic media-asset table derived from doc ids (no
-    * external data): media_ref matches the refs emitted by
-    * `wrapDocumentsMarked`. Every asset now carries a REAL format header
+  /** Synthetic deterministic media-asset table derived from the doc_id
+    * column of `ids` (no external data): media_ref matches the refs
+    * emitted by `wrapDocumentsMarked`. Every asset now carries a REAL format header
     * over the closed-form filler stream — PNG signature + IHDR (real
     * CRC), RIFF/WAVE fmt chunk, or MP4 ftyp/moov/mvhd/tkhd boxes — with
     * closed-form metadata values, so the decode path reads metadata back
     * out of the actual bytes and the oracle recomputes the same values
     * from the seed. Video assets are sized past the 232-byte box prefix. */
-  def syntheticAssets(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("string"))
+  def syntheticAssets(ids: DataFrame): Dataset[MediaRow] = {
+    import ids.sparkSession.implicits._
+    ids.select(col("doc_id").cast("string"))
       .as[String]
       .map { id =>
         val seed = Dedup.shingleHash(id) // base-31 poly mod 2^32 over digits
@@ -655,10 +654,9 @@ object MediaOps {
     * JDK does not ship; GIF is the JDK-native multi-frame format, same role
     * MJPEG-in-AVI would play with a heavier box walk). Same deterministic
     * seed chain as every other asset. */
-  def syntheticVideos(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("string"))
+  def syntheticVideos(ids: DataFrame): Dataset[MediaRow] = {
+    import ids.sparkSession.implicits._
+    ids.select(col("doc_id").cast("string"))
       .as[String]
       .flatMap { id =>
         val seed = Dedup.shingleHash(id)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pdf.{Pdf, PdfWriter}
 import scala.util.control.NonFatal
@@ -16,13 +16,12 @@ import scala.util.control.NonFatal
   */
 object PdfOps {
 
-  /** Deterministic synthetic corpus: one single-page PDF per document,
-    * built from `documents.text` by the writer twin (columns pruned to
+  /** Deterministic synthetic corpus: one single-page PDF per row of a
+    * (doc_id, text) frame, built by the writer twin (columns pruned to
     * doc_id+text before the kernel). */
-  def syntheticPdfs(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("string").as("doc_id"), col("text"))
+  def syntheticPdfs(d: DataFrame): DataFrame = {
+    import d.sparkSession.implicits._
+    d.select(col("doc_id").cast("string").as("doc_id"), col("text"))
       .as[(String, String)]
       .mapPartitions(_.map { case (id, text) =>
         (id, PdfWriter.singlePage(text))

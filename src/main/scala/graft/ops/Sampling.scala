@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -30,15 +30,11 @@ object Sampling {
   def bucket1000(id: Column): Column =
     pmod(pmod(id, lit(IdM)) * lit(HashK), lit(HashP)) % 1000
 
-  private def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
-
-  /** Stratified sample over the documents table: per-source keep rates
+  /** Stratified sample of a (doc_id, source) frame: per-source keep rates
     * (permille), decided per row from `bucket1000(doc_id)`. The rate rule
     * is itself closed-form on the stratum name so the oracle can replay
     * it; a production caller passes an explicit rate map instead. */
-  def stratifiedSample(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = documents(spark, sfDir)
+  def stratifiedSample(d: DataFrame): DataFrame = {
     // stratum 'srcN' → rate 100 + (N mod 5) * 200 permille (100..900)
     val srcNum = substring(col("source"), 4, 10).cast("long")
     val rate = lit(100) + pmod(srcNum, lit(5)) * 200
@@ -51,9 +47,8 @@ object Sampling {
     * a deterministic reservoir. Spark plans order-by + limit as
     * TakeOrderedAndProject: a per-partition top-k heap merged on the
     * driver, O(k) memory, NO global sort and no shuffle exchange. */
-  def uniformSample(spark: SparkSession, sfDir: String, k: Int = 100): DataFrame =
-    documents(spark, sfDir)
-      .select(col("doc_id"), bucket1000(col("doc_id")).as("h"))
+  def uniformSample(d: DataFrame, k: Int): DataFrame =
+    d.select(col("doc_id"), bucket1000(col("doc_id")).as("h"))
       .orderBy(col("h").asc, col("doc_id").asc)
       .limit(k)
 
@@ -88,11 +83,6 @@ object Sampling {
         when(b < upper, name).otherwise(acc)
       }
   }
-
-  def splitAssign(spark: SparkSession, sfDir: String): DataFrame =
-    withSplit(documents(spark, sfDir))
-      .select(col("doc_id"), bucket1000(col("doc_id")).as("bucket"),
-        col("split"))
 
   /** Temperature-based stratum rebalancing — the multilingual-mixing op:
     * keep rates per stratum proportional to n^α with α = 1/2, so rare
@@ -154,14 +144,6 @@ object Sampling {
       .withColumn("bucket", bucket1000(col(idCol)))
       .filter(col("bucket") < col("rate_permille"))
   }
-
-  /** s4 oracle query: temperature-sample the documents table by `lang`
-    * at a 500‰ target — `en` (the majority language) is downsampled
-    * hardest, rare languages keep proportionally more. */
-  def temperatureSample(spark: SparkSession, sfDir: String): DataFrame =
-    withTemperatureRates(documents(spark, sfDir), "doc_id", "lang")
-      .select(col("doc_id"), col("lang"), col("n_stratum"),
-        col("w_stratum"), col("rate_permille"), col("bucket"))
 
   /** Per-domain cap — keep at most `k` docs per domain/source (the
     * C4 / web-corpus step that stops boilerplate-heavy giant hosts from
@@ -238,10 +220,4 @@ object Sampling {
     spark.createDataFrame(ranked, StructType(schema.fields :+
       StructField("rank", LongType, nullable = false)))
   }
-
-  /** s5 oracle query: cap the documents table at 20 docs per source —
-    * replayed by a DuckDB row_number window (feasible at oracle SF;
-    * the distributed shape above is the point at scale). */
-  def domainCap(spark: SparkSession, sfDir: String): DataFrame =
-    withDomainCap(documents(spark, sfDir))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
   * shuffled hash join, and the small query side broadcasts).
   */
 object Similarity {
-
-  def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   /** cosine(a, b) as a codegen'd Column expression (no UDF). */
   private def cosine(a: Column, b: Column): Column = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.{Doc, SgmlExtract}
 import graft.sgml.{Node, ParseDriver, ParseResult}
@@ -23,16 +23,16 @@ import graft.sgml.{Node, ParseDriver, ParseResult}
   */
 object TableOps {
 
-  /** Wrap each document as a page whose table carries closed-form cells:
+  /** Wrap each row of a (doc_id, text, lang, source) frame as a page
+    * whose table carries closed-form cells:
     * a header row (th) of column labels and two data rows (td) derived
     * from the doc's own columns — with EVERY optional end tag omitted
     * (`</th>`, `</td>`, `</tr>`), the way real HTML is written. Cells are
     * alphanumeric by construction so the DuckDB oracle rebuilds them with
     * plain string functions. */
-  def wrapDocumentsTable(spark: SparkSession, sfDir: String): Dataset[Doc] = {
-    import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(
+  def wrapDocumentsTable(d: DataFrame): Dataset[Doc] = {
+    import d.sparkSession.implicits._
+    d.select(
         col("doc_id").cast("string").as("doc_id"),
         SgmlExtract.textSpans(concat(
           lit("<html><body><table><tr><th>lang<th>source"),
@@ -111,10 +111,4 @@ object TableOps {
     r.content.foreach(visit)
     out.result()
   }
-
-  /** x10 oracle query: cells of the synthetic per-doc table (omitted-end-
-    * tag markup through the real kernel), replayable from the documents
-    * columns in SQL. */
-  def tableExtract(spark: SparkSession, sfDir: String): DataFrame =
-    tableCells(wrapDocumentsTable(spark, sfDir))
 }

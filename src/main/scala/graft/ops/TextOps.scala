@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a large-scale training-data pipeline over
@@ -12,21 +12,6 @@ import org.apache.spark.sql.functions._
   * can't express the operator at all.
   */
 object TextOps {
-
-  def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
-
-  /** Per-doc counting stats. Built-ins only → codegen, pushdown-friendly,
-    * and exactly reproducible in the DuckDB oracle (integer semantics,
-    * no float summation-order issues). */
-  def textStats(spark: SparkSession, sfDir: String): DataFrame = {
-    documents(spark, sfDir).select(
-      col("doc_id"),
-      length(col("text")).as("char_len"),
-      size(split(trim(col("text")), "\\s+")).as("word_count"),
-      length(regexp_replace(col("text"), "[^aeiou]", "")).as("vowel_count"),
-      length(regexp_replace(col("text"), "[^ ]", "")).as("space_count"))
-  }
 
   /** Quality scoring: mean word length (×100, integer-exact), stopword
     * hits, alpha ratio — the length/punct/stopword family. */
@@ -101,14 +86,10 @@ object TextOps {
     (words, hits, alpha)
   }
 
-  def qualityScore(spark: SparkSession, sfDir: String): DataFrame =
-    withQuality(documents(spark, sfDir).select(col("doc_id"), col("text")))
-      .drop("text")
-
   /** Whitespace + BPE-ish token counting: words plus punctuation clusters
     * counted as separate tokens (regexp-based, deterministic). */
-  def tokenCount(spark: SparkSession, sfDir: String): DataFrame = {
-    documents(spark, sfDir).select(
+  def tokenCount(d: DataFrame): DataFrame = {
+    d.select(
       col("doc_id"),
       size(split(trim(col("text")), "\\s+")).as("ws_tokens"),
       // BPE-ish: alpha runs, digit runs and single punct chars each count
@@ -177,11 +158,6 @@ object TextOps {
     else "es"
   }
 
-  def langId(spark: SparkSession, sfDir: String): DataFrame =
-    withLangId(documents(spark, sfDir).select(col("doc_id"), col("lang"), col("text")))
-      .select(col("doc_id"), col("lang"), col("predicted_lang"),
-        (col("lang") === col("predicted_lang")).as("agree"))
-
   // ---- PII scrubbing -----------------------------------------------------
   // RE2-safe patterns (no lookarounds, no backrefs): the SAME strings are
   // interpolated into the DuckDB oracle, so Java regex (Spark codegen'd
@@ -212,9 +188,8 @@ object TextOps {
     * deterministic PII suffix is synthesized from doc_id — same closed-form
     * trick as the markup wrappers — and the oracle rebuilds suffix, counts
     * and redacted text from scratch in SQL. */
-  def piiScrub(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val pii = d.withColumn("pii_text", concat(
+  def piiScrub(d: DataFrame): DataFrame = {
+    val pii = d.select(col("doc_id"), col("text")).withColumn("pii_text", concat(
       col("text"),
       lit(" contact user"), col("doc_id"), lit("@example.com"),
       when(pmod(col("doc_id"), lit(3)) === 0, lit(" cc admin@example.org")).otherwise(lit("")),
@@ -248,9 +223,8 @@ object TextOps {
     * suffix is synthesized from doc_id (same closed-form trick as t7's
     * PII) — mixed-case host to prove normalization, a second URL on even
     * ids to prove counting. */
-  def urlExtract(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val withText = d.withColumn("url_text", concat(
+  def urlExtract(d: DataFrame): DataFrame = {
+    val withText = d.select(col("doc_id"), col("text")).withColumn("url_text", concat(
       col("text"),
       lit(" see https://WWW.Example"), pmod(col("doc_id"), lit(50)),
       lit(".com/p"), col("doc_id"), lit("?x=1"),
@@ -290,10 +264,6 @@ object TextOps {
           .otherwise(lit(0L)))
       .drop("__w", "__t")
   }
-
-  def repetitionSignals(spark: SparkSession, sfDir: String): DataFrame =
-    withRepetition(documents(spark, sfDir).select(col("doc_id"), col("text")))
-      .drop("text")
 
   /** Rolling-hash document fingerprint (winnowing-style): Rabin-Karp over
     * code-point 16-grams with base-31 mod-P arithmetic (P prime > 2^32 —
@@ -335,10 +305,9 @@ object TextOps {
     out.sorted
   }
 
-  def fingerprints(spark: SparkSession, sfDir: String): DataFrame = {
+  def fingerprints(d: DataFrame): DataFrame = {
     val fpUdf = udf((t: String) => fingerprint(t))
-    documents(spark, sfDir)
-      .select(col("doc_id"), fpUdf(col("text")).as("fingerprint"))
+    d.select(col("doc_id"), fpUdf(col("text")).as("fingerprint"))
   }
 
   /** Corpus-statistics novelty scoring — the integer-exact core of
@@ -387,9 +356,6 @@ object TextOps {
           .as("rare_permille"))
   }
 
-  def trigramNovelty(spark: SparkSession, sfDir: String): DataFrame =
-    withTrigramNovelty(documents(spark, sfDir))
-
   // ---- corpus vocabulary ---------------------------------------------------
 
   /** Top-k corpus vocabulary with counts — the frequency table that seeds
@@ -400,9 +366,8 @@ object TextOps {
     * partial-count) pairs do), and the top-k is TakeOrdered (per-partition
     * heaps + a k-row driver merge), never a global sort materialization.
     * At 100 TB the shuffle carries at most |vocab| × partitions rows. */
-  def vocabTopK(spark: SparkSession, sfDir: String, k: Int = 100): DataFrame =
-    documents(spark, sfDir)
-      .select(explode(split(col("text"), " ")).as("word"))
+  def vocabTopK(d: DataFrame, k: Int): DataFrame =
+    d.select(explode(split(col("text"), " ")).as("word"))
       .where(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word").asc)

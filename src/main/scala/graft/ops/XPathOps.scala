@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   *  - Q7 `number` → `try_cast(... as double)`;
   *  - Q8 `contains` → `contains(col, lit)`.
   *
-  * The XML inputs are built deterministically from the TPC-H-ish tables
+  * Every query takes the `nation` table (n_nationkey, n_name,
+  * n_regionkey). The XML inputs are built deterministically from it
   * (alphanumeric names/keys only → no escaping concerns), so every query
   * has an exact DuckDB oracle over the same base tables. At 100 TB the
   * same shape applies to per-doc serialized trees: xpath_* are scalar,
@@ -29,8 +30,8 @@ import org.apache.spark.sql.functions._
 object XPathOps {
 
   /** One XML doc per nation: `<nation key="K" region="R"><name>N</name></nation>`. */
-  def nationXml(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/nation.parquet")
+  private def nationXml(nation: DataFrame): DataFrame =
+    nation
       .select(col("n_nationkey"), col("n_regionkey"),
         concat(
           lit("<nation key=\""), col("n_nationkey"),
@@ -39,8 +40,8 @@ object XPathOps {
 
   /** Q1/Q4/Q5/Q6/Q7: child axis, attribute extraction with coercion,
     * text extraction, normalize-space, numeric coercion. */
-  def childAxis(spark: SparkSession, sfDir: String): DataFrame =
-    nationXml(spark, sfDir).select(
+  def childAxis(nation: DataFrame): DataFrame =
+    nationXml(nation).select(
       col("n_nationkey").as("nation_key"),
       expr("xpath_string(xml, 'nation/name')").as("name"),
       expr("xpath_int(xml, 'nation/@key')").cast("long").as("key_attr"),
@@ -49,8 +50,8 @@ object XPathOps {
         .as("name_norm"))
 
   /** One XML doc per region holding its nations in key order. */
-  def regionXml(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/nation.parquet")
+  private def regionXml(nation: DataFrame): DataFrame =
+    nation
       .groupBy(col("n_regionkey"))
       .agg(concat(
         lit("<region>"),
@@ -61,24 +62,24 @@ object XPathOps {
 
   /** Q2/Q9: descendant axis `//name`, all solutions as rows
     * (`posexplode` ≡ Prolog backtracking). */
-  def descendantAll(spark: SparkSession, sfDir: String): DataFrame =
-    regionXml(spark, sfDir)
+  def descendantAll(nation: DataFrame): DataFrame =
+    regionXml(nation)
       .select(col("n_regionkey").as("region_key"),
         posexplode(expr("xpath(xml, '//name/text()')")).as(Seq("pos", "name")))
       .select(col("region_key"), col("pos").cast("long").as("pos"), col("name"))
 
   /** Q3: positional `nation(2)` and `nation(last)` per region — via XPath
     * positional predicates, cross-checkable against a window row_number. */
-  def positional(spark: SparkSession, sfDir: String): DataFrame =
-    regionXml(spark, sfDir).select(
+  def positional(nation: DataFrame): DataFrame =
+    regionXml(nation).select(
       col("n_regionkey").as("region_key"),
       expr("xpath_string(xml, 'region/nation[2]/name')").as("second_nation"),
       expr("xpath_string(xml, 'region/nation[last()]/name')").as("last_nation"))
 
   /** One XML doc per region with nations as attributed children, in key
     * order: `<region id="R"><nation key="K"><name>N</name></nation>…</region>`. */
-  def regionXmlAttr(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/nation.parquet")
+  private def regionXmlAttr(nation: DataFrame): DataFrame =
+    nation
       .groupBy(col("n_regionkey"))
       .agg(concat(
         lit("<region id=\""), col("n_regionkey").cast("string"), lit("\">"),
@@ -95,7 +96,7 @@ object XPathOps {
     * One parse + three spec evaluations per row inside a single UDF —
     * narrow, shuffle-free (the groupBy below builds the per-region doc,
     * mirroring how per-doc trees already exist in the extract pipeline). */
-  def specInterpreter(spark: SparkSession, sfDir: String): DataFrame = {
+  def specInterpreter(nation: DataFrame): DataFrame = {
     import graft.sgml.{Dialect, ParserConfig, SgmlParser, SpaceMode, XPathSpec}
     val cfg = ParserConfig(dialect = Dialect.Xml, space = SpaceMode.Preserve)
     def p(s: String) = XPathSpec.parse(s)
@@ -110,7 +111,7 @@ object XPathOps {
         XPathSpec.first(r.content, pLast).orNull,
         XPathSpec.first(r.content, pKey).orNull)
     })
-    regionXmlAttr(spark, sfDir)
+    regionXmlAttr(nation)
       .select(col("n_regionkey").as("region_key"), evalAll(col("xml")).as("v"))
       .select(col("region_key"),
         col("v")(0).as("second_nation"),
@@ -120,9 +121,9 @@ object XPathOps {
 
   /** The same positional query via windows (the scale path for span
     * tables: no serialized doc needed). Q3 + Q8. */
-  def positionalWindow(spark: SparkSession, sfDir: String): DataFrame = {
+  def positionalWindow(nation: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("n_regionkey")).orderBy(col("n_nationkey"))
-    spark.read.parquet(s"$sfDir/nation.parquet")
+    nation
       .withColumn("rn", row_number().over(w))
       .withColumn("cnt", count(lit(1)).over(Window.partitionBy(col("n_regionkey"))))
       .filter(col("rn") === 2 || col("rn") === col("cnt"))

@@ -19,28 +19,34 @@ object SpanEmitter {
     "img" -> "src", "audio" -> "src", "video" -> "src", "source" -> "src",
     "embed" -> "src", "iframe" -> "src", "object" -> "data")
 
+  /** Pre-order over an explicit stack of sibling iterators, so a
+    * deeply nested document costs heap, never thread stack. */
   def emit(content: IndexedSeq[Node], cfg: ParserConfig): IndexedSeq[Span] = {
     val out = new mutable.ArrayBuffer[Span](16)
-    def walk(n: Node): Unit = n match {
-      case Node.Text(s, raw, off) =>
-        out += Span(if (raw) "cdata" else "text", s, null, off)
-      case Node.Pi(s, off) =>
-        out += Span("pi", s, null, off)
-      case Node.EntityRef(name, off) =>
-        out += Span("entity", name, null, off)
-      case Node.Media(ref, off) =>
-        out += Span("media", "", ref, off)
-      case e: Node.Elem =>
-        val local = localOf(e.name)
-        mediaElements.get(local).foreach { attrName =>
-          val ref = e.attrs.collectFirst {
-            case Attr(n, v) if localOf(n) == attrName => v.render
+    val stack = mutable.ArrayBuffer[Iterator[Node]](content.iterator)
+    while (stack.nonEmpty) {
+      val it = stack.last
+      if (!it.hasNext) stack.dropRightInPlace(1)
+      else it.next() match {
+        case Node.Text(s, raw, off) =>
+          out += Span(if (raw) "cdata" else "text", s, null, off)
+        case Node.Pi(s, off) =>
+          out += Span("pi", s, null, off)
+        case Node.EntityRef(name, off) =>
+          out += Span("entity", name, null, off)
+        case Node.Media(ref, off) =>
+          out += Span("media", "", ref, off)
+        case e: Node.Elem =>
+          val local = localOf(e.name)
+          mediaElements.get(local).foreach { attrName =>
+            val ref = e.attrs.collectFirst {
+              case Attr(n, v) if localOf(n) == attrName => v.render
+            }
+            out += Span("media", "", ref.orNull, e.off)
           }
-          out += Span("media", "", ref.orNull, e.off)
-        }
-        e.children.foreach(walk)
+          if (e.children.nonEmpty) stack += e.children.iterator
+      }
     }
-    content.foreach(walk)
     scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray(SpanTag))
   }
 

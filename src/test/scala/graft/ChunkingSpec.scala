@@ -139,10 +139,7 @@ class ChunkingSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, (1 to 5).map(i => s"a$i").mkString(" ")),
       (2L, (1 to 11).map(i => s"b$i").mkString(" ")),
       (3L, (1 to 4).map(i => s"c$i").mkString(" ")))
-    val dir = java.nio.file.Files.createTempDirectory("packblk").toString
-    docs.toDF("doc_id", "text").write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
-    val blocks = Chunking.packedBlocks(spark, dir, blockSize = 8L)
+    val blocks = Chunking.packedBlocks(docs.toDF("doc_id", "text"), blockSize = 8L)
       .orderBy("block_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
     val allToks = docs.sortBy(_._1).flatMap(_._2.split(" "))
@@ -154,7 +151,8 @@ class ChunkingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("interleaved blocks: placeholders align with refs; reassembly identity") {
     val sf = "/root/testdata/sf0.001"
-    val blocks = Chunking.interleavedBlocks(spark, sf, blockSize = 64L)
+    val blocks = Chunking.interleavedBlocks(SgmlExtract.wrapDocumentsMarked(spark, sf).toDF(),
+        blockSize = 64L)
       .orderBy("block_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3)))
     val docs = spark.read.parquet(s"$sf/documents.parquet")

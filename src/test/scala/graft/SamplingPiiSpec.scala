@@ -26,8 +26,10 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("stratified sample is restart-stable and respects per-stratum rates") {
-    val a = Sampling.stratifiedSample(spark, sf).collect().sortBy(_.getLong(0))
-    val b = Sampling.stratifiedSample(spark, sf).collect().sortBy(_.getLong(0))
+    val a = Sampling.stratifiedSample(SgmlExtract.documents(spark, sf))
+      .collect().sortBy(_.getLong(0))
+    val b = Sampling.stratifiedSample(SgmlExtract.documents(spark, sf))
+      .collect().sortBy(_.getLong(0))
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq) // identical reruns
     assert(a.nonEmpty)
     // every kept row satisfies its own stratum's threshold
@@ -38,7 +40,8 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("uniform sample: k smallest hashes, stable under repartitioning") {
-    val base = Sampling.uniformSample(spark, sf, k = 20).collect().map(_.getLong(0)).toSeq
+    val base = Sampling.uniformSample(SgmlExtract.documents(spark, sf), k = 20)
+      .collect().map(_.getLong(0)).toSeq
     assert(base.length == 20)
     // the same k rows regardless of physical layout (per-partition top-k merge)
     val docs = spark.read.parquet(s"$sf/documents.parquet").repartition(13)
@@ -49,7 +52,7 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("split assignment: total partition, stable, thresholds honored") {
-    val rows = Sampling.splitAssign(spark, sf).collect()
+    val rows = SparkEntry.queries("s3_split_assign")(spark, sf).collect()
     assert(rows.length == 500) // every row gets exactly one split
     rows.foreach { r =>
       val (b, s) = (r.getLong(1), r.getString(2))
@@ -58,7 +61,7 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(rows.map(_.getString(2)).toSet == Set("train", "val", "test"))
     // re-run identical (restart-stable by construction)
-    val again = Sampling.splitAssign(spark, sf).collect()
+    val again = SparkEntry.queries("s3_split_assign")(spark, sf).collect()
     assert(rows.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
     // invalid weights rejected loudly
     intercept[IllegalArgumentException] {
@@ -68,7 +71,7 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pii scrub removes every email/phone/ipv4 occurrence") {
-    val out = TextOps.piiScrub(spark, sf)
+    val out = TextOps.piiScrub(SgmlExtract.documents(spark, sf))
     val counted = out.select(
       sum(regexp_count(col("scrubbed"), lit(TextOps.EmailRe))).as("e"),
       sum(regexp_count(col("scrubbed"), lit(TextOps.PhoneRe))).as("p"),
@@ -129,8 +132,8 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("split leakage: pairs are real near-dups with endpoints in different splits") {
     import graft.ops.{Audit, Dedup}
-    val leaks = Audit.splitLeakage(spark, sf).collect()
-    val pairs = Dedup.minhashPairs(spark, sf)
+    val leaks = Audit.splitLeakageOf(SgmlExtract.documents(spark, sf), "doc_id", "text").collect()
+    val pairs = Dedup.verifiedPairsOf(SgmlExtract.documents(spark, sf), "doc_id", "text", 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def splitOf(id: Long): String = {
       val b = ((id % Sampling.IdM) * Sampling.HashK) % Sampling.HashP % 1000
@@ -147,7 +150,7 @@ class SamplingPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the pairs-reusing variant (the cheap production path) agrees exactly
     import spark.implicits._
     val reused = Audit.splitLeakageFromPairs(
-        Dedup.minhashPairs(spark, sf))
+        Dedup.verifiedPairsOf(SgmlExtract.documents(spark, sf), "doc_id", "text", 0.5))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
     assert(reused.toSet ==
       leaks.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3))).toSet)

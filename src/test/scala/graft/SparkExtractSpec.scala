@@ -139,6 +139,22 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("unmatched-end-tag", "unmatched-end-tag", "max-errors"))
   }
 
+  test("deep nesting: 5,000 and 50,000 nested divs are one row each, no failed task") {
+    import spark.implicits._
+    // local[4] runs each task once, so a task that threw would fail the job
+    for (dialect <- Seq("xml", "html4"); depth <- Seq(5000, 50000)) {
+      val doc = "<div>" * depth + "deep" + "</div>" * depth
+      val df = Seq(Doc(s"d$depth", Seq(InSpan("text", doc, null, 0)))).toDS().toDF()
+      val rows = SgmlExtract.extractDf(df, cfg.copy(dialect = dialect))
+        .select(col("spans.kind"), col("spans.text"), col("errors.code"))
+        .as[(Seq[String], Seq[String], Seq[String])].collect()
+      assert(rows.length === 1, s"$dialect $depth")
+      val (kinds, texts, codes) = rows.head
+      assert(kinds === Seq("text") && texts === Seq("deep"), s"$dialect $depth: $codes")
+      assert(!codes.contains("internal-error"), s"$dialect $depth")
+    }
+  }
+
   test("lineage: one row per parse partition, totals match") {
     import spark.implicits._
     val docs = SgmlExtract.wrapDocuments(spark, sf).repartition(3)
@@ -221,7 +237,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("knn: brute-force exact ranks correctly; LSH restricts to buckets") {
     import graft.ops.Similarity
-    val exact = Similarity.knnBruteForce(Similarity.embeddings(spark, sf), numQueries = 5, k = 5).collect()
+    val exact = Similarity.knnBruteForce(SgmlExtract.embeddings(spark, sf), numQueries = 5, k = 5).collect()
     assert(exact.length == 25) // 5 queries × 5 ranked neighbors
     val ranks = exact.groupBy(_.getLong(0)).values
     assert(ranks.forall(_.map(_.getInt(1)).sorted.sameElements(1 to 5)))
@@ -229,7 +245,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every candidate's bucket is within hamming distance b of its
     // query's bucket in at least one hash table — guaranteed by the
     // probe-set construction, asserted here for b = 0 and b = 1
-    val buckets = Similarity.lshBuckets(Similarity.embeddings(spark, sf), nPlanes = 2)
+    val buckets = Similarity.lshBuckets(SgmlExtract.embeddings(spark, sf), nPlanes = 2)
       .select("vec_id", "tbl", "bucket").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     def maxMinHamming(rows: Array[org.apache.spark.sql.Row]): Int =
@@ -238,7 +254,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
           java.lang.Long.bitCount(buckets((r.getLong(2), t)) ^ buckets((r.getLong(0), t)))
         }.min
       }.max
-    val emb = Similarity.embeddings(spark, sf)
+    val emb = SgmlExtract.embeddings(spark, sf)
     val exactBucket =
       Similarity.knnLsh(emb, numQueries = 5, k = 5, nPlanes = 2, probeBits = 0).collect()
     assert(exactBucket.nonEmpty && maxMinHamming(exactBucket) == 0)
@@ -255,7 +271,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("knn ivf: cell-restricted search is deterministic, ranked by cosine") {
     import graft.ops.Similarity
-    val r1 = Similarity.knnIvf(Similarity.embeddings(spark, sf), numQueries = 5, k = 5).collect()
+    val r1 = Similarity.knnIvf(SgmlExtract.embeddings(spark, sf), numQueries = 5, k = 5).collect()
     assert(r1.nonEmpty)
     val byQ = r1.groupBy(_.getAs[Long]("query_id"))
     byQ.values.foreach { rows =>
@@ -266,13 +282,13 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.map(_.getAs[Int]("cell")).toSet.size <= 4)
     }
     // deterministic across runs (fixed kmeans seed)
-    val r2 = Similarity.knnIvf(Similarity.embeddings(spark, sf), numQueries = 5, k = 5).collect()
+    val r2 = Similarity.knnIvf(SgmlExtract.embeddings(spark, sf), numQueries = 5, k = 5).collect()
     assert(r1.map(_.toString).sorted.sameElements(r2.map(_.toString).sorted))
   }
 
   test("knn pq: ADC ranking is complete, deterministic, self-excluding") {
     import graft.ops.Similarity
-    val a = Similarity.knnPq(Similarity.embeddings(spark, sf)).collect()
+    val a = Similarity.knnPq(SgmlExtract.embeddings(spark, sf)).collect()
     assert(a.length == 50) // 10 queries × full top-5 (flat scan never misses)
     val byQ = a.groupBy(_.getLong(0))
     assert(byQ.keySet == (0L until 10L).toSet)
@@ -280,14 +296,14 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.map(_.getLong(1)).sorted.sameElements(1L to 5L))
       assert(!rows.exists(_.getLong(2) == q)) // never its own neighbor
     }
-    val b = Similarity.knnPq(Similarity.embeddings(spark, sf)).collect()
+    val b = Similarity.knnPq(SgmlExtract.embeddings(spark, sf)).collect()
     assert(a.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
       b.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
   }
 
   test("knn ivf+pq: candidates restricted to probed cells, ranked by ADC") {
     import graft.ops.Similarity
-    val composite = Similarity.knnIvfPq(Similarity.embeddings(spark, sf)).collect()
+    val composite = Similarity.knnIvfPq(SgmlExtract.embeddings(spark, sf)).collect()
     assert(composite.nonEmpty)
     // every returned neighbor really lives in one of its query's probed
     // cells: cross-check the cell column against the flat assignment
@@ -297,13 +313,13 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!rows.exists(_.getLong(2) == q))
     }
     // determinism across re-runs (fresh fit, same literals)
-    val again = Similarity.knnIvfPq(Similarity.embeddings(spark, sf)).collect()
+    val again = Similarity.knnIvfPq(SgmlExtract.embeddings(spark, sf)).collect()
     assert(composite.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
   }
 
   test("ann recall gate: lsh/ivf/pq/ivfpq measured against exact, deterministic") {
     import graft.ops.Similarity
-    val rows = Similarity.annRecall(Similarity.embeddings(spark, sf)).collect()
+    val rows = Similarity.annRecall(SgmlExtract.embeddings(spark, sf)).collect()
     assert(rows.map(_.getString(0)).toSet == Set("lsh", "ivf", "pq", "ivfpq"))
     rows.foreach { r =>
       val hits = r.getLong(1); val total = r.getLong(2); val recall = r.getDouble(3)
@@ -314,7 +330,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ANN entry points agree: annRecall's shared fit ≡ each standalone search") {
     import graft.ops.Similarity
-    val emb = Similarity.embeddings(spark, sf)
+    val emb = SgmlExtract.embeddings(spark, sf)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -431,7 +447,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(MediaOps.sniffImage("RIFFxxxxWAVE".getBytes("ASCII")) === None)
     assert(MediaOps.sniffImage(Array.emptyByteArray) === None)
     // synthetic PNG assets carry real headers: decode = header parse
-    val pngMeta = MediaOps.decodeStub(MediaOps.syntheticAssets(spark, sf))
+    val pngMeta = MediaOps.decodeStub(MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf)))
       .filter(_.mime == "image/png").collect()
     assert(pngMeta.nonEmpty)
     pngMeta.foreach { m =>
@@ -448,7 +464,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(MediaOps.sniffMp4(mp4) === Some((640, 480, 90)))
     assert(MediaOps.sniffMp4(new Array[Byte](64)) === None)
     // the synthetic corpus: every asset's header metadata parses REAL
-    val metaAll = MediaOps.decodeStub(MediaOps.syntheticAssets(spark, sf)).collect()
+    val metaAll = MediaOps.decodeStub(MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf))).collect()
     metaAll.filter(_.mime == "audio/wav").foreach { m =>
       assert(m.width === 0 && m.height === 0)
       assert(m.channels >= 1 && m.channels <= 2)
@@ -462,13 +478,13 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("media stub pipeline: deterministic metadata, joinable to spans") {
     import graft.ops.MediaOps
-    val meta = MediaOps.decodeStub(MediaOps.syntheticAssets(spark, sf))
+    val meta = MediaOps.decodeStub(MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf)))
     val rows = meta.collect()
     assert(rows.length == 500)
     assert(rows.forall(m => m.feature.length == 8))
     assert(rows.forall(m => if (m.mime == "audio/wav") m.sample_rate > 0 else m.width >= 16))
     // deterministic: same input → same output
-    val again = MediaOps.decodeStub(MediaOps.syntheticAssets(spark, sf)).collect()
+    val again = MediaOps.decodeStub(MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf))).collect()
     assert(rows.map(_.media_ref).sorted.sameElements(again.map(_.media_ref).sorted))
     val spans = SparkEntry.queries("x2_parse_markup_spans")(spark, sf)
     val enriched = MediaOps.enrichSpans(spans, meta.toDF())
@@ -477,7 +493,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("media resize + frame sampling: aspect preserved, stride respected") {
     import graft.ops.MediaOps
-    val meta = MediaOps.decodeStub(MediaOps.syntheticAssets(spark, sf)).toDF()
+    val meta = MediaOps.decodeStub(MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf))).toDF()
       .filter(col("width") > 0) // visual assets only: audio has no dims
     val resized = MediaOps.resizeMeta(meta, maxW = 256, maxH = 256).collect()
     assert(resized.nonEmpty)
@@ -721,7 +737,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the m5 operator over the synthetic corpus: sampled indices follow
     // the stride policy, counts come from the real container, hashes are
     // the closed-form fold
-    val rows = MediaOps.videoFrameHashes(MediaOps.syntheticVideos(spark, sf))
+    val rows = MediaOps.videoFrameHashes(MediaOps.syntheticVideos(SgmlExtract.documents(spark, sf)))
       .collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getString(0)).foreach { case (_, frames) =>
@@ -744,7 +760,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("real pixel resize: nearest-neighbor over the decoded raster") {
     import graft.ops.MediaOps
-    val out = MediaOps.resizePixels(MediaOps.syntheticAssets(spark, sf),
+    val out = MediaOps.resizePixels(MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf)),
       maxW = 64, maxH = 64).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
@@ -771,7 +787,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("real WAV decode: javax.sound PCM stats match the filler stream") {
     import graft.ops.MediaOps
-    val out = MediaOps.audioStats(MediaOps.syntheticAssets(spark, sf)).collect()
+    val out = MediaOps.audioStats(MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf))).collect()
     assert(out.nonEmpty)
     // independent replay of one row straight from the closed form
     val sample = out.head
@@ -795,6 +811,6 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sample.getAs[Long]("rms_micro") ==
       math.floor(math.sqrt(sumSq.toDouble / nSamples) * 1000000.0).toLong)
     assert(out.length ==
-      MediaOps.syntheticAssets(spark, sf).filter(_.mime == "audio/wav").count())
+      MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf)).filter(_.mime == "audio/wav").count())
   }
 }

@@ -87,7 +87,8 @@ class TableOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("corpus wrap: 6 cells per doc, replayable from the doc columns") {
     val sf = "/root/testdata/sf0.001"
-    val got = TableOps.tableExtract(spark, sf).collect()
+    val got = TableOps.tableCells(TableOps.wrapDocumentsTable(SgmlExtract.documents(spark, sf)))
+      .collect()
       .map(r => (r.getString(0), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5)))
     val docs = spark.read.parquet(s"$sf/documents.parquet").collect()
       .map(r => r.getAs[Long]("doc_id").toString ->
