@@ -115,7 +115,7 @@ object Pipeline {
     * (and the bucket frame's) is served from the copies that run cached,
     * and the audit re-pays neither the signature pass nor the shuffle. */
   def dropAudit(extracted: DataFrame, cfg: Config = Config()): DataFrame =
-    Dedup.droppedOf(stages(extracted, cfg, cacheTag = None).buckets, cfg.maxBucket)
+    Dedup.droppedOf(stages(extracted, cfg, cache = false).buckets, cfg.maxBucket)
 
   /** Contract table (doc_id, spans) → curated (doc_id, text, predicted_lang,
     * n_words). */
@@ -164,11 +164,13 @@ object Pipeline {
       "doc_id", "text", cfg.minJaccard, cfg.maxBucket)
   }
 
-  /** `cacheTag`: the exact frame is persisted under this Dedup.swapCache
-    * tag. The fuzzy stage references that subtree four times (bands,
-    * both verify-join text sides, the keeper join); without the cache
-    * each branch re-executes the parse kernel — the dominant cost — under
-    * a different column pruning, which also defeats exchange reuse.
+  /** `cache`: the exact frame is persisted under its stage's
+    * Dedup.swapCache tag, `exact` — one tag for every entry point, since
+    * they all build the same plan. The fuzzy stage references that
+    * subtree four times (bands, both verify-join text sides, the keeper
+    * join); without the cache each branch re-executes the parse kernel —
+    * the dominant cost — under a different column pruning, which also
+    * defeats exchange reuse.
     * swapCache releases the copy a previous invocation cached, so repeated
     * calls on a long-lived session hold at most one copy per tag.
     * MEMORY_AND_DISK holds the post-quality text corpus; at sizes where
@@ -178,13 +180,13 @@ object Pipeline {
     * and at most maxBucket + 1 ids per bucket of ≥ 2 docs), which both
     * the pairs and the valve audit read. */
   private def stages(extracted: DataFrame, cfg: Config,
-      cacheTag: Option[String]): Stages = {
+      cache: Boolean): Stages = {
     val built = exactStage(qualityStage(extracted))
-    val exact = cacheTag.fold(built)(Dedup.swapCache(_, built))
+    val exact = if (cache) Dedup.swapCache("exact", built) else built
     val buckets = Dedup.buckets(Dedup.bandsOf(exact, "doc_id", "text"),
       Seq("band", "band_hash"), col("doc_id"), cfg.maxBucket)
-    val shared = if (cfg.maxBucket == Int.MaxValue) buckets
-      else cacheTag.fold(buckets)(t => Dedup.swapCache(s"$t-buckets", buckets))
+    val shared = if (cache && cfg.maxBucket != Int.MaxValue)
+      Dedup.swapCache("exact-buckets", buckets) else buckets
     Stages(exact, shared, cfg)
   }
 
@@ -202,7 +204,7 @@ object Pipeline {
   /** Stages 2-5 over an ALREADY-extracted frame (doc_id, spans, errors) —
     * lets `run` parse once and feed several consumers. */
   def curateExtracted(extracted: DataFrame, cfg: Config = Config()): DataFrame =
-    withLang(pairwiseKept(stages(extracted, cfg, Some("p1-exact"))))
+    withLang(pairwiseKept(stages(extracted, cfg, cache = true)))
 
   /** Cluster-keeper curation: stages 1–3 as `curate`, but fuzzy dedup
     * keeps exactly ONE doc per CONNECTED COMPONENT of the verified-pair
@@ -216,7 +218,7 @@ object Pipeline {
     * with a recursive-CTE transitive closure. */
   def curateClustered(docs: DataFrame, cfg: Config = Config()): DataFrame = {
     val st = stages(SgmlExtract.extractDf(repartitioned(docs, cfg), cfg.extract),
-      cfg, Some("p2-exact"))
+      cfg, cache = true)
     val keepers = Dedup.clustersOf(st.pairs, st.exact.select(col("doc_id")))
       .filter(col("is_keeper")).select(col("doc_id"))
     withLang(st.exact.join(keepers, Seq("doc_id"), "left_semi"))
@@ -319,7 +321,7 @@ object Pipeline {
     // the bucket frame is SHARED between pair generation and the
     // cap-audit lineage row — a capped run is auditable without a second
     // signature pass or band shuffle
-    val st = stages(extracted.drop("__pid"), cfg, Some("run-exact"))
+    val st = stages(extracted.drop("__pid"), cfg, cache = true)
     withLang(pairwiseKept(st))
       .write.mode("overwrite").parquet(s"$outPath/curated")
     // Lineage LAST: per-partition extract metrics, plus the valve audit

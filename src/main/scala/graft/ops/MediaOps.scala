@@ -40,7 +40,7 @@ object MediaOps {
   /** Closed-form metadata for writer-generated assets (shared with the
     * m1/m2/m3 oracles, which recompute these from the seed in SQL while
     * the Spark side reads them back out of the REAL header bytes). */
-  def assetDims(seed: Long): (Int, Int) =
+  private def assetDims(seed: Long): (Int, Int) =
     (16 + (seed % 1024).toInt, 16 + (seed / 1024 % 1024).toInt)
   /** PNG assets carry REAL pixel data, so their dims stay small enough
     * that one stored-deflate block holds a whole image (h·(1+3w) ≤ 65535
@@ -49,13 +49,13 @@ object MediaOps {
     (16 + (seed % 128).toInt, 16 + (seed / 128 % 128).toInt)
   def wavChannels(seed: Long): Int = 1 + (seed % 2).toInt
   def wavSampleRate(seed: Long): Int = 8000 + ((seed % 8) * 4000).toInt
-  def mp4Frames(seed: Long): Int = 1 + (seed / 3 % 300).toInt
+  private def mp4Frames(seed: Long): Int = 1 + (seed / 3 % 300).toInt
   /** GIF-video frames carry REAL pixel data per frame, so dims stay tiny
     * (8..23) and counts modest (1..120 → 1..4 sampled at stride 30):
     * the m5 oracle replays every sampled frame pixel by pixel. */
   def gifDims(seed: Long): (Int, Int) =
     (8 + (seed % 16).toInt, 8 + (seed / 16 % 16).toInt)
-  def gifFrameCount(seed: Long): Int = 1 + (seed / 256 % 120).toInt
+  private def gifFrameCount(seed: Long): Int = 1 + (seed / 256 % 120).toInt
 
   /** Canonical 44-byte PCM RIFF/WAVE header (fmt + data chunk headers)
     * with the given channel count and sample rate — what any WAV metadata
@@ -87,7 +87,7 @@ object MediaOps {
     * tkhd(92) } } = 240 bytes. mvhd carries timescale=30 and
     * duration=frames (so frame count reads straight out of the real box
     * at 30 fps), tkhd carries width/height as 16.16 fixed point. */
-  val Mp4HeaderLen = 232 // ftyp(16) + moov(8 + mvhd 108 + trak(8 + tkhd 92))
+  private val Mp4HeaderLen = 232 // ftyp(16) + moov(8 + mvhd 108 + trak(8 + tkhd 92))
   def mp4Header(w: Int, h: Int, frames: Int): Array[Byte] = {
     val out = new Array[Byte](Mp4HeaderLen)
     var p = 0

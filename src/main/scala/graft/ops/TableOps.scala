@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.{Doc, SgmlExtract}
 import graft.sgml.{Node, ParseDriver, ParseResult}
+import scala.collection.mutable
 
 /** Structured extraction: HTML tables → relational rows.
   *
@@ -14,7 +15,7 @@ import graft.sgml.{Node, ParseDriver, ParseResult}
   * parse kernel as the flagship extract (tag-omission inference included:
   * real-world `<tr><td>a<td>b` markup with every end tag omitted builds
   * the correct DOM per the HTML4 content model), then walks the
-  * task-local DOM collecting cells in document order.
+  * task-local DOM once ([[Node.walk]]) collecting cells in document order.
   *
   * Scale shape: ONE narrow mapPartitions stage, one ParseDriver (parser
   * reused across the partition's docs) per partition, trees never leave
@@ -65,50 +66,59 @@ object TableOps {
     }.toDF("doc_id", "tbl_idx", "row_idx", "col_idx", "cell_tag", "cell")
   }
 
+  /** What the children of an open element are scanned for: tables,
+    * the rows of one table, or the cells of one row. Wrappers between a
+    * table and its rows, or a row and its cells (implied thead/tbody/tfoot
+    * — the DTD-aware builder can insert omitted-start-tag sections), pass
+    * their parent's scan on; a nested table always starts its own. */
+  private sealed trait Scan
+  private case object Tables extends Scan
+  private final class Rows(val tbl: Int) extends Scan { var n = 0 }
+  private final class Cells(val tbl: Int, val row: Int) extends Scan { var n = 0 }
+  /** Inside a cell (scanned for tables): its output slot, and where its
+    * text starts in the open cells' text buffer. */
+  private final class InCell(val slot: Int, val from: Int) extends Scan
+
   private def cellsOf(docId: String,
       r: ParseResult): Vector[(String, Int, Int, Int, String, String)] = {
-    val out = Vector.newBuilder[(String, Int, Int, Int, String, String)]
-    var tblIdx = 0
-    // descendant text concatenation; an undeclared entity keeps its
-    // source form (the span contract emits it as its own entity span —
-    // in flat cell text the lossless spelling is the reference itself)
-    def textOf(n: Node): String = n match {
-      case t: Node.Text       => t.s
-      case e: Node.Elem       => e.children.iterator.map(textOf).mkString
-      case er: Node.EntityRef => "&" + er.name + ";"
-      case _                  => ""
+    val out = mutable.ArrayBuffer.empty[(String, Int, Int, Int, String, String)]
+    val scans = mutable.ArrayBuffer[Scan](Tables)
+    // descendant text of the open cells, in document order; an undeclared
+    // entity keeps its source form (the span contract emits it as its own
+    // entity span — in flat cell text the lossless spelling is the
+    // reference itself)
+    val text = new java.lang.StringBuilder
+    var tables = 0
+    var openCells = 0
+    Node.walk(r.content) {
+      case t: Node.Text =>
+        if (openCells > 0) text.append(t.s)
+        false
+      case er: Node.EntityRef =>
+        if (openCells > 0) text.append('&').append(er.name).append(';')
+        false
+      case e: Node.Elem =>
+        scans += (scans.last match {
+          case _ if e.name == "table" => tables += 1; new Rows(tables - 1)
+          case rows: Rows if e.name == "tr" => rows.n += 1; new Cells(rows.tbl, rows.n - 1)
+          case row: Cells if e.name == "td" || e.name == "th" =>
+            out += ((docId, row.tbl, row.row, row.n, e.name, null: String))
+            row.n += 1; openCells += 1
+            new InCell(out.size - 1, text.length)
+          case _: InCell => Tables
+          case same => same
+        })
+        true
+      case _ => false
+    } { _ =>
+      scans.remove(scans.size - 1) match {
+        case c: InCell =>
+          out(c.slot) = out(c.slot).copy(_6 = text.substring(c.from))
+          openCells -= 1
+          if (openCells == 0) text.setLength(0)
+        case _ => ()
+      }
     }
-    def visit(n: Node): Unit = n match {
-      case e: Node.Elem if e.name == "table" =>
-        val tbl = tblIdx; tblIdx += 1
-        var rowIdx = 0
-        // rows may sit under implied thead/tbody/tfoot wrappers (the
-        // DTD-aware builder can insert omitted-start-tag sections);
-        // descend through wrappers without losing the table context,
-        // but hand NESTED tables back to visit for their own tbl_idx
-        def rows(m: Node): Unit = m match {
-          case tr: Node.Elem if tr.name == "tr" =>
-            var colIdx = 0
-            def cells(c: Node): Unit = c match {
-              case cell: Node.Elem if cell.name == "td" || cell.name == "th" =>
-                out += ((docId, tbl, rowIdx, colIdx, cell.name, textOf(cell)))
-                colIdx += 1
-                cell.children.foreach(visit) // nested tables inside a cell
-              case e2: Node.Elem if e2.name == "table" => visit(e2)
-              case e2: Node.Elem => e2.children.foreach(cells)
-              case _ => ()
-            }
-            tr.children.foreach(cells)
-            rowIdx += 1
-          case e2: Node.Elem if e2.name == "table" => visit(e2)
-          case e2: Node.Elem => e2.children.foreach(rows)
-          case _ => ()
-        }
-        e.children.foreach(rows)
-      case e: Node.Elem => e.children.foreach(visit)
-      case _            => ()
-    }
-    r.content.foreach(visit)
-    out.result()
+    out.toVector
   }
 }

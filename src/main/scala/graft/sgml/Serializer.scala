@@ -11,52 +11,54 @@ object Serializer {
 
   /** Serialize content in XML syntax. `canonical = true` sorts attributes
     * by name and never uses self-closing tags (c14n-style determinism). */
-  def xml(content: Seq[Node], canonical: Boolean = false): String = {
-    val sb = new java.lang.StringBuilder(256)
-    content.foreach(n => write(n, sb, Dialect.Xml, canonical))
-    sb.toString
-  }
+  def xml(content: Seq[Node], canonical: Boolean = false): String =
+    write(content, Dialect.Xml, canonical)
 
   /** Serialize in HTML/SGML syntax: declared-EMPTY elements have no end
     * tag; CDATA elements (script/style) emit verbatim content. */
-  def html(content: Seq[Node]): String = {
-    val sb = new java.lang.StringBuilder(256)
-    content.foreach(n => write(n, sb, Dialect.Html4, canonical = false))
-    sb.toString
-  }
+  def html(content: Seq[Node]): String = write(content, Dialect.Html4, canonical = false)
 
-  private def write(n: Node, sb: java.lang.StringBuilder, d: Dialect,
-      canonical: Boolean): Unit = n match {
-    case Node.Text(s, raw, _) =>
-      if (raw) sb.append("<![CDATA[").append(s).append("]]>")
-      else sb.append(Entities.escapeText(s))
-    case Node.Pi(s, _) =>
-      sb.append("<?").append(s).append(if (d.xmlSyntax) "?>" else ">")
-    case Node.EntityRef(name, _) =>
-      sb.append('&').append(name).append(';')
-    case Node.Media(ref, _) =>
-      sb.append("<img src=\"").append(Entities.escapeAttr(Option(ref).getOrElse(""))).append("\"/>")
-    case Node.Elem(name, attrs, children, _) =>
-      val local = if (name.startsWith("{")) name.substring(name.indexOf('}') + 1) else name
-      sb.append('<').append(local)
-      val as = if (canonical) attrs.sortBy(_.name) else attrs
-      as.foreach { a =>
-        sb.append(' ').append(a.name).append("=\"")
-          .append(Entities.escapeAttr(a.value.render)).append('"')
-      }
-      val isEmpty = d.htmlDtd &&
-        HtmlDtd.dtd.element(local).exists(_.content == ContentKind.Empty)
-      val isCdataContent = d.htmlDtd &&
-        HtmlDtd.dtd.element(local).exists(e =>
-          e.content == ContentKind.Cdata || e.content == ContentKind.Rcdata)
-      if (children.isEmpty && isEmpty) sb.append('>')
-      else if (children.isEmpty && d.xmlSyntax && !canonical) sb.append("/>")
-      else {
-        sb.append('>')
-        if (isCdataContent)
-          children.foreach { case Node.Text(s, _, _) => sb.append(s); case c => write(c, sb, d, canonical) }
-        else children.foreach(c => write(c, sb, d, canonical))
-        sb.append("</").append(local).append('>')
-      }
+  /** Start tag on enter, end tag on exit; `verbatim` holds, per open
+    * element, whether its text children are written unescaped. */
+  private def write(content: Seq[Node], d: Dialect, canonical: Boolean): String = {
+    val sb = new java.lang.StringBuilder(256)
+    val verbatim = scala.collection.mutable.ArrayBuffer(false)
+    Node.walk(content) {
+      case Node.Text(s, raw, _) =>
+        if (verbatim.last) sb.append(s)
+        else if (raw) sb.append("<![CDATA[").append(s).append("]]>")
+        else sb.append(Entities.escapeText(s))
+        false
+      case Node.Pi(s, _) =>
+        sb.append("<?").append(s).append(if (d.xmlSyntax) "?>" else ">"); false
+      case Node.EntityRef(name, _) =>
+        sb.append('&').append(name).append(';'); false
+      case Node.Media(ref, _) =>
+        sb.append("<img src=\"").append(Entities.escapeAttr(Option(ref).getOrElse(""))).append("\"/>")
+        false
+      case Node.Elem(name, attrs, children, _) =>
+        val local = Node.localOf(name)
+        sb.append('<').append(local)
+        val as = if (canonical) attrs.sortBy(_.name) else attrs
+        as.foreach { a =>
+          sb.append(' ').append(a.name).append("=\"")
+            .append(Entities.escapeAttr(a.value.render)).append('"')
+        }
+        val kind = if (d.htmlDtd) HtmlDtd.dtd.element(local).map(_.content) else None
+        if (children.nonEmpty) {
+          sb.append('>')
+          verbatim += kind.exists(c => c == ContentKind.Cdata || c == ContentKind.Rcdata)
+          true
+        } else {
+          if (kind.contains(ContentKind.Empty)) sb.append('>')
+          else if (d.xmlSyntax && !canonical) sb.append("/>")
+          else sb.append("></").append(local).append('>')
+          false
+        }
+    } { e =>
+      verbatim.dropRightInPlace(1)
+      sb.append("</").append(Node.localOf(e.name)).append('>')
+    }
+    sb.toString
   }
 }

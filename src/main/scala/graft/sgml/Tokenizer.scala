@@ -107,13 +107,8 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
   // append it in ONE StringBuilder call instead of per-char dispatch
   // (the reference's per-char putchar loop is the model for the slow
   // path; the bulk path is an observationally identical shortcut).
-  //
-  // Two bodies, same shape: a char[] one (the Spark kernel feeds the
-  // reused decode buffer — direct array indexing, zero virtual calls in
-  // the hot loop) and a CharSequence one (String callers: tests,
-  // streaming, DTD paths). Rare-state flags (marked sections, NET) are
-  // hoisted out of the scan loop — they can only change via push(),
-  // which ends the scan.
+  // Rare-state flags (marked sections, NET) are hoisted out of the scan
+  // loop — they can only change via push(), which ends the scan.
 
   def feed(s: CharSequence): Unit = {
     var i = 0
@@ -179,7 +174,7 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
       case S_COM | S_COM_D | S_COM_DD | S_COM_D1 =>
         log.add("eof-in-comment", pos, "")
       case S_PI | S_PI_Q => log.add("eof-in-pi", pos, "")
-      case S_DECL | S_DECL_Q => log.add("eof-in-declaration", pos, "")
+      case S_DECL => log.add("eof-in-declaration", pos, "")
       case S_TEXT_B1 | S_TEXT_B2 => flushText()
       case S_ENT | S_ENT_NUM => log.add("eof-in-entity", pos, entBuf.toString)
       case _ =>
@@ -392,10 +387,6 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
         state = S_TEXT
       }
       else declBuf.append(c)
-
-    case S_DECL_Q => // unused (quotes handled inline above); keep for safety
-      declBuf.append(c)
-      if (c == declQuote) { declQuote = 0; state = S_DECL }
 
     // ---- marked sections <![KW[ ... ]]> ---------------------------------
     case S_MS_KW =>
@@ -758,7 +749,6 @@ object Tokenizer {
   final val S_COM_D = 17
   final val S_COM_DD = 18
   final val S_DECL = 19
-  final val S_DECL_Q = 20
   final val S_MS_KW = 21
   final val S_MS_CDATA = 22
   final val S_MS_CB1 = 23

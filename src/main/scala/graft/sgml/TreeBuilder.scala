@@ -53,11 +53,10 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       case Event.Open(n, as, sc, off) => onOpen(n, as, sc, off)
       case Event.Close(n, off)        => onClose(n, off)
       case Event.Text(s, raw, off)    => onText(s, raw, off)
-      case Event.Pi(s, off)           => addChild(Node.Pi(s, off))
-      case Event.EntityRef(n, off)    => addChild(Node.EntityRef(n, off))
-      case Event.Media(ref, off)      => addChild(Node.Media(ref, off))
+      case Event.Pi(s, off)           => addChildNode(Node.Pi(s, off))
+      case Event.EntityRef(n, off)    => addChildNode(Node.EntityRef(n, off))
+      case Event.Media(ref, off)      => addChildNode(Node.Media(ref, off))
       case Event.Decl(s, off)         => onDecl(s, off)
-      case Event.Err(code, off, d)    => log.add(code, off, d)
     }
   }
 
@@ -629,7 +628,6 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
 
   // --------------------------------------------------------------- helpers
 
-  private def addChild(n: Node): Unit = addChildNode(n)
   private def addChildNode(n: Node): Unit = top.children += n
 
   private def isWhitespaceOnly(s: String): Boolean = {

@@ -100,8 +100,8 @@ final case class ParserConfig(
     qualifyAttributes: Boolean = false,
     /** Emit DFA validation errors (not-allowed-here / incomplete-content). */
     validate: Boolean = false,
-    /** Main-content extraction: strip boilerplate subtrees before span
-      * emission (OFF for reference conformance — Boilerplate.scala). */
+    /** Main-content extraction: span emission skips boilerplate subtrees
+      * (OFF for reference conformance — SpanEmitter.scala). */
     boilerplate: Boolean = false,
     /** PUBLIC/SYSTEM/DOCTYPE external-id resolution (OASIS TR9401
       * catalog, parsed driver-side — Catalog.scala). Defaults to the
@@ -137,7 +137,6 @@ object Event {
   final case class EntityRef(name: String, off: Int) extends Event
   /** Interleaved-input media passthrough (BASELINE input_hint). */
   final case class Media(ref: String, off: Int) extends Event
-  final case class Err(code: String, off: Int, detail: String) extends Event
 }
 
 /** Recoverable parse error (`error.c — gripe` [V]). Never thrown across
@@ -157,6 +156,38 @@ object Node {
   final case class Pi(s: String, off: Int) extends Node
   final case class EntityRef(name: String, off: Int) extends Node
   final case class Media(ref: String, off: Int) extends Node
+
+  /** The one DOM traversal — the reference's begin/end callback pair
+    * (`sgml_parse(…, call(begin|end|cdata, …))`, SURVEY.md §E2) over the
+    * term. Pre-order over an explicit stack of sibling iterators, so a
+    * deeply nested document costs heap, never thread stack. `enter(node)`
+    * sees every node reached, in document order, and returns whether to
+    * descend into it (read for elements only); `exit(elem)` runs once
+    * after the last child of each element that was descended into. */
+  def walk(content: Seq[Node])(enter: Node => Boolean)(exit: Elem => Unit): Unit = {
+    val open = scala.collection.mutable.ArrayBuffer[Elem]()
+    val its = scala.collection.mutable.ArrayBuffer[Iterator[Node]](content.iterator)
+    while (its.nonEmpty) {
+      val it = its.last
+      if (!it.hasNext) {
+        its.dropRightInPlace(1)
+        if (open.nonEmpty) exit(open.remove(open.size - 1))
+      } else {
+        val n = it.next()
+        if (enter(n)) n match {
+          case e: Elem if e.children.nonEmpty => open += e; its += e.children.iterator
+          case e: Elem => exit(e)
+          case _ => ()
+        }
+      }
+    }
+  }
+
+  /** Local part of a `{uri}local` qualified name. */
+  def localOf(name: String): String = {
+    val j = name.indexOf('}')
+    if (name.startsWith("{") && j > 0) name.substring(j + 1) else name
+  }
 }
 
 /** Flattened output span — matches the contract schema exactly
@@ -166,7 +197,5 @@ final case class Span(kind: String, text: String, media_ref: String, offset: Int
 
 /** Result of parsing one document. */
 final case class ParseResult(content: IndexedSeq[Node], errors: Vector[ParseErr]) {
-  def spans(cfg: ParserConfig): IndexedSeq[Span] =
-    SpanEmitter.emit(
-      if (cfg.boilerplate) Boilerplate.strip(content) else content, cfg)
+  def spans(cfg: ParserConfig): IndexedSeq[Span] = SpanEmitter.emit(content, cfg)
 }

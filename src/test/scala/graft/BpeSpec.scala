@@ -52,6 +52,12 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mergesOf("a\u2028b", 1) == Seq((1, "a", "\u2028", 1L)))
   }
 
+  test("U+000B splits words, as the oracle's word split does") {
+    // two words 'ab': one merge, then the pair space is exhausted (one
+    // 5-symbol word would go on to a second round, (ab, U+000B))
+    assert(mergesOf("ab\u000Bab", 2) == Seq((1, "a", "b", 2L)))
+  }
+
   test("replace-kernel run semantics are exactly as documented") {
     // 'aaaa': r1 (a,a)=3. The kernel's post-merge segmentation is
     // [aa, a, a] (trailing-delimiter consumption — the documented

@@ -242,4 +242,36 @@ class PipelineSpec extends AnyFunSuite {
     assert(ref.getAs[Long]("dropped_rows") == 12L * Dedup.Bands)
     curated.unpersist()
   }
+
+  test("curate then curateClustered cache the exact stage once, under one tag") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // the session starts (and configures logging) before the appender
+    val docs = docsOf("d1" -> quality, "d2" -> quality, "d3" -> (quality + " extra"))
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("cache-warnings", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = warnings.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.CacheManager")
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    appender.start(); logger.addAppender(appender); logger.setLevel(Level.WARN)
+    try {
+      spark.catalog.clearCache()
+      assert(Pipeline.curate(docs).count() == 1)
+      val clustered = Pipeline.curateClustered(docs)
+      assert(clustered.count() == 1)
+      // a tag per entry point would persist the same plan twice: the
+      // second persist only logs this and shares the first one's entry
+      assert(!warnings.toArray.exists(_.toString.contains("already cached")), warnings)
+      val exact = clustered.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation if r.output.exists(_.name == "text") => r.cacheBuilder
+      }.distinct
+      assert(exact.size == 1 && exact.head.isCachedColumnBuffersLoaded)
+    } finally {
+      logger.removeAppender(appender); logger.setLevel(level); appender.stop()
+    }
+  }
 }

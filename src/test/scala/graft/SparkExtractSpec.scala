@@ -141,17 +141,38 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("deep nesting: 5,000 and 50,000 nested divs are one row each, no failed task") {
     import spark.implicits._
+    SgmlExtract.registerUdfs(spark)
     // local[4] runs each task once, so a task that threw would fail the job
     for (dialect <- Seq("xml", "html4"); depth <- Seq(5000, 50000)) {
       val doc = "<div>" * depth + "deep" + "</div>" * depth
-      val df = Seq(Doc(s"d$depth", Seq(InSpan("text", doc, null, 0)))).toDS().toDF()
-      val rows = SgmlExtract.extractDf(df, cfg.copy(dialect = dialect))
-        .select(col("spans.kind"), col("spans.text"), col("errors.code"))
-        .as[(Seq[String], Seq[String], Seq[String])].collect()
-      assert(rows.length === 1, s"$dialect $depth")
-      val (kinds, texts, codes) = rows.head
-      assert(kinds === Seq("text") && texts === Seq("deep"), s"$dialect $depth: $codes")
-      assert(!codes.contains("internal-error"), s"$dialect $depth")
+      val ds = Seq(Doc(s"d$depth", Seq(InSpan("text", doc, null, 0)))).toDS()
+      for (boilerplate <- Seq(false, true)) {
+        val rows = SgmlExtract.extractDf(ds.toDF(),
+            cfg.copy(dialect = dialect, boilerplate = boilerplate))
+          .select(col("spans.kind"), col("spans.text"), col("errors.code"))
+          .as[(Seq[String], Seq[String], Seq[String])].collect()
+        val at = s"$dialect $depth boilerplate=$boilerplate"
+        assert(rows.length === 1, at)
+        val (kinds, texts, codes) = rows.head
+        assert(kinds === Seq("text") && texts === Seq("deep"), s"$at: $codes")
+        assert(!codes.contains("internal-error"), at)
+      }
+      val at = s"$dialect $depth"
+      val written = SgmlExtract.serializeCanonical(ds, cfg.copy(dialect = dialect))
+        .select("xml_out", "error").as[(String, String)].collect()
+      assert(written.length === 1 && written.head._2 === null, at)
+      assert(written.head._1.split("<div>", -1).length - 1 === depth, at)
+      assert(written.head._1.contains("<div>deep</div>"), at)
+      val xpath = Seq(doc).toDF("text")
+        .selectExpr(s"sgml_xpath(text, '//div(last)/text', '$dialect')")
+        .as[Seq[String]].collect()
+      assert(xpath.toSeq === Seq(Seq("deep")), at)
+      val table = "<table><tr><td>a</td><td>b</td></tr></table>"
+      val tableDoc = Doc(s"t$depth",
+        Seq(InSpan("text", "<div>" * depth + table + "</div>" * depth, null, 0)))
+      val cells = graft.ops.TableOps.tableCells(Seq(tableDoc).toDS(), cfg.copy(dialect = dialect))
+        .select("row_idx", "col_idx", "cell").as[(Int, Int, String)].collect()
+      assert(cells.toSeq === Seq((0, 0, "a"), (0, 1, "b")), at)
     }
   }
 

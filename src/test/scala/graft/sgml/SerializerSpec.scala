@@ -11,67 +11,9 @@ import org.scalacheck.rng.Seed
   * parse-equivalent to plain mode.
   */
 class SerializerSpec extends AnyFunSuite {
+  import SerializerSpec._
 
   private val cfg = ParserConfig(dialect = Dialect.Xml, space = SpaceMode.Preserve)
-
-  /** Deterministic property driver (raw ScalaCheck Gen, fixed seed chain —
-    * no scalatestplus bridge needed in the offline build). */
-  private def forAll[A](gen: Gen[A], n: Int = 300)(f: A => Unit): Unit = {
-    var seed = Seed(42L)
-    var i = 0
-    while (i < n) {
-      f(gen.pureApply(Gen.Parameters.default, seed))
-      seed = seed.next
-      i += 1
-    }
-  }
-
-  // ---- generators -------------------------------------------------------
-
-  /** Printable text without markup-significant chars handled by escaping
-    * (escaping IS allowed — &<> are escaped by the serializer), but no
-    * bare CR (parser normalizes line ends) and nonempty. */
-  private val genText: Gen[String] =
-    Gen.nonEmptyListOf(Gen.frequency(
-      8 -> Gen.alphaNumChar,
-      2 -> Gen.oneOf(' ', '.', ',', '&', '<', '>', '\'', '"', 'é', '中'),
-      1 -> Gen.const('\n'))).map(_.mkString)
-
-  private val genCdataText: Gen[String] =
-    genText.suchThat(s => !s.contains("]]>") && !s.contains("]]"))
-
-  private val genPiText: Gen[String] =
-    Gen.nonEmptyListOf(Gen.alphaNumChar).map("pi" + _.mkString)
-      .suchThat(s => !s.contains("?>"))
-
-  private val genTag: Gen[String] =
-    Gen.oneOf("div", "sect", "item", "note", "wrap")
-
-  private val genAttr: Gen[Attr] = for {
-    n <- Gen.oneOf("id", "cls", "role", "lang")
-    v <- Gen.listOf(Gen.alphaNumChar).map(_.mkString)
-  } yield Attr(n, AttrValue.Str(v))
-
-  /** No two adjacent text nodes (they would merge on reparse), offsets
-    * irrelevant (set 0; round-trip compares kind+text only). */
-  private def dedupAdjacentText(ns: List[Node]): List[Node] = ns match {
-    case (a: Node.Text) :: (b: Node.Text) :: rest if !a.raw && !b.raw =>
-      dedupAdjacentText(a :: rest)
-    case h :: t => h :: dedupAdjacentText(t)
-    case Nil    => Nil
-  }
-
-  private def genNode(depth: Int): Gen[Node] =
-    if (depth <= 0) genText.map(Node.Text(_, raw = false, 0))
-    else Gen.frequency(
-      5 -> genText.map(Node.Text(_, raw = false, 0)),
-      1 -> genCdataText.map(Node.Text(_, raw = true, 0)),
-      1 -> genPiText.map(Node.Pi(_, 0)),
-      3 -> (for {
-        tag <- genTag
-        attrs <- Gen.listOfN(2, genAttr).map(_.distinctBy(_.name))
-        kids <- Gen.resize(4, Gen.listOf(genNode(depth - 1))).map(dedupAdjacentText)
-      } yield Node.Elem(tag, attrs, kids.toVector, 0)))
 
   private val genContent: Gen[Vector[Node]] = for {
     root <- genNode(3)
@@ -139,4 +81,70 @@ class SerializerSpec extends AnyFunSuite {
     val Node.Elem(_, attrs, _, _) = r.content.head: @unchecked
     assert(attrs.head.value.render === "a \"quoted\" <value> & more")
   }
+}
+
+/** Tree generators, shared with the other DOM-walk properties. */
+object SerializerSpec {
+
+  /** Deterministic property driver (raw ScalaCheck Gen, fixed seed chain —
+    * no scalatestplus bridge needed in the offline build). */
+  def forAll[A](gen: Gen[A], n: Int = 300)(f: A => Unit): Unit = {
+    var seed = Seed(42L)
+    var i = 0
+    while (i < n) {
+      f(gen.pureApply(Gen.Parameters.default, seed))
+      seed = seed.next
+      i += 1
+    }
+  }
+
+  // ---- generators -------------------------------------------------------
+
+  /** Printable text without markup-significant chars handled by escaping
+    * (escaping IS allowed — &<> are escaped by the serializer), but no
+    * bare CR (parser normalizes line ends) and nonempty. */
+  val genText: Gen[String] =
+    Gen.nonEmptyListOf(Gen.frequency(
+      8 -> Gen.alphaNumChar,
+      2 -> Gen.oneOf(' ', '.', ',', '&', '<', '>', '\'', '"', 'é', '中'),
+      1 -> Gen.const('\n'))).map(_.mkString)
+
+  private val genCdataText: Gen[String] =
+    genText.suchThat(s => !s.contains("]]>") && !s.contains("]]"))
+
+  private val genPiText: Gen[String] =
+    Gen.nonEmptyListOf(Gen.alphaNumChar).map("pi" + _.mkString)
+      .suchThat(s => !s.contains("?>"))
+
+  private val genTag: Gen[String] =
+    Gen.oneOf("div", "sect", "item", "note", "wrap")
+
+  val genAttr: Gen[Attr] = for {
+    n <- Gen.oneOf("id", "cls", "role", "lang")
+    v <- Gen.listOf(Gen.alphaNumChar).map(_.mkString)
+  } yield Attr(n, AttrValue.Str(v))
+
+  /** No two adjacent text nodes (they would merge on reparse), offsets
+    * irrelevant (set 0; round-trip compares kind+text only). */
+  private def dedupAdjacentText(ns: List[Node]): List[Node] = ns match {
+    case (a: Node.Text) :: (b: Node.Text) :: rest if !a.raw && !b.raw =>
+      dedupAdjacentText(a :: rest)
+    case h :: t => h :: dedupAdjacentText(t)
+    case Nil    => Nil
+  }
+
+  /** `tags`, `attr` and `text` default to the round-trip generators'. */
+  def genNode(depth: Int, tags: Gen[String] = genTag, attr: Gen[Attr] = genAttr,
+      text: Gen[String] = genText): Gen[Node] =
+    if (depth <= 0) text.map(Node.Text(_, raw = false, 0))
+    else Gen.frequency(
+      5 -> text.map(Node.Text(_, raw = false, 0)),
+      1 -> genCdataText.map(Node.Text(_, raw = true, 0)),
+      1 -> genPiText.map(Node.Pi(_, 0)),
+      3 -> (for {
+        tag <- tags
+        attrs <- Gen.listOfN(2, attr).map(_.distinctBy(_.name))
+        kids <- Gen.resize(4, Gen.listOf(genNode(depth - 1, tags, attr, text)))
+          .map(dedupAdjacentText)
+      } yield Node.Elem(tag, attrs, kids.toVector, 0)))
 }
