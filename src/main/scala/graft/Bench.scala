@@ -48,7 +48,7 @@ object Bench {
     // move as explicit repartitioning after a skinny Iceberg scan at prod
     // scale. amp× amplification then happens in parallel per partition.
     val p = spark.sparkContext.defaultParallelism * 3
-    SgmlExtract.wrapDocumentsMarked(spark, sfDir).toDF()
+    SgmlExtract.wrapDocumentsMarked(spark, sfDir)
       .repartition(p)
       .withColumn("rep", explode(sequence(lit(0), lit(amp - 1))))
       .select(concat(col("doc_id"), lit("_"), col("rep")).as("doc_id"), col("spans"))
@@ -244,14 +244,11 @@ object Bench {
       .withColumn("p", pmod(hash(col("doc_id")), lit(n))) // = naive placement
       .filter(col("p") < math.max(1, n / 4))
       .limit(2 * n).select("doc_id").as[String].collect()
-    val small = spark.range(0, 5000)
-      .select(concat(lit("s"), col("id")).as("doc_id"),
-        SgmlExtract.textSpans(
-          concat(lit("<html><body><p>doc "), col("id"), lit("</p></body></html>"))).as("spans"))
-    val whales = collidingIds.toSeq.toDF("doc_id")
-      .select(col("doc_id"),
-        SgmlExtract.textSpans(concat(lit("<html><body>"), repeat(lit(para), 30000),
-          lit("</body></html>"))).as("spans"))
+    val small = SgmlExtract.contractRows(
+      spark.range(0, 5000).select(concat(lit("s"), col("id")).as("doc_id"), col("id")),
+      concat(lit("<html><body><p>doc "), col("id"), lit("</p></body></html>")))
+    val whales = SgmlExtract.contractRows(collidingIds.toSeq.toDF("doc_id"),
+      concat(lit("<html><body>"), repeat(lit(para), 30000), lit("</body></html>")))
     val corpus = small.union(whales)
     corpus.write.mode("overwrite").parquet("/tmp/graft_bench/skew_corpus")
     val docs = spark.read.parquet("/tmp/graft_bench/skew_corpus")

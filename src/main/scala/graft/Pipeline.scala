@@ -303,7 +303,7 @@ object Pipeline {
     if (reusable)
       log.info(s"resume: reusing committed extract at $outPath/extracted")
     else {
-      val docs = SgmlExtract.readDocs(spark, inPath, format).toDF()
+      val docs = SgmlExtract.readDocs(spark, inPath, format)
       SgmlExtract.extractDf(repartitioned(docs, cfg), cfg.extract)
         .withColumn("__pid", spark_partition_id())
         .write.mode("overwrite").parquet(s"$outPath/extracted")

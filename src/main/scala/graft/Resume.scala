@@ -88,11 +88,8 @@ object Resume {
       // is sized to occupy the cluster, so caching one chunk at a time is
       // bounded (MEMORY_AND_DISK: eviction falls back to a narrow
       // recompute, never a wrong answer).
-      val extracted = spark.read.parquet(files: _*)
-        .select(
-          col("doc_id").cast("string").as("doc_id"),
-          SgmlExtract.textSpans(col("text")).as("spans"),
-          input_file_name().as("__file"))
+      val extracted = SgmlExtract.wrapDocsDf(spark.read.parquet(files: _*))
+        .withColumn("__file", input_file_name())
         .select(col("doc_id"),
           SgmlExtract.extractCol(spark, cfg).as("r"),
           col("__file"))
@@ -106,12 +103,9 @@ object Resume {
 
         // one tiny grouped agg (≤ files × partitions rows) from the cache;
         // lineage, per-file counts and chunk totals all fold out of it
+        val fold = SgmlExtract.metricsFold(chars = Some("bytes"))
         val g = extracted.groupBy(col("__file"), col("__pid"))
-          .agg(
-            count(lit(1)).as("docs"),
-            sum(SgmlExtract.spanChars).as("bytes"),
-            sum(size(col("spans")).cast("long")).as("spans"),
-            sum(size(col("errors")).cast("long")).as("errors"))
+          .agg(fold.head, fold.tail: _*) // docs, bytes, spans, errors
           .collect()
 
         val lineageRows = g.groupBy(_.getInt(1)).toSeq.map { case (pid, rs) =>

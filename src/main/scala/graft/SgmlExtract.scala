@@ -1,18 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sgml._
 
-/** Contract-schema case classes (BASELINE.json input_hint):
+/** The contract rows (BASELINE.json input_hint), typed. Their elements
+  * are the kernel's own [[graft.sgml.Span]] and [[graft.sgml.ParseErr]],
+  * so the parser's output needs no copy:
   * input  docs(doc_id string, spans array<struct<kind,text,media_ref,offset>>)
-  * output extracted(doc_id, spans) + errors per doc.
+  * output extracted(doc_id, spans, errors array<struct<code,offset,detail>>).
   */
-final case class InSpan(kind: String, text: String, media_ref: String, offset: Int)
-final case class Doc(doc_id: String, spans: Seq[InSpan])
-final case class OutSpan(kind: String, text: String, media_ref: String, offset: Int)
-final case class ErrRow(code: String, offset: Int, detail: String)
-final case class Extracted(doc_id: String, spans: Seq[OutSpan], errors: Seq[ErrRow])
+final case class Doc(doc_id: String, spans: Seq[Span])
+final case class Extracted(doc_id: String, spans: Seq[Span], errors: Seq[ParseErr])
 
 /** The Spark surface of the extraction engine (SURVEY.md §1.2, §3 E1).
   *
@@ -43,29 +42,13 @@ object SgmlExtract {
 
   /** Push one interleaved doc into a reset parser: text spans feed the
     * incremental parser in order, media spans pass through at their
-    * offsets (F14). */
-  private def feedDoc(doc: Doc)(p: SgmlParser): Unit =
+    * offsets (F14). The one feed of a typed `Doc`; `extract_spans` feeds
+    * the same way from Catalyst rows (ExtractSpansExpr.feed). */
+  private[graft] def feedDoc(doc: Doc)(p: SgmlParser): Unit =
     if (doc.spans != null) doc.spans.foreach { s =>
       if (s.kind == "media") p.media(s.media_ref, s.offset)
       else if (s.text != null) p.feed(s.text, s.offset)
     }
-
-  /** Single-doc parse outside Spark (streaming chunk assembly, tests). */
-  def parseDoc(doc: Doc, cfg: ParserConfig): Extracted =
-    new ParseDriver(cfg).apply(feedDoc(doc)) { r =>
-      Extracted(doc.doc_id,
-        r.spans(cfg).map(s => OutSpan(s.kind, s.text, s.media_ref, s.offset)),
-        r.errors.map(e => ErrRow(e.code, e.off, e.detail)))
-    }.fold(detail =>
-      Extracted(doc.doc_id, Seq.empty, Seq(ErrRow("internal-error", 0, detail))),
-      identity)
-
-  /** The flagship transform, typed: a view over `extractDf`, so both
-    * surfaces run the same expression. */
-  def extract(ds: Dataset[Doc], config: Config): Dataset[Extracted] = {
-    import ds.sparkSession.implicits._
-    extractDf(ds.toDF(), config).as[Extracted]
-  }
 
   /** Production source: read a contract-schema table `(doc_id, spans)`
     * from any DataSourceV2 format. Iceberg is the deployment target
@@ -73,13 +56,13 @@ object SgmlExtract {
     * in this sandbox (SURVEY.md §1.2), so local tests use the default
     * `parquet`; the adapter is exactly this format string. Columns are
     * selected explicitly so pruning reaches the scan before the opaque
-    * kernel. */
+    * kernel; the typed view checks the spans' element type at analysis. */
   def readDocs(spark: SparkSession, path: String,
-      format: String = "parquet"): Dataset[Doc] = {
+      format: String = "parquet"): DataFrame = {
     import spark.implicits._
     spark.read.format(format).load(path)
       .select(col("doc_id").cast("string").as("doc_id"), col("spans"))
-      .as[Doc]
+      .as[Doc].toDF()
   }
 
   // ---- the corpus directory: one parquet file per table ----
@@ -98,27 +81,25 @@ object SgmlExtract {
     * at offset 0. Columns pruned BEFORE the opaque kernel so the parquet
     * scan reads only doc_id+text (pushdown stops at the kernel — SURVEY.md
     * §4). */
-  def wrapDocuments(spark: SparkSession, dir: String): Dataset[Doc] =
+  def wrapDocuments(spark: SparkSession, dir: String): DataFrame =
     wrapDocsDf(documents(spark, dir))
 
-  /** The wrapDocuments projection over ANY (doc_id, text) frame — ONE
-    * definition shared by the batch wrapper and the streaming file source
-    * (st1 drives the same projection under readStream), so the two legs'
-    * contract shapes cannot drift. */
-  def wrapDocsDf(df: DataFrame): Dataset[Doc] = {
-    import df.sparkSession.implicits._
-    df.select(col("doc_id").cast("string").as("doc_id"),
-        textSpans(col("text")).as("spans"))
-      .as[Doc]
-  }
+  /** The wrapDocuments projection over ANY (doc_id, text) frame — shared
+    * by the batch wrapper and the streaming file source (st1 drives the
+    * same projection under readStream). */
+  def wrapDocsDf(df: DataFrame): DataFrame = contractRows(df, col("text"))
 
-  /** The contract `spans` value of a plain-text doc: one text span at
-    * offset 0, `array<struct<kind, text, media_ref, offset>>`. */
-  def textSpans(text: Column): Column = array(textSpan(text))
-
-  private def textSpan(text: Column): Column =
-    struct(lit("text").as("kind"), text.as("text"),
+  /** The one writer of contract rows: `doc_id` as a string, then
+    * `spans` = one text span at offset 0 holding `text`, followed by the
+    * `media` spans — exactly the fields of `Doc`. Every wrapper,
+    * `TableOps.wrapDocumentsTable`, `Resume`'s chunks and `Bench`'s skew
+    * corpus build their rows here. */
+  private[graft] def contractRows(d: DataFrame, text: Column, media: Column*): DataFrame = {
+    val textSpan = struct(lit("text").as("kind"), text.as("text"),
       lit(null).cast("string").as("media_ref"), lit(0).as("offset"))
+    d.select(col("doc_id").cast("string").as("doc_id"),
+      array(textSpan +: media: _*).as("spans"))
+  }
 
   // Wrapper constants, shared between the synthetic-markup wrappers below
   // and SparkEntry's DuckDB oracles: every oracle offset is DERIVED from
@@ -149,66 +130,48 @@ object SgmlExtract {
   /** Wrap with deterministic synthetic markup + an interleaved media span —
     * exercises tag parse, omission repair and media passthrough on the real
     * corpus while staying SQL-reconstructable for the DuckDB oracle. */
-  def wrapDocumentsMarked(spark: SparkSession, dir: String): Dataset[Doc] = {
-    import spark.implicits._
-    documents(spark, dir)
-      .select(
-        col("doc_id").cast("string").as("doc_id"),
-        array(
-          textSpan(concat(lit(MarkedPrefix), col("text"),
-            lit(MarkedTail), lit(MarkedSuffix))),
-          struct(
-            lit("media").as("kind"),
-            lit("").as("text"),
-            concat(lit(AssetPrefix), col("doc_id"), lit(AssetSuffix)).as("media_ref"),
-            (length(col("text")) + lit(MarkedMediaOffset)).as("offset"))
-        ).as("spans"))
-      .as[Doc]
-  }
+  def wrapDocumentsMarked(spark: SparkSession, dir: String): DataFrame =
+    contractRows(documents(spark, dir),
+      concat(lit(MarkedPrefix), col("text"), lit(MarkedTail), lit(MarkedSuffix)),
+      struct(
+        lit("media").as("kind"),
+        lit("").as("text"),
+        concat(lit(AssetPrefix), col("doc_id"), lit(AssetSuffix)).as("media_ref"),
+        (length(col("text")) + lit(MarkedMediaOffset)).as("offset")))
 
   /** Wrap with deterministically MALFORMED markup (an unclosed `<b>`
     * inside the paragraph) — the corpus-scale error-recovery check (D8):
     * the parse must repair at `</p>`, lose no text, and log exactly one
     * `unclosed-element` error at a computable offset. */
-  def wrapDocumentsMalformed(spark: SparkSession, dir: String): DataFrame = {
-    documents(spark, dir)
-      .select(
-        col("doc_id").cast("string").as("doc_id"),
-        textSpans(concat(lit(MarkedPrefix), col("text"),
-          lit(MalformedInfix + MalformedSuffix))).as("spans"))
-  }
+  def wrapDocumentsMalformed(spark: SparkSession, dir: String): DataFrame =
+    contractRows(documents(spark, dir),
+      concat(lit(MarkedPrefix), col("text"), lit(MalformedInfix + MalformedSuffix)))
 
   /** Wrap as an SGML document whose internal DTD declares a SHORTREF map
     * (delimiter `--` → entity `mk`) activated on the root via USEMAP —
     * corpus-scale exercise of T14, SQL-reconstructable for the oracle. */
-  def wrapDocumentsShortref(spark: SparkSession, dir: String): DataFrame = {
-    documents(spark, dir)
-      .select(
-        col("doc_id").cast("string").as("doc_id"),
-        textSpans(concat(lit(ShortrefProlog), col("text"), lit(ShortrefClose)))
-          .as("spans"))
-  }
+  def wrapDocumentsShortref(spark: SparkSession, dir: String): DataFrame =
+    contractRows(documents(spark, dir),
+      concat(lit(ShortrefProlog), col("text"), lit(ShortrefClose)))
 
   /** Wrap with realistic page chrome (head/style, nav of links, footer)
     * around the document text — the boilerplate-strip stage must recover
     * exactly the main text, which keeps the DuckDB oracle trivial. */
-  def wrapDocumentsBoiler(spark: SparkSession, dir: String): DataFrame = {
-    documents(spark, dir)
-      .select(
-        col("doc_id").cast("string").as("doc_id"),
-        textSpans(concat(
-          lit("<html><head><title>Page</title><style>p{color:red}</style>" +
-            "</head><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About</a>" +
-            " <a href=\"/b\">More</a></nav><div><a href=\"/x\">Related one</a>" +
-            " <a href=\"/y\">Related two</a></div><p>"),
-          col("text"),
-          lit("<footer>(c) corp</footer></body></html>"))).as("spans"))
-  }
+  def wrapDocumentsBoiler(spark: SparkSession, dir: String): DataFrame =
+    contractRows(documents(spark, dir), concat(
+      lit("<html><head><title>Page</title><style>p{color:red}</style>" +
+        "</head><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About</a>" +
+        " <a href=\"/b\">More</a></nav><div><a href=\"/x\">Related one</a>" +
+        " <a href=\"/y\">Related two</a></div><p>"),
+      col("text"),
+      lit("<footer>(c) corp</footer></body></html>")))
 
   /** Columnar extraction via the native Catalyst expression
     * (graft.functions.ExtractSpansExpr): no Doc/Extracted encoder
     * round-trip, inputs stay UTF8String off the vectorized Parquet
-    * reader. Registers the function on the session if absent. */
+    * reader. Registers the function on the session if absent. The result
+    * has the fields of `Extracted`; typed callers write
+    * `extractDf(df, cfg).as[Extracted]`. */
   def extractDf(df: DataFrame, config: Config): DataFrame =
     df.select(col("doc_id"), extractCol(df.sparkSession, config).as("r"))
       .select(col("doc_id"), col("r.spans").as("spans"), col("r.errors").as("errors"))
@@ -230,9 +193,9 @@ object SgmlExtract {
     * elements — deterministic byte-stable output). Narrow stage; used by
     * the round-trip conformance query (x5) and as the re-serialization
     * path for downstream consumers that want markup, not spans. */
-  def serializeCanonical(ds: Dataset[Doc], config: Config): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
+  def serializeCanonical(docs: DataFrame, config: Config): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.as[Doc].mapPartitions { it =>
       val driver = new ParseDriver(config.toParserConfig)
       // a poisoned doc surfaces as (xml_out = null, error != null), never
       // as a silently serialized ''
@@ -245,17 +208,14 @@ object SgmlExtract {
     }.toDF("doc_id", "xml_out", "error")
   }
 
-  /** SQL surface: `sgml_spans(text)` → array of span structs, usable with
-    * LATERAL VIEW / explode, and `sgml_xpath(text, spec, dialect)` → array
-    * of string solutions of an xpath.pl-style spec evaluated over the
-    * parsed DOM (SURVEY.md §2.7 UDF surface, §2.4 Q1-Q9). */
+  /** SQL surface: `sgml_spans(text[, dialect[, space]])` → array of span
+    * structs, usable with LATERAL VIEW / explode (`extract_spans` over a
+    * one-text-span array, registered with it), and `sgml_xpath(text, spec,
+    * dialect)` → array of string solutions of an xpath.pl-style spec
+    * evaluated over the parsed DOM (SURVEY.md §2.7 UDF surface, §2.4
+    * Q1-Q9). */
   def registerUdfs(spark: SparkSession): Unit = {
-    val parse = (text: String, dialect: String, space: String) => {
-      val cfg = Config(dialect = dialect, space = space).toParserConfig
-      val (spans, _) = SgmlParser.spans(if (text == null) "" else text, cfg)
-      spans.map(s => OutSpan(s.kind, s.text, s.media_ref, s.offset))
-    }
-    spark.udf.register("sgml_spans", parse)
+    graft.functions.ExtractSpansExpr.register(spark)
     val xpath = (text: String, spec: String, dialect: String) => {
       val cfg = Config(dialect = dialect, space = "preserve").toParserConfig
       XPathSpec.query(text, if (spec == null) "" else spec, cfg)
@@ -347,12 +307,19 @@ object SgmlExtract {
     * `org.apache.spark.sql.Observation#get` after the action. */
   def withObservedMetrics(df: DataFrame,
       obs: org.apache.spark.sql.Observation): DataFrame = {
-    df.observe(obs,
-      count(lit(1)).as("docs"),
-      sum(size(col("spans")).cast("long")).as("spans"),
-      sum(size(col("errors")).cast("long")).as("errors"),
-      sum(spanChars).as("chars"))
+    val fold = metricsFold(chars = Some("chars"))
+    df.observe(obs, fold.head, fold.tail: _*)
   }
+
+  /** The per-doc metrics fold over contract-output rows: `docs`, then
+    * the text chars of `spans` named `chars` (when given), then `spans`
+    * and `errors` counts — all long. `withObservedMetrics`, lineage,
+    * `Resume`'s chunk totals and `StreamingExtract.ingestMetrics` (no
+    * chars) aggregate with it. */
+  private[graft] def metricsFold(chars: Option[String]): Seq[Column] =
+    Seq(count(lit(1)).as("docs")) ++ chars.map(sum(spanChars).as(_)) ++ Seq(
+      sum(size(col("spans")).cast("long")).as("spans"),
+      sum(size(col("errors")).cast("long")).as("errors"))
 
   /** Text chars over a row's `spans` (a null text counts 0). */
   private[graft] def spanChars: Column =
@@ -362,19 +329,17 @@ object SgmlExtract {
     * errors) — computed in the same narrow stage as the parse, so
     * spark_partition_id() is the parse partition (FIXTURES.md lineage
     * schema; north rule "per-partition lineage + metrics"). */
-  def lineage(extracted: Dataset[Extracted], runId: String): DataFrame =
+  def lineage(extracted: DataFrame, runId: String): DataFrame =
     partitionRows(extracted.withColumn("__pid", spark_partition_id()), runId)
 
   /** `lineage` over a frame that already carries its parse partition in
     * `__pid` (Pipeline.run stores it with the extracted product). */
-  private[graft] def partitionRows(extracted: DataFrame, runId: String): DataFrame =
+  private[graft] def partitionRows(extracted: DataFrame, runId: String): DataFrame = {
+    val fold = metricsFold(chars = Some("bytes"))
     extracted
       .groupBy(col("__pid").as("partition_id"))
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(spanChars).as("bytes"),
-        sum(size(col("spans")).cast("long")).as("spans"),
-        sum(size(col("errors")).cast("long")).as("errors"))
+      .agg(fold.head, fold.tail: _*)
       .select(lit(runId).as("run_id"), col("partition_id"), col("docs"),
         col("bytes"), col("spans"), col("errors"))
+  }
 }

@@ -29,7 +29,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val docs = SgmlExtract.wrapDocumentsMarked(spark, "/root/testdata/sf0.001")
     val cfg = SgmlExtract.Config(dialect = "html4", space = "preserve")
-    SgmlExtract.extract(docs, cfg)
+    SgmlExtract.extractDf(docs, cfg)
       .select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "span")))
       .select(col("doc_id"), col("pos"), col("span.kind"), col("span.text"),
         col("span.media_ref"), col("span.offset"))
@@ -38,7 +38,7 @@ object SparkEntry {
   private def extractPreserve(s: SparkSession, dir: String, marked: Boolean) = {
     val docs = if (marked) SgmlExtract.wrapDocumentsMarked(s, dir)
                else SgmlExtract.wrapDocuments(s, dir)
-    SgmlExtract.extract(docs, SgmlExtract.Config(dialect = "html4", space = "preserve"))
+    SgmlExtract.extractDf(docs, SgmlExtract.Config(dialect = "html4", space = "preserve"))
   }
 
   private def nation(s: SparkSession, dir: String) = s.read.parquet(s"$dir/nation.parquet")
@@ -299,7 +299,7 @@ object SparkEntry {
       // recursive-CTE closure
       // maxBucket = MaxValue: the ORACLE path stays uncapped (the DuckDB
       // replay has no valve); production keeps the capped Config default
-      Pipeline.curateClustered(SgmlExtract.wrapDocuments(s, dir).toDF(),
+      Pipeline.curateClustered(SgmlExtract.wrapDocuments(s, dir),
           Pipeline.Config(maxBucket = Int.MaxValue))
         .select(col("doc_id"), col("text"), col("predicted_lang"),
           col("n_words").cast("long").as("n_words"))),
@@ -310,7 +310,7 @@ object SparkEntry {
       // doc_id stays the contract STRING — the exact-dedup window and the
       // pair ordering compare lexicographically, and the oracle mirrors
       // that with VARCHAR ids
-      Pipeline.curate(SgmlExtract.wrapDocuments(s, dir).toDF(),
+      Pipeline.curate(SgmlExtract.wrapDocuments(s, dir),
           Pipeline.Config(maxBucket = Int.MaxValue)) // uncapped oracle path
         .select(col("doc_id"), col("text"), col("predicted_lang"),
           col("n_words").cast("long").as("n_words"))
@@ -340,7 +340,7 @@ object SparkEntry {
       val stream = s.readStream.schema(schema)
         .parquet(s"$dir/[d]ocuments.parquet")
       val curated = streaming.StreamingExtract.curatedStream(
-        SgmlExtract.extract(
+        SgmlExtract.extractDf(
           SgmlExtract.wrapDocsDf(stream),
           SgmlExtract.Config(dialect = "html4", space = "preserve")))
       val out = curated.select(md5(col("text")).as("content_hash"),
@@ -475,7 +475,7 @@ object SparkEntry {
       // multimodal packing: extracted text+media span streams (REAL parse
       // kernel) flatten to tokens with <|media|> placeholders carrying
       // refs; same c1 prefix sum + ONE block shuffle as c2
-      Chunking.interleavedBlocks(SgmlExtract.wrapDocumentsMarked(s, dir).toDF(),
+      Chunking.interleavedBlocks(SgmlExtract.wrapDocumentsMarked(s, dir),
         blockSize = 256L)),
 
     // ---- deterministic sampling (restart-stable corpus downsampling) ------

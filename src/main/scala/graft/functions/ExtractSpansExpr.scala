@@ -1,18 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, CreateNamedStruct, Expression, ExpressionInfo, GetStructField, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sgml.{ParseDriver, ParseResult, ParserConfig, SgmlParser}
+import graft.sgml.{ParseDriver, ParseErr, ParseResult, ParserConfig, SgmlParser, Span}
 import graft.SgmlExtract
 
 /** Native Catalyst expression for the extraction kernel:
@@ -74,8 +74,10 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config)
       .fold(errorRow, identity)
   }
 
-  // Text goes in via `UTF8String.toString`: measured 5-15% faster than
-  // decoding into a reused char[] (compact strings, intrinsified decoder).
+  // The one feed of Catalyst span rows (a typed `Doc` goes through
+  // SgmlExtract.feedDoc, with the same rules). Text goes in via
+  // `UTF8String.toString`: measured 5-15% faster than decoding into a
+  // reused char[] (compact strings, intrinsified decoder).
   private def feed(arr: ArrayData, p: SgmlParser): Unit = {
     val (kindI, textI, refI, offI, nFields) = idx
     val nIn = arr.numElements()
@@ -115,7 +117,7 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config)
     while (j < r.errors.length) {
       val e = r.errors(j)
       errRows(j) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(e.code), e.off, UTF8String.fromString(e.detail)))
+        UTF8String.fromString(e.code), e.offset, UTF8String.fromString(e.detail)))
       j += 1
     }
     new GenericInternalRow(Array[Any](
@@ -129,14 +131,10 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config)
 object ExtractSpansExpr {
   private val MediaKind = UTF8String.fromString("media")
 
-  val SpanType: StructType = StructType(Seq(
-    StructField("kind", StringType), StructField("text", StringType),
-    StructField("media_ref", StringType),
-    StructField("offset", IntegerType, nullable = false)))
-  val ErrType: StructType = StructType(Seq(
-    StructField("code", StringType),
-    StructField("offset", IntegerType, nullable = false),
-    StructField("detail", StringType)))
+  // the element types are the kernel's case classes, so the SQL schema
+  // and the typed rows (graft.Doc / graft.Extracted) cannot drift apart
+  val SpanType: StructType = Encoders.product[Span].schema
+  val ErrType: StructType = Encoders.product[ParseErr].schema
   val OutType: StructType = StructType(Seq(
     StructField("spans", ArrayType(SpanType)),
     StructField("errors", ArrayType(ErrType))))
@@ -184,23 +182,40 @@ object ExtractSpansExpr {
     ExtractSpansExpr(args.head, config)
   }
 
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[ExtractSpansExpr].getName, "extract_spans")
+  /** `sgml_spans(text[, dialect[, space]])`: `extract_spans` over a
+    * one-text-span array (offset 0), its `.spans`. Dialect and space are
+    * literals with `extract_spans`' defaults; a parse that fails yields
+    * an empty array, as `extract_spans` yields an error row. */
+  def spansOfText(args: Seq[Expression]): Expression = {
+    if (args.isEmpty || args.length > 3) throw new IllegalArgumentException(
+      "sgml_spans(text[, dialect[, space]]) takes 1-3 arguments")
+    val span = CreateNamedStruct(Seq(
+      Literal("kind"), Literal("text"), Literal("text"), Cast(args.head, StringType),
+      Literal("media_ref"), Literal(null, StringType), Literal("offset"), Literal(0)))
+    GetStructField(fromArgs(CreateArray(Seq(span)) +: args.tail), 0)
+  }
+
+  /** The function-registry entries of the kernel, shared by `register`
+    * and GraftExtensions. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (FunctionIdentifier("extract_spans"),
+      new ExpressionInfo(classOf[ExtractSpansExpr].getName, "extract_spans"), fromArgs _),
+    (FunctionIdentifier("sgml_spans"),
+      new ExpressionInfo(classOf[ExtractSpansExpr].getName, "sgml_spans"), spansOfText _))
 
   /** Late registration on an existing session (tests / REPL convenience;
     * production sessions use `spark.sql.extensions=graft.GraftExtensions`). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.registerFunction(FunctionIdentifier("extract_spans"), info, fromArgs _)
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }
 
 /** `SparkSessionExtensions` entry point — enable with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("extract_spans"),
-      ExtractSpansExpr.info, ExtractSpansExpr.fromArgs _))
+    ExtractSpansExpr.functions.foreach(e.injectFunction)
     e.injectFunction((FunctionIdentifier("bucket_collect"),
       BucketCollect.info, BucketCollect.fromArgs _))
   }

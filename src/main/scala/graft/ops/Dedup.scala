@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline, in increasing
@@ -415,42 +416,25 @@ object Dedup {
     * dedup signal (à la "Deduplicating Training Data Makes Language
     * Models Better"): per document, how many of its distinct word
     * n-grams also occur in ANOTHER document. High shared_permille marks
-    * boilerplate/template mass that document-level dedup missed; the
-    * shared-hash table itself is the removal work-list.
+    * boilerplate/template mass that document-level dedup missed.
     *
     * Scale shape: ONE signature UDF call per row (size + explode_outer
-    * off the same array), one count aggregation over (doc, distinct
-    * n-gram hash) pairs, one equi-join back + per-doc count — no
-    * self-join, no n-gram strings shuffled (64-bit hashes only). Hash
-    * collisions hit both engines identically (same closed-form chain
-    * the oracle replays). */
+    * off the same array), one window count over (doc, n-gram hash) rows
+    * partitioned by hash, then ONE per-doc aggregation — no self-join, no
+    * n-gram strings shuffled (64-bit hashes only), nothing cached.
+    * Hash collisions hit both engines identically (same closed-form
+    * chain the oracle replays). */
   def withRepeatedNgrams(d: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 10,
-      cacheSignatures: Boolean = true): DataFrame = {
+      textCol: String = "text", n: Int = 10): DataFrame = {
     val shUdf = udf((t: String) => shingles(t, n).toSeq.map(shingleHash))
-    // cacheSignatures (default): BOTH consumers (the shared-hash
-    // aggregation and the probe join) read this frame — uncached, Spark
-    // re-runs the tokenize+hash UDF under each subtree; the cache is
-    // (id, long, long) rows only, no text. The 100 TB valve: the cache is
-    // O(total n-grams) rows of MEMORY_AND_DISK with no other off switch,
-    // so at sizes where even the spilled footprint is unwelcome, pass
-    // false to RECOMPUTE the signature pass per consumer instead (2× UDF
-    // CPU bought consciously, zero cache footprint).
-    val sigs = d.select(col(idCol), shUdf(col(textCol)).as("hs"))
+    d.select(col(idCol), shUdf(col(textCol)).as("hs"))
       .select(col(idCol), size(col("hs")).as("n_ngrams"),
         explode_outer(col("hs")).as("h")) // empty docs keep a null-h row
-    val f = if (cacheSignatures) swapCache("d8-ngrams", sigs) else sigs
-    val shared = f.filter(col("h").isNotNull)
-      .groupBy(col("h")).agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2)
-      .select(col("h"), lit(true).as("is_shared"))
-    // one left join + ONE per-doc aggregation computes totals and shared
-    // counts together (count(is_shared) skips nulls ⇒ unshared/null-h
-    // rows don't count)
-    f.join(shared, Seq("h"), "left")
+      .withColumn("n_docs", count(lit(1)).over(Window.partitionBy(col("h"))))
       .groupBy(col(idCol))
       .agg(max(col("n_ngrams")).cast("long").as("n_ngrams"),
-        count(col("is_shared")).as("n_shared"))
+        // count skips nulls: a null-h row or a hash of one doc's row only
+        count(when(col("h").isNotNull && col("n_docs") >= 2, true)).as("n_shared"))
       .select(col(idCol), col("n_ngrams"), col("n_shared"),
         when(col("n_ngrams") === 0, lit(0L)).otherwise(
           expr("n_shared * 1000 div n_ngrams"))

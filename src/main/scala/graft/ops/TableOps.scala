@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Doc, SgmlExtract}
 import graft.sgml.{Node, ParseDriver, ParseResult}
@@ -31,35 +31,25 @@ object TableOps {
     * (`</th>`, `</td>`, `</tr>`), the way real HTML is written. Cells are
     * alphanumeric by construction so the DuckDB oracle rebuilds them with
     * plain string functions. */
-  def wrapDocumentsTable(d: DataFrame): Dataset[Doc] = {
-    import d.sparkSession.implicits._
-    d.select(
-        col("doc_id").cast("string").as("doc_id"),
-        SgmlExtract.textSpans(concat(
-          lit("<html><body><table><tr><th>lang<th>source"),
-          lit("<tr><td>"), col("lang"), lit("<td>"), col("source"),
-          lit("<tr><td>"), substring_index(col("text"), " ", 1),
-          lit("<td>"), col("doc_id"),
-          lit("</table></body></html>"))).as("spans"))
-      .as[Doc]
-  }
+  def wrapDocumentsTable(d: DataFrame): DataFrame =
+    SgmlExtract.contractRows(d, concat(
+      lit("<html><body><table><tr><th>lang<th>source"),
+      lit("<tr><td>"), col("lang"), lit("<td>"), col("source"),
+      lit("<tr><td>"), substring_index(col("text"), " ", 1),
+      lit("<td>"), col("doc_id"),
+      lit("</table></body></html>")))
 
   /** One output row per table cell: (doc_id, tbl_idx, row_idx, col_idx,
     * cell_tag th|td, cell = concatenated descendant text). Document order
     * throughout; nested tables (rare, but legal) get their own tbl_idx in
-    * pre-order. */
-  def tableCells(ds: Dataset[Doc], config: SgmlExtract.Config = SgmlExtract.Config()): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.mapPartitions { it =>
+    * pre-order. Media spans are fed like `extractDf` feeds them; a media
+    * node is no text, so it adds nothing to a cell. */
+  def tableCells(docs: DataFrame, config: SgmlExtract.Config = SgmlExtract.Config()): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.as[Doc].mapPartitions { it =>
       val driver = new ParseDriver(config.toParserConfig)
       it.flatMap { doc =>
-        // media spans carry no cells: only text is fed
-        driver { p =>
-          if (doc.spans != null) doc.spans.foreach { s =>
-            if (s.kind != "media" && s.text != null) p.feed(s.text, s.offset)
-          }
-        }(cellsOf(doc.doc_id, _))
+        driver(SgmlExtract.feedDoc(doc))(cellsOf(doc.doc_id, _))
           // poisoned doc → sentinel row, never a failed task
           .fold(detail => Vector((doc.doc_id, -1, -1, -1, "error", detail)), identity)
       }

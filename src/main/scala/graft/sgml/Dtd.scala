@@ -152,15 +152,14 @@ final case class Dtd(
     shortrefs: Map[String, List[(String, String)]] = Map.empty,
     useMaps: Map[String, String] = Map.empty) {
 
-  /** Hot-path lookup: null-returning Java map avoids the per-call `Some`
-    * allocation of immutable `Map.get` (measured hotspot; `util.c`'s
-    * interned-symbol table plays the same role in the reference [V]). */
+  /** Hot-path lookup: a Java hash map probe is cheaper than immutable
+    * `Map.get` (measured hotspot; `util.c`'s interned-symbol table plays
+    * the same role in the reference [V]). */
   @transient private lazy val elemIndex: java.util.HashMap[String, ElementDef] = {
     val m = new java.util.HashMap[String, ElementDef](elements.size * 2)
     elements.foreach { case (k, v) => m.put(k, v) }
     m
   }
-  def elementOrNull(name: String): ElementDef = elemIndex.get(name)
   def element(name: String): Option[ElementDef] = Option(elemIndex.get(name))
 
   /** Elements whose start tag is omissible (HTML4: html/head/body/tbody),
@@ -436,16 +435,6 @@ final class DfaRun(val dfa: Dfa) {
       while (i < ps.length) { if (candMark(ps(i))) return true; i += 1 }
       false
     }
-  }
-
-  /** Names currently enabled (for omitted-open-tag insertion search).
-    * May repeat a name (candidate positions of the same symbol); callers
-    * only `find` over it, so duplicates are harmless and the de-dup set
-    * allocation is saved. */
-  def enabledSymbols: Iterator[String] = new Iterator[String] {
-    private var i = 0
-    def hasNext: Boolean = i < nCand
-    def next(): String = { val s = dfa.symOf(candList(i)); i += 1; s }
   }
 
   def isComplete: Boolean = complete

@@ -140,8 +140,9 @@ object Event {
 }
 
 /** Recoverable parse error (`error.c — gripe` [V]). Never thrown across
-  * rows; accumulated per doc. */
-final case class ParseErr(code: String, off: Int, detail: String)
+  * rows; accumulated per doc. The element type of the contract's
+  * `errors` column (`graft.Extracted`); fields named as its columns. */
+final case class ParseErr(code: String, offset: Int, detail: String)
 
 /** Task-local DOM (SURVEY.md §1.2: recursive trees never become a Catalyst
   * type; they live inside one task and are flattened to spans). */
@@ -190,8 +191,9 @@ object Node {
   }
 }
 
-/** Flattened output span — matches the contract schema exactly
-  * (BASELINE.json input_hint / FIXTURES.md):
+/** Flattened output span — the element type of the contract's `spans`
+  * column, input and output (`graft.Doc`, `graft.Extracted`;
+  * BASELINE.json input_hint / FIXTURES.md):
   * kind ∈ {text, cdata, pi, entity, media}. */
 final case class Span(kind: String, text: String, media_ref: String, offset: Int)
 

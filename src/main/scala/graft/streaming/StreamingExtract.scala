@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.{Doc, Extracted, InSpan, SgmlExtract}
+import graft.SgmlExtract
+import graft.sgml.Span
 
 /** One chunk of an interleaved document arriving on a stream.
   *
@@ -27,23 +29,32 @@ final case class Chunk(
   * instead of re-opening state and emitting a duplicate doc_id. */
 final case class DocBuffer(chunks: Seq[Chunk], done: Boolean = false)
 
+/** One assembled document: the contract row (`graft.Doc`'s fields) plus
+  * `incomplete`, the `incomplete-doc` error detail of a doc flushed by
+  * the timeout (null when its last chunk arrived). */
+final case class AssembledDoc(doc_id: String, spans: Seq[Span], incomplete: String)
+
 /** Structured Streaming surface of the extraction engine.
   *
   * Two shapes (SURVEY.md §2.7 "grouping/streaming state" row):
   *
-  * 1. Whole docs on the stream → `SgmlExtract.extract` applied verbatim:
-  *    the `extract_spans` expression is stateless per row, so the same
-  *    typed transform runs under `readStream` unchanged (no watermark
+  * 1. Whole docs on the stream → `SgmlExtract.extractDf` applied
+  *    verbatim: the `extract_spans` expression is stateless per row, so
+  *    the same transform runs under `readStream` unchanged (no watermark
   *    needed).
   * 2. Chunked docs → `flatMapGroupsWithState` keyed by doc_id buffers
-  *    chunks until `last=true`, then parses the assembled doc and emits
-  *    one `Extracted` row (append mode). A processing-time timeout flushes
-  *    abandoned partials as error rows, so state size stays bounded —
-  *    at scale, state is per *in-flight* doc only, never the corpus.
+  *    chunks until `last=true`, then emits the assembled contract row,
+  *    which `extract_spans` parses like any other (append mode). A
+  *    processing-time timeout flushes abandoned partials with an
+  *    `incomplete-doc` error, so state size stays bounded — at scale,
+  *    state is per *in-flight* doc only, never the corpus.
   */
 object StreamingExtract {
 
-  /** Shape 2: chunked-doc assembly + parse.
+  /** Shape 2: chunked-doc assembly + parse: `assemble`, then the
+    * `extract_spans` kernel, with the timeout's `incomplete-doc` error
+    * appended after the parse's own errors. Output: the fields of
+    * `graft.Extracted`.
     *
     * @param timeoutMs processing-time timeout after which an incomplete
     *                  doc is emitted with an `incomplete-doc` error row;
@@ -55,21 +66,30 @@ object StreamingExtract {
   def assembleAndExtract(
       chunks: Dataset[Chunk],
       cfg: SgmlExtract.Config,
-      timeoutMs: Long = 0L): Dataset[Extracted] = {
+      timeoutMs: Long = 0L): DataFrame = {
+    val incompleteErr = struct(lit("incomplete-doc").as("code"), lit(0).as("offset"),
+      col("incomplete").as("detail"))
+    assemble(chunks, timeoutMs)
+      .select(col("doc_id"), SgmlExtract.extractCol(chunks.sparkSession, cfg).as("r"),
+        col("incomplete"))
+      .select(col("doc_id"), col("r.spans").as("spans"),
+        when(col("incomplete").isNull, col("r.errors"))
+          .otherwise(array_append(col("r.errors"), incompleteErr)).as("errors"))
+  }
+
+  /** Chunks → one `AssembledDoc` per document: its chunks in `seq` order
+    * as contract spans, once `last=true` arrives or the timeout flushes
+    * it. */
+  private[graft] def assemble(chunks: Dataset[Chunk], timeoutMs: Long): Dataset[AssembledDoc] = {
     import chunks.sparkSession.implicits._
     val timeoutConf =
       if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
 
-    def parseBuffered(docId: String, buffered: Seq[Chunk], incomplete: Boolean): Extracted = {
-      val spans = buffered.sortBy(_.seq)
-        .map(c => InSpan(c.kind, c.text, c.media_ref, c.offset))
-      val out = SgmlExtract.parseDoc(Doc(docId, spans), cfg.toParserConfig)
-      if (incomplete)
-        out.copy(errors = out.errors :+
-          graft.ErrRow("incomplete-doc", 0, s"timed out with ${buffered.size} chunks"))
-      else out
-    }
+    def assembled(docId: String, buffered: Seq[Chunk], incomplete: Boolean): AssembledDoc =
+      AssembledDoc(docId,
+        buffered.sortBy(_.seq).map(c => Span(c.kind, c.text, c.media_ref, c.offset)),
+        if (incomplete) s"timed out with ${buffered.size} chunks" else null)
 
     // After emitting a doc the key keeps a TOMBSTONE (empty, done=true)
     // so late/out-of-order stragglers are dropped — append-mode consumers
@@ -80,7 +100,7 @@ object StreamingExtract {
     // is bounded by the run's own doc count.
     chunks
       .groupByKey(_.doc_id)
-      .flatMapGroupsWithState[DocBuffer, Extracted](
+      .flatMapGroupsWithState[DocBuffer, AssembledDoc](
         OutputMode.Append, timeoutConf) {
         (docId: String, newChunks: Iterator[Chunk], state: GroupState[DocBuffer]) =>
           def tombstone(): Unit = {
@@ -95,7 +115,7 @@ object StreamingExtract {
               // straggler after the flush must not re-open the doc
               val buffered = st.map(_.chunks).getOrElse(Seq.empty)
               tombstone()
-              Iterator.single(parseBuffered(docId, buffered, incomplete = true))
+              Iterator.single(assembled(docId, buffered, incomplete = true))
             }
           } else if (state.getOption.exists(_.done)) {
             newChunks.foreach(_ => ()) // drain + drop stragglers
@@ -105,7 +125,7 @@ object StreamingExtract {
             val buffered = state.getOption.map(_.chunks).getOrElse(Seq.empty) ++ newChunks
             if (buffered.exists(_.last)) {
               tombstone()
-              Iterator.single(parseBuffered(docId, buffered, incomplete = false))
+              Iterator.single(assembled(docId, buffered, incomplete = false))
             } else {
               state.update(DocBuffer(buffered))
               if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
@@ -125,11 +145,10 @@ object StreamingExtract {
     * inherently corpus-global, so it stays a periodic batch stage over
     * this stream's sink (the standard lambda split — Pipeline.curate
     * picks up exactly where this leaves off). */
-  def curatedStream(extracted: Dataset[Extracted]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  def curatedStream(extracted: DataFrame): DataFrame = {
     // quality gate SHARED with the batch pipeline (one implementation,
     // the legs cannot drift), then the streaming-specific stateful dedup
-    graft.Pipeline.qualityStage(extracted.toDF())
+    graft.Pipeline.qualityStage(extracted)
       .withColumn("content_hash", md5(col("text")))
       .dropDuplicates("content_hash")
       .select(col("doc_id"), col("text"), col("n_words"))
@@ -143,10 +162,9 @@ object StreamingExtract {
     * `lateness` after its twin is NOT suppressed (cross-horizon dedup is
     * corpus-global work; the batch stage downstream owns it, same lambda
     * split as fuzzy dedup). Input rows need an event-time column. */
-  def curatedStreamBounded(extracted: org.apache.spark.sql.DataFrame,
+  def curatedStreamBounded(extracted: DataFrame,
       eventTimeCol: String = "event_time",
-      lateness: String = "10 minutes"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+      lateness: String = "10 minutes"): DataFrame = {
     graft.Pipeline.qualityStage(extracted, keep = Seq(eventTimeCol))
       .withColumn("content_hash", md5(col("text")))
       .withWatermark(eventTimeCol, lateness)
@@ -167,18 +185,15 @@ object StreamingExtract {
     * are discarded by the engine — state is bounded by the lateness
     * horizon, never the stream's history. */
   def ingestMetrics(
-      extracted: org.apache.spark.sql.DataFrame,
+      extracted: DataFrame,
       eventTimeCol: String = "event_time",
       windowDur: String = "1 minute",
-      lateness: String = "30 seconds"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+      lateness: String = "30 seconds"): DataFrame = {
+    val fold = SgmlExtract.metricsFold(chars = None)
     extracted
       .withWatermark(eventTimeCol, lateness)
       .groupBy(window(col(eventTimeCol), windowDur))
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(size(col("spans")).cast("long")).as("spans"),
-        sum(size(col("errors")).cast("long")).as("errors"))
+      .agg(fold.head, fold.tail: _*)
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("docs"), col("spans"), col("errors"))

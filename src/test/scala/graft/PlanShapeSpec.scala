@@ -176,7 +176,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("flagship extract leg is a single stage: zero exchanges of any kind") {
-    val docs = SgmlExtract.extract(
+    val docs = SgmlExtract.extractDf(
       SgmlExtract.wrapDocuments(spark, sf),
       SgmlExtract.Config(dialect = "html4", space = "preserve"))
     val ops = docs.queryExecution.executedPlan.collect { case p => p.getClass.getSimpleName }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.ops.Dedup
+import graft.sgml.Span
 
 /** Spark-surface integration tests: the `extract_spans` extraction kernel,
   * interleaved media passthrough through the Dataset API, lineage rows,
@@ -32,7 +33,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("extract parses interleaved docs end-to-end (identity on plain text)") {
     import spark.implicits._
     val docs = SgmlExtract.wrapDocuments(spark, sf)
-    val out = SgmlExtract.extract(docs, cfg)
+    val out = SgmlExtract.extractDf(docs, cfg)
     val joined = out.toDF().as("o")
       .join(spark.read.parquet(s"$sf/documents.parquet")
         .select(col("doc_id").cast("string").as("doc_id"), col("text")).as("d"), "doc_id")
@@ -44,7 +45,8 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("typed extract and extractDf share one schema and the SQL surface") {
     val docs = SgmlExtract.wrapDocumentsMarked(spark, sf)
-    val typed = SgmlExtract.extract(docs, cfg).toDF()
+    import spark.implicits._
+    val typed = SgmlExtract.extractDf(docs, cfg).as[Extracted].toDF()
     val exprd = SgmlExtract.extractDf(docs.toDF(), cfg)
     assert(typed.schema.map(f => (f.name, f.dataType)) ===
       exprd.schema.map(f => (f.name, f.dataType)))
@@ -105,10 +107,10 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val ds = Seq(
       Doc("a", Seq(
-        InSpan("text", "<p>x", null, 0),
-        InSpan("media", "", "vid.mp4", 10),
-        InSpan("text", "y</p>", null, 20)))).toDS()
-    val r = SgmlExtract.extract(ds, cfg).collect()(0)
+        Span("text", "<p>x", null, 0),
+        Span("media", "", "vid.mp4", 10),
+        Span("text", "y</p>", null, 20)))).toDS()
+    val r = SgmlExtract.extractDf(ds.toDF(), cfg).as[Extracted].collect()(0)
     assert(r.spans.map(s => (s.kind, s.text, s.media_ref)) == Seq(
       ("text", "x", null), ("media", "", "vid.mp4"), ("text", "y", null)))
     assert(r.spans.map(_.offset) == r.spans.map(_.offset).sorted)
@@ -117,11 +119,11 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("poisoned doc yields error row, not task failure") {
     import spark.implicits._
     val ds = Seq(
-      Doc("ok", Seq(InSpan("text", "<p>fine</p>", null, 0))),
+      Doc("ok", Seq(Span("text", "<p>fine</p>", null, 0))),
       Doc("null-spans", null),
-      Doc("huge", Seq(InSpan("text", "<p>" + ("x" * 100), null, 0)))).toDS()
+      Doc("huge", Seq(Span("text", "<p>" + ("x" * 100), null, 0)))).toDS()
     val small = SgmlExtract.Config(dialect = "html4", space = "preserve", maxDocChars = 50)
-    val rs = SgmlExtract.extract(ds, small).collect().sortBy(_.doc_id)
+    val rs = SgmlExtract.extractDf(ds.toDF(), small).as[Extracted].collect().sortBy(_.doc_id)
     assert(rs.length == 3)
     val huge = rs.find(_.doc_id == "huge").get
     assert(huge.errors.exists(_.code == "doc-too-large"))
@@ -132,7 +134,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
         .as[Seq[String]].collect().head
     assert(codes(SgmlExtract.extractDf(ds.toDF(), small), "huge")
       .contains("doc-too-large"))
-    val noisy = Seq(Doc("noisy", Seq(InSpan("text",
+    val noisy = Seq(Doc("noisy", Seq(Span("text",
       "<p>" + ("x</b>" * 10) + "</p>", null, 0)))).toDS().toDF()
     assert(codes(SgmlExtract.extractDf(noisy, cfg), "noisy").length > 3)
     assert(codes(SgmlExtract.extractDf(noisy, cfg.copy(maxErrors = 2)), "noisy") ===
@@ -145,7 +147,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // local[4] runs each task once, so a task that threw would fail the job
     for (dialect <- Seq("xml", "html4"); depth <- Seq(5000, 50000)) {
       val doc = "<div>" * depth + "deep" + "</div>" * depth
-      val ds = Seq(Doc(s"d$depth", Seq(InSpan("text", doc, null, 0)))).toDS()
+      val ds = Seq(Doc(s"d$depth", Seq(Span("text", doc, null, 0)))).toDS()
       for (boilerplate <- Seq(false, true)) {
         val rows = SgmlExtract.extractDf(ds.toDF(),
             cfg.copy(dialect = dialect, boilerplate = boilerplate))
@@ -158,7 +160,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(!codes.contains("internal-error"), at)
       }
       val at = s"$dialect $depth"
-      val written = SgmlExtract.serializeCanonical(ds, cfg.copy(dialect = dialect))
+      val written = SgmlExtract.serializeCanonical(ds.toDF(), cfg.copy(dialect = dialect))
         .select("xml_out", "error").as[(String, String)].collect()
       assert(written.length === 1 && written.head._2 === null, at)
       assert(written.head._1.split("<div>", -1).length - 1 === depth, at)
@@ -169,8 +171,8 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(xpath.toSeq === Seq(Seq("deep")), at)
       val table = "<table><tr><td>a</td><td>b</td></tr></table>"
       val tableDoc = Doc(s"t$depth",
-        Seq(InSpan("text", "<div>" * depth + table + "</div>" * depth, null, 0)))
-      val cells = graft.ops.TableOps.tableCells(Seq(tableDoc).toDS(), cfg.copy(dialect = dialect))
+        Seq(Span("text", "<div>" * depth + table + "</div>" * depth, null, 0)))
+      val cells = graft.ops.TableOps.tableCells(Seq(tableDoc).toDF(), cfg.copy(dialect = dialect))
         .select("row_idx", "col_idx", "cell").as[(Int, Int, String)].collect()
       assert(cells.toSeq === Seq((0, 0, "a"), (0, 1, "b")), at)
     }
@@ -179,7 +181,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("lineage: one row per parse partition, totals match") {
     import spark.implicits._
     val docs = SgmlExtract.wrapDocuments(spark, sf).repartition(3)
-    val ex = SgmlExtract.extract(docs, cfg)
+    val ex = SgmlExtract.extractDf(docs, cfg)
     val lin = SgmlExtract.lineage(ex, "run-1").collect()
     assert(lin.length == 3)
     assert(lin.map(_.getAs[Long]("docs")).sum == 500)
@@ -188,9 +190,9 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("size-aware repartition isolates whales") {
     import spark.implicits._
-    val docs = (1 to 100).map(i => Doc(s"d$i", Seq(InSpan("text", "small", null, 0)))) ++
-      Seq(Doc("whale1", Seq(InSpan("text", "w" * 3000, null, 0))),
-          Doc("whale2", Seq(InSpan("text", "w" * 3000, null, 0))))
+    val docs = (1 to 100).map(i => Doc(s"d$i", Seq(Span("text", "small", null, 0)))) ++
+      Seq(Doc("whale1", Seq(Span("text", "w" * 3000, null, 0))),
+          Doc("whale2", Seq(Span("text", "w" * 3000, null, 0))))
     val df = docs.toDS().toDF()
     val rep = SgmlExtract.sizeAwareRepartition(df, 4, whaleChars = 1000)
     val parts = rep.withColumn("pid", spark_partition_id())
@@ -231,6 +233,81 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       """SELECT sgml_xpath('<ul><li>a<li>b</ul>', '//li(last)/text', 'html4') AS r""")
       .collect()(0).getSeq[String](0)
     assert(x == Seq("b"))
+  }
+
+  test("one contract format: every writer yields Doc's fields, extractDf Extracted's; tableCells feeds media") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Encoders}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.types.StructType
+    import graft.ops.TableOps
+    import graft.streaming.{Chunk, StreamingExtract}
+    // names and SQL types; nullability flags are not part of the contract
+    // (any file-format round-trip drops them)
+    def fields(schema: StructType): Seq[(String, String)] =
+      schema.fields.map(f => (f.name, f.dataType.catalogString)).toSeq
+    val docFields = fields(Encoders.product[Doc].schema)
+    val writers: Seq[(String, DataFrame)] = Seq(
+      "wrapDocuments" -> SgmlExtract.wrapDocuments(spark, sf),
+      "wrapDocsDf" -> SgmlExtract.wrapDocsDf(SgmlExtract.documents(spark, sf)),
+      "wrapDocumentsMarked" -> SgmlExtract.wrapDocumentsMarked(spark, sf),
+      "wrapDocumentsMalformed" -> SgmlExtract.wrapDocumentsMalformed(spark, sf),
+      "wrapDocumentsShortref" -> SgmlExtract.wrapDocumentsShortref(spark, sf),
+      "wrapDocumentsBoiler" -> SgmlExtract.wrapDocumentsBoiler(spark, sf),
+      "wrapDocumentsTable" -> TableOps.wrapDocumentsTable(SgmlExtract.documents(spark, sf)))
+    for ((name, df) <- writers) assert(fields(df.schema) === docFields, name)
+    // the streaming assembly: the same fields plus its incomplete-doc detail
+    val assembled = StreamingExtract.assemble(MemoryStream[Chunk](spark).toDS(), 0L)
+    assert(fields(assembled.schema) === docFields :+ ("incomplete" -> "string"))
+    // the extraction result is Extracted's schema, exactly
+    val extracted = SgmlExtract.extractDf(SgmlExtract.wrapDocumentsMarked(spark, sf), cfg)
+    assert(extracted.schema.map(f => (f.name, f.dataType)) ===
+      Encoders.product[Extracted].schema.map(f => (f.name, f.dataType)))
+    // tableCells feeds media spans as extractDf does: a media span inside
+    // a cell adds no cell text
+    def cells(spans: Seq[Span], space: String): Seq[(Int, Int, String)] =
+      TableOps.tableCells(Seq(Doc("m", spans)).toDF(), SgmlExtract.Config(space = space))
+        .select("row_idx", "col_idx", "cell").as[(Int, Int, String)].collect().toSeq
+    val split = Seq(Span("text", "<table><tr><td>a", null, 0),
+      Span("media", "", "img.png", 16), Span("text", "b<td>c</table>", null, 16))
+    for (space <- Seq("sgml", "preserve"))
+      assert(cells(split, space) === Seq((0, 0, "ab"), (0, 1, "c")), space)
+    // under space=sgml a newline directly after a start tag is dropped; a
+    // media span between <td> and the newline keeps it (without the media
+    // span the newline goes)
+    val led = Seq(Span("text", "<table><tr><td>", null, 0),
+      Span("media", "", "img.png", 15), Span("text", "\nx<td>y</table>", null, 15))
+    assert(cells(led, "sgml") === Seq((0, 0, "\nx"), (0, 1, "y")))
+    assert(cells(led.filter(_.kind == "text"), "sgml") === Seq((0, 0, "x"), (0, 1, "y")))
+  }
+
+  test("sgml_spans is extract_spans over one text span: literal options; a throwing parse gives []") {
+    import graft.functions.ExtractSpansExpr
+    SgmlExtract.registerUdfs(spark)
+    val plan = spark.sql("SELECT sgml_spans(m, 'xml', 'remove') AS s FROM (SELECT '<d/>' AS m)")
+      .queryExecution.analyzed
+    val kernels = plan.expressions.flatMap(_.collect { case e: ExtractSpansExpr => e })
+    assert(kernels.map(k => (k.config.dialect, k.config.space)) === Seq(("xml", "remove")))
+    // options are literals, checked at analysis
+    val err = intercept[Exception](spark.sql(
+      "SELECT sgml_spans(m, d, 'sgml') FROM (SELECT '<p>x' AS m, 'html4' AS d)").collect())
+    assert(err.getMessage.contains("dialect must be a string literal"), err.getMessage)
+    // defaults: html4, preserve
+    val dflt = spark.sql("SELECT sgml_spans(m) AS s FROM (SELECT '<p>a\n<p>b' AS m)")
+      .selectExpr("transform(s, x -> x.text)").collect()(0).getSeq[String](0)
+    assert(dflt === Seq("a\n", "b"))
+    // a parse that throws is caught by the kernel's driver: the span array
+    // is empty and the task succeeds. No text input is known to make the
+    // kernel throw, so a span struct whose offset is a string makes the
+    // feed throw, in the expression sgml_spans resolves to.
+    val thrown = spark.sql(
+      """SELECT r.spans AS spans, r.errors.code AS codes FROM (
+        |  SELECT extract_spans(array(named_struct('kind', 'text', 'text', m,
+        |    'media_ref', CAST(NULL AS STRING), 'offset', 'zero'))) AS r
+        |  FROM (SELECT '<p>x' AS m))""".stripMargin).collect()
+    assert(thrown.length === 1)
+    assert(thrown(0).getSeq[Any](0).isEmpty)
+    assert(thrown(0).getSeq[String](1) === Seq("internal-error"))
   }
 
   test("plan shape: column pruning reaches the scan before the kernel") {
@@ -670,9 +747,9 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tiny.getLong(1) == 0 && tiny.getLong(3) == 0)
   }
 
-  test("scale knobs: t12 shuffle join, d8 recompute — same rows") {
+  test("scale knobs: t12 shuffle join — same rows") {
     import spark.implicits._
-    import graft.ops.{Dedup, TextOps}
+    import graft.ops.TextOps
     // t12: broadcast-vs-shuffle join strategy is a parameter; values identical
     val docs = ((1 to 10).map(i => (s"c$i", "the common sentence here")) :+
       ("alien", "zzqxj wvkpf")).toDF("doc_id", "text")
@@ -686,14 +763,6 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp2 = TextOps.withTrigramNovelty(spaced, textCol = "the text")
       .collect().map(_.toString).sorted
     assert(sp2.sameElements(bc))
-    // d8: cache-vs-recompute is a parameter; values identical
-    val run = (1 to 12).map(i => s"w$i").mkString(" ")
-    val d8docs = Seq(("a", run), ("b", run), ("c", "unique words entirely"))
-      .toDF("doc_id", "text")
-    val cached = Dedup.withRepeatedNgrams(d8docs).collect().map(_.toString).sorted
-    val recomputed = Dedup.withRepeatedNgrams(d8docs, cacheSignatures = false)
-      .collect().map(_.toString).sorted
-    assert(cached.sameElements(recomputed))
   }
 
   test("real PNG decode: pngEncode → javax.imageio roundtrips every pixel") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import graft.sgml.Span
 import graft.streaming.{Chunk, StreamingExtract}
 
 /** Structured Streaming surface: chunked-doc assembly with
@@ -53,13 +54,15 @@ class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val streamed = spark.table("stream_out").as[Extracted].collect()
       .map(e => e.doc_id -> e).toMap
 
-    val batch = Seq(
+    val batchDocs = Seq(
       Doc("A", Seq(
-        InSpan("text", html1, null, 0),
-        InSpan("text", html1b, null, html1.length),
-        InSpan("media", "", "asset_A.png", 100000))),
-      Doc("B", Seq(InSpan("text", html2, null, 0))))
-      .map(d => d.doc_id -> SgmlExtract.parseDoc(d, cfg.toParserConfig)).toMap
+        Span("text", html1, null, 0),
+        Span("text", html1b, null, html1.length),
+        Span("media", "", "asset_A.png", 100000))),
+      Doc("B", Seq(Span("text", html2, null, 0))))
+      .toDF()
+    val batch = SgmlExtract.extractDf(batchDocs, cfg).as[Extracted].collect()
+      .map(e => e.doc_id -> e).toMap
 
     assert(streamed.keySet === Set("A", "B"))
     for (id <- Seq("A", "B")) {
@@ -109,16 +112,16 @@ class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("whole-doc streaming uses the batch kernel unchanged") {
     import spark.implicits._
     val mem = MemoryStream[Doc](spark)
-    mem.addData(Seq(Doc("W", Seq(InSpan("text", html2, null, 0)))))
+    mem.addData(Seq(Doc("W", Seq(Span("text", html2, null, 0)))))
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt2").toString
-    val q = SgmlExtract.extract(mem.toDS(), cfg)
+    val q = SgmlExtract.extractDf(mem.toDF(), cfg)
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_whole").option("checkpointLocation", ckpt).start()
     q.processAllAvailable(); q.stop()
     val got = spark.table("stream_whole").as[Extracted].collect()
     assert(got.length === 1)
-    assert(got(0).spans === SgmlExtract.parseDoc(
-      Doc("W", Seq(InSpan("text", html2, null, 0))), cfg.toParserConfig).spans)
+    assert(got(0).spans === SgmlExtract.extractDf(
+      Seq(Doc("W", Seq(Span("text", html2, null, 0)))).toDF(), cfg).as[Extracted].head().spans)
   }
 
   test("streaming curation: quality filter + stateful exact dedup") {
@@ -126,17 +129,17 @@ class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val good = "<p>the quick brown fox jumps over the lazy dog and runs far away</p>"
     val mem = MemoryStream[Doc](spark)
     mem.addData(Seq(
-      Doc("c1", Seq(InSpan("text", good, null, 0))),
-      Doc("c2", Seq(InSpan("text", good, null, 0))),      // exact dup → dropped
-      Doc("c3", Seq(InSpan("text", "<p>junk</p>", null, 0))))) // quality-dropped
+      Doc("c1", Seq(Span("text", good, null, 0))),
+      Doc("c2", Seq(Span("text", good, null, 0))),      // exact dup → dropped
+      Doc("c3", Seq(Span("text", "<p>junk</p>", null, 0))))) // quality-dropped
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt3").toString
     val q = StreamingExtract.curatedStream(
-        SgmlExtract.extract(mem.toDS(), cfg))
+        SgmlExtract.extractDf(mem.toDF(), cfg))
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_curated").option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
     // a later micro-batch re-sending the same content must stay deduped
-    mem.addData(Seq(Doc("c4", Seq(InSpan("text", good, null, 0)))))
+    mem.addData(Seq(Doc("c4", Seq(Span("text", good, null, 0)))))
     q.processAllAvailable(); q.stop()
     val got = spark.table("stream_curated")
       .select("doc_id").as[String].collect().toSet

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.ops.TableOps
+import graft.sgml.Span
 
 /** HTML table → relational rows through the real parse kernel: omitted
   * end tags, header vs data cells, wrapper sections, nested tables. */
@@ -23,8 +24,8 @@ class TableOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def cellsOf(html: String): Seq[(Int, Int, Int, String, String)] = {
     import spark.implicits._
-    val ds = Seq(Doc("d1", Seq(InSpan("text", html, null, 0)))).toDS()
-    TableOps.tableCells(ds).collect()
+    val ds = Seq(Doc("d1", Seq(Span("text", html, null, 0)))).toDS()
+    TableOps.tableCells(ds.toDF()).collect()
       .map(r => (r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5)))
       .sortBy(t => (t._1, t._2, t._3)).toSeq
   }
@@ -74,10 +75,10 @@ class TableOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // SgmlExtract.extract's replace-parser pattern — the kernel itself is
     // fuzz-hardened not to throw.)
     val ds = Seq(
-      Doc("big", Seq(InSpan("text", "<table><tr><td>waytoolongforthecap</table>", null, 0))), // 42 chars
-      Doc("ok", Seq(InSpan("text", "<table><tr><td>x</table>", null, 0))) // 24 chars
+      Doc("big", Seq(Span("text", "<table><tr><td>waytoolongforthecap</table>", null, 0))), // 42 chars
+      Doc("ok", Seq(Span("text", "<table><tr><td>x</table>", null, 0))) // 24 chars
     ).toDS().coalesce(1)
-    val rows = TableOps.tableCells(ds,
+    val rows = TableOps.tableCells(ds.toDF(),
         SgmlExtract.Config(maxDocChars = 30)) // between the two doc sizes
       .collect().map(r => (r.getString(0), r.getInt(1), r.getString(4), r.getString(5)))
     val byDoc = rows.groupBy(_._1)

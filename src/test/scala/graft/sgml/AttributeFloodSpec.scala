@@ -26,7 +26,7 @@ class AttributeFloodSpec extends AnyFunSuite {
     val dups = r.errors.filter(_.code == "duplicate-attribute")
     assert(dups.map(_.detail) ==
       repeatAfter.toSeq.sortBy(_._1).flatMap(_._2).map(j => s"a$j"))
-    assert(dups.map(_.off) == dups.map(_.off).sorted)
+    assert(dups.map(_.offset) == dups.map(_.offset).sorted)
     assert(secs < 5.0, s"$secs s")
   }
 }
