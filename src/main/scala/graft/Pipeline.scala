@@ -137,7 +137,7 @@ object Pipeline {
     // passthrough, not a join)
     val texts = extracted
       .select(col("doc_id") +:
-        expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("text") +:
+        SgmlExtract.spanText.as("text") +:
         size(col("errors")).as("n_errors") +:
         keep.map(col): _*)
     TextOps.withQuality(texts)

@@ -91,7 +91,7 @@ object Resume {
       val extracted = SgmlExtract.wrapDocsDf(spark.read.parquet(files: _*))
         .withColumn("__file", input_file_name())
         .select(col("doc_id"),
-          SgmlExtract.extractCol(spark, cfg).as("r"),
+          SgmlExtract.extractCol(spark, "extract_spans", cfg).as("r"),
           col("__file"))
         .select(col("doc_id"), col("r.spans").as("spans"), col("r.errors").as("errors"),
           col("__file"), spark_partition_id().as("__pid"))

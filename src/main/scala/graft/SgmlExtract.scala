@@ -40,16 +40,6 @@ object SgmlExtract {
       boilerplate = boilerplate)
   }
 
-  /** Push one interleaved doc into a reset parser: text spans feed the
-    * incremental parser in order, media spans pass through at their
-    * offsets (F14). The one feed of a typed `Doc`; `extract_spans` feeds
-    * the same way from Catalyst rows (ExtractSpansExpr.feed). */
-  private[graft] def feedDoc(doc: Doc)(p: SgmlParser): Unit =
-    if (doc.spans != null) doc.spans.foreach { s =>
-      if (s.kind == "media") p.media(s.media_ref, s.offset)
-      else if (s.text != null) p.feed(s.text, s.offset)
-    }
-
   /** Production source: read a contract-schema table `(doc_id, spans)`
     * from any DataSourceV2 format. Iceberg is the deployment target
     * (`format = "iceberg"`, path = table identifier) — its jars are absent
@@ -169,58 +159,54 @@ object SgmlExtract {
   /** Columnar extraction via the native Catalyst expression
     * (graft.functions.ExtractSpansExpr): no Doc/Extracted encoder
     * round-trip, inputs stay UTF8String off the vectorized Parquet
-    * reader. Registers the function on the session if absent. The result
-    * has the fields of `Extracted`; typed callers write
-    * `extractDf(df, cfg).as[Extracted]`. */
+    * reader. The result has the fields of `Extracted`; typed callers
+    * write `extractDf(df, cfg).as[Extracted]`. */
   def extractDf(df: DataFrame, config: Config): DataFrame =
-    df.select(col("doc_id"), extractCol(df.sparkSession, config).as("r"))
-      .select(col("doc_id"), col("r.spans").as("spans"), col("r.errors").as("errors"))
+    parseDf(df, "extract_spans", config, "spans")
 
-  /** `extract_spans(spans, …)` with every `Config` field as a literal
-    * argument (the expression node itself cannot be wrapped in a Column
-    * from outside `org.apache.spark.sql`). Dialect and space are checked
-    * against their known names first, so only those reach the SQL text. */
-  private[graft] def extractCol(spark: SparkSession, config: Config): Column = {
+  /** Serialization sink (SURVEY.md §2.8 W1/W5): each doc written back as
+    * canonical XML (attributes name-sorted, no self-closing elements —
+    * deterministic byte-stable output) by the `sgml_canonical` projection
+    * of the same kernel expression: (doc_id, xml_out, errors). A failed
+    * parse gives a null `xml_out`, never a silently serialized ''. Used by
+    * the round-trip conformance query (x5) and by downstream consumers
+    * that want markup, not spans. */
+  def serializeCanonical(docs: DataFrame, config: Config): DataFrame =
+    parseDf(docs, "sgml_canonical", config, "xml_out")
+
+  /** `doc_id`, the first field of the kernel function `fn` over `spans`
+    * named `out`, then `errors` — one kernel expression per row. */
+  private[graft] def parseDf(df: DataFrame, fn: String, config: Config,
+      out: String): DataFrame =
+    df.select(col("doc_id"), extractCol(df.sparkSession, fn, config).as("r"))
+      .select(col("doc_id"), col("r.*")).toDF("doc_id", out, "errors")
+
+  /** `fn(spans, …)` for a kernel function over contract spans
+    * (`extract_spans`, `sgml_canonical`, `sgml_table_cells`) with every
+    * `Config` field as a literal argument (the expression node itself
+    * cannot be wrapped in a Column from outside `org.apache.spark.sql`).
+    * Dialect and space are checked against their known names first, so
+    * only those reach the SQL text. */
+  private[graft] def extractCol(spark: SparkSession, fn: String, config: Config): Column = {
     config.toParserConfig
-    if (!spark.catalog.functionExists("extract_spans"))
-      graft.functions.ExtractSpansExpr.register(spark)
-    expr(s"extract_spans(spans, '${config.dialect}', '${config.space}', " +
+    kernelCol(spark, s"$fn(spans, '${config.dialect}', '${config.space}', " +
       s"${config.boilerplate}, ${config.maxErrors}, ${config.maxDocChars})")
   }
 
-  /** Serialization sink (SURVEY.md §2.8 W1/W5): parse each doc and write
-    * it back as canonical XML (attributes name-sorted, no self-closing
-    * elements — deterministic byte-stable output). Narrow stage; used by
-    * the round-trip conformance query (x5) and as the re-serialization
-    * path for downstream consumers that want markup, not spans. */
-  def serializeCanonical(docs: DataFrame, config: Config): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.as[Doc].mapPartitions { it =>
-      val driver = new ParseDriver(config.toParserConfig)
-      // a poisoned doc surfaces as (xml_out = null, error != null), never
-      // as a silently serialized ''
-      it.map { doc =>
-        driver(feedDoc(doc))(r => Serializer.xml(r.content, canonical = true)) match {
-          case Right(xml) => (doc.doc_id, xml, null: String)
-          case Left(detail) => (doc.doc_id, null: String, "internal-error: " + detail)
-        }
-      }
-    }.toDF("doc_id", "xml_out", "error")
+  /** A SQL expression over the kernel functions
+    * (`ExtractSpansExpr.functions`), registered on the session if absent
+    * (`register` adds all of them at once, so one name tells). */
+  private[graft] def kernelCol(spark: SparkSession, sql: String): Column = {
+    if (!spark.catalog.functionExists("sgml_xpath"))
+      graft.functions.ExtractSpansExpr.register(spark)
+    expr(sql)
   }
 
-  /** SQL surface: `sgml_spans(text[, dialect[, space]])` → array of span
-    * structs, usable with LATERAL VIEW / explode (`extract_spans` over a
-    * one-text-span array, registered with it), and `sgml_xpath(text, spec,
-    * dialect)` → array of string solutions of an xpath.pl-style spec
-    * evaluated over the parsed DOM (SURVEY.md §2.7 UDF surface, §2.4
-    * Q1-Q9). */
+  /** SQL surface: the kernel functions (`extract_spans`, `sgml_spans`,
+    * `sgml_canonical`, `sgml_table_cells`, `sgml_xpath` — SURVEY.md §2.7
+    * UDF surface, §2.4 Q1-Q9) and `pwp_render`. */
   def registerUdfs(spark: SparkSession): Unit = {
     graft.functions.ExtractSpansExpr.register(spark)
-    val xpath = (text: String, spec: String, dialect: String) => {
-      val cfg = Config(dialect = dialect, space = "preserve").toParserConfig
-      XPathSpec.query(text, if (spec == null) "" else spec, cfg)
-    }
-    spark.udf.register("sgml_xpath", xpath)
     // PWP template rendering with scalar bindings (SURVEY.md §2.5; the
     // row-set pwp:ask form needs nested columns — graft.ops.PwpOps.render)
     val pwp = (template: String, scalars: Map[String, String]) =>
@@ -320,6 +306,9 @@ object SgmlExtract {
     Seq(count(lit(1)).as("docs")) ++ chars.map(sum(spanChars).as(_)) ++ Seq(
       sum(size(col("spans")).cast("long")).as("spans"),
       sum(size(col("errors")).cast("long")).as("errors"))
+
+  /** The concatenated text of a row's `spans`, linear in its length. */
+  private[graft] def spanText: Column = expr("array_join(transform(spans, s -> s.text), '')")
 
   /** Text chars over a row's `spans` (a null text counts 0). */
   private[graft] def spanChars: Column =

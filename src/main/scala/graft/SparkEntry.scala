@@ -52,7 +52,7 @@ object SparkEntry {
       extractPreserve(s, dir, marked = false)
         .select(
           col("doc_id"),
-          expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("text"),
+          SgmlExtract.spanText.as("text"),
           size(col("spans")).cast("long").as("n_spans"))
     }),
     "x2_parse_markup_spans" -> ((s, dir) => {
@@ -71,7 +71,7 @@ object SparkEntry {
       SgmlExtract.extractDf(docs,
           SgmlExtract.Config(dialect = "html4", space = "preserve"))
         .select(col("doc_id"),
-          expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("recovered_text"),
+          SgmlExtract.spanText.as("recovered_text"),
           size(col("errors")).cast("long").as("n_errors"),
           col("errors")(0)("code").as("first_error_code"),
           col("errors")(0)("offset").cast("long").as("first_error_off"))
@@ -88,7 +88,7 @@ object SparkEntry {
           SgmlExtract.Config(dialect = "html4", space = "preserve", boilerplate = true))
         .select(
           col("doc_id"),
-          expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("main_text"),
+          SgmlExtract.spanText.as("main_text"),
           size(col("spans")).cast("long").as("n_spans"))
     }),
 
@@ -99,7 +99,7 @@ object SparkEntry {
       SgmlExtract.extractDf(docs,
           SgmlExtract.Config(dialect = "sgml", space = "preserve"))
         .select(col("doc_id"),
-          expr("aggregate(spans, '', (acc, sp) -> acc || sp.text)").as("text"),
+          SgmlExtract.spanText.as("text"),
           size(col("errors")).cast("long").as("n_errors"))
     }),
 
@@ -127,7 +127,8 @@ object SparkEntry {
       // structured extraction: HTML tables (every optional end tag
       // omitted — DTD omission inference builds the grid) → relational
       // (doc, table, row, col, cell) rows; same one-stage kernel shape
-      TableOps.tableCells(TableOps.wrapDocumentsTable(documents(s, dir)))),
+      TableOps.tableCells(TableOps.wrapDocumentsTable(documents(s, dir)))
+        .select(col("doc_id"), inline(col("cells")))),
 
     "x5_serialize_roundtrip" -> ((s, dir) => {
       // W1/W5: parse + canonical re-serialization; the DuckDB oracle
@@ -136,7 +137,7 @@ object SparkEntry {
       val docs = SgmlExtract.wrapDocumentsMarked(s, dir)
       SgmlExtract.serializeCanonical(docs,
           SgmlExtract.Config(dialect = "html4", space = "preserve"))
-        .select(col("doc_id"), col("xml_out")) // error column: none expected here
+        .select(col("doc_id"), col("xml_out")) // errors: none expected here
     }),
 
     // ---- relational ops around the kernel --------------------------------

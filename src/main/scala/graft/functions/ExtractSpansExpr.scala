@@ -12,8 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sgml.{ParseDriver, ParseErr, ParseResult, ParserConfig, SgmlParser, Span}
+import graft.sgml.{ParseDriver, ParseErr, ParseResult, ParserConfig, SgmlParser, Serializer, Span, XPathSpec}
 import graft.SgmlExtract
+import graft.ops.TableOps
 
 /** Native Catalyst expression for the extraction kernel:
   * `extract_spans(spans_array [, dialect [, space [, boilerplate
@@ -29,29 +30,37 @@ import graft.SgmlExtract
   * is a `CodegenFallback` leaf; everything around it stays in
   * whole-stage codegen.
   *
+  * Every DOM consumer is this one expression: its [[Projection]] turns
+  * the finished parse into the first field of the output (spans,
+  * canonical XML, table cells or xpath solutions); the feed, the driver,
+  * the input check and the `errors` field are shared.
+  *
   * Reference lifecycle mirrored per SURVEY.md §3 E1 (`sgml2pl.c —
   * pl_new_sgml_parser / pl_sgml_parse` [V]) through [[ParseDriver]]: one
   * parser per thread, reset per row. A null input array yields null.
   */
-case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config)
+case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
+    projection: ExtractSpansExpr.Projection = ExtractSpansExpr.Spans)
   extends UnaryExpression with CodegenFallback {
 
   import ExtractSpansExpr._
 
-  override def prettyName: String = "extract_spans"
+  override def prettyName: String = projection.name
 
-  override def dataType: DataType = OutType
+  override lazy val dataType: DataType =
+    StructType(Seq(projection.field, StructField("errors", ArrayType(ErrType))))
 
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, _)
-        if st.fieldNames.contains("kind") && st.fieldNames.contains("text") &&
-           st.fieldNames.contains("media_ref") && st.fieldNames.contains("offset") =>
-      TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"extract_spans expects array<struct<kind,text,media_ref,offset>>, got ${other.sql}")
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val types = child.dataType match {
+      case ArrayType(st: StructType, _) => st.fields.map(f => f.name -> f.dataType).toMap
+      case _ => Map.empty[String, DataType]
+    }
+    SpanType.fields.find(f => !types.get(f.name).contains(f.dataType))
+      .fold[TypeCheckResult](TypeCheckResult.TypeCheckSuccess)(f => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects ${ArrayType(SpanType).sql}, got ${child.dataType.sql}: " +
+          s"field `${f.name}` is ${types.get(f.name).fold("missing")(_.sql)}"))
   }
 
   @transient private lazy val idx: (Int, Int, Int, Int, Int) = {
@@ -70,12 +79,12 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config)
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return null
-    drivers.get()(feed(v.asInstanceOf[ArrayData], _))(toRow)
-      .fold(errorRow, identity)
+    drivers.get()(feed(v.asInstanceOf[ArrayData], _)) { r =>
+      new GenericInternalRow(Array[Any](projection(r, cfg), errRows(r.errors)))
+    }.fold(errorRow, identity)
   }
 
-  // The one feed of Catalyst span rows (a typed `Doc` goes through
-  // SgmlExtract.feedDoc, with the same rules). Text goes in via
+  // The one feed of a parser from data. Text goes in via
   // `UTF8String.toString`: measured 5-15% faster than decoding into a
   // reused char[] (compact strings, intrinsified decoder).
   private def feed(arr: ArrayData, p: SgmlParser): Unit = {
@@ -99,30 +108,10 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config)
     }
   }
 
-  private def toRow(r: ParseResult): InternalRow = {
-    val spans = r.spans(cfg)
-    val spanRows = new Array[Any](spans.length)
-    var j = 0
-    while (j < spans.length) {
-      val s = spans(j)
-      spanRows(j) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(s.kind),
-        if (s.text == null) null else UTF8String.fromString(s.text),
-        if (s.media_ref == null) null else UTF8String.fromString(s.media_ref),
-        s.offset))
-      j += 1
-    }
-    val errRows = new Array[Any](r.errors.length)
-    j = 0
-    while (j < r.errors.length) {
-      val e = r.errors(j)
-      errRows(j) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(e.code), e.offset, UTF8String.fromString(e.detail)))
-      j += 1
-    }
-    new GenericInternalRow(Array[Any](
-      new GenericArrayData(spanRows), new GenericArrayData(errRows)))
-  }
+  // a failed parse: the projection's empty value and one internal-error
+  private def errorRow(detail: String): InternalRow =
+    new GenericInternalRow(Array[Any](projection.failed,
+      errRows(Vector(ParseErr("internal-error", 0, detail)))))
 
   override protected def withNewChildInternal(newChild: Expression): ExtractSpansExpr =
     copy(child = newChild)
@@ -135,73 +124,132 @@ object ExtractSpansExpr {
   // and the typed rows (graft.Doc / graft.Extracted) cannot drift apart
   val SpanType: StructType = Encoders.product[Span].schema
   val ErrType: StructType = Encoders.product[ParseErr].schema
-  val OutType: StructType = StructType(Seq(
-    StructField("spans", ArrayType(SpanType)),
-    StructField("errors", ArrayType(ErrType))))
 
-  private def litStr(e: Expression, what: String): String = e match {
-    case Literal(v: UTF8String, StringType) => v.toString.toLowerCase
-    case other => throw new IllegalArgumentException(
-      s"extract_spans: $what must be a string literal, got $other")
+  /** What a finished parse becomes: the first field of the output
+    * struct, `field`, of the SQL function `name`, and that field's value
+    * when the parse failed. */
+  sealed abstract class Projection(val name: String, val field: StructField)
+      extends Serializable {
+    def apply(r: ParseResult, cfg: ParserConfig): Any
+    def failed: Any = new GenericArrayData(Array.empty[Any])
   }
 
-  private def litBool(e: Expression, what: String): Boolean = e match {
-    case Literal(b: java.lang.Boolean, BooleanType) => b
-    case other => throw new IllegalArgumentException(
-      s"extract_spans: $what must be a boolean literal, got $other")
+  /** `extract_spans`: the span sequence. */
+  case object Spans extends Projection("extract_spans", StructField("spans", ArrayType(SpanType))) {
+    def apply(r: ParseResult, cfg: ParserConfig): Any = {
+      val spans = r.spans(cfg)
+      val spanRows = new Array[Any](spans.length)
+      var j = 0
+      while (j < spans.length) {
+        val s = spans(j)
+        spanRows(j) = new GenericInternalRow(Array[Any](
+          UTF8String.fromString(s.kind),
+          if (s.text == null) null else UTF8String.fromString(s.text),
+          if (s.media_ref == null) null else UTF8String.fromString(s.media_ref),
+          s.offset))
+        j += 1
+      }
+      new GenericArrayData(spanRows)
+    }
   }
 
-  private def litInt(e: Expression, what: String): Int = e match {
-    case Literal(i: java.lang.Integer, IntegerType) => i
-    case other => throw new IllegalArgumentException(
-      s"extract_spans: $what must be an int literal, got $other")
+  /** `sgml_canonical`: canonical XML (attributes name-sorted, no
+    * self-closing elements); null when the parse failed. */
+  case object Canonical extends Projection("sgml_canonical", StructField("xml", StringType)) {
+    def apply(r: ParseResult, cfg: ParserConfig): Any =
+      UTF8String.fromString(Serializer.xml(r.content, canonical = true))
+    override def failed: Any = null
   }
 
-  private def errorRow(detail: String): InternalRow =
-    new GenericInternalRow(Array[Any](
-      new GenericArrayData(Array.empty[Any]),
-      new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](
-        UTF8String.fromString("internal-error"), 0, UTF8String.fromString(detail)))))))
+  /** `sgml_table_cells`: one row per table cell (TableOps.cellsOf). */
+  case object Cells
+      extends Projection("sgml_table_cells", StructField("cells", ArrayType(TableOps.CellType))) {
+    def apply(r: ParseResult, cfg: ParserConfig): Any = TableOps.cellsOf(r)
+  }
 
-  /** Builder used by the function registry: the spans plus up to five
-    * literal options; omitted ones default to html4, preserve, no strip
-    * and the `SgmlExtract.Config` limits. */
-  def fromArgs(args: Seq[Expression]): ExtractSpansExpr = {
+  /** `sgml_xpath`: every solution of an xpath.pl-style spec, in document
+    * order. */
+  final case class XPath(path: XPathSpec.Path)
+      extends Projection("sgml_xpath", StructField("solutions", ArrayType(StringType))) {
+    def apply(r: ParseResult, cfg: ParserConfig): Any = new GenericArrayData(
+      XPathSpec.evalStrings(r.content, path).map(UTF8String.fromString).toArray[Any])
+  }
+
+  private def errRows(errors: Vector[ParseErr]): ArrayData =
+    new GenericArrayData(errors.map(e => new GenericInternalRow(Array[Any](
+      UTF8String.fromString(e.code), e.offset, UTF8String.fromString(e.detail)))).toArray[Any])
+
+  /** The value of a non-null literal argument of type `tpe` (a string as
+    * a `String`). */
+  private def literal[T](e: Expression, tpe: DataType, fn: String, what: String): T = e match {
+    case Literal(v, `tpe`) if v != null =>
+      (if (tpe == StringType) v.toString else v).asInstanceOf[T]
+    case other => throw new IllegalArgumentException(
+      s"$fn: $what must be a ${tpe.simpleString} literal, got $other")
+  }
+
+  /** Builder of `extract_spans`, `sgml_canonical` and `sgml_table_cells`:
+    * the spans plus up to five literal options; omitted ones default to
+    * html4, preserve, no strip and the `SgmlExtract.Config` limits. */
+  def fromArgs(args: Seq[Expression], projection: Projection): ExtractSpansExpr = {
+    val fn = projection.name
     if (args.isEmpty || args.length > 6) throw new IllegalArgumentException(
-      "extract_spans(spans[, dialect[, space[, boilerplate[, maxErrors[, maxDocChars]]]]]) " +
+      s"$fn(spans[, dialect[, space[, boilerplate[, maxErrors[, maxDocChars]]]]]) " +
         "takes 1-6 arguments")
     val arg = args.lift
     val limits = SgmlExtract.Config()
     val config = SgmlExtract.Config(
-      dialect = arg(1).fold("html4")(litStr(_, "dialect")),
-      space = arg(2).fold("preserve")(litStr(_, "space")),
-      boilerplate = arg(3).exists(litBool(_, "boilerplate")),
-      maxErrors = arg(4).fold(limits.maxErrors)(litInt(_, "maxErrors")),
-      maxDocChars = arg(5).fold(limits.maxDocChars)(litInt(_, "maxDocChars")))
+      dialect = arg(1).fold("html4")(literal[String](_, StringType, fn, "dialect").toLowerCase),
+      space = arg(2).fold("preserve")(literal[String](_, StringType, fn, "space").toLowerCase),
+      boilerplate = arg(3).exists(literal[Boolean](_, BooleanType, fn, "boilerplate")),
+      maxErrors = arg(4).fold(limits.maxErrors)(literal[Int](_, IntegerType, fn, "maxErrors")),
+      maxDocChars = arg(5).fold(limits.maxDocChars)(literal[Int](_, IntegerType, fn, "maxDocChars")))
     config.toParserConfig // an unknown dialect or space fails at analysis
-    ExtractSpansExpr(args.head, config)
+    ExtractSpansExpr(args.head, config, projection)
   }
 
+  /** A contract span array holding `text` as one text span at offset 0. */
+  private def oneTextSpan(text: Expression): Expression =
+    CreateArray(Seq(CreateNamedStruct(Seq(
+      Literal("kind"), Literal("text"), Literal("text"), Cast(text, StringType),
+      Literal("media_ref"), Literal(null, StringType), Literal("offset"), Literal(0)))))
+
   /** `sgml_spans(text[, dialect[, space]])`: `extract_spans` over a
-    * one-text-span array (offset 0), its `.spans`. Dialect and space are
-    * literals with `extract_spans`' defaults; a parse that fails yields
-    * an empty array, as `extract_spans` yields an error row. */
+    * one-text-span array, its `.spans`. Dialect and space are literals
+    * with `extract_spans`' defaults; a parse that fails yields an empty
+    * array, as `extract_spans` yields an error row. */
   def spansOfText(args: Seq[Expression]): Expression = {
     if (args.isEmpty || args.length > 3) throw new IllegalArgumentException(
       "sgml_spans(text[, dialect[, space]]) takes 1-3 arguments")
-    val span = CreateNamedStruct(Seq(
-      Literal("kind"), Literal("text"), Literal("text"), Cast(args.head, StringType),
-      Literal("media_ref"), Literal(null, StringType), Literal("offset"), Literal(0)))
-    GetStructField(fromArgs(CreateArray(Seq(span)) +: args.tail), 0)
+    GetStructField(fromArgs(oneTextSpan(args.head) +: args.tail, Spans), 0)
+  }
+
+  /** `sgml_xpath(text, spec, dialect)`: the solutions of an xpath.pl-style
+    * spec over `text` parsed with space `preserve`. Spec and dialect are
+    * literals; the spec is parsed here, once, so a malformed one fails
+    * analysis with the parse message. */
+  def xpathOfText(args: Seq[Expression]): Expression = {
+    if (args.length != 3) throw new IllegalArgumentException(
+      "sgml_xpath(text, spec, dialect) takes 3 arguments")
+    val spec = literal[String](args(1), StringType, "sgml_xpath", "spec")
+    val path = XPathSpec.parse(spec).fold(
+      e => throw new IllegalArgumentException(s"sgml_xpath: spec '$spec': $e"), identity)
+    GetStructField(
+      fromArgs(Seq(oneTextSpan(args.head), args(2), Literal("preserve")), XPath(path)), 0)
   }
 
   /** The function-registry entries of the kernel, shared by `register`
     * and GraftExtensions. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("extract_spans"),
-      new ExpressionInfo(classOf[ExtractSpansExpr].getName, "extract_spans"), fromArgs _),
-    (FunctionIdentifier("sgml_spans"),
-      new ExpressionInfo(classOf[ExtractSpansExpr].getName, "sgml_spans"), spansOfText _))
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq[(String, Seq[Expression] => Expression)](
+      Spans.name -> (fromArgs(_, Spans)),
+      "sgml_spans" -> spansOfText,
+      Canonical.name -> (fromArgs(_, Canonical)),
+      Cells.name -> (fromArgs(_, Cells)),
+      "sgml_xpath" -> xpathOfText
+    ).map { case (name, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(classOf[ExtractSpansExpr].getName, name), builder)
+    }
 
   /** Late registration on an existing session (tests / REPL convenience;
     * production sessions use `spark.sql.extensions=graft.GraftExtensions`). */

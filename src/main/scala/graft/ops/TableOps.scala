@@ -1,9 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import graft.{Doc, SgmlExtract}
-import graft.sgml.{Node, ParseDriver, ParseResult}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.SgmlExtract
+import graft.sgml.{Node, ParseResult}
 import scala.collection.mutable
 
 /** Structured extraction: HTML tables → relational rows.
@@ -17,10 +21,9 @@ import scala.collection.mutable
   * the correct DOM per the HTML4 content model), then walks the
   * task-local DOM once ([[Node.walk]]) collecting cells in document order.
   *
-  * Scale shape: ONE narrow mapPartitions stage, one ParseDriver (parser
-  * reused across the partition's docs) per partition, trees never leave
-  * the task, output is a flat frame whose row count is the corpus cell
-  * count. No shuffle, no driver involvement.
+  * Scale shape: the `sgml_table_cells` projection of the one kernel
+  * expression (graft.functions.ExtractSpansExpr), one array of cells per
+  * doc; trees never leave the task. No shuffle, no driver involvement.
   */
 object TableOps {
 
@@ -39,22 +42,20 @@ object TableOps {
       lit("<td>"), col("doc_id"),
       lit("</table></body></html>")))
 
-  /** One output row per table cell: (doc_id, tbl_idx, row_idx, col_idx,
-    * cell_tag th|td, cell = concatenated descendant text). Document order
-    * throughout; nested tables (rare, but legal) get their own tbl_idx in
-    * pre-order. Media spans are fed like `extractDf` feeds them; a media
-    * node is no text, so it adds nothing to a cell. */
-  def tableCells(docs: DataFrame, config: SgmlExtract.Config = SgmlExtract.Config()): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.as[Doc].mapPartitions { it =>
-      val driver = new ParseDriver(config.toParserConfig)
-      it.flatMap { doc =>
-        driver(SgmlExtract.feedDoc(doc))(cellsOf(doc.doc_id, _))
-          // poisoned doc → sentinel row, never a failed task
-          .fold(detail => Vector((doc.doc_id, -1, -1, -1, "error", detail)), identity)
-      }
-    }.toDF("doc_id", "tbl_idx", "row_idx", "col_idx", "cell_tag", "cell")
-  }
+  /** One row per doc: (doc_id, cells, errors), `cells` an array of
+    * (tbl_idx, row_idx, col_idx, cell_tag th|td, cell = concatenated
+    * descendant text) — `inline(cells)` gives one row per cell. Document
+    * order throughout; nested tables (rare, but legal) get their own
+    * tbl_idx in pre-order. Media spans are fed like `extractDf` feeds
+    * them; a media node is no text, so it adds nothing to a cell. */
+  def tableCells(docs: DataFrame, config: SgmlExtract.Config = SgmlExtract.Config()): DataFrame =
+    SgmlExtract.parseDf(docs, "sgml_table_cells", config, "cells")
+
+  /** The element type of `cells`; `cellsOf` builds its rows. */
+  private[graft] val CellType: StructType = StructType(Seq(
+    StructField("tbl_idx", IntegerType), StructField("row_idx", IntegerType),
+    StructField("col_idx", IntegerType), StructField("cell_tag", StringType),
+    StructField("cell", StringType)))
 
   /** What the children of an open element are scanned for: tables,
     * the rows of one table, or the cells of one row. Wrappers between a
@@ -69,9 +70,9 @@ object TableOps {
     * text starts in the open cells' text buffer. */
   private final class InCell(val slot: Int, val from: Int) extends Scan
 
-  private def cellsOf(docId: String,
-      r: ParseResult): Vector[(String, Int, Int, Int, String, String)] = {
-    val out = mutable.ArrayBuffer.empty[(String, Int, Int, Int, String, String)]
+  /** The cells of one parsed doc as `CellType` rows. */
+  private[graft] def cellsOf(r: ParseResult): ArrayData = {
+    val out = mutable.ArrayBuffer.empty[GenericInternalRow]
     val scans = mutable.ArrayBuffer[Scan](Tables)
     // descendant text of the open cells, in document order; an undeclared
     // entity keeps its source form (the span contract emits it as its own
@@ -92,7 +93,8 @@ object TableOps {
           case _ if e.name == "table" => tables += 1; new Rows(tables - 1)
           case rows: Rows if e.name == "tr" => rows.n += 1; new Cells(rows.tbl, rows.n - 1)
           case row: Cells if e.name == "td" || e.name == "th" =>
-            out += ((docId, row.tbl, row.row, row.n, e.name, null: String))
+            out += new GenericInternalRow(Array[Any](
+              row.tbl, row.row, row.n, UTF8String.fromString(e.name), null))
             row.n += 1; openCells += 1
             new InCell(out.size - 1, text.length)
           case _: InCell => Tables
@@ -103,12 +105,12 @@ object TableOps {
     } { _ =>
       scans.remove(scans.size - 1) match {
         case c: InCell =>
-          out(c.slot) = out(c.slot).copy(_6 = text.substring(c.from))
+          out(c.slot).update(4, UTF8String.fromString(text.substring(c.from)))
           openCells -= 1
           if (openCells == 0) text.setLength(0)
         case _ => ()
       }
     }
-    out.toVector
+    new GenericArrayData(out.toArray[Any])
   }
 }

@@ -92,31 +92,18 @@ object XPathOps {
   /** Q1-Q5/Q9 via the NATIVE spec interpreter ([[graft.sgml.XPathSpec]] —
     * the reference's `xpath.pl` spec dialect evaluated over the task-local
     * DOM, closing round-1 gap #2): positional `(N)`/`(last)`, attribute
-    * coercion `@key(integer)`, text steps, first-solution (`xpath_chk`).
-    * One parse + three spec evaluations per row inside a single UDF —
+    * coercion `@key(integer)`, text steps, first-solution (`xpath_chk`:
+    * `get(…, 0)` is null when there is no solution). Three `sgml_xpath`
+    * calls of the kernel expression, each spec parsed once at analysis —
     * narrow, shuffle-free (the groupBy below builds the per-region doc,
     * mirroring how per-doc trees already exist in the extract pipeline). */
   def specInterpreter(nation: DataFrame): DataFrame = {
-    import graft.sgml.{Dialect, ParserConfig, SgmlParser, SpaceMode, XPathSpec}
-    val cfg = ParserConfig(dialect = Dialect.Xml, space = SpaceMode.Preserve)
-    def p(s: String) = XPathSpec.parse(s)
-      .fold(e => throw new IllegalArgumentException(e), identity)
-    val pSecond = p("//nation(2)/name/text")
-    val pLast = p("//nation(last)/name/text")
-    val pKey = p("//nation(1)/@key(integer)")
-    val evalAll = udf((xml: String) => {
-      val r = SgmlParser.parse(if (xml == null) "" else xml, cfg)
-      Seq(
-        XPathSpec.first(r.content, pSecond).orNull,
-        XPathSpec.first(r.content, pLast).orNull,
-        XPathSpec.first(r.content, pKey).orNull)
-    })
-    regionXmlAttr(nation)
-      .select(col("n_regionkey").as("region_key"), evalAll(col("xml")).as("v"))
-      .select(col("region_key"),
-        col("v")(0).as("second_nation"),
-        col("v")(1).as("last_nation"),
-        col("v")(2).cast("long").as("first_key"))
+    def xpathChk(spec: String) = get(graft.SgmlExtract.kernelCol(nation.sparkSession,
+      s"sgml_xpath(xml, '$spec', 'xml')"), lit(0))
+    regionXmlAttr(nation).select(col("n_regionkey").as("region_key"),
+      xpathChk("//nation(2)/name/text").as("second_nation"),
+      xpathChk("//nation(last)/name/text").as("last_nation"),
+      xpathChk("//nation(1)/@key(integer)").cast("long").as("first_key"))
   }
 
   /** The same positional query via windows (the scale path for span

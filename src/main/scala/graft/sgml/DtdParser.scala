@@ -14,6 +14,14 @@ import scala.collection.mutable
   */
 object DtdParser {
 
+  /** Deepest content-model group nesting that is parsed. A deeper
+    * `<!ELEMENT>` logs `dtd-nesting`, the rest of its declaration is
+    * skipped and its content is ANY — which also bounds the recursion of
+    * `Dfa.compile` over the model. */
+  private val MaxGroupDepth = 256
+
+  private object GroupTooDeep extends scala.util.control.ControlThrowable
+
   /** Parse a DTD text (sequence of declarations / comments / PE refs). */
   def parseSubset(text: String, initial: Dtd, foldCase: Boolean): (Dtd, Vector[ParseErr]) = {
     var dtd = initial
@@ -110,15 +118,17 @@ object DtdParser {
         // omission flags: '-' or 'O' twice (SGML); absent in XML decls
         var omitStart = false
         var omitEnd = false
-        var sawFlags = false
         lx.save()
         (lx.flag(), lx.flag()) match {
-          case (Some(a), Some(b)) =>
-            sawFlags = true; omitStart = a; omitEnd = b
+          case (Some(a), Some(b)) => omitStart = a; omitEnd = b
           case _ => lx.restore()
         }
-        val _ = sawFlags
-        val content = parseContent(lx, fold, errs)
+        val content = try parseContent(lx, fold, errs) catch {
+          case GroupTooDeep =>
+            errs += ParseErr("dtd-nesting", 0, s"> $MaxGroupDepth nested groups")
+            lx.skipRest()
+            ContentKind.Any
+        }
         var incl = Set.empty[String]
         var excl = Set.empty[String]
         var more = true
@@ -255,26 +265,8 @@ object DtdParser {
   }
 
   // `name | (a|b|c)` element-name target of ELEMENT/ATTLIST
-  private def elementNames(lx: Lex, fold: String => String): List[String] = {
-    lx.save()
-    lx.punct() match {
-      case Some('(') =>
-        val ns = mutable.ListBuffer.empty[String]
-        var go = true
-        while (go) {
-          lx.name().foreach(n => ns += fold(n))
-          lx.punct() match {
-            case Some(')') => go = false
-            case Some('|') | Some(',') | Some('&') =>
-            case _ => go = false
-          }
-        }
-        ns.toList
-      case _ =>
-        lx.restore()
-        lx.name().map(fold).toList
-    }
-  }
+  private def elementNames(lx: Lex, fold: String => String): List[String] =
+    parseGroupNames(lx, fold).getOrElse(lx.name().map(fold).toList)
 
   private def parseGroupNames(lx: Lex, fold: String => String): Option[List[String]] = {
     lx.save()
@@ -306,24 +298,26 @@ object DtdParser {
         case "ANY"    => ContentKind.Any
         case _ =>
           lx.restore()
-          parseGroup(lx, fold, errs).map(ContentKind.Modelled).getOrElse(ContentKind.Any)
+          parseGroup(lx, fold, errs, 1).map(ContentKind.Modelled).getOrElse(ContentKind.Any)
       }
       case None =>
         lx.restore()
-        parseGroup(lx, fold, errs).map(ContentKind.Modelled).getOrElse(ContentKind.Any)
+        parseGroup(lx, fold, errs, 1).map(ContentKind.Modelled).getOrElse(ContentKind.Any)
     }
   }
 
-  /** `( item (conn item)* ) card?` — connector must be uniform per group. */
+  /** `( item (conn item)* ) card?` — connector must be uniform per group;
+    * `depth` counts the groups open here, at most `MaxGroupDepth`. */
   private def parseGroup(lx: Lex, fold: String => String,
-      errs: mutable.Builder[ParseErr, Vector[ParseErr]]): Option[Model] = {
+      errs: mutable.Builder[ParseErr, Vector[ParseErr]], depth: Int): Option[Model] = {
+    if (depth > MaxGroupDepth) throw GroupTooDeep
     lx.save()
     if (!lx.punct().contains('(')) { lx.restore(); return None }
     val items = mutable.ListBuffer.empty[Model]
     var conn: Char = 0
     var go = true
     while (go) {
-      parseItem(lx, fold, errs) match {
+      parseItem(lx, fold, errs, depth) match {
         case Some(it) => items += it
         case None =>
       }
@@ -347,10 +341,10 @@ object DtdParser {
   }
 
   private def parseItem(lx: Lex, fold: String => String,
-      errs: mutable.Builder[ParseErr, Vector[ParseErr]]): Option[Model] = {
+      errs: mutable.Builder[ParseErr, Vector[ParseErr]], depth: Int): Option[Model] = {
     lx.save()
     lx.punct() match {
-      case Some('(') => lx.restore(); parseGroup(lx, fold, errs)
+      case Some('(') => lx.restore(); parseGroup(lx, fold, errs, depth + 1)
       case Some('#') =>
         lx.name() // PCDATA
         Some(Model.PcData)
@@ -457,6 +451,7 @@ object DtdParser {
     private var mark = 0
     def save(): Unit = mark = i
     def restore(): Unit = i = mark
+    def skipRest(): Unit = i = s.length
     private def ws(): Unit = {
       while (i < s.length && s.charAt(i).isWhitespace) i += 1
       // declaration-internal SGML comments: -- … --

@@ -73,6 +73,9 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
   private var entStart = 0
   private var entReturn = S_TEXT
   private var injectDepth = 0
+  // chars of entity replacement text injected into this doc; past
+  // cfg.maxDocChars it is pinned at maxDocChars + 1 and injection stops
+  private var injected = 0L
 
   // SHORTREF recognition (T14): runs over the buffered PCDATA run when it
   // ends (markup / media / EOF) — chunk-safe by construction, since text
@@ -98,6 +101,7 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
     rawBuf.setLength(0); rawStart = 0; rawIsCdata = true; rawEndTag = ""
     etBuf.setLength(0); rawLtPos = 0
     entBuf.setLength(0); entStart = 0; entReturn = S_TEXT; injectDepth = 0
+    injected = 0L
     srBusy = false; srLineStart = true; pendingCr = false
   }
 
@@ -207,6 +211,13 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
     * text semantics; `parser.c — process_entity` [V]). Offsets freeze. */
   private def inject(s: String): Unit = {
     if (injectDepth >= 8) { log.add("entity-loop", pos, s.take(20)); return }
+    if (injected + s.length > cfg.maxDocChars) {
+      if (injected <= cfg.maxDocChars)
+        log.add("entity-budget", pos, s"> ${cfg.maxDocChars} injected chars")
+      injected = cfg.maxDocChars + 1L
+      return
+    }
+    injected += s.length
     injectDepth += 1
     val wasFrozen = frozen
     frozen = true

@@ -70,7 +70,8 @@ object StreamingExtract {
     val incompleteErr = struct(lit("incomplete-doc").as("code"), lit(0).as("offset"),
       col("incomplete").as("detail"))
     assemble(chunks, timeoutMs)
-      .select(col("doc_id"), SgmlExtract.extractCol(chunks.sparkSession, cfg).as("r"),
+      .select(col("doc_id"),
+        SgmlExtract.extractCol(chunks.sparkSession, "extract_spans", cfg).as("r"),
         col("incomplete"))
       .select(col("doc_id"), col("r.spans").as("spans"),
         when(col("incomplete").isNull, col("r.errors"))

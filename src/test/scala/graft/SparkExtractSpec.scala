@@ -161,8 +161,8 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val at = s"$dialect $depth"
       val written = SgmlExtract.serializeCanonical(ds.toDF(), cfg.copy(dialect = dialect))
-        .select("xml_out", "error").as[(String, String)].collect()
-      assert(written.length === 1 && written.head._2 === null, at)
+        .select(col("xml_out"), size(col("errors"))).as[(String, Int)].collect()
+      assert(written.length === 1 && written.head._2 === 0, at)
       assert(written.head._1.split("<div>", -1).length - 1 === depth, at)
       assert(written.head._1.contains("<div>deep</div>"), at)
       val xpath = Seq(doc).toDF("text")
@@ -173,7 +173,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       val tableDoc = Doc(s"t$depth",
         Seq(Span("text", "<div>" * depth + table + "</div>" * depth, null, 0)))
       val cells = graft.ops.TableOps.tableCells(Seq(tableDoc).toDF(), cfg.copy(dialect = dialect))
-        .select("row_idx", "col_idx", "cell").as[(Int, Int, String)].collect()
+        .selectExpr("inline(cells)").select("row_idx", "col_idx", "cell").as[(Int, Int, String)].collect()
       assert(cells.toSeq === Seq((0, 0, "a"), (0, 1, "b")), at)
     }
   }
@@ -267,7 +267,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a cell adds no cell text
     def cells(spans: Seq[Span], space: String): Seq[(Int, Int, String)] =
       TableOps.tableCells(Seq(Doc("m", spans)).toDF(), SgmlExtract.Config(space = space))
-        .select("row_idx", "col_idx", "cell").as[(Int, Int, String)].collect().toSeq
+        .selectExpr("inline(cells)").select("row_idx", "col_idx", "cell").as[(Int, Int, String)].collect().toSeq
     val split = Seq(Span("text", "<table><tr><td>a", null, 0),
       Span("media", "", "img.png", 16), Span("text", "b<td>c</table>", null, 16))
     for (space <- Seq("sgml", "preserve"))
@@ -297,17 +297,116 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("transform(s, x -> x.text)").collect()(0).getSeq[String](0)
     assert(dflt === Seq("a\n", "b"))
     // a parse that throws is caught by the kernel's driver: the span array
-    // is empty and the task succeeds. No text input is known to make the
-    // kernel throw, so a span struct whose offset is a string makes the
-    // feed throw, in the expression sgml_spans resolves to.
-    val thrown = spark.sql(
-      """SELECT r.spans AS spans, r.errors.code AS codes FROM (
-        |  SELECT extract_spans(array(named_struct('kind', 'text', 'text', m,
-        |    'media_ref', CAST(NULL AS STRING), 'offset', 'zero'))) AS r
-        |  FROM (SELECT '<p>x' AS m))""".stripMargin).collect()
-    assert(thrown.length === 1)
-    assert(thrown(0).getSeq[Any](0).isEmpty)
-    assert(thrown(0).getSeq[String](1) === Seq("internal-error"))
+    // is empty and the row is an error row. No text input is known to make
+    // the kernel throw, so an input whose offset slot holds a string under
+    // the contract type makes the feed throw, in the expression sgml_spans
+    // resolves to (a Literal checks its value against its type, so the
+    // value comes in through a bound input slot); a string offset column
+    // itself fails analysis.
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.ArrayType
+    import org.apache.spark.unsafe.types.UTF8String
+    val badSpan = InternalRow(UTF8String.fromString("text"), UTF8String.fromString("<p>x"),
+      null, UTF8String.fromString("zero"))
+    val input = BoundReference(0, ArrayType(ExtractSpansExpr.SpanType), nullable = true)
+    val thrown = ExtractSpansExpr(input, SgmlExtract.Config(space = "preserve"))
+      .eval(InternalRow(new GenericArrayData(Array[Any](badSpan)))).asInstanceOf[InternalRow]
+    assert(thrown.getArray(0).numElements() === 0)
+    val errs = thrown.getArray(1)
+    assert(errs.numElements() === 1)
+    assert(errs.getStruct(0, 3).getUTF8String(0).toString === "internal-error")
+    val typed = intercept[Exception](spark.sql(
+      """SELECT extract_spans(array(named_struct('kind', 'text', 'text', m,
+        |  'media_ref', CAST(NULL AS STRING), 'offset', 'zero'))) AS r
+        |FROM (SELECT '<p>x' AS m)""".stripMargin).collect())
+    assert(typed.getMessage.contains("field `offset` is STRING"), typed.getMessage)
+  }
+
+  test("one parse expression: every projection reports doc-too-large; one ExtractSpansExpr, no MapPartitions or ScalaUDF") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, MapPartitions}
+    import graft.functions.ExtractSpansExpr
+    import graft.ops.TableOps
+    import graft.sgml.XPathSpec
+    def kernels(plan: LogicalPlan): Seq[ExtractSpansExpr] =
+      plan.flatMap(_.expressions.flatMap(_.collect { case e: ExtractSpansExpr => e }))
+    def udfs(plan: LogicalPlan): Seq[ScalaUDF] =
+      plan.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    val docs = Seq(
+      Doc("normal", Seq(Span("text", "<p>fine</p>", null, 0))),
+      Doc("big", Seq(Span("text", "<p>" + ("x" * 100), null, 0))),
+      Doc("media", Seq(Span("text", "<table><tr><td>a", null, 0),
+        Span("media", "", "img.png", 16), Span("text", "b</table>", null, 16)))).toDS().toDF()
+    val small = cfg.copy(maxDocChars = 50)
+    val outs: Seq[(String, DataFrame)] = Seq(
+      "extractDf" -> SgmlExtract.extractDf(docs, small),
+      "serializeCanonical" -> SgmlExtract.serializeCanonical(docs, small),
+      "tableCells" -> TableOps.tableCells(docs, small))
+    for ((name, df) <- outs) {
+      val codes = df.select(col("doc_id"), col("errors.code"))
+        .as[(String, Seq[String])].collect().toMap
+      assert(codes.keySet === Set("normal", "big", "media"), name)
+      assert(codes("big") === Seq("doc-too-large"), name)
+      assert(codes("normal").isEmpty && codes("media").isEmpty, name)
+      val plan = df.queryExecution.analyzed
+      assert(kernels(plan).length === 1, s"$name: $plan")
+      assert(plan.collect { case m: MapPartitions => m }.isEmpty, s"$name: $plan")
+      assert(udfs(plan).isEmpty, s"$name: $plan")
+    }
+    val cells = TableOps.tableCells(docs, small).filter(col("doc_id") === "media")
+      .selectExpr("inline(cells)").as[(Int, Int, Int, String, String)].collect().toSeq
+    assert(cells === Seq((0, 0, 0, "td", "ab")))
+    val xml = SgmlExtract.serializeCanonical(docs, small).filter(col("doc_id") === "normal")
+      .select("xml_out").as[String].collect().toSeq
+    assert(xml === Seq("<html><head></head><body><p>fine</p></body></html>"))
+    // sgml_xpath: one kernel expression, its spec parsed at analysis
+    SgmlExtract.registerUdfs(spark)
+    val xq = spark.sql("SELECT sgml_xpath(m, '//li(2)/text', 'html4') AS r " +
+      "FROM (SELECT '<ul><li>a<li>b</ul>' AS m)")
+    assert(kernels(xq.queryExecution.analyzed).length === 1)
+    assert(udfs(xq.queryExecution.analyzed).isEmpty)
+    assert(xq.as[Seq[String]].collect().toSeq === Seq(Seq("b")))
+    val malformed = intercept[Exception](
+      spark.sql("SELECT sgml_xpath(m, '//a(', 'xml') FROM (SELECT '<a/>' AS m)").collect())
+    assert(malformed.getMessage.contains(
+      "sgml_xpath: spec '//a(': " + XPathSpec.parse("//a(").swap.toOption.get), malformed.getMessage)
+    val column = intercept[Exception](spark.sql(
+      "SELECT sgml_xpath(m, s, 'xml') FROM (SELECT '<a/>' AS m, 'a' AS s)").collect())
+    assert(column.getMessage.contains("spec must be a string literal"), column.getMessage)
+  }
+
+  test("hostile input ends as a code: DTD groups 20,000 deep give dtd-nesting, an entity chain entity-budget") {
+    import spark.implicits._
+    def parsed(doc: String, c: SgmlExtract.Config): Seq[(Seq[String], Seq[String])] =
+      SgmlExtract.extractDf(Seq(Doc("d", Seq(Span("text", doc, null, 0)))).toDS().toDF(), c)
+        .select(col("spans.text"), col("errors.code"))
+        .as[(Seq[String], Seq[String])].collect().toSeq
+    // local[4] runs each task once, so a task that threw would fail the job
+    val depth = 20000
+    val deep = "<!DOCTYPE r [<!ELEMENT r " + "(" * depth + "a" + ")" * depth + ">]><r>x</r>"
+    for (dialect <- Seq("xml", "html4")) {
+      val rows = parsed(deep, cfg.copy(dialect = dialect))
+      assert(rows.length === 1, dialect)
+      val (texts, codes) = rows.head
+      assert(codes.contains("dtd-nesting") && !codes.contains("internal-error"), s"$dialect: $codes")
+      assert(texts.mkString === "x", dialect)
+    }
+    // fan-out 100 over four levels expands to 10^9 chars; the injected
+    // text stops at maxDocChars
+    val budget = 1 << 20
+    val chain = "<!ENTITY e0 \"xxxxxxxxxx\">" + (1 to 4).map(k =>
+      s"<!ENTITY e$k \"" + s"&e${k - 1};" * 100 + "\">").mkString
+    val rows = parsed(s"<!DOCTYPE d [$chain]><d>&e4;</d>",
+      cfg.copy(dialect = "xml", maxDocChars = budget))
+    assert(rows.length === 1)
+    val (texts, codes) = rows.head
+    assert(codes === Seq("entity-budget"))
+    val chars = texts.map(_.length).sum
+    assert(chars > 0 && chars <= budget, chars)
   }
 
   test("plan shape: column pruning reaches the scan before the kernel") {

@@ -25,7 +25,7 @@ class TableOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def cellsOf(html: String): Seq[(Int, Int, Int, String, String)] = {
     import spark.implicits._
     val ds = Seq(Doc("d1", Seq(Span("text", html, null, 0)))).toDS()
-    TableOps.tableCells(ds.toDF()).collect()
+    TableOps.tableCells(ds.toDF()).selectExpr("doc_id", "inline(cells)").collect()
       .map(r => (r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5)))
       .sortBy(t => (t._1, t._2, t._3)).toSeq
   }
@@ -80,7 +80,7 @@ class TableOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).toDS().coalesce(1)
     val rows = TableOps.tableCells(ds.toDF(),
         SgmlExtract.Config(maxDocChars = 30)) // between the two doc sizes
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(4), r.getString(5)))
+      .selectExpr("doc_id", "inline(cells)").collect().map(r => (r.getString(0), r.getInt(1), r.getString(4), r.getString(5)))
     val byDoc = rows.groupBy(_._1)
     assert(byDoc("ok").exists(c => c._3 == "td" && c._4 == "x"))
     assert(!byDoc.get("big").exists(_.exists(_._3 == "td"))) // capped doc yields no cells
@@ -89,7 +89,7 @@ class TableOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("corpus wrap: 6 cells per doc, replayable from the doc columns") {
     val sf = "/root/testdata/sf0.001"
     val got = TableOps.tableCells(TableOps.wrapDocumentsTable(SgmlExtract.documents(spark, sf)))
-      .collect()
+      .selectExpr("doc_id", "inline(cells)").collect()
       .map(r => (r.getString(0), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5)))
     val docs = spark.read.parquet(s"$sf/documents.parquet").collect()
       .map(r => r.getAs[Long]("doc_id").toString ->
