@@ -90,11 +90,8 @@ object Resume {
       // recompute, never a wrong answer).
       val extracted = SgmlExtract.wrapDocsDf(spark.read.parquet(files: _*))
         .withColumn("__file", input_file_name())
-        .select(col("doc_id"),
-          SgmlExtract.extractCol(spark, "extract_spans", cfg).as("r"),
-          col("__file"))
-        .select(col("doc_id"), col("r.spans").as("spans"), col("r.errors").as("errors"),
-          col("__file"), spark_partition_id().as("__pid"))
+        .select(col("doc_id"), SgmlExtract.kernel(col("spans"), cfg).as("r"), col("__file"))
+        .select(col("doc_id"), col("r.*"), col("__file"), spark_partition_id().as("__pid"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // one write job; chunk dir overwrite → idempotent re-run

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst
+import graft.functions.ExtractSpansExpr
 import graft.sgml._
 
 /** The contract rows (BASELINE.json input_hint), typed. Their elements
@@ -84,11 +86,16 @@ object SgmlExtract {
     * `media` spans — exactly the fields of `Doc`. Every wrapper,
     * `TableOps.wrapDocumentsTable`, `Resume`'s chunks and `Bench`'s skew
     * corpus build their rows here. */
-  private[graft] def contractRows(d: DataFrame, text: Column, media: Column*): DataFrame = {
+  private[graft] def contractRows(d: DataFrame, text: Column, media: Column*): DataFrame =
+    d.select(col("doc_id").cast("string").as("doc_id"), textSpans(text, media: _*).as("spans"))
+
+  /** The contract span array: one text span at offset 0 holding `text`,
+    * then the `media` spans. Also the input of the kernel's text
+    * functions (`sgml_spans`, `sgml_xpath`). */
+  private[graft] def textSpans(text: Column, media: Column*): Column = {
     val textSpan = struct(lit("text").as("kind"), text.as("text"),
       lit(null).cast("string").as("media_ref"), lit(0).as("offset"))
-    d.select(col("doc_id").cast("string").as("doc_id"),
-      array(textSpan +: media: _*).as("spans"))
+    array(textSpan +: media: _*)
   }
 
   // Wrapper constants, shared between the synthetic-markup wrappers below
@@ -162,7 +169,7 @@ object SgmlExtract {
     * reader. The result has the fields of `Extracted`; typed callers
     * write `extractDf(df, cfg).as[Extracted]`. */
   def extractDf(df: DataFrame, config: Config): DataFrame =
-    parseDf(df, "extract_spans", config, "spans")
+    parseDf(df, config, ExtractSpansExpr.Spans, "spans")
 
   /** Serialization sink (SURVEY.md §2.8 W1/W5): each doc written back as
     * canonical XML (attributes name-sorted, no self-closing elements —
@@ -172,41 +179,30 @@ object SgmlExtract {
     * the round-trip conformance query (x5) and by downstream consumers
     * that want markup, not spans. */
   def serializeCanonical(docs: DataFrame, config: Config): DataFrame =
-    parseDf(docs, "sgml_canonical", config, "xml_out")
+    parseDf(docs, config, ExtractSpansExpr.Canonical, "xml_out")
 
-  /** `doc_id`, the first field of the kernel function `fn` over `spans`
-    * named `out`, then `errors` — one kernel expression per row. */
-  private[graft] def parseDf(df: DataFrame, fn: String, config: Config,
-      out: String): DataFrame =
-    df.select(col("doc_id"), extractCol(df.sparkSession, fn, config).as("r"))
+  /** `doc_id`, the `projection` of the kernel over `spans` named `out`,
+    * then `errors` — one kernel expression per row. */
+  private[graft] def parseDf(df: DataFrame, config: Config,
+      projection: ExtractSpansExpr.Projection, out: String): DataFrame =
+    df.select(col("doc_id"), kernel(col("spans"), config, projection).as("r"))
       .select(col("doc_id"), col("r.*")).toDF("doc_id", out, "errors")
 
-  /** `fn(spans, …)` for a kernel function over contract spans
-    * (`extract_spans`, `sgml_canonical`, `sgml_table_cells`) with every
-    * `Config` field as a literal argument (the expression node itself
-    * cannot be wrapped in a Column from outside `org.apache.spark.sql`).
-    * Dialect and space are checked against their known names first, so
-    * only those reach the SQL text. */
-  private[graft] def extractCol(spark: SparkSession, fn: String, config: Config): Column = {
+  /** The kernel expression over contract `spans` as a Column:
+    * `struct<projection field, errors>`. The config is checked here, on
+    * the driver, so an unknown dialect or space fails before any plan. */
+  private[graft] def kernel(spans: Column, config: Config,
+      projection: ExtractSpansExpr.Projection = ExtractSpansExpr.Spans): Column = {
     config.toParserConfig
-    kernelCol(spark, s"$fn(spans, '${config.dialect}', '${config.space}', " +
-      s"${config.boilerplate}, ${config.maxErrors}, ${config.maxDocChars})")
-  }
-
-  /** A SQL expression over the kernel functions
-    * (`ExtractSpansExpr.functions`), registered on the session if absent
-    * (`register` adds all of them at once, so one name tells). */
-  private[graft] def kernelCol(spark: SparkSession, sql: String): Column = {
-    if (!spark.catalog.functionExists("sgml_xpath"))
-      graft.functions.ExtractSpansExpr.register(spark)
-    expr(sql)
+    Catalyst.column(ExtractSpansExpr(Catalyst.expression(spans), config, projection))
   }
 
   /** SQL surface: the kernel functions (`extract_spans`, `sgml_spans`,
     * `sgml_canonical`, `sgml_table_cells`, `sgml_xpath` — SURVEY.md §2.7
-    * UDF surface, §2.4 Q1-Q9) and `pwp_render`. */
+    * UDF surface, §2.4 Q1-Q9), `bucket_collect` and `pwp_render`. The
+    * library's own calls never need it. */
   def registerUdfs(spark: SparkSession): Unit = {
-    graft.functions.ExtractSpansExpr.register(spark)
+    ExtractSpansExpr.register(spark)
     // PWP template rendering with scalar bindings (SURVEY.md §2.5; the
     // row-set pwp:ask form needs nested columns — graft.ops.PwpOps.render)
     val pwp = (template: String, scalars: Map[String, String]) =>

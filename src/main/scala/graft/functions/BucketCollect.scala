@@ -2,10 +2,8 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -78,11 +76,4 @@ object BucketCollect {
     case Seq(x, Literal(cap: java.lang.Integer, IntegerType)) if cap >= 0 => BucketCollect(x, cap)
     case _ => throw new IllegalArgumentException("bucket_collect(x, cap): cap is a non-negative int literal")
   }
-
-  val info: ExpressionInfo = new ExpressionInfo(classOf[BucketCollect].getName, "bucket_collect")
-
-  /** Late registration on an existing session, as `ExtractSpansExpr.register`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bucket_collect"), info, fromArgs _)
 }

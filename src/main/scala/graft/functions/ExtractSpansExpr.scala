@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.graft.Catalyst
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, CreateNamedStruct, Expression, ExpressionInfo, GetStructField, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, GetArrayItem, GetStructField, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -110,7 +111,7 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
 
   // a failed parse: the projection's empty value and one internal-error
   private def errorRow(detail: String): InternalRow =
-    new GenericInternalRow(Array[Any](projection.failed,
+    new GenericInternalRow(Array[Any](projection.failed(cfg),
       errRows(Vector(ParseErr("internal-error", 0, detail)))))
 
   override protected def withNewChildInternal(newChild: Expression): ExtractSpansExpr =
@@ -127,11 +128,12 @@ object ExtractSpansExpr {
 
   /** What a finished parse becomes: the first field of the output
     * struct, `field`, of the SQL function `name`, and that field's value
-    * when the parse failed. */
+    * when the parse failed — by default the projection of an empty
+    * document. */
   sealed abstract class Projection(val name: String, val field: StructField)
       extends Serializable {
     def apply(r: ParseResult, cfg: ParserConfig): Any
-    def failed: Any = new GenericArrayData(Array.empty[Any])
+    def failed(cfg: ParserConfig): Any = apply(ParseResult(Vector.empty, Vector.empty), cfg)
   }
 
   /** `extract_spans`: the span sequence. */
@@ -158,7 +160,7 @@ object ExtractSpansExpr {
   case object Canonical extends Projection("sgml_canonical", StructField("xml", StringType)) {
     def apply(r: ParseResult, cfg: ParserConfig): Any =
       UTF8String.fromString(Serializer.xml(r.content, canonical = true))
-    override def failed: Any = null
+    override def failed(cfg: ParserConfig): Any = null
   }
 
   /** `sgml_table_cells`: one row per table cell (TableOps.cellsOf). */
@@ -167,12 +169,16 @@ object ExtractSpansExpr {
     def apply(r: ParseResult, cfg: ParserConfig): Any = TableOps.cellsOf(r)
   }
 
-  /** `sgml_xpath`: every solution of an xpath.pl-style spec, in document
-    * order. */
-  final case class XPath(path: XPathSpec.Path)
-      extends Projection("sgml_xpath", StructField("solutions", ArrayType(StringType))) {
-    def apply(r: ParseResult, cfg: ParserConfig): Any = new GenericArrayData(
-      XPathSpec.evalStrings(r.content, path).map(UTF8String.fromString).toArray[Any])
+  /** `sgml_xpath`: every solution of each xpath.pl-style spec, in
+    * document order — one solution array per spec, all from one parse.
+    * Each spec is parsed here, once, so a malformed one fails analysis
+    * with its parse message. */
+  final case class XPath(specs: Seq[String]) extends Projection("sgml_xpath",
+      StructField("solutions", ArrayType(ArrayType(StringType)))) {
+    private val paths = specs.map(spec => XPathSpec.parse(spec).fold(
+      e => throw new IllegalArgumentException(s"sgml_xpath: spec '$spec': $e"), identity))
+    def apply(r: ParseResult, cfg: ParserConfig): Any = new GenericArrayData(paths.map(p =>
+      new GenericArrayData(XPathSpec.evalStrings(r.content, p).map(UTF8String.fromString).toArray[Any])).toArray[Any])
   }
 
   private def errRows(errors: Vector[ParseErr]): ArrayData =
@@ -208,11 +214,10 @@ object ExtractSpansExpr {
     ExtractSpansExpr(args.head, config, projection)
   }
 
-  /** A contract span array holding `text` as one text span at offset 0. */
-  private def oneTextSpan(text: Expression): Expression =
-    CreateArray(Seq(CreateNamedStruct(Seq(
-      Literal("kind"), Literal("text"), Literal("text"), Cast(text, StringType),
-      Literal("media_ref"), Literal(null, StringType), Literal("offset"), Literal(0)))))
+  /** The contract span array of one text span holding `text`, built by
+    * the contract's own writer (`SgmlExtract.textSpans`). */
+  private def spansOf(text: Expression): Expression =
+    Catalyst.expression(SgmlExtract.textSpans(Catalyst.column(Cast(text, StringType))))
 
   /** `sgml_spans(text[, dialect[, space]])`: `extract_spans` over a
     * one-text-span array, its `.spans`. Dialect and space are literals
@@ -221,38 +226,39 @@ object ExtractSpansExpr {
   def spansOfText(args: Seq[Expression]): Expression = {
     if (args.isEmpty || args.length > 3) throw new IllegalArgumentException(
       "sgml_spans(text[, dialect[, space]]) takes 1-3 arguments")
-    GetStructField(fromArgs(oneTextSpan(args.head) +: args.tail, Spans), 0)
+    GetStructField(fromArgs(spansOf(args.head) +: args.tail, Spans), 0)
   }
 
   /** `sgml_xpath(text, spec, dialect)`: the solutions of an xpath.pl-style
-    * spec over `text` parsed with space `preserve`. Spec and dialect are
-    * literals; the spec is parsed here, once, so a malformed one fails
-    * analysis with the parse message. */
+    * spec over `text` parsed with space `preserve` — the one solution
+    * array of an `XPath` projection of one spec. Spec and dialect are
+    * literals. */
   def xpathOfText(args: Seq[Expression]): Expression = {
     if (args.length != 3) throw new IllegalArgumentException(
       "sgml_xpath(text, spec, dialect) takes 3 arguments")
-    val spec = literal[String](args(1), StringType, "sgml_xpath", "spec")
-    val path = XPathSpec.parse(spec).fold(
-      e => throw new IllegalArgumentException(s"sgml_xpath: spec '$spec': $e"), identity)
-    GetStructField(
-      fromArgs(Seq(oneTextSpan(args.head), args(2), Literal("preserve")), XPath(path)), 0)
+    val xpath = XPath(Seq(literal[String](args(1), StringType, "sgml_xpath", "spec")))
+    GetArrayItem(GetStructField(
+      fromArgs(Seq(spansOf(args.head), args(2), Literal("preserve")), xpath), 0), Literal(0))
   }
 
-  /** The function-registry entries of the kernel, shared by `register`
-    * and GraftExtensions. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq[(String, Seq[Expression] => Expression)](
-      Spans.name -> (fromArgs(_, Spans)),
-      "sgml_spans" -> spansOfText,
-      Canonical.name -> (fromArgs(_, Canonical)),
-      Cells.name -> (fromArgs(_, Cells)),
-      "sgml_xpath" -> xpathOfText
-    ).map { case (name, builder) =>
-      (FunctionIdentifier(name), new ExpressionInfo(classOf[ExtractSpansExpr].getName, name), builder)
+  /** The function-registry entries of the kernel and `bucket_collect`,
+    * shared by `register` and GraftExtensions. Lazy: the projections'
+    * own initialization reads this object's span types. */
+  lazy val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      (Spans.name, classOf[ExtractSpansExpr], fromArgs(_, Spans)),
+      ("sgml_spans", classOf[ExtractSpansExpr], spansOfText),
+      (Canonical.name, classOf[ExtractSpansExpr], fromArgs(_, Canonical)),
+      (Cells.name, classOf[ExtractSpansExpr], fromArgs(_, Cells)),
+      ("sgml_xpath", classOf[ExtractSpansExpr], xpathOfText),
+      ("bucket_collect", classOf[BucketCollect], BucketCollect.fromArgs)
+    ).map { case (name, cls, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
     }
 
-  /** Late registration on an existing session (tests / REPL convenience;
-    * production sessions use `spark.sql.extensions=graft.GraftExtensions`). */
+  /** Late registration on an existing session (tests / REPL / SQL users;
+    * production sessions use `spark.sql.extensions=graft.GraftExtensions`).
+    * Library calls build their nodes directly and never register. */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
@@ -262,9 +268,6 @@ object ExtractSpansExpr {
 /** `SparkSessionExtensions` entry point — enable with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
+  override def apply(e: SparkSessionExtensions): Unit =
     ExtractSpansExpr.functions.foreach(e.injectFunction)
-    e.injectFunction((FunctionIdentifier("bucket_collect"),
-      BucketCollect.info, BucketCollect.fromArgs _))
-  }
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst
+import graft.functions.BucketCollect
 
 /** Deduplication operators for the training-data pipeline, in increasing
   * fuzziness: exact (hash groupBy), MinHash+LSH (shingle → minhash → band
@@ -57,10 +59,8 @@ object Dedup {
     * At cap = Int.MaxValue this is collect_list plus a count. */
   private[graft] def buckets(banded: DataFrame, keyCols: Seq[String], item: Column,
       cap: Int): DataFrame = {
-    if (!banded.sparkSession.catalog.functionExists("bucket_collect"))
-      graft.functions.BucketCollect.register(banded.sparkSession)
     banded.groupBy(keyCols.map(col): _*)
-      .agg(call_function("bucket_collect", item, lit(cap)).as("b"))
+      .agg(Catalyst.column(BucketCollect(Catalyst.expression(item), cap).toAggregateExpression()).as("b"))
       .select(keyCols.map(col) :+ col("b.n").as("n") :+ col("b.items").as("items"): _*)
       .filter(col("n") >= 2)
   }

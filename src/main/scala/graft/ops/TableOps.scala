@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.SgmlExtract
+import graft.functions.ExtractSpansExpr
 import graft.sgml.{Node, ParseResult}
 import scala.collection.mutable
 
@@ -49,7 +50,7 @@ object TableOps {
     * tbl_idx in pre-order. Media spans are fed like `extractDf` feeds
     * them; a media node is no text, so it adds nothing to a cell. */
   def tableCells(docs: DataFrame, config: SgmlExtract.Config = SgmlExtract.Config()): DataFrame =
-    SgmlExtract.parseDf(docs, "sgml_table_cells", config, "cells")
+    SgmlExtract.parseDf(docs, config, ExtractSpansExpr.Cells, "cells")
 
   /** The element type of `cells`; `cellsOf` builds its rows. */
   private[graft] val CellType: StructType = StructType(Seq(

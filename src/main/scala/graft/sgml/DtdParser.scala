@@ -18,7 +18,7 @@ object DtdParser {
     * `<!ELEMENT>` logs `dtd-nesting`, the rest of its declaration is
     * skipped and its content is ANY — which also bounds the recursion of
     * `Dfa.compile` over the model. */
-  private val MaxGroupDepth = 256
+  private[sgml] val MaxGroupDepth = 256
 
   private object GroupTooDeep extends scala.util.control.ControlThrowable
 

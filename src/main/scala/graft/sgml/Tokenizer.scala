@@ -175,9 +175,14 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
       case S_MS_CDATA | S_MS_CB1 | S_MS_CB2 =>
         log.add("eof-in-cdata-section", pos, "")
         if (rawBuf.length > 0) sink(Event.Text(rawBuf.toString, raw = true, rawStart))
-      case S_COM | S_COM_D | S_COM_DD | S_COM_D1 =>
-        log.add("eof-in-comment", pos, "")
-      case S_PI | S_PI_Q => log.add("eof-in-pi", pos, "")
+      // comments, PIs, ignored sections and a bare `<` do not flush the
+      // text before them, so a document cut inside one flushes it here
+      case S_COM | S_COM_D | S_COM_DD | S_COM_D1 => log.add("eof-in-comment", pos, ""); flushText()
+      case S_PI | S_PI_Q => log.add("eof-in-pi", pos, ""); flushText()
+      case S_MS_KW | S_MS_IGNORE | S_MS_IG_LT | S_MS_IG_LTB | S_MS_IG_B1 | S_MS_IG_B2 =>
+        log.add("eof-in-marked-section", pos, ""); flushText()
+      // a bare `<` or `<!`: no tag name yet, nothing to open
+      case S_LT | S_BANG => log.add("eof-in-tag", pos, ""); flushText()
       case S_DECL => log.add("eof-in-declaration", pos, "")
       case S_TEXT_B1 | S_TEXT_B2 => flushText()
       case S_ENT | S_ENT_NUM => log.add("eof-in-entity", pos, entBuf.toString)

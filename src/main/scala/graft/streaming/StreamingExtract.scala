@@ -70,9 +70,7 @@ object StreamingExtract {
     val incompleteErr = struct(lit("incomplete-doc").as("code"), lit(0).as("offset"),
       col("incomplete").as("detail"))
     assemble(chunks, timeoutMs)
-      .select(col("doc_id"),
-        SgmlExtract.extractCol(chunks.sparkSession, "extract_spans", cfg).as("r"),
-        col("incomplete"))
+      .select(col("doc_id"), SgmlExtract.kernel(col("spans"), cfg).as("r"), col("incomplete"))
       .select(col("doc_id"), col("r.spans").as("spans"),
         when(col("incomplete").isNull, col("r.errors"))
           .otherwise(array_append(col("r.errors"), incompleteErr)).as("errors"))

@@ -52,6 +52,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       exprd.schema.map(f => (f.name, f.dataType)))
     assert(exprd.count() === 500)
     // SQL surface via the registered function
+    graft.functions.ExtractSpansExpr.register(spark)
     docs.toDF().createOrReplaceTempView("docs_v")
     val viaSql = spark.sql(
       "SELECT doc_id, extract_spans(spans, 'html4', 'preserve').spans AS spans FROM docs_v")
@@ -208,7 +209,10 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("observed metrics ride the job: docs/spans/errors/chars in one pass") {
     import org.apache.spark.sql.Observation
-    val docs = SgmlExtract.wrapDocumentsMarked(spark, sf)
+    // an Observation's listener outlives its query on its session (it
+    // re-throws a later query's failure into the listener bus), so it
+    // gets a session of its own
+    val docs = SgmlExtract.wrapDocumentsMarked(spark.newSession(), sf)
     val obs = Observation("graft")
     val out = SgmlExtract.withObservedMetrics(
       SgmlExtract.extractDf(docs.toDF(), cfg), obs)
@@ -377,6 +381,55 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val column = intercept[Exception](spark.sql(
       "SELECT sgml_xpath(m, s, 'xml') FROM (SELECT '<a/>' AS m, 'a' AS s)").collect())
     assert(column.getMessage.contains("spec must be a string literal"), column.getMessage)
+  }
+
+  test("library calls build their kernel nodes: a fresh session stays unregistered") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    import graft.functions.{BucketCollect, ExtractSpansExpr}
+    import graft.ops.{TableOps, XPathOps}
+    val fresh = spark.newSession()
+    val names = ExtractSpansExpr.functions.map(_._1.funcName).toSet
+    def registered = Seq("extract_spans", "bucket_collect").filter(fresh.catalog.functionExists)
+    assert(registered.isEmpty)
+    val docs = SgmlExtract.wrapDocuments(fresh, sf)
+    val banded = fresh.range(100).select(col("id"), (col("id") % 7).as("k"))
+    val calls: Seq[(String, DataFrame, Class[_])] = Seq(
+      ("extractDf", SgmlExtract.extractDf(docs, cfg), classOf[ExtractSpansExpr]),
+      ("serializeCanonical", SgmlExtract.serializeCanonical(docs, cfg), classOf[ExtractSpansExpr]),
+      ("tableCells", TableOps.tableCells(docs, cfg), classOf[ExtractSpansExpr]),
+      ("xq5", XPathOps.specInterpreter(fresh.read.parquet(s"$sf/nation.parquet")),
+        classOf[ExtractSpansExpr]),
+      ("Dedup.buckets", Dedup.buckets(banded, Seq("k"), col("id"), cap = 10), classOf[BucketCollect]))
+    for ((name, df, node) <- calls) {
+      val logical = df.queryExecution.logical
+      val exprs = logical.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(exprs.exists(node.isInstance), s"$name: $logical")
+      assert(!exprs.exists {
+        case f: UnresolvedFunction => names.contains(f.nameParts.last); case _ => false
+      }, s"$name: $logical")
+      assert(df.collect().nonEmpty, name)
+      assert(registered.isEmpty, name)
+    }
+  }
+
+  test("xq5 parses each region doc once: one kernel expression, rows as the window query") {
+    import spark.implicits._
+    import graft.functions.ExtractSpansExpr
+    import graft.ops.XPathOps
+    val nation = spark.read.parquet(s"$sf/nation.parquet")
+    val xq5 = XPathOps.specInterpreter(nation)
+    val kernels = xq5.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case e: ExtractSpansExpr => e }))
+    assert(kernels.length === 1, xq5.queryExecution.optimizedPlan)
+    val firstKey = nation.groupBy(col("n_regionkey").as("region_key"))
+      .agg(min(col("n_nationkey")).cast("long").as("first_key"))
+    val expected = XPathOps.positionalWindow(nation).join(firstKey, "region_key")
+      .select("region_key", "second_nation", "last_nation", "first_key")
+      .as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+    val got = xq5.select("region_key", "second_nation", "last_nation", "first_key")
+      .as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+    assert(got.length === 5 && got === expected)
   }
 
   test("hostile input ends as a code: DTD groups 20,000 deep give dtd-nesting, an entity chain entity-budget") {

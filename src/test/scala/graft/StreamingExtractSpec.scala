@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.sgml.Span
@@ -92,8 +93,10 @@ class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mem = MemoryStream[Chunk](spark)
     mem.addData(Seq(Chunk("X", 0, last = false, "text", "<p>partial", null, 0)))
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt3").toString
+    // paced batches leave idle gaps between them for the stop below
     val q = StreamingExtract.assembleAndExtract(mem.toDS(), cfg, timeoutMs = 300)
       .writeStream.outputMode("append").format("memory")
+      .trigger(Trigger.ProcessingTime("250 milliseconds"))
       .queryName("stream_timeout").option("checkpointLocation", ckpt).start()
     try {
       // with a processing-time timeout the engine schedules no-data
@@ -106,7 +109,13 @@ class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got.head.doc_id === "X")
       assert(got.head.errors.exists(_.code == "incomplete-doc"))
       assert(got.head.spans.map(_.text) === Seq("partial"))
-    } finally q.stop()
+    } finally {
+      // the timeout keeps no-data batches running: stop between two of
+      // them, never while one commits its state
+      val idle = System.currentTimeMillis + 10000
+      while (q.status.isTriggerActive && System.currentTimeMillis < idle) Thread.sleep(5)
+      q.stop()
+    }
   }
 
   test("whole-doc streaming uses the batch kernel unchanged") {
