@@ -10,6 +10,10 @@ Prints four numbers:
 - their parameter slots: the parameters of those defs, every parameter
   list counted.
 
+Then the main figure split by package, so a change's net LoC shows
+where the lines went: graft/sgml (the parse kernel), graft/ops,
+graft/functions, and the rest of src/main/scala.
+
 A line counts as code unless it is blank, a `//` line, or part of a
 `/* ... */` block that starts the line (scaladoc included).
 
@@ -106,18 +110,29 @@ def public_ops(root):
     return defs, slots
 
 
+PACKAGES = ("graft/sgml", "graft/ops", "graft/functions")
+
+
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))
+    per_package = dict.fromkeys(PACKAGES + ("rest",), 0)
     for name in ("main", "test"):
+        top = os.path.join(root, "src", name, "scala")
         total = 0
-        for path in scala_files(os.path.join(root, "src", name, "scala")):
+        for path in scala_files(top):
             with open(path, encoding="utf-8", errors="replace") as f:
-                total += code_lines(f.read())
+                n = code_lines(f.read())
+            total += n
+            if name == "main":
+                pkg = os.path.dirname(os.path.relpath(path, top)).replace(os.sep, "/")
+                per_package[pkg if pkg in PACKAGES else "rest"] += n
         print(f"{name}: {total}")
     defs, slots = public_ops(root)
     print(f"public graft.ops defs: {defs}")
     print(f"public graft.ops parameter slots: {slots}")
+    for pkg, n in per_package.items():
+        print(f"main {pkg}: {n}")
 
 
 if __name__ == "__main__":

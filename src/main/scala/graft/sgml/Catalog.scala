@@ -120,8 +120,7 @@ object Catalog {
 
     /** Upstream lookup order (catalog.c — find_in_catalogue [V]):
       * PUBLIC exact → SYSTEM exact → DOCTYPE by root name. */
-    def resolveExternal(rootName: String, declRest: String,
-        dialect: Dialect): Option[Dtd] = {
+    def resolveExternal(rootName: String, declRest: String): Option[Dtd] = {
       val (pubid, sysid) = parseExternalId(declRest)
       val byPublic = pubid.flatMap(p =>
         entries.collectFirst { case Entry("PUBLIC", k, v) if k == p => v })
@@ -131,7 +130,7 @@ object Catalog {
         case Entry("DOCTYPE", k, v) if k.equalsIgnoreCase(rootName) => v
       }
       byPublic.orElse(bySystem).orElse(byDoctype).flatMap(stored)
-        .orElse(resolveDoctype(rootName, declRest, dialect)) // bundled fallback
+        .orElse(resolveDoctype(rootName)) // bundled fallback
     }
   }
 
@@ -144,16 +143,9 @@ object Catalog {
       Entry("DOCTYPE", "html", "html4.dtd")),
     Map("html4.dtd" -> HtmlDtd.dtd))
 
-  /** Heuristic doctype → bundled DTD match (pre-catalog behavior, kept as
-    * the final fallback so undeclared/unknown HTML ids still resolve). */
-  def resolveDoctype(rootName: String, rest: String, dialect: Dialect): Option[Dtd] = {
-    val root = rootName.toLowerCase
-    val up = rest.toUpperCase
-    val isHtmlPublic =
-      up.contains("//DTD HTML") || up.contains("//DTD XHTML") ||
-      up.contains("HTML.DTD") || up.contains("HTML4")
-    if (root == "html" && (isHtmlPublic || !rest.contains("["))) Some(HtmlDtd.dtd)
-    else if (root == "html") Some(HtmlDtd.dtd)
-    else None
-  }
+  /** Doctype → bundled DTD fallback (pre-catalog behavior): an `html`
+    * root gets the bundled HTML DTD whatever its external id, so
+    * undeclared/unknown HTML ids still resolve. */
+  def resolveDoctype(rootName: String): Option[Dtd] =
+    if (rootName.toLowerCase == "html") Some(HtmlDtd.dtd) else None
 }

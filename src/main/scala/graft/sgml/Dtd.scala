@@ -42,9 +42,9 @@ object ContentKind {
 }
 
 /** Attribute type (`dtd.h — attrtype enum AT_*` [V]). */
-sealed trait AttrType { def tokenized: Boolean = true }
+sealed trait AttrType
 object AttrType {
-  case object TCdata extends AttrType { override def tokenized = false }
+  case object TCdata extends AttrType
   case object TId extends AttrType
   case object TIdRef extends AttrType
   case object TIdRefs extends AttrType

@@ -112,7 +112,7 @@ object DtdParser {
     val errs = Vector.newBuilder[ParseErr]
     def fold(s: String) = if (foldCase) s.toLowerCase else s
     val kw = lx.name().getOrElse("")
-    kw.toUpperCase match {
+    val out = kw.toUpperCase match {
       case "ELEMENT" =>
         val names = elementNames(lx, fold)
         // omission flags: '-' or 'O' twice (SGML); absent in XML decls
@@ -152,7 +152,7 @@ object DtdParser {
             case None => m.updated(k, v)
           }
         }
-        (dtd.copy(elements = merged), errs.result())
+        dtd.copy(elements = merged)
 
       case "ATTLIST" =>
         val names = elementNames(lx, fold)
@@ -174,7 +174,7 @@ object DtdParser {
           m.updated(nm, old.copy(attrs = old.attrs ++ decls.filterNot {
             case (k, _) => old.attrs.contains(k) }))
         }
-        (dtd.copy(elements = els), errs.result())
+        dtd.copy(elements = els)
 
       case "ENTITY" =>
         lx.save()
@@ -183,7 +183,7 @@ object DtdParser {
         lx.name() match {
           case None =>
             errs += ParseErr("bad-entity-declaration", 0, body.take(40))
-            (dtd, errs.result())
+            dtd
           case Some(en) =>
             val value: String = {
               lx.save()
@@ -200,13 +200,8 @@ object DtdParser {
               }
             }
             val v = expandCharRefs(value)
-            if (isParam) {
-              if (dtd.paramEntities.contains(en)) (dtd, errs.result())
-              else (dtd.copy(paramEntities = dtd.paramEntities + (en -> v)), errs.result())
-            } else {
-              if (dtd.entities.contains(en)) (dtd, errs.result())
-              else (dtd.copy(entities = dtd.entities + (en -> v)), errs.result())
-            }
+            if (isParam) firstWins(dtd.paramEntities, en, v).fold(dtd)(m => dtd.copy(paramEntities = m))
+            else firstWins(dtd.entities, en, v).fold(dtd)(m => dtd.copy(entities = m))
         }
 
       case "SHORTREF" =>
@@ -214,7 +209,7 @@ object DtdParser {
         lx.name() match {
           case None =>
             errs += ParseErr("bad-shortref-declaration", 0, body.take(40))
-            (dtd, errs.result())
+            dtd
           case Some(mn0) =>
             val mn = fold(mn0)
             val pairs = mutable.ListBuffer.empty[(String, String)]
@@ -230,10 +225,7 @@ object DtdParser {
                 case None => go = false
               }
             }
-            // first declaration wins, like the other SGML declarations
-            if (dtd.shortrefs.contains(mn)) (dtd, errs.result())
-            else (dtd.copy(shortrefs = dtd.shortrefs + (mn -> pairs.toList)),
-              errs.result())
+            firstWins(dtd.shortrefs, mn, pairs.toList).fold(dtd)(m => dtd.copy(shortrefs = m))
         }
 
       case "USEMAP" =>
@@ -246,23 +238,27 @@ object DtdParser {
         mapName match {
           case None =>
             errs += ParseErr("bad-usemap-declaration", 0, body.take(40))
-            (dtd, errs.result())
+            dtd
           case Some(mn) =>
-            val els = elementNames(lx, fold)
-            val um = els.foldLeft(dtd.useMaps) { (m, el) =>
-              if (m.contains(el)) m else m.updated(el, mn)
+            val um = elementNames(lx, fold).foldLeft(dtd.useMaps) { (m, el) =>
+              firstWins(m, el, mn).getOrElse(m)
             }
-            (dtd.copy(useMaps = um), errs.result())
+            dtd.copy(useMaps = um)
         }
 
-      case "NOTATION" =>
-        (dtd, errs.result()) // notation identifiers carry no parse behavior
+      case "NOTATION" => dtd // notation identifiers carry no parse behavior
 
       case other =>
         errs += ParseErr("unknown-declaration", 0, other)
-        (dtd, errs.result())
+        dtd
     }
+    (out, errs.result())
   }
+
+  /** SGML keeps the FIRST declaration of a name: `m` with `k -> v` added,
+    * or None when `k` is already declared. */
+  private def firstWins[V](m: Map[String, V], k: String, v: V): Option[Map[String, V]] =
+    if (m.contains(k)) None else Some(m.updated(k, v))
 
   // `name | (a|b|c)` element-name target of ELEMENT/ATTLIST
   private def elementNames(lx: Lex, fold: String => String): List[String] =

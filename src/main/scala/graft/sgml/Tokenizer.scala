@@ -11,8 +11,8 @@ package graft.sgml
   * text+media inputs and chunked feeds work.
   *
   * No regex, no token materialization, one reusable StringBuilder per
-  * buffer: allocation-light for the Spark `mapPartitions` hot loop
-  * (SURVEY.md §4).
+  * buffer: allocation-light for the per-row loop of the `extract_spans`
+  * Catalyst expression (`graft.functions.ExtractSpansExpr`; SURVEY.md §4).
   */
 final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit, log: ErrorLog) {
 
@@ -166,21 +166,21 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
 
   /** End of document: flush buffers, report truncation errors. */
   def finish(): Unit = {
+    var inSection = msDepth > 0 // an INCLUDE, TEMP or RCDATA section is open
     state match {
       case S_TEXT => srProcess(); flushText()
       case S_RAW | S_RAW_LT | S_RAW_ET | S_RAW_ET_SP =>
         log.add("eof-in-cdata-element", pos, rawEndTag)
-        if (rawBuf.length > 0)
-          sink(Event.Text(rawBuf.toString, rawIsCdata, rawStart))
+        if (rawBuf.length > 0) flushRaw()
       case S_MS_CDATA | S_MS_CB1 | S_MS_CB2 =>
-        log.add("eof-in-cdata-section", pos, "")
-        if (rawBuf.length > 0) sink(Event.Text(rawBuf.toString, raw = true, rawStart))
+        if (rawIsCdata) log.add("eof-in-cdata-section", pos, "")
+        if (rawBuf.length > 0) flushRaw()
       // comments, PIs, ignored sections and a bare `<` do not flush the
       // text before them, so a document cut inside one flushes it here
       case S_COM | S_COM_D | S_COM_DD | S_COM_D1 => log.add("eof-in-comment", pos, ""); flushText()
       case S_PI | S_PI_Q => log.add("eof-in-pi", pos, ""); flushText()
       case S_MS_KW | S_MS_IGNORE | S_MS_IG_LT | S_MS_IG_LTB | S_MS_IG_B1 | S_MS_IG_B2 =>
-        log.add("eof-in-marked-section", pos, ""); flushText()
+        inSection = true; flushText()
       // a bare `<` or `<!`: no tag name yet, nothing to open
       case S_LT | S_BANG => log.add("eof-in-tag", pos, ""); flushText()
       case S_DECL => log.add("eof-in-declaration", pos, "")
@@ -190,6 +190,7 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
         log.add("eof-in-tag", pos, nameBuf.toString)
         if (nameBuf.length > 0 && state != S_ETAG && state != S_ETAGNAME) finishOpen(false)
     }
+    if (inSection) log.add("eof-in-marked-section", pos, "")
     state = S_TEXT
   }
 
@@ -240,16 +241,16 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
         srProcess(); flushText(); sink(Event.Close("", pos)); netDepth -= 1
       }
       else if (c == ']' && msDepth > 0) state = S_TEXT_B1
-      else appendText(c)
+      else appendText(c, pos)
 
     case S_TEXT_B1 =>
       if (c == ']') state = S_TEXT_B2
-      else { appendText(']'); state = S_TEXT; step(c) }
+      else { appendText(']', pos); state = S_TEXT; step(c) }
 
     case S_TEXT_B2 =>
       if (c == '>') { msDepth -= 1; state = S_TEXT }
-      else if (c == ']') appendText(']') // sliding ]]]>
-      else { appendText(']'); appendText(']'); state = S_TEXT; step(c) }
+      else if (c == ']') appendText(']', pos) // sliding ]]]>
+      else { appendText("]]", pos); state = S_TEXT; step(c) }
 
     case S_LT =>
       if (c == '/') { nameBuf.setLength(0); state = S_ETAGNAME }
@@ -262,7 +263,7 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
         state = S_STAGNAME
       } else {
         if (xml) log.add("unexpected-lt", tagStart, c.toString)
-        appendTextAt('<', tagStart)
+        appendText('<', tagStart)
         state = S_TEXT
         step(c)
       }
@@ -356,25 +357,13 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
       if (c == '-') state = S_COM_D1
       else if (c == '[') { msKw.setLength(0); state = S_MS_KW }
       else if (c == '>') state = S_TEXT // empty <!>
-      else {
-        flushText()
-        declBuf.setLength(0); declStart = tagStart
-        declQuote = 0; declBracket = 0
-        state = S_DECL
-        step(c)
-      }
+      else startDecl("", c)
 
     case S_COM_D1 =>
       // NB: comments are invisible markup — the text buffer is NOT flushed,
       // so `a<!-- c -->b` stays one contiguous text node.
       if (c == '-') state = S_COM
-      else { // bogus comment `<!-x`: treat as declaration text
-        flushText()
-        declBuf.setLength(0); declBuf.append('-')
-        declStart = tagStart; declQuote = 0; declBracket = 0
-        state = S_DECL
-        step(c)
-      }
+      else startDecl("-", c) // bogus comment `<!-x`: declaration text
 
     case S_COM =>
       if (c == '-') state = S_COM_D
@@ -408,10 +397,13 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
     case S_MS_KW =>
       if (c == '[') {
         val kw = msKw.toString.trim.toUpperCase
+        // XML allows CDATA sections only; the content is handled as in SGML
+        if (xml && kw != "CDATA") log.add("marked-section-in-xml", tagStart, kw)
         kw match {
-          case "CDATA" =>
+          case "CDATA" | "RCDATA" => // character data up to `]]>`
             flushText()
-            rawBuf.setLength(0); rawStart = pos + 1; rawIsCdata = true
+            rawBuf.setLength(0); rawStart = pos + 1; rawIsCdata = kw == "CDATA"
+            if (!rawIsCdata) msDepth += 1
             state = S_MS_CDATA
           case "IGNORE" =>
             msIgnoreDepth = 1; state = S_MS_IGNORE
@@ -420,8 +412,10 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
         }
       } else msKw.append(c)
 
-    case S_MS_CDATA =>
-      if (c == ']') state = S_MS_CB1 else rawBuf.append(c)
+    case S_MS_CDATA => // an RCDATA section expands entity references
+      if (c == ']') state = S_MS_CB1
+      else if (!rawIsCdata && c == '&') startEntity(S_MS_CDATA)
+      else rawBuf.append(c)
 
     case S_MS_CB1 =>
       if (c == ']') state = S_MS_CB2
@@ -429,8 +423,8 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
 
     case S_MS_CB2 =>
       if (c == '>') {
-        sink(Event.Text(rawBuf.toString, raw = true, rawStart))
-        state = S_TEXT
+        if (!rawIsCdata) msDepth -= 1
+        flushRaw(); state = S_TEXT
       }
       else if (c == ']') rawBuf.append(']') // sliding
       else { rawBuf.append(']'); rawBuf.append(']'); state = S_MS_CDATA; step(c) }
@@ -494,7 +488,7 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
 
     case S_RAW_ET_SP =>
       if (c == '>') {
-        finishRaw()
+        flushRaw()
         sink(Event.Close(rawEndTag, rawLtPos))
         state = S_TEXT
       }
@@ -526,17 +520,16 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
 
   // ------------------------------------------------------------- helpers
 
-  private def appendText(c: Char): Unit = appendTextAt(c, pos)
-
-  private def appendTextAt(c: Char, off: Int): Unit = {
+  /** Add to the pending text run; `off` becomes the run's offset when the
+    * run is empty. */
+  private def appendText(c: Char, off: Int): Unit = {
     if (textBuf.length() == 0) textStart = off
     textBuf.append(c)
   }
 
-  private def appendTextStr(s: String, off: Int): Unit = {
-    if (s.isEmpty) return
-    if (textBuf.length() == 0) textStart = off
-    textBuf.append(s)
+  private def appendText(s: String, off: Int): Unit = {
+    var i = 0
+    while (i < s.length) { appendText(s.charAt(i), off); i += 1 }
   }
 
   private def flushText(): Unit = {
@@ -606,11 +599,21 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
     state = S_TEXT
   }
 
-  private def finishRaw(): Unit = {
-    // raw=false for RCDATA (ordinary text after entity expansion),
-    // raw=true for declared CDATA (script/style) — FIXTURES F7
+  /** Emit the raw-content buffer: raw=true for CDATA (sections and
+    * script/style), raw=false for RCDATA (ordinary text after entity
+    * expansion) — FIXTURES F7. */
+  private def flushRaw(): Unit = {
     sink(Event.Text(rawBuf.toString, rawIsCdata, rawStart))
     rawBuf.setLength(0)
+  }
+
+  /** `<!` opened a declaration: buffer it from `prefix` and `c` on. */
+  private def startDecl(prefix: String, c: Char): Unit = {
+    flushText()
+    declBuf.setLength(0); declBuf.append(prefix)
+    declStart = tagStart; declQuote = 0; declBracket = 0
+    state = S_DECL
+    step(c)
   }
 
   private def bailRawEtag(c: Char): Unit = {
@@ -628,8 +631,8 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
 
   /** Append expanded entity text into whatever context we came from. */
   private def entAppend(s: String): Unit = entReturn match {
-    case S_TEXT  => appendTextStr(s, entStart)
-    case S_RAW   => rawBuf.append(s)
+    case S_TEXT  => appendText(s, entStart)
+    case S_RAW | S_MS_CDATA => rawBuf.append(s)
     case _       => attrVal.append(s) // S_AVALQ / S_AVALU
   }
 
@@ -639,27 +642,33 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
     if (!terminated && xml) {
       log.add("entity-missing-semicolon", entStart, name)
       entAppend("&" + name)
-      return
-    }
-    val dtdEnt = holder.dtd.entities.get(name)
-    dtdEnt match {
-      case Some(repl) if entReturn == S_TEXT =>
-        // SGML replacement text: re-tokenized (may contain markup)
-        inject(repl)
-      case Some(repl) =>
-        entAppend(repl)
-      case None =>
-        Entities.resolve(name, cfg.dialect, holder.dtd) match {
-          case Some(t) => entAppend(t)
-          case None =>
-            log.add("undeclared-entity", entStart, name)
-            if (terminated && entReturn == S_TEXT) {
-              srProcess(); flushText()
-              sink(Event.EntityRef(name, entStart))
-            } else entAppend("&" + name + (if (terminated) ";" else ""))
-        }
-    }
+    } else if (entReturn == S_TEXT) textEntity(name, entStart, terminated)
+    else entAppend(holder.dtd.entities.get(name)
+      .orElse(Entities.resolve(name, cfg.dialect, holder.dtd))
+      .getOrElse {
+        log.add("undeclared-entity", entStart, name)
+        "&" + name + (if (terminated) ";" else "")
+      })
   }
+
+  /** An entity named in PCDATA — by `&name;` or by a SHORTREF delimiter —
+    * at offset `off` (`parser.c — process_entity` [V]): a DTD entity's
+    * replacement text is re-tokenized (it may contain markup), a built-in
+    * expands into the text run, and an undeclared one is an error plus,
+    * when the reference was terminated, an entity-reference node. */
+  private def textEntity(name: String, off: Int, terminated: Boolean): Unit =
+    holder.dtd.entities.get(name) match {
+      case Some(repl) => inject(repl)
+      case None => Entities.resolve(name, cfg.dialect, holder.dtd) match {
+        case Some(t) => appendText(t, off)
+        case None =>
+          log.add("undeclared-entity", off, name)
+          if (terminated) {
+            srProcess(); flushText()
+            sink(Event.EntityRef(name, off))
+          } else appendText("&" + name, off)
+      }
+    }
 
   private def resolveNumeric(terminated: Boolean): Unit = {
     val body = entBuf.toString
@@ -715,31 +724,15 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
         r += 1
       }
       if (best > 0) {
-        if (i > lit) appendTextStr(s.substring(lit, i), start + lit)
-        srExpand(ent, start + i)
+        if (i > lit) appendText(s.substring(lit, i), start + lit)
+        textEntity(ent, start + i, terminated = true)
         i += best
         lit = i
       } else i += 1
     }
-    if (lit < s.length) appendTextStr(s.substring(lit), start + lit)
+    if (lit < s.length) appendText(s.substring(lit), start + lit)
     srLineStart = s.charAt(s.length - 1) == '\n'
     srBusy = false
-  }
-
-  /** Expand the entity a SHORTREF delimiter mapped to — same resolution
-    * order as a `&name;` reference in PCDATA (`parser.c — process_entity`
-    * [V]). */
-  private def srExpand(name: String, off: Int): Unit = {
-    holder.dtd.entities.get(name) match {
-      case Some(repl) => inject(repl) // replacement text re-tokenized
-      case None => Entities.resolve(name, cfg.dialect, holder.dtd) match {
-        case Some(t) => appendTextStr(t, off)
-        case None =>
-          log.add("undeclared-entity", off, name)
-          flushText()
-          sink(Event.EntityRef(name, off))
-      }
-    }
   }
 }
 

@@ -62,12 +62,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
 
   /** Close remaining elements and return the document content. */
   def finish(): IndexedSeq[Node] = {
-    while (stack.size > 1) {
-      val f = top
-      if (f.edef.forall(!_.omitEnd))
-        log.add("unclosed-element", f.off, f.name)
-      popFrame()
-    }
+    closeAbove(0, at = -1)
     scala.collection.immutable.ArraySeq.unsafeWrapArray(
       root.children.toArray(TreeBuilder.NodeTag))
   }
@@ -99,7 +94,8 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
     val name = qualify(rawName, scope, isAttr = false)
 
     // 2. typed attribute values + defaulting (T4/T5)
-    val edef = holder.dtd.element(if (cfg.dialect.namespaces) localOf(rawName) else rawName)
+    val lookup = if (cfg.dialect.namespaces) localOf(rawName) else rawName
+    val edef = holder.dtd.element(lookup)
     val attrs = typedAttrs(rawName, rawAttrs, edef, scope, off)
 
     // 3. structural repair (D3) — may implicitly close/open elements
@@ -116,19 +112,26 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
         (e.conrefAttrs.length > 0 && e.conrefAttrs.exists(n =>
           rawAttrs.exists(ra => localOf(ra.name) == n)))
     }
-    val node = Node.Elem(name, attrs, TreeBuilder.NoChildren, off)
-    if (selfClosing || isEmpty) {
-      addChildNode(node)
-    } else {
-      val preserve = xmlSpaceOf(rawAttrs).getOrElse(top.spacePreserve)
-      val srm = srMapFor(if (cfg.dialect.namespaces) localOf(rawName) else rawName)
-      stack += new Frame(name, attrs, off, edef,
-        edef.flatMap(_.dfa).map(new DfaRun(_)).orNull,
-        mergedSet(top.exclusions, edef.map(_.exclusions).getOrElse(Set.empty)),
-        mergedSet(top.inclusions, edef.map(_.inclusions).getOrElse(Set.empty)),
-        scope, preserve, srm)
-      holder.activeShortrefs = srm
-    }
+    if (selfClosing || isEmpty) addChildNode(Node.Elem(name, attrs, TreeBuilder.NoChildren, off))
+    else pushFrame(name, attrs, off, edef, lookup, scope,
+      xmlSpaceOf(rawAttrs).getOrElse(top.spacePreserve))
+  }
+
+  /** The one element-frame constructor, for present and implied start
+    * tags alike (`parser.c — open_element` [V]): the element's DFA run,
+    * the exception sets merged with the parent's, its namespace scope,
+    * space flag and SHORTREF map (`lookup` is its DTD name). */
+  private def pushFrame(name: String, attrs: List[Attr], off: Int,
+      edef: Option[ElementDef], lookup: String, scope: Map[String, String],
+      preserve: Boolean): Unit = {
+    val parent = top
+    val srm = srMapFor(lookup)
+    stack += new Frame(name, attrs, off, edef,
+      edef.flatMap(_.dfa).map(new DfaRun(_)).orNull,
+      mergedSet(parent.exclusions, edef.map(_.exclusions).getOrElse(Set.empty)),
+      mergedSet(parent.inclusions, edef.map(_.inclusions).getOrElse(Set.empty)),
+      scope, preserve, srm)
+    holder.activeShortrefs = srm
   }
 
   /** SHORTREF map for the content of an element being opened: a USEMAP
@@ -162,16 +165,22 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       log.add("unmatched-end-tag", off, rawName)
       return
     }
-    // close everything above it (D8: explicit error when end-omission is
-    // not declared — FIXTURES F13 unclosed <b> repaired at </p>)
-    while (stack.size - 1 > idx) {
-      val f = top
-      if (f.edef.forall(!_.omitEnd))
-        log.add("unclosed-element", off, f.name)
-      popFrame()
-    }
+    // FIXTURES F13: an unclosed <b> is repaired at </p>
+    closeAbove(idx, at = off)
     popFrame()
   }
+
+  /** Pop every frame above stack index `depth`. D8: each one whose end tag
+    * may not be omitted is an `unclosed-element` error, at offset `at`
+    * (the end tag that closes it), or at its own offset when `at` < 0
+    * (end of document). */
+  private def closeAbove(depth: Int, at: Int): Unit =
+    while (stack.size - 1 > depth) {
+      val f = top
+      if (f.edef.forall(!_.omitEnd))
+        log.add("unclosed-element", if (at < 0) f.off else at, f.name)
+      popFrame()
+    }
 
   private def popFrame(): Unit = {
     val f = stack.remove(stack.size - 1)
@@ -331,15 +340,9 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
   private def impliedOpen(local: String, off: Int): Unit = {
     stepParent(local, off)
     val edef = holder.dtd.element(local)
-    val name = qualify(local, top.nsScope, isAttr = false)
-    val attrs = typedAttrs(local, Nil, edef, top.nsScope, off)
-    val srm = srMapFor(local)
-    stack += new Frame(name, attrs, off, edef,
-      edef.flatMap(_.dfa).map(new DfaRun(_)).orNull,
-      mergedSet(top.exclusions, edef.map(_.exclusions).getOrElse(Set.empty)),
-      mergedSet(top.inclusions, edef.map(_.inclusions).getOrElse(Set.empty)),
-      top.nsScope, top.spacePreserve, srm)
-    holder.activeShortrefs = srm
+    val scope = top.nsScope
+    pushFrame(qualify(local, scope, isAttr = false), typedAttrs(local, Nil, edef, scope, off),
+      off, edef, local, scope, top.spacePreserve)
   }
 
   /** Avoid Set concat allocation in the common no-exceptions case (HTML4:
@@ -368,7 +371,10 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       // `<!DOCTYPE …>\n<root>` drops the separator newline (upstream
       // treats prolog/epilog whitespace as markup separation [V])
       if (wsOnly && stack.size == 1) return
-      if (wsOnly && top.edef.exists(ed => !ed.mixed)) return
+      if (wsOnly && top.edef.exists(ed => !ed.mixed)) {
+        if (cfg.space == SpaceMode.Strict) log.add("whitespace-not-allowed", off, top.name)
+        return
+      }
       if (wsOnly && !acceptsText(top, wsOnly = true) && top.edef.isDefined) return
 
       if (!wsOnly && !acceptsText(top, wsOnly = false)) repairForText(off)
@@ -383,9 +389,6 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
           s = collapseWs(s)
         case _ =>
       }
-      if (cfg.space == SpaceMode.Strict && wsOnly &&
-          top.edef.exists(ed => !ed.mixed))
-        log.add("whitespace-not-allowed", off, top.name)
       if (s.isEmpty) return
     }
 
@@ -500,9 +503,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       case Some(t) =>
         // tokenized types: collapse whitespace; SGML folds token case
         val collapsed = collapseWs(v0)
-        val v = if (cfg.dialect.foldCase && !t.isInstanceOf[TEnum]) collapsed.toLowerCase
-                else if (cfg.dialect.foldCase) collapsed.toLowerCase
-                else collapsed
+        val v = if (cfg.dialect.foldCase) collapsed.toLowerCase else collapsed
         t match {
           case TNumber =>
             if (!v.forall(_.isDigit) || v.isEmpty) {
@@ -567,9 +568,14 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
   private def onDecl(s: String, off: Int): Unit = {
     if (s.startsWith("?")) return // XML declaration — informational only
     val up = s.stripLeading()
-    if (up.regionMatches(true, 0, "DOCTYPE", 0, 7)) {
-      val rest = up.substring(7)
-      val lx = rest.trim
+    def is(kw: String) = up.regionMatches(true, 0, kw, 0, kw.length)
+    // in-instance map (re)binding (T14): `<!USEMAP m>` switches the
+    // current map; with element names it adds associations like a DTD
+    // declaration; `<!USEMAP #EMPTY>` deactivates.
+    val usemap =
+      if (is("USEMAP")) up.substring(6).trim.split("\\s+").filter(_.nonEmpty) else Array.empty[String]
+    if (is("DOCTYPE")) {
+      val lx = up.substring(7).trim
       // root name
       var i = 0
       while (i < lx.length && !lx.charAt(i).isWhitespace && lx.charAt(i) != '[') i += 1
@@ -577,53 +583,39 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       val after = lx.substring(i)
       // external id → catalog (PUBLIC/SYSTEM/DOCTYPE) resolution (S3):
       // the configured TR9401 resolver first, bundled heuristic inside
-      val fromCatalog = cfg.catalog.resolveExternal(rootName, after, cfg.dialect)
-      fromCatalog.foreach(d => holder.dtd = holder.dtd.merge(d))
+      cfg.catalog.resolveExternal(rootName, after).foreach(d => holder.dtd = holder.dtd.merge(d))
       // internal subset
       val lb = after.indexOf('[')
       val rb = after.lastIndexOf(']')
-      if (lb >= 0 && rb > lb) {
-        val subset = after.substring(lb + 1, rb)
-        val (d2, errs) = DtdParser.parseSubset(subset, holder.dtd, cfg.dialect.foldCase)
-        holder.dtd = d2.copy(doctype = Some(
-          if (cfg.dialect.foldCase) rootName.toLowerCase else rootName))
-        errs.foreach(e => log.add(e.code, off, e.detail))
-      } else if (holder.dtd.doctype.isEmpty) {
+      val subset = lb >= 0 && rb > lb
+      if (subset) applyDecl(DtdParser.parseSubset(after.substring(lb + 1, rb), _, cfg.dialect.foldCase), off)
+      if (subset || holder.dtd.doctype.isEmpty)
         holder.dtd = holder.dtd.copy(doctype = Some(
           if (cfg.dialect.foldCase) rootName.toLowerCase else rootName))
-      }
-    } else if (up.regionMatches(true, 0, "USEMAP", 0, 6)) {
-      // in-instance map (re)binding (T14): `<!USEMAP m>` switches the
-      // current map; with element names it adds associations like a DTD
-      // declaration; `<!USEMAP #EMPTY>` deactivates.
-      val toks = up.substring(6).trim.split("\\s+").filter(_.nonEmpty)
-      if (toks.length >= 2) { // association form → regular declaration
-        val (d2, errs) = DtdParser.parseDeclaration(up, holder.dtd, cfg.dialect.foldCase)
-        holder.dtd = d2
-        errs.foreach(e => log.add(e.code, off, e.detail))
-      } else if (toks.length == 1) {
-        val srm =
-          if (toks(0).startsWith("#")) null // #EMPTY
-          else {
-            val mn = if (cfg.dialect.foldCase) toks(0).toLowerCase else toks(0)
-            holder.dtd.compiledShortrefs.getOrElse(mn, {
-              log.add("undeclared-shortref-map", off, toks(0)); top.srMap
-            })
-          }
-        top.srMap = srm
-        holder.activeShortrefs = srm
-      }
-    } else if (up.regionMatches(true, 0, "ELEMENT", 0, 7) ||
-               up.regionMatches(true, 0, "ATTLIST", 0, 7) ||
-               up.regionMatches(true, 0, "ENTITY", 0, 6) ||
-               up.regionMatches(true, 0, "SHORTREF", 0, 8) ||
-               up.regionMatches(true, 0, "NOTATION", 0, 8)) {
+    } else if (usemap.length == 1) {
+      val srm =
+        if (usemap(0).startsWith("#")) null // #EMPTY
+        else {
+          val mn = if (cfg.dialect.foldCase) usemap(0).toLowerCase else usemap(0)
+          holder.dtd.compiledShortrefs.getOrElse(mn, {
+            log.add("undeclared-shortref-map", off, usemap(0)); top.srMap
+          })
+        }
+      top.srMap = srm
+      holder.activeShortrefs = srm
+    } else if (usemap.length >= 2 || TreeBuilder.InstanceDecls.exists(is)) {
       // declarations outside a DOCTYPE (declaration-mode leniency)
-      val (d2, errs) = DtdParser.parseDeclaration(up, holder.dtd, cfg.dialect.foldCase)
-      holder.dtd = d2
-      errs.foreach(e => log.add(e.code, off, e.detail))
+      applyDecl(DtdParser.parseDeclaration(up, _, cfg.dialect.foldCase), off)
     }
     // other declarations ignored
+  }
+
+  /** Run a DTD parse against the current DTD, keep its result and log
+    * its errors at the declaration's offset. */
+  private def applyDecl(parse: Dtd => (Dtd, Vector[ParseErr]), off: Int): Unit = {
+    val (d2, errs) = parse(holder.dtd)
+    holder.dtd = d2
+    errs.foreach(e => log.add(e.code, off, e.detail))
   }
 
   // --------------------------------------------------------------- helpers
@@ -667,6 +659,9 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
 }
 
 object TreeBuilder {
+  /** Declarations applied to the DTD when they appear in the instance. */
+  private val InstanceDecls = Seq("ELEMENT", "ATTLIST", "ENTITY", "SHORTREF", "NOTATION")
+
   /** Shared empty-children instance (EMPTY/self-closing elements). */
   val NoChildren: IndexedSeq[Node] = Vector.empty
 

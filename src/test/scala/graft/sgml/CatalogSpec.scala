@@ -57,17 +57,17 @@ class CatalogSpec extends AnyFunSuite {
     val resolver = Catalog.Resolver(entries, Map("memo.dtd" -> memoDtd))
     // PUBLIC id wins
     val viaPublic = resolver.resolveExternal("memo",
-      "PUBLIC \"-//ACME//DTD Memo//EN\"", Dialect.Sgml)
+      "PUBLIC \"-//ACME//DTD Memo//EN\"")
     assert(viaPublic.exists(_.elements.contains("memo")))
     // SYSTEM id
     val viaSystem = resolver.resolveExternal("memo",
-      "SYSTEM \"http://acme.example/memo.dtd\"", Dialect.Sgml)
+      "SYSTEM \"http://acme.example/memo.dtd\"")
     assert(viaSystem.exists(_.elements.contains("memo")))
     // bare DOCTYPE name, no external id at all
-    val viaDoctype = resolver.resolveExternal("memo", "", Dialect.Sgml)
+    val viaDoctype = resolver.resolveExternal("memo", "")
     assert(viaDoctype.exists(_.elements.contains("memo")))
     // unknown root falls through to None (no bundled match either)
-    assert(resolver.resolveExternal("invoice", "", Dialect.Sgml).isEmpty)
+    assert(resolver.resolveExternal("invoice", "").isEmpty)
   }
 
   test("end-to-end: DOCTYPE PUBLIC id pulls the catalog DTD into the parse") {

@@ -446,6 +446,38 @@ class FixtureSpec extends AnyFunSuite {
     assert(s2.map(_.text).mkString == "ac")
   }
 
+  test("marked sections: RCDATA is character data, entities expand, ]]> ends it") {
+    val c = cfg(Dialect.Sgml)
+    val (s, errs) = SgmlParser.spans("<d>x<![ RCDATA [ y </d> &amp; <b>]]>z</d>", c)
+    assert(kts(s) == Vector(("text", "x y </d> & <b>z", null)))
+    assert(errs.isEmpty)
+    // still open at the end: the end tag inside is text, d stays open
+    val doc = "<d>x<![ RCDATA [ y </d>"
+    val (s2, errs2) = SgmlParser.spans(doc, c)
+    assert(kts(s2) == Vector(("text", "x y </d>", null)))
+    assert(errs2 == Vector(ParseErr("eof-in-marked-section", doc.length, ""),
+      ParseErr("unclosed-element", 0, "d")))
+  }
+
+  test("marked sections: INCLUDE, TEMP or RCDATA open at the end is eof-in-marked-section") {
+    for (kw <- Seq("INCLUDE", "TEMP", "RCDATA")) {
+      val doc = s"<d>a<![ $kw [b&amp;"
+      val (s, errs) = SgmlParser.spans(doc, cfg(Dialect.Sgml))
+      assert(s.map(_.text).mkString == "ab&", kw)
+      assert(errs.contains(ParseErr("eof-in-marked-section", doc.length, "")), kw)
+    }
+  }
+
+  test("marked sections: XML allows only CDATA, other keywords are errors") {
+    val x = cfg(Dialect.Xml)
+    val (s, errs) = SgmlParser.spans(
+      "<d>a<![INCLUDE[b]]><![ IGNORE [c]]><![RCDATA[&amp;<e>]]><![CDATA[f]]></d>", x)
+    assert(kts(s) == Vector(("text", "ab&<e>", null), ("cdata", "f", null)))
+    assert(errs == Vector(ParseErr("marked-section-in-xml", 4, "INCLUDE"),
+      ParseErr("marked-section-in-xml", 19, "IGNORE"),
+      ParseErr("marked-section-in-xml", 35, "RCDATA")))
+  }
+
   test("undeclared entity → entity span + error") {
     val (spans, errs) = SgmlParser.spans("<d>a&unknown;b</d>", cfg(Dialect.Xml))
     assert(kts(spans) == Vector(

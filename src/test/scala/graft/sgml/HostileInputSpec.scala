@@ -51,6 +51,12 @@ class HostileInputSpec extends AnyFunSuite {
         "<![ IGNORE [" -> "eof-in-marked-section", "<?pi " -> "eof-in-pi")
       n <- Gen.choose(0, 3000)
     } yield Case("<d>x" + open + "<d y ]] " * n, code, keeps = "x")),
+    // their content is parsed (RCDATA: as text), so the filler is markup
+    // that logs no error of its own before the end of the document
+    "unclosed INCLUDE / TEMP / RCDATA section" -> (for {
+      kw <- Gen.oneOf("INCLUDE", "TEMP", "RCDATA")
+      n <- Gen.choose(0, 3000)
+    } yield Case(s"<d>x<![ $kw [" + "<d>y ]] &amp; " * n, "eof-in-marked-section", keeps = "x")),
     "document cut after < or <!" -> (for {
       open <- Gen.oneOf("<", "<!")
       n <- Gen.choose(1, 3000)
