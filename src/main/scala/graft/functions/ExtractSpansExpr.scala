@@ -9,11 +9,11 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, GetArrayItem, GetStructField, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BaseGenericInternalRow, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sgml.{ParseDriver, ParseErr, ParseResult, ParserConfig, SgmlParser, Serializer, Span, XPathSpec}
+import graft.sgml.{ParseDriver, ParseErr, ParseResult, ParserConfig, SgmlParser, Serializer, Span, SpanEmitter, SpanSink, XPathSpec}
 import graft.SgmlExtract
 import graft.ops.TableOps
 
@@ -31,10 +31,11 @@ import graft.ops.TableOps
   * is a `CodegenFallback` leaf; everything around it stays in
   * whole-stage codegen.
   *
-  * Every DOM consumer is this one expression: its [[Projection]] turns
-  * the finished parse into the first field of the output (spans,
-  * canonical XML, table cells or xpath solutions); the feed, the driver,
-  * the input check and the `errors` field are shared.
+  * Every parse is this one expression: its [[Projection]] picks what the
+  * parse commits to and turns the finished parse into the first field of
+  * the output — spans straight from a span sink, no tree; canonical XML,
+  * table cells or xpath solutions from the DOM. The feed, the driver, the
+  * input check and the `errors` field are shared.
   *
   * Reference lifecycle mirrored per SURVEY.md §3 E1 (`sgml2pl.c —
   * pl_new_sgml_parser / pl_sgml_parse` [V]) through [[ParseDriver]]: one
@@ -72,16 +73,22 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
 
   @transient private lazy val cfg: ParserConfig = config.toParserConfig
 
-  // One driver per thread: expression instances can be shared across the
-  // tasks of a local-mode executor, and the parser is stateful.
-  @transient private lazy val drivers: ThreadLocal[ParseDriver] =
-    ThreadLocal.withInitial(() => new ParseDriver(cfg))
+  // One kernel per thread: expression instances can be shared across the
+  // tasks of a local-mode executor, and the parser is stateful. The last
+  // caller's kernel is kept in a field, so a row costs a thread compare
+  // instead of a ThreadLocal probe; its fields are final, so another
+  // thread reading it sees a kernel that is not its own, never a torn one.
+  @transient private lazy val kernels: ThreadLocal[Kernel] =
+    ThreadLocal.withInitial(() => projection.kernel(cfg))
+  @transient private var last: Kernel = _
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return null
-    drivers.get()(feed(v.asInstanceOf[ArrayData], _)) { r =>
-      new GenericInternalRow(Array[Any](projection(r, cfg), errRows(r.errors)))
+    var k = last
+    if (k == null || (k.thread ne Thread.currentThread())) { k = kernels.get(); last = k }
+    k.driver(feed(v.asInstanceOf[ArrayData], _)) { r =>
+      new GenericInternalRow(Array[Any](k.value(r), errRows(r.errors)))
     }.fold(errorRow, identity)
   }
 
@@ -119,6 +126,12 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
 }
 
 object ExtractSpansExpr {
+  /** The calling thread's parse for one expression: a driver, and the
+    * field's value of a parse it finished. */
+  private[graft] final class Kernel(val driver: ParseDriver, val value: ParseResult => Any) {
+    val thread: Thread = Thread.currentThread()
+  }
+
   private val MediaKind = UTF8String.fromString("media")
 
   // the element types are the kernel's case classes, so the SQL schema
@@ -134,25 +147,46 @@ object ExtractSpansExpr {
       extends Serializable {
     def apply(r: ParseResult, cfg: ParserConfig): Any
     def failed(cfg: ParserConfig): Any = apply(ParseResult(Vector.empty, Vector.empty), cfg)
+    /** The calling thread's kernel — by default a tree, projected by
+      * `apply`. */
+    private[graft] def kernel(cfg: ParserConfig): Kernel =
+      new Kernel(new ParseDriver(cfg), apply(_, cfg))
   }
 
-  /** `extract_spans`: the span sequence. */
+  /** `extract_spans`: the span sequence, each span a row made when the
+    * parse commits its content to a span sink. */
   case object Spans extends Projection("extract_spans", StructField("spans", ArrayType(SpanType))) {
-    def apply(r: ParseResult, cfg: ParserConfig): Any = {
-      val spans = r.spans(cfg)
-      val spanRows = new Array[Any](spans.length)
-      var j = 0
-      while (j < spans.length) {
-        val s = spans(j)
-        spanRows(j) = new GenericInternalRow(Array[Any](
-          UTF8String.fromString(s.kind),
-          if (s.text == null) null else UTF8String.fromString(s.text),
-          if (s.media_ref == null) null else UTF8String.fromString(s.media_ref),
-          s.offset))
-        j += 1
-      }
-      new GenericArrayData(spanRows)
+    private val kinds = SpanSink.Kinds.map(UTF8String.fromString)
+
+    private def sink(cfg: ParserConfig): SpanSink[Any] = new SpanSink[Any](cfg) {
+      protected def span(kind: Int, text: String, ref: String, off: Int): Any =
+        new SpanRow(kinds(kind), utf8(text), utf8(ref), off)
     }
+
+    override private[graft] def kernel(cfg: ParserConfig): Kernel = {
+      val s = sink(cfg)
+      new Kernel(new ParseDriver(cfg, s), _ => new GenericArrayData(s.toArray))
+    }
+
+    def apply(r: ParseResult, cfg: ParserConfig): Any = {
+      val s = sink(cfg)
+      SpanEmitter.walk(r.content, s)
+      new GenericArrayData(s.toArray)
+    }
+
+    private def utf8(t: String): UTF8String = if (t == null) null else UTF8String.fromString(t)
+  }
+
+  /** One `SpanType` row: kind, text, media_ref and a primitive offset. */
+  private final class SpanRow(kind: UTF8String, text: UTF8String, ref: UTF8String, offset: Int)
+      extends BaseGenericInternalRow {
+    def numFields: Int = 4
+    protected def genericGet(i: Int): Any =
+      if (i == 0) kind else if (i == 1) text else if (i == 2) ref else offset
+    override def isNullAt(i: Int): Boolean = i < 3 && genericGet(i) == null
+    override def getInt(i: Int): Int = offset
+    def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
+    def update(i: Int, value: Any): Unit = throw new UnsupportedOperationException
   }
 
   /** `sgml_canonical`: canonical XML (attributes name-sorted, no

@@ -228,6 +228,7 @@ final class Dfa private[sgml] (
 
   def isLast(p: Int): Boolean = lastBits(p)
   def size: Int = symOf.length
+  @transient lazy val isFirst: Array[Boolean] = Array.tabulate(size)(first.contains)
 
   /** Positions per symbol name — one hash probe per step instead of a
     * string-compare scan over all candidates (hot path). */
@@ -348,54 +349,81 @@ object Dfa {
         val g = go(nm)
         val lastBits = Array.fill(n)(false)
         g.last.foreach(p => lastBits(p) = true)
-        new Dfa(g.nullable, g.first.toArray.sorted, lastBits,
-          follow.map(_.toArray.sorted), syms.toArray)
+        // equal position sets share one array (the members of a star or
+        // plus group have one follow set, often equal to `first`), so a
+        // run sees by identity that a step leaves its candidates as they are
+        val shared = mutable.HashMap.empty[Seq[Int], Array[Int]]
+        def one(ps: Iterable[Int]): Array[Int] = shared.getOrElseUpdate(ps.toSeq.sorted, ps.toArray.sorted)
+        new Dfa(g.nullable, one(g.first), lastBits, follow.map(one), syms.toArray)
     }
   }
 }
 
 /** A running automaton for one open element: tracks candidate positions and
-  * completeness. One per TreeBuilder stack frame.
+  * completeness. One per TreeBuilder stack depth, restarted by `start`
+  * for each element opened there.
   *
   * Allocation-free stepping (hot path at 100 TB): candidate sets are kept
   * in two flipping int arrays with a boolean de-dup mark — no per-step
-  * collections (mirrors `model.c`'s array-walk state engine [V]). */
-final class DfaRun(val dfa: Dfa) {
-  // Candidate set = candList[0..nCand) + membership mark array. Stepping
-  // is one hash probe (posOfSym) + int ops; zero allocation after the two
-  // lazily-created scratch arrays.
-  private var candList: Array[Int] = dfa.first
-  private var nCand: Int = dfa.first.length
-  private var candMark: Array[Boolean] = null // membership of candList
-  private var nextList: Array[Int] = null
-  private var nextMark: Array[Boolean] = null
-  private var complete: Boolean = dfa.nullable
+  * collections (mirrors `model.c`'s array-walk state engine [V]). The
+  * arrays outlive the element: a restart clears its marks and keeps them,
+  * growing them only for a larger automaton. */
+final class DfaRun {
+  private var dfa: Dfa = null
+  // Candidate set = dfa.first until the first step that changes it, then
+  // candList[0..nCand) + membership mark array. `from` is the position
+  // array the set equals (dfa.first or one follow set), null for a union.
+  private var onFirst = true
+  private var from: Array[Int] = null
+  private var nCand = 0
+  private var candList = Array.emptyIntArray
+  private var candMark = Array.emptyBooleanArray // membership of candList
+  private var nextList = Array.emptyIntArray
+  private var nextMark = Array.emptyBooleanArray
+  private var complete = false
 
-  private def ensure(): Unit = if (candMark == null) {
-    candMark = new Array[Boolean](dfa.size)
-    nextMark = new Array[Boolean](dfa.size)
-    nextList = new Array[Int](dfa.size)
-    val init = candList
-    candList = new Array[Int](dfa.size)
-    System.arraycopy(init, 0, candList, 0, nCand)
-    var i = 0; while (i < nCand) { candMark(candList(i)) = true; i += 1 }
+  /** Start over in `d`'s initial state. */
+  def start(d: Dfa): this.type = {
+    if (!onFirst) { var k = 0; while (k < nCand) { candMark(candList(k)) = false; k += 1 } }
+    dfa = d; onFirst = true; from = d.first; nCand = d.first.length; complete = d.nullable
+    this
   }
+
+  private def ensure(): Unit = if (onFirst) {
+    if (candMark.length < dfa.size) {
+      candMark = new Array[Boolean](dfa.size)
+      nextMark = new Array[Boolean](dfa.size)
+      nextList = new Array[Int](dfa.size)
+      candList = new Array[Int](dfa.size)
+    }
+    System.arraycopy(dfa.first, 0, candList, 0, nCand)
+    var i = 0; while (i < nCand) { candMark(candList(i)) = true; i += 1 }
+    onFirst = false
+  }
+
+  private def isCand(p: Int): Boolean = if (onFirst) dfa.isFirst(p) else candMark(p)
 
   /** Try to consume a child element name; false = not allowed here. */
   def step(sym: String): Boolean = {
     val ps = dfa.posOfSym.get(sym)
     if (ps == null) return false
+    // a position whose follow set is the candidate set: nothing to rebuild
+    if (ps.length == 1 && (dfa.follow(ps(0)) eq from) && isCand(ps(0))) {
+      complete = dfa.isLast(ps(0))
+      return true
+    }
     ensure()
     var matchedLast = false
-    var any = false
+    var matched = 0
+    var fs: Array[Int] = null
     var cnt = 0
     var i = 0
     while (i < ps.length) {
       val p = ps(i)
       if (candMark(p)) {
-        any = true
+        matched += 1
         if (dfa.isLast(p)) matchedLast = true
-        val fs = dfa.follow(p)
+        fs = dfa.follow(p)
         var j = 0
         while (j < fs.length) {
           val q = fs(j)
@@ -405,7 +433,7 @@ final class DfaRun(val dfa: Dfa) {
       }
       i += 1
     }
-    if (!any) {
+    if (matched == 0) {
       var k = 0; while (k < cnt) { nextMark(nextList(k)) = false; k += 1 }
       return false
     }
@@ -414,6 +442,7 @@ final class DfaRun(val dfa: Dfa) {
     val tl = candList; candList = nextList; nextList = tl
     val tm = candMark; candMark = nextMark; nextMark = tm
     nCand = cnt
+    from = if (matched == 1) fs else null
     complete = matchedLast
     true
   }
@@ -422,19 +451,9 @@ final class DfaRun(val dfa: Dfa) {
   def canStep(sym: String): Boolean = {
     val ps = dfa.posOfSym.get(sym)
     if (ps == null) return false
-    if (candMark == null) { // still on the initial `first` set
-      var i = 0
-      while (i < ps.length) {
-        var j = 0
-        while (j < nCand) { if (candList(j) == ps(i)) return true; j += 1 }
-        i += 1
-      }
-      false
-    } else {
-      var i = 0
-      while (i < ps.length) { if (candMark(ps(i))) return true; i += 1 }
-      false
-    }
+    var i = 0
+    while (i < ps.length) { if (isCand(ps(i))) return true; i += 1 }
+    false
   }
 
   def isComplete: Boolean = complete

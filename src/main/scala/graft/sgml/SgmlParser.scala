@@ -2,7 +2,8 @@ package graft.sgml
 
 import scala.util.control.NonFatal
 
-/** Facade: one parser instance per document.
+/** Facade: one parser instance per document, committing its content to
+  * `sink` — a tree ([[DomSink]]) unless a caller wants only the spans.
   *
   * Mirrors the reference lifecycle (`new_sgml_parser` → `set_sgml_parser`
   * → repeated `sgml_parse(P, [parse(content), …])` — `sgml2pl.c —
@@ -11,12 +12,12 @@ import scala.util.control.NonFatal
   * first-class. Pure Scala. Spark-layer code reuses parsers only
   * through [[ParseDriver]].
   */
-final class SgmlParser(cfg: ParserConfig) {
+final class SgmlParser(cfg: ParserConfig, sink: ContentSink = new DomSink) {
 
   private val initialDtd = if (cfg.dialect.htmlDtd) HtmlDtd.dtd else Dtd.empty
   private val holder = new DtdHolder(initialDtd)
   private val log = new ErrorLog(cfg.maxErrors)
-  private val builder = new TreeBuilder(cfg, holder, log)
+  private val builder = new TreeBuilder(cfg, holder, log, sink)
   private val tokenizer = new Tokenizer(cfg, holder, builder.accept, log)
   private var chars = 0L
 
@@ -48,6 +49,8 @@ final class SgmlParser(cfg: ParserConfig) {
     this
   }
 
+  /** End the document: its tree (empty unless the sink is a DomSink) and
+    * its errors. */
   def finish(): ParseResult = {
     tokenizer.finish()
     ParseResult(builder.finish(), log.result())
@@ -64,10 +67,11 @@ object SgmlParser {
   def parseBytes(bytes: Array[Byte], cfg: ParserConfig): ParseResult =
     parse(CharDecoder.decode(bytes, cfg.dialect).text, cfg)
 
-  /** Parse one document straight to its span sequence. */
+  /** Parse one document straight to its span sequence (no tree). */
   def spans(text: String, cfg: ParserConfig): (IndexedSeq[Span], Vector[ParseErr]) = {
-    val r = parse(text, cfg)
-    (r.spans(cfg), r.errors)
+    val sink = SpanSink.spans(cfg)
+    val r = new SgmlParser(cfg, sink).feed(text, 0).finish()
+    (sink.result, r.errors)
   }
 }
 
@@ -81,9 +85,11 @@ object SgmlParser {
   * gets a fresh one. Fatal errors (`VirtualMachineError`,
   * `InterruptedException`, …) propagate and drop the parser too.
   *
-  * Not thread-safe: one driver per thread (or per partition).
+  * Every parser of a driver commits to the one `sink` (a tree unless
+  * given), which `use` reads. Not thread-safe: one driver per thread (or
+  * per partition).
   */
-final class ParseDriver(cfg: ParserConfig) {
+final class ParseDriver(cfg: ParserConfig, sink: ContentSink = new DomSink) {
 
   private var idle: SgmlParser = null
 
@@ -91,7 +97,7 @@ final class ParseDriver(cfg: ParserConfig) {
     * `use` projects the finished result. */
   def apply[A](feed: SgmlParser => Unit)(use: ParseResult => A): Either[String, A] =
     try {
-      val p = if (idle == null) new SgmlParser(cfg) else idle
+      val p = if (idle == null) new SgmlParser(cfg, sink) else idle
       idle = null // checked out: only a completed parse returns it
       p.reset()
       feed(p)

@@ -166,6 +166,12 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
 
   /** End of document: flush buffers, report truncation errors. */
   def finish(): Unit = {
+    if (state == S_ENT || state == S_ENT_NUM) {
+      // the end of the document ends a reference as a non-name character
+      // would, then the context it was read in ends as below
+      log.add("eof-in-entity", pos, entBuf.toString)
+      endReference()
+    }
     var inSection = msDepth > 0 // an INCLUDE, TEMP or RCDATA section is open
     state match {
       case S_TEXT => srProcess(); flushText()
@@ -185,7 +191,6 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
       case S_LT | S_BANG => log.add("eof-in-tag", pos, ""); flushText()
       case S_DECL => log.add("eof-in-declaration", pos, "")
       case S_TEXT_B1 | S_TEXT_B2 => flushText()
-      case S_ENT | S_ENT_NUM => log.add("eof-in-entity", pos, entBuf.toString)
       case _ =>
         log.add("eof-in-tag", pos, nameBuf.toString)
         if (nameBuf.length > 0 && state != S_ETAG && state != S_ETAGNAME) finishOpen(false)
@@ -501,18 +506,13 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
       else if (entBuf.length == 0 && isNameStart(c)) entBuf.append(c)
       else if (entBuf.length > 0 && isNameChar(c)) entBuf.append(c)
       else if (c == ';' && entBuf.length > 0) resolveNamed(terminated = true)
-      else if (entBuf.length > 0) { resolveNamed(terminated = false); step(c) }
-      else { // lone '&'
-        entAppend("&")
-        state = entReturn
-        step(c)
-      }
+      else { endReference(); step(c) }
 
     case S_ENT_NUM =>
       if (isHexOrDigit(c) || ((c == 'x' || c == 'X') && entBuf.length == 0))
         entBuf.append(c)
       else if (c == ';') resolveNumeric(terminated = true)
-      else { resolveNumeric(terminated = false); step(c) }
+      else { endReference(); step(c) }
 
     case other =>
       throw new IllegalStateException(s"tokenizer state $other")
@@ -635,6 +635,12 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
     case S_RAW | S_MS_CDATA => rawBuf.append(s)
     case _       => attrVal.append(s) // S_AVALQ / S_AVALU
   }
+
+  /** A reference ended by a character other than `;`. */
+  private def endReference(): Unit =
+    if (state == S_ENT_NUM) resolveNumeric(terminated = false)
+    else if (entBuf.length > 0) resolveNamed(terminated = false)
+    else { entAppend("&"); state = entReturn } // a lone '&'
 
   private def resolveNamed(terminated: Boolean): Unit = {
     val name = entBuf.toString

@@ -2,7 +2,8 @@ package graft.sgml
 
 import scala.collection.mutable
 
-/** Event-stream → DOM fold with DTD-driven structural repair.
+/** Event stream → content with DTD-driven structural repair, committed
+  * to a [[ContentSink]] in document order (a [[DomSink]] unless given).
   *
   * Reference anchors (all [V], SURVEY.md §2.3):
   * - D2 validation: `parser.c — complete()/element transition via model.c`
@@ -12,40 +13,48 @@ import scala.collection.mutable
   *   omit-end flags (`<li>` implies `</li>`) or inserts omit-start
   *   elements (`<tbody>`).
   * - D4 EMPTY/self-closing immediate close
-  * - D5 DOM fold: `sgml2pl.c — environment stack, term build`
+  * - D5 DOM fold: `sgml2pl.c — environment stack, term build`; without a
+  *   term, `call(begin|end|cdata, …)` (SURVEY.md §E2): the open-element
+  *   stack stays, the children go to the sink
   * - D6 whitespace policy: `parser.c — add_cdata / space(...) option`
   * - D7 namespaces: `xmlns.c — xmlns_push/xmlns_find/update_xmlns`
   * - D8 error recovery: `error.c — gripe` (errors accumulate, parse
   *   continues; a poisoned doc yields error rows, never a failed task)
   */
-final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
+final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
+    sink: ContentSink = new DomSink) {
 
-  private final class Frame(
-      val name: String,
-      val attrs: List[Attr],
-      val off: Int,
-      val edef: Option[ElementDef],
-      val dfa: DfaRun, // null = no content model (hot path: no Option probe)
-      val exclusions: Set[String],
-      val inclusions: Set[String],
-      val nsScope: Map[String, String],   // prefix → uri ("" = default)
-      val spacePreserve: Boolean,
-      /** SHORTREF map active in this element's content (T14); inherited by
-        * containment, overridden by USEMAP; null = none. var: an
-        * in-instance `<!USEMAP …>` rebinds the current frame. */
-      var srMap: Array[Shortref.Rule]) {
-    val children = new mutable.ArrayBuffer[Node](4)
-    var sawText = false
+  /** An open element: what repair, the space rules and SHORTREF read.
+    * One frame per stack depth, reused by every element opened there. */
+  private final class Frame {
+    var name = ""
+    var off = 0
+    var edef: Option[ElementDef] = None
+    var dfa: DfaRun = null // null = no content model (hot path: no Option probe)
+    val run = new DfaRun   // what `dfa` points at when there is a model
+    var exclusions = Set.empty[String]
+    var inclusions = Set.empty[String]
+    var nsScope = Map.empty[String, String] // prefix → uri ("" = default)
+    var spacePreserve = false
+    /** SHORTREF map active in this element's content (T14); inherited by
+      * containment, overridden by USEMAP; null = none. An in-instance
+      * `<!USEMAP …>` rebinds the current frame. */
+    var srMap: Array[Shortref.Rule] = null
+    /** Some content (a child, or text the space rules kept) is committed. */
+    var started = false
   }
 
-  // virtual root frame: accepts anything
-  private val root = new Frame("", Nil, 0, None, null, Set.empty, Set.empty,
-    Map.empty, cfg.space == SpaceMode.Preserve || cfg.space == SpaceMode.Strict,
-    null)
-  private val stack = new mutable.ArrayBuffer[Frame](16)
-  stack += root
+  // frames(0) is the virtual root frame: accepts anything
+  private val frames = mutable.ArrayBuffer(new Frame)
+  private var depth = 0
+  private var rootHasElem = false // an element opened at document level
+  // The top frame's last text run while it can still grow by entity text
+  // or lose the newline before an end tag; null = none.
+  private var pending: String = null
+  private var pendingOff = 0
+  reset()
 
-  private def top: Frame = stack(stack.size - 1)
+  private def top: Frame = frames(depth)
 
   def accept(ev: Event): Unit = {
     if (log.overflowed) return
@@ -53,28 +62,33 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       case Event.Open(n, as, sc, off) => onOpen(n, as, sc, off)
       case Event.Close(n, off)        => onClose(n, off)
       case Event.Text(s, raw, off)    => onText(s, raw, off)
-      case Event.Pi(s, off)           => addChildNode(Node.Pi(s, off))
-      case Event.EntityRef(n, off)    => addChildNode(Node.EntityRef(n, off))
-      case Event.Media(ref, off)      => addChildNode(Node.Media(ref, off))
+      case Event.Pi(s, off)           => addChild(); sink.pi(s, off)
+      case Event.EntityRef(n, off)    => addChild(); sink.entity(n, off)
+      case Event.Media(ref, off)      => addChild(); sink.media(ref, off)
       case Event.Decl(s, off)         => onDecl(s, off)
     }
   }
 
-  /** Close remaining elements and return the document content. */
+  /** Close remaining elements and commit pending text; the document
+    * content when the sink is a [[DomSink]], else empty (the content is
+    * in the sink). */
   def finish(): IndexedSeq[Node] = {
     closeAbove(0, at = -1)
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(
-      root.children.toArray(TreeBuilder.NodeTag))
+    commitText()
+    sink match { case d: DomSink => d.content; case _ => TreeBuilder.NoChildren }
   }
 
-  /** Full reset for cross-document reuse (paired with Tokenizer.reset). */
+  /** Full reset for cross-document reuse (paired with Tokenizer.reset). A
+    * hostile nest's frames are not kept past [[TreeBuilder.KeptFrames]]. */
   def reset(): Unit = {
-    stack.clear()
-    root.children.clear()
-    root.sawText = false
+    if (frames.size > TreeBuilder.KeptFrames) frames.dropRightInPlace(frames.size - TreeBuilder.KeptFrames)
+    depth = 0; rootHasElem = false; pending = null
+    val root = top
+    root.spacePreserve = cfg.space == SpaceMode.Preserve || cfg.space == SpaceMode.Strict
     root.srMap = null
+    root.started = false
     holder.activeShortrefs = null
-    stack += root
+    sink.reset()
   }
 
   // ----------------------------------------------------------- open/close
@@ -91,7 +105,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
           scope = scope.updated(a.name.substring(6), a.value.getOrElse(""))
       }
     }
-    val name = qualify(rawName, scope, isAttr = false)
+    val name = qualify(rawName, scope, isAttr = false, off)
 
     // 2. typed attribute values + defaulting (T4/T5)
     val lookup = if (cfg.dialect.namespaces) localOf(rawName) else rawName
@@ -102,19 +116,24 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
     repairFor(localOf(name), off)
 
     // 4. advance parent's DFA
-    stepParent(localOf(name), off)
+    stepParent(localOf(name))
 
     // 5. push or immediately close (D4). A SPECIFIED #CONREF attribute
     // makes the element's content empty (ISO 8879 content reference —
     // the attribute points at the content, so no end tag is expected).
-    val isEmpty = edef.exists { e =>
-      e.content == ContentKind.Empty ||
-        (e.conrefAttrs.length > 0 && e.conrefAttrs.exists(n =>
-          rawAttrs.exists(ra => localOf(ra.name) == n)))
-    }
-    if (selfClosing || isEmpty) addChildNode(Node.Elem(name, attrs, TreeBuilder.NoChildren, off))
+    val isEmpty = edef.isDefined && (edef.get.content == ContentKind.Empty ||
+      (edef.get.conrefAttrs.length > 0 && edef.get.conrefAttrs.exists(n =>
+        rawAttrs.exists(ra => localOf(ra.name) == n))))
+    if (selfClosing || isEmpty) { openChild(name, attrs, off); sink.close() }
     else pushFrame(name, attrs, off, edef, lookup, scope,
       xmlSpaceOf(rawAttrs).getOrElse(top.spacePreserve))
+  }
+
+  /** A child element of the top frame begins: commit what precedes it. */
+  private def openChild(name: String, attrs: List[Attr], off: Int): Unit = {
+    addChild()
+    if (depth == 0) rootHasElem = true
+    sink.open(name, attrs, off)
   }
 
   /** The one element-frame constructor, for present and implied start
@@ -124,13 +143,19 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
   private def pushFrame(name: String, attrs: List[Attr], off: Int,
       edef: Option[ElementDef], lookup: String, scope: Map[String, String],
       preserve: Boolean): Unit = {
+    openChild(name, attrs, off)
     val parent = top
     val srm = srMapFor(lookup)
-    stack += new Frame(name, attrs, off, edef,
-      edef.flatMap(_.dfa).map(new DfaRun(_)).orNull,
-      mergedSet(parent.exclusions, edef.map(_.exclusions).getOrElse(Set.empty)),
-      mergedSet(parent.inclusions, edef.map(_.inclusions).getOrElse(Set.empty)),
-      scope, preserve, srm)
+    depth += 1
+    if (depth == frames.size) frames += new Frame
+    val f = top
+    f.name = name; f.off = off; f.edef = edef
+    val model = if (edef.isDefined) edef.get.dfa.orNull else null
+    f.dfa = if (model == null) null else f.run.start(model)
+    f.exclusions = mergedSet(parent.exclusions, edef.map(_.exclusions).getOrElse(Set.empty))
+    f.inclusions = mergedSet(parent.inclusions, edef.map(_.inclusions).getOrElse(Set.empty))
+    f.nsScope = scope; f.spacePreserve = preserve; f.srMap = srm
+    f.started = false
     holder.activeShortrefs = srm
   }
 
@@ -149,16 +174,16 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
 
   private def onClose(rawName: String, off: Int): Unit = {
     if (rawName.isEmpty) { // SGML null end tag `</>` closes current
-      if (stack.size > 1) popFrame()
+      if (depth > 0) popFrame()
       else log.add("unmatched-end-tag", off, "</>")
       return
     }
-    val local = localOf(qualify(rawName, top.nsScope, isAttr = false))
+    val local = localOf(qualify(rawName, top.nsScope, isAttr = false, off))
     // find matching open element (by local name; ns-qualified match on full)
     var idx = -1
-    var i = stack.size - 1
+    var i = depth
     while (i >= 1 && idx < 0) {
-      if (localOf(stack(i).name) == local) idx = i
+      if (localOf(frames(i).name) == local) idx = i
       i -= 1
     }
     if (idx < 0) {
@@ -170,12 +195,12 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
     popFrame()
   }
 
-  /** Pop every frame above stack index `depth`. D8: each one whose end tag
+  /** Pop every frame above stack index `keep`. D8: each one whose end tag
     * may not be omitted is an `unclosed-element` error, at offset `at`
     * (the end tag that closes it), or at its own offset when `at` < 0
     * (end of document). */
-  private def closeAbove(depth: Int, at: Int): Unit =
-    while (stack.size - 1 > depth) {
+  private def closeAbove(keep: Int, at: Int): Unit =
+    while (depth > keep) {
       val f = top
       if (f.edef.forall(!_.omitEnd))
         log.add("unclosed-element", if (at < 0) f.off else at, f.name)
@@ -183,16 +208,19 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
     }
 
   private def popFrame(): Unit = {
-    val f = stack.remove(stack.size - 1)
+    val f = top
+    depth -= 1
     holder.activeShortrefs = top.srMap
     if (cfg.validate && f.dfa != null && !f.dfa.isComplete)
       log.add("incomplete-content", f.off, f.name)
     // SGML whitespace rule: one newline directly before the end tag
-    stripTrailingNewline(f)
-    val parent = top
-    parent.children += Node.Elem(f.name, f.attrs,
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        f.children.toArray(TreeBuilder.NodeTag)), f.off)
+    if (pending != null && !f.spacePreserve &&
+        (cfg.space == SpaceMode.SgmlMode || cfg.space == SpaceMode.Default)) {
+      pending = stripTrailingNewline(pending)
+      if (pending.isEmpty) pending = null
+    }
+    commitText()
+    sink.close()
   }
 
   // --------------------------------------------------------------- repair
@@ -226,7 +254,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
     * `local`, closing omit-end elements and opening omit-start elements
     * as the reference does; bounded, never throws. */
   private def repairFor(local: String, off: Int): Unit = {
-    var guard = stack.size + 8
+    var guard = depth + 9
     var relaxedUsed = false
     while (guard > 0) {
       guard -= 1
@@ -241,11 +269,10 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
         // element — content after the root closed (epilog) must not spawn
         // a second chain — and only when the declared root is omissible
         // and not the element itself; the loop then repairs downward.
-        if (stack.size == 1) {
+        if (depth == 0) {
           val rootName = holder.dtd.doctype.orNull
           val implyRoot = rootName != null && rootName != local &&
-            holder.dtd.element(rootName).exists(_.omitStart) &&
-            !f.children.exists(_.isInstanceOf[Node.Elem])
+            holder.dtd.element(rootName).exists(_.omitStart) && !rootHasElem
           if (!implyRoot) return
           impliedOpen(rootName, off)
           // restart the loop: repair continues against the implied root
@@ -253,58 +280,42 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       }
       else if (accepts(f, local)) return
       else {
-      // (a) implied open: an enabled child with omitted start tag that can
-      //     contain `local` (e.g. <table><tr> → insert <tbody>). Search is
-      //     inverted for speed: iterate the DTD's few omit-start elements
-      //     and probe the DFA (one hash + mark check each), never the full
-      //     enabled-symbol set.
-      val viaOpen: String = {
-        var found: String = null
-        val oss = holder.dtd.omitStartElems
-        var i = 0
-        while (found == null && i < oss.length) {
-          val xd = oss(i)
-          if ((xd.containable.contains(local) || xd.content == ContentKind.Any) &&
-              !f.exclusions.contains(xd.name) && canStepTo(f, xd.name))
-            found = xd.name
-          i += 1
-        }
-        found
-      }
-      if (viaOpen != null) {
-        impliedOpen(viaOpen, off)
-      } else {
+        // (a) implied open: an enabled child with omitted start tag that
+        //     can contain `local` (e.g. <table><tr> → insert <tbody>)
+        var via = impliable(f, holder.dtd.omitStartElems, local)
         // (a') one-shot relaxed open: step through a fully-omissible
         //      required element that cannot itself hold `local` — e.g.
         //      `<html><body>` materializes the empty `head` (its close
         //      is implied next iteration, advancing html's DFA to body)
-        var viaRelaxed: String = null
-        if (!relaxedUsed) {
-          val oss = holder.dtd.omitStartEndElems
-          var i = 0
-          while (viaRelaxed == null && i < oss.length) {
-            val xd = oss(i)
-            if (!f.exclusions.contains(xd.name) && canStepTo(f, xd.name))
-              viaRelaxed = xd.name
-            i += 1
-          }
+        if (via == null && !relaxedUsed) {
+          via = impliable(f, holder.dtd.omitStartEndElems, null)
+          relaxedUsed = via != null
         }
-        if (viaRelaxed != null) {
-          relaxedUsed = true
-          impliedOpen(viaRelaxed, off)
-        } else {
-          // (b) implied close: `<li>` implies `</li>` when li omit-end
-          if (f.edef.exists(_.omitEnd) && stack.size > 1) {
-            popFrame()
-          } else {
-            if (cfg.validate)
-              log.add("not-allowed-here", off, local)
-            return // accept in place (lenient)
-          }
+        if (via != null) impliedOpen(via, off)
+        // (b) implied close: `<li>` implies `</li>` when li omit-end
+        else if (f.edef.exists(_.omitEnd) && depth > 0) popFrame()
+        else {
+          if (cfg.validate) log.add("not-allowed-here", off, local)
+          return // accept in place (lenient)
         }
-      }
       }
     }
+  }
+
+  /** The first of `cands` — omissible-start elements — that frame `f` does
+    * not exclude, that `f`'s model can step to, and that can contain
+    * `local` (any, when null); null = none. The search is inverted for
+    * speed: the DTD's few omissible elements, one DFA probe each, never
+    * the full enabled-symbol set. */
+  private def impliable(f: Frame, cands: Array[ElementDef], local: String): String = {
+    var i = 0
+    while (i < cands.length) {
+      val xd = cands(i)
+      if ((local == null || xd.containable.contains(local) || xd.content == ContentKind.Any) &&
+          !f.exclusions.contains(xd.name) && canStepTo(f, xd.name)) return xd.name
+      i += 1
+    }
+    null
   }
 
   private def canStepTo(f: Frame, sym: String): Boolean = {
@@ -314,21 +325,15 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
 
   /** Text repair — same search, driven by `mixed` instead of a name. */
   private def repairForText(off: Int): Unit = {
-    var guard = stack.size + 8
+    var guard = depth + 9
     while (guard > 0) {
       guard -= 1
       val f = top
       if (acceptsText(f, wsOnly = false)) return
-      var viaOpen: String = null
-      val oss = holder.dtd.omitStartMixedElems
-      var i = 0
-      while (viaOpen == null && i < oss.length) {
-        if (canStepTo(f, oss(i).name)) viaOpen = oss(i).name
-        i += 1
-      }
-      if (viaOpen != null) impliedOpen(viaOpen, off)
+      val via = impliable(f, holder.dtd.omitStartMixedElems, null)
+      if (via != null) impliedOpen(via, off)
       else {
-        if (f.edef.exists(_.omitEnd) && stack.size > 1) popFrame()
+        if (f.edef.exists(_.omitEnd) && depth > 0) popFrame()
         else {
           if (cfg.validate) log.add("cdata-not-allowed", off, f.name)
           return
@@ -338,10 +343,10 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
   }
 
   private def impliedOpen(local: String, off: Int): Unit = {
-    stepParent(local, off)
+    stepParent(local)
     val edef = holder.dtd.element(local)
     val scope = top.nsScope
-    pushFrame(qualify(local, scope, isAttr = false), typedAttrs(local, Nil, edef, scope, off),
+    pushFrame(qualify(local, scope, isAttr = false, off), typedAttrs(local, Nil, edef, scope, off),
       off, edef, local, scope, top.spacePreserve)
   }
 
@@ -350,12 +355,12 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
   private def mergedSet(parent: Set[String], own: Set[String]): Set[String] =
     if (own.isEmpty) parent else if (parent.isEmpty) own else parent ++ own
 
-  private def stepParent(local: String, off: Int): Unit = {
+  /** Advance the top frame's content model past child `local`; inclusions
+    * do not advance it. A child it cannot take is one repair gave up on,
+    * which logged it. */
+  private def stepParent(local: String): Unit = {
     val f = top
-    if (f.inclusions.contains(local)) return // inclusions don't advance DFA
-    val run = f.dfa
-    if (run != null && !run.step(local) && cfg.validate)
-      log.add("not-allowed-here", off, local)
+    if (f.dfa != null && !f.inclusions.contains(local)) f.dfa.step(local)
   }
 
   // ----------------------------------------------------------------- text
@@ -370,7 +375,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       // document level (outside the root element) holds none either —
       // `<!DOCTYPE …>\n<root>` drops the separator newline (upstream
       // treats prolog/epilog whitespace as markup separation [V])
-      if (wsOnly && stack.size == 1) return
+      if (wsOnly && depth == 0) return
       if (wsOnly && top.edef.exists(ed => !ed.mixed)) {
         if (cfg.space == SpaceMode.Strict) log.add("whitespace-not-allowed", off, top.name)
         return
@@ -383,8 +388,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       if (!top.spacePreserve) mode match {
         case SpaceMode.SgmlMode | SpaceMode.Default =>
           // one newline directly after the start tag is removed
-          if (top.children.isEmpty && !top.sawText && stack.size > 1)
-            s = stripLeadingNewline(s)
+          if (!top.started && depth > 0) s = stripLeadingNewline(s)
         case SpaceMode.Remove =>
           s = collapseWs(s)
         case _ =>
@@ -392,39 +396,30 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       if (s.isEmpty) return
     }
 
-    top.sawText = true
-    // merge with an adjacent text node of the same rawness (entity
-    // boundaries, comments and injected media must not split runs
-    // unless markup intervened — the tokenizer already coalesces;
-    // this handles re-tokenized entity content)
-    val ch = top.children
-    val mergeable = !raw && ch.nonEmpty && (ch(ch.size - 1) match {
-      case Node.Text(_, false, _) => true
-      case _ => false
-    })
-    if (mergeable) {
-      val Node.Text(prev, _, poff) = ch(ch.size - 1): @unchecked
-      ch(ch.size - 1) = Node.Text(prev + s, raw, poff)
-    } else ch += Node.Text(s, raw, off)
+    top.started = true
+    // a text run merges with the pending one before it (entity boundaries
+    // and comments must not split runs unless markup intervened — the
+    // tokenizer already coalesces; this handles re-tokenized entity
+    // content); raw text neither merges nor loses a newline
+    if (raw) { commitText(); sink.text(s, raw = true, off) }
+    else if (pending == null) { pending = s; pendingOff = off }
+    else pending += s
   }
 
   private def effectiveSpace: SpaceMode =
     if (top.spacePreserve) SpaceMode.Preserve else cfg.space
 
-  private def stripTrailingNewline(f: Frame): Unit = {
-    if (f.spacePreserve) return
-    cfg.space match {
-      case SpaceMode.SgmlMode | SpaceMode.Default =>
-        (if (f.children.isEmpty) None else Some(f.children(f.children.size - 1))) match {
-          case Some(Node.Text(s, false, off)) =>
-            val t = stripTrailingNewlineStr(s)
-            if (t.isEmpty) f.children.remove(f.children.size - 1)
-            else if (t ne s) f.children(f.children.size - 1) = Node.Text(t, raw = false, off)
-          case _ =>
-        }
-      case _ =>
-    }
+  /** Content other than text joins the top frame: the pending run ends. */
+  private def addChild(): Unit = {
+    commitText()
+    top.started = true
   }
+
+  private def commitText(): Unit =
+    if (pending != null) {
+      sink.text(pending, raw = false, pendingOff)
+      pending = null
+    }
 
   // ----------------------------------------------------- attributes (T4/T5)
 
@@ -451,7 +446,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       if (names != null) names.contains(name) else out.exists(_.name == name)
     def add(a: Attr): Unit = { out += a; if (names != null) names.add(a.name) }
     rawAttrs.foreach { ra =>
-      val qn = if (cfg.dialect.namespaces) qualify(ra.name, scope, isAttr = true)
+      val qn = if (cfg.dialect.namespaces) qualify(ra.name, scope, isAttr = true, ra.off)
                else ra.name
       if (has(qn)) log.add("duplicate-attribute", ra.off, ra.name)
       else {
@@ -527,7 +522,9 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
 
   // ------------------------------------------------------------ namespaces
 
-  private def qualify(name: String, scope: Map[String, String], isAttr: Boolean): String = {
+  /** `name` in `scope`; an undeclared prefix is logged at `off`. */
+  private def qualify(name: String, scope: Map[String, String], isAttr: Boolean,
+      off: Int): String = {
     if (!cfg.dialect.namespaces) return name
     if (name == "xmlns" || name.startsWith("xmlns:")) return name
     val i = name.indexOf(':')
@@ -538,7 +535,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
       else scope.get(prefix) match {
         case Some(uri) if uri.nonEmpty => s"{$uri}$local"
         case _ =>
-          log.add("undeclared-ns-prefix", 0, prefix)
+          log.add("undeclared-ns-prefix", off, prefix)
           name
       }
     } else if (!isAttr || cfg.qualifyAttributes) {
@@ -620,8 +617,6 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
 
   // --------------------------------------------------------------- helpers
 
-  private def addChildNode(n: Node): Unit = top.children += n
-
   private def isWhitespaceOnly(s: String): Boolean = {
     var i = 0
     while (i < s.length) { if (!s.charAt(i).isWhitespace) return false; i += 1 }
@@ -634,7 +629,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog) {
     else s
   }
 
-  private def stripTrailingNewlineStr(s: String): String = {
+  private def stripTrailingNewline(s: String): String = {
     if (s.endsWith("\r\n")) s.substring(0, s.length - 2)
     else if (s.length > 0 && (s.charAt(s.length - 1) == '\n' || s.charAt(s.length - 1) == '\r'))
       s.substring(0, s.length - 1)
@@ -665,11 +660,6 @@ object TreeBuilder {
   /** Shared empty-children instance (EMPTY/self-closing elements). */
   val NoChildren: IndexedSeq[Node] = Vector.empty
 
-  /** Hoisted ClassTag: `children.toArray` runs once per closed element,
-    * and the implicit `ClassTag[Node]` at the call site costs a
-    * ClassValue map probe per call (jstack-measured ~5% of kernel CPU:
-    * ClassValueCompat.get + ClassValueMap.startEntry). A static tag
-    * makes it a field read. */
-  val NodeTag: scala.reflect.ClassTag[Node] =
-    scala.reflect.ClassTag(classOf[Node])
+  /** Frames a builder keeps for reuse across documents. */
+  private val KeptFrames = 256
 }

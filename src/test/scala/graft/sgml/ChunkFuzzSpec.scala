@@ -10,23 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * duplication was exactly one: found by inspection, now also covered
   * here by the `</sX` fragments inside raw content). Seeds fixed. */
 class ChunkFuzzSpec extends AnyFunSuite {
-
-  private val fragments: Vector[String] = Vector(
-    "plain text ", "a<b", "x & y", "&amp;", "&#65;", "&#x42;", "&nbsp;",
-    "&nope;", "&unterminated ", "<p>", "</p>", "<div class='c'>", "</div>",
-    "<ul><li>one<li>two</ul>", "<br>", "<br/>", "<img src='u.png'>",
-    "<option selected>", "<!-- comment -->", "<!-- -- -->", "<?pi data?>",
-    "<![CDATA[raw ]] text]]>", "<![INCLUDE[in]]>", "<![IGNORE[out]]>",
-    "<![ TEMP [t]]>", "<script>if(a<b){x()}</script>",
-    "<script>a</sx b</script>", "<script></scr</script>",
-    "<title>t&amp;t</title>", "<textarea>r&lt;c</textarea>",
-    "</>", "</nope>", "<a<b>", "<a b=>", "<a b='v'", "]]>", "]]", "/",
-    "<!DOCTYPE d [<!ENTITY e \"ee\">]>", "&e;", "<em>t</em>",
-    "<table><tr><td>c</table>", "\n", "  ", "é中☃",
-    "\r\n", "\r", "a\rb", "<pre>x\r\ny</pre>", "&#13;",
-    // WHATWG names: resolved under html5, undeclared-entity nodes under
-    // html4/sgml — chunk-equivalence must hold either way
-    "&longrightarrow;", "&NotEqualTilde;", "&varnothing", "<source src=a>")
+  import ChunkFuzzSpec.fragments
 
   private def randomDoc(rng: scala.util.Random): String = {
     val n = 1 + rng.nextInt(12)
@@ -107,4 +91,24 @@ class ChunkFuzzSpec extends AnyFunSuite {
       }
     }
   }
+}
+
+object ChunkFuzzSpec {
+  /** Markup fragments that together reach every tokenizer state. */
+  val fragments: Vector[String] = Vector(
+    "plain text ", "a<b", "x & y", "&amp;", "&#65;", "&#x42;", "&nbsp;",
+    "&nope;", "&unterminated ", "<p>", "</p>", "<div class='c'>", "</div>",
+    "<ul><li>one<li>two</ul>", "<br>", "<br/>", "<img src='u.png'>",
+    "<option selected>", "<!-- comment -->", "<!-- -- -->", "<?pi data?>",
+    "<![CDATA[raw ]] text]]>", "<![INCLUDE[in]]>", "<![IGNORE[out]]>",
+    "<![ TEMP [t]]>", "<script>if(a<b){x()}</script>",
+    "<script>a</sx b</script>", "<script></scr</script>",
+    "<title>t&amp;t</title>", "<textarea>r&lt;c</textarea>",
+    "</>", "</nope>", "<a<b>", "<a b=>", "<a b='v'", "]]>", "]]", "/",
+    "<!DOCTYPE d [<!ENTITY e \"ee\">]>", "&e;", "<em>t</em>",
+    "<table><tr><td>c</table>", "\n", "  ", "é中☃",
+    "\r\n", "\r", "a\rb", "<pre>x\r\ny</pre>", "&#13;",
+    // WHATWG names: resolved under html5, undeclared-entity nodes under
+    // html4/sgml — chunk-equivalence must hold either way
+    "&longrightarrow;", "&NotEqualTilde;", "&varnothing", "<source src=a>")
 }

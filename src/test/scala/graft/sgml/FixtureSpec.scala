@@ -485,6 +485,28 @@ class FixtureSpec extends AnyFunSuite {
     assert(errs.exists(_.code == "undeclared-entity"))
   }
 
+  test("a reference cut by the end of the document ends there; the text before it stays") {
+    // the end acts as a non-name character would mid-document
+    val cases = Seq(
+      (Dialect.Html4, "<d>abc &amp", "abc &", Vector(ParseErr("eof-in-entity", 11, "amp"))),
+      (Dialect.Xml, "<d>abc &#6", "abc &#6", Vector(ParseErr("eof-in-entity", 10, "6"),
+        ParseErr("charref-missing-semicolon", 7, "6"))),
+      (Dialect.Sgml, "<d>abc &x", "abc &x", Vector(ParseErr("eof-in-entity", 9, "x"),
+        ParseErr("undeclared-entity", 7, "x"))))
+    for ((d, doc, text, errs) <- cases) {
+      val (spans, got) = SgmlParser.spans(doc, cfg(d))
+      assert(kts(spans) == Vector(("text", text, null)), doc)
+      assert(spans.map(_.offset) == Vector(3), doc)
+      assert(got == errs :+ ParseErr("unclosed-element", 0, "d"), doc)
+    }
+  }
+
+  test("undeclared-ns-prefix is reported at the tag") {
+    val (spans, errs) = SgmlParser.spans("""<r xmlns:p="u">text <q:e/></r>""", cfg(Dialect.Xmlns))
+    assert(kts(spans) == Vector(("text", "text ", null)))
+    assert(errs == Vector(ParseErr("undeclared-ns-prefix", 20, "q")))
+  }
+
   test("DTD general entity re-tokenized (may contain markup)") {
     val doc = "<!DOCTYPE d [<!ENTITY frag \"<b>x</b>\">]><d>a&frag;c</d>"
     val r = SgmlParser.parse(doc, cfg(Dialect.Xml))

@@ -24,7 +24,6 @@ class KernelOptionsSpec extends AnyFunSuite {
     assert(checked.errors == Vector(
       ParseErr("bad-enum-attribute", 126, "z"),
       ParseErr("not-allowed-here", 139, "c"),
-      ParseErr("not-allowed-here", 139, "c"),
       ParseErr("cdata-not-allowed", 149, "r"),
       ParseErr("incomplete-content", 120, "r")))
     assert(checked.spans(xml) == plain.spans(xml))
