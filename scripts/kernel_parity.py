@@ -3,7 +3,7 @@
 spans and errors of `graft.sgml.SgmlParser.spans(text, cfg)` for one
 fixed, seeded corpus, parsed by each tree's program and compared.
 
-    python3 scripts/kernel_parity.py PARENT_DIR CHANGE_DIR [--seed 7] [--show 3]
+    python3 scripts/kernel_parity.py PARENT_DIR CHANGE_DIR [--seed 7] [--show 3] [--reuse]
 
 Each tree's program is built by its own `perfbench/build.py` (no sbt); a
 small dump program, which calls nothing but `SgmlParser.spans`, is
@@ -14,8 +14,12 @@ families, each under several (dialect, space, strip, validate) configs.
 
 Prints the number of parses, how many are identical, and every kind of
 difference: whether the spans differ, and the error codes only one side
-reports, with the count and `--show` examples of each. Exits 1 when any
-parse differs, 0 otherwise. Writes nothing in either tree except
+reports, with the count and `--show` examples of each. With `--reuse`,
+each tree also parses the corpus in shuffled order through one reused
+`ParseDriver` per config, and that dump is compared with the tree's
+fresh-parser dump, and the parent's with the change's. Every config
+resolves a catalog DTD with `#CURRENT` and SHORTREF, which some
+documents name. Exits 1 when any parse differs, 0 otherwise. Writes nothing in either tree except
 perfbench's own build directory; the dumps go to a temporary directory
 (kept with `--keep`).
 """
@@ -42,16 +46,28 @@ object KernelDump {
   private def unhex(h: String): String =
     new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray, "UTF-8")
 
+  private val catalog = Catalog.Resolver(
+    Catalog.bundled.entries :+ Catalog.Entry("SYSTEM", "memo.dtd", "memo.dtd"),
+    Catalog.bundled.store + ("memo.dtd" -> DtdParser.parseSubset(
+      "<!ELEMENT memo - - (para+)><!ELEMENT para - O (#PCDATA)>" +
+        "<!ATTLIST para style CDATA #CURRENT><!ENTITY mk \"#\">" +
+        "<!SHORTREF m \"--\" mk><!USEMAP m memo>", Dtd.empty, foldCase = true)._1))
+
   def main(args: Array[String]): Unit = {
     val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
       new java.io.FileOutputStream(args(1)), "UTF-8"))
     val src = scala.io.Source.fromFile(args(0), "UTF-8")
+    // "reuse": one driver per config, as a Spark thread reuses its parser
+    val drivers = scala.collection.mutable.Map.empty[ParserConfig, (ParseDriver, SpanSink[Span])]
     for (line <- src.getLines()) {
       val Array(id, dialect, space, strip, validate, hex) = line.split("\t", -1)
       val cfg = ParserConfig(dialect = Dialect.parse(dialect), space = SpaceMode.parse(space),
-        boilerplate = strip == "1", validate = validate == "1")
+        boilerplate = strip == "1", validate = validate == "1", catalog = catalog)
       val row = try {
-        val (spans, errs) = SgmlParser.spans(unhex(hex), cfg)
+        val (spans, errs) = if (args.length < 3) SgmlParser.spans(unhex(hex), cfg) else {
+          val (d, sink) = drivers.getOrElseUpdate(cfg, { val s = SpanSink.spans(cfg); (new ParseDriver(cfg, s), s) })
+          d(_.feed(unhex(hex), 0))(r => (sink.result, r.errors)).fold(e => throw new Exception(e), identity)
+        }
         spans.map(s => s"${s.kind}|${esc(s.text)}|${esc(s.media_ref)}|${s.offset}").mkString(";") +
           "\t" + errs.map(e => s"${e.code}|${e.offset}|${esc(e.detail)}").mkString(";")
       } catch { case e: Exception => "THROW\t" + esc(e.toString) }
@@ -111,6 +127,9 @@ FIXTURES = [
     "<!USEMAP m d>]><d>a--b--c</d>",
     "<html xmlns=\"http://www.w3.org/1999/xhtml\"><body><p>a&nbsp;b</p></body></html>",
     "<p>x &longrightarrow; y &eacute;</p>", "<d a=\"x&amp", "<title>a &amp",
+    "<!DOCTYPE memo SYSTEM \"memo.dtd\"><memo><para style=x>a--b<para>c</memo>",
+    "<!DOCTYPE memo SYSTEM \"memo.dtd\"><memo><para>d--e</memo>",
+    "<!DOCTYPE memo [<!ATTLIST para n CDATA #CURRENT>]><memo><para n=1>f<para>g</memo>",
 ]
 
 WORDS = ("batch part spark line column order small sort fast value scan a hash slow "
@@ -181,7 +200,9 @@ def java():
     return os.path.join(home, "bin", "java") if home else "java"
 
 
-def dump(tree, work, name, corpus_file):
+def dump(tree, work, name, corpus_files):
+    """The fresh dump of corpus_files[0], and with a second (shuffled)
+    corpus file also its reused-driver dump."""
     cp = classpath(tree)
     classes = os.path.join(work, name + "-classes")
     os.makedirs(classes)
@@ -189,15 +210,44 @@ def dump(tree, work, name, corpus_file):
     jars = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "jars", "*")
     subprocess.run([java(), "-Xss8m", "-cp", jars, "scala.tools.nsc.Main", "-nowarn",
                     "-d", classes, "-classpath", cp, src], check=True)
-    out = os.path.join(work, name + ".tsv")
-    subprocess.run([java(), "-Xss16m", "-Xmx1g", "-cp", os.pathsep.join([classes, cp]),
-                    "KernelDump", corpus_file, out], check=True)
-    with open(out, encoding="utf-8") as f:
-        return dict(line.rstrip("\n").split("\t", 1) for line in f)
+    dumps = []
+    for i, corpus_file in enumerate(corpus_files):
+        out = os.path.join(work, f"{name}-{i}.tsv")
+        subprocess.run([java(), "-Xss16m", "-Xmx1g", "-cp", os.pathsep.join([classes, cp]),
+                        "KernelDump", corpus_file, out] + (["reuse"] if i else []), check=True)
+        with open(out, encoding="utf-8") as f:
+            dumps.append(dict(line.rstrip("\n").split("\t", 1) for line in f))
+    return dumps
 
 
 def codes(errs):
     return collections.Counter(e.split("|", 1)[0] for e in errs.split(";") if e)
+
+
+def compare(docs, a, b, names, show):
+    """Print how dump `b` differs from dump `a`; the number of differences."""
+    kinds = collections.defaultdict(list)
+    for key in docs:
+        p, c = a[key], b[key]
+        if p == c:
+            continue
+        (ps, pe), (cs, ce) = p.split("\t", 1), c.split("\t", 1)
+        gone, new = codes(pe) - codes(ce), codes(ce) - codes(pe)
+        kind = ("spans differ" if ps != cs else "spans equal") + \
+            (f"; {names[0]} only: {dict(gone)}" if gone else "") + \
+            (f"; {names[1]} only: {dict(new)}" if new else "") + \
+            ("; error offsets/details differ" if pe != ce and not gone and not new else "")
+        kinds[kind].append(key)
+    differ = sum(len(v) for v in kinds.values())
+    print(f"{names[0]} vs {names[1]}: {len(docs)} parses ({len(set(docs.values()))} distinct "
+          f"documents): {len(docs) - differ} identical, {differ} differ")
+    for kind, keys in sorted(kinds.items(), key=lambda kv: -len(kv[1])):
+        print(f"\n{len(keys)} × {kind}")
+        for key in keys[:show]:
+            print(f"  {key}  doc={docs[key][:100]!r}")
+            print(f"    {names[0]}: {a[key][:300]}")
+            print(f"    {names[1]}: {b[key][:300]}")
+    return differ
 
 
 def main():
@@ -207,18 +257,25 @@ def main():
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--show", type=int, default=3, help="examples per kind of difference")
     ap.add_argument("--keep", action="store_true", help="keep the corpus and the dumps")
+    ap.add_argument("--reuse", action="store_true",
+                    help="also parse in shuffled order through one reused driver per config")
     a = ap.parse_args()
 
     rows = corpus(a.seed)
     work = tempfile.mkdtemp(prefix="kernel_parity-")
     try:
-        corpus_file = os.path.join(work, "corpus.tsv")
-        with open(corpus_file, "w", encoding="utf-8") as f:
-            for r in rows:
-                f.write("\t".join(map(str, r[:5])) + "\t" + r[5].encode("utf-8").hex() + "\n")
+        files = [os.path.join(work, "corpus.tsv")]
+        orders = [rows]
+        if a.reuse:
+            files.append(os.path.join(work, "corpus-shuffled.tsv"))
+            orders.append(random.Random(a.seed + 1).sample(rows, len(rows)))
+        for path, order in zip(files, orders):
+            with open(path, "w", encoding="utf-8") as f:
+                for r in order:
+                    f.write("\t".join(map(str, r[:5])) + "\t" + r[5].encode("utf-8").hex() + "\n")
         with open(os.path.join(work, "KernelDump.scala"), "w") as f:
             f.write(DUMP)
-        sides = {n: dump(os.path.abspath(t), work, n, corpus_file)
+        sides = {n: dump(os.path.abspath(t), work, n, files)
                  for n, t in (("parent", a.parent), ("change", a.change))}
     finally:
         if a.keep:
@@ -227,28 +284,15 @@ def main():
             shutil.rmtree(work, ignore_errors=True)
 
     docs = {r[0]: r[5] for r in rows}
-    kinds = collections.defaultdict(list)
-    for key in docs:
-        p, c = sides["parent"][key], sides["change"][key]
-        if p == c:
-            continue
-        (ps, pe), (cs, ce) = p.split("\t", 1), c.split("\t", 1)
-        gone, new = codes(pe) - codes(ce), codes(ce) - codes(pe)
-        kind = ("spans differ" if ps != cs else "spans equal") + \
-            (f"; parent only: {dict(gone)}" if gone else "") + \
-            (f"; change only: {dict(new)}" if new else "") + \
-            ("; error offsets/details differ" if pe != ce and not gone and not new else "")
-        kinds[kind].append(key)
-    same = len(docs) - sum(len(v) for v in kinds.values())
-    print(f"{len(docs)} parses ({len(set(d for d in docs.values()))} distinct documents): "
-          f"{same} identical, {len(docs) - same} differ")
-    for kind, keys in sorted(kinds.items(), key=lambda kv: -len(kv[1])):
-        print(f"\n{len(keys)} × {kind}")
-        for key in keys[:a.show]:
-            print(f"  {key}  doc={docs[key][:100]!r}")
-            print(f"    parent: {sides['parent'][key][:300]}")
-            print(f"    change: {sides['change'][key][:300]}")
-    sys.exit(1 if kinds else 0)
+    differ = compare(docs, sides["parent"][0], sides["change"][0], ("parent", "change"), a.show)
+    if a.reuse:
+        for n in ("parent", "change"):
+            print()
+            differ += compare(docs, sides[n][0], sides[n][1], (f"{n} fresh", f"{n} reused"), a.show)
+        print()
+        differ += compare(docs, sides["parent"][1], sides["change"][1],
+                          ("parent reused", "change reused"), a.show)
+    sys.exit(1 if differ else 0)
 
 
 if __name__ == "__main__":

@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.Catalyst
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, GetArrayItem, GetStructField, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.{BaseGenericInternalRow, GenericInternalRow}
@@ -27,9 +27,9 @@ import graft.ops.TableOps
   * vectorized Parquet reader and results are built as `InternalRow`s —
   * the `Dataset[Doc]`/`Dataset[Extracted]` encoder round-trip (a measured
   * GC hotspot at 32 cores: per-row Seq + case-class materialization) is
-  * skipped entirely. The parse itself cannot be code-generated, so this
-  * is a `CodegenFallback` leaf; everything around it stays in
-  * whole-stage codegen.
+  * skipped entirely. The generated code calls [[parse]], as `eval` does,
+  * so the scan, the parse and the projections after it fuse into one
+  * whole-stage codegen stage.
   *
   * Every parse is this one expression: its [[Projection]] picks what the
   * parse commits to and turns the finished parse into the first field of
@@ -43,7 +43,7 @@ import graft.ops.TableOps
   */
 case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
     projection: ExtractSpansExpr.Projection = ExtractSpansExpr.Spans)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression {
 
   import ExtractSpansExpr._
 
@@ -82,12 +82,18 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
     ThreadLocal.withInitial(() => projection.kernel(cfg))
   @transient private var last: Kernel = _
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = parse(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("kernel", this)
+    defineCodeGen(ctx, ev, arr => s"$self.parse($arr)")
+  }
+
+  /** The output struct of one non-null input array. */
+  def parse(arr: ArrayData): InternalRow = {
     var k = last
     if (k == null || (k.thread ne Thread.currentThread())) { k = kernels.get(); last = k }
-    k.driver(feed(v.asInstanceOf[ArrayData], _)) { r =>
+    k.driver(feed(arr, _)) { r =>
       new GenericInternalRow(Array[Any](k.value(r), errRows(r.errors)))
     }.fold(errorRow, identity)
   }

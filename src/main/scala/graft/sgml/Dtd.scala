@@ -80,7 +80,9 @@ object AttrDefault {
 final case class AttrDecl(name: String, tpe: AttrType, default: AttrDefault)
 
 /** Element definition with SGML omission flags (`dtd.h — dtd_edef omit
-  * flags` [V]) and inclusion/exclusion exceptions (`+(X)` / `-(X)`). */
+  * flags` [V]) and inclusion/exclusion exceptions (`+(X)` / `-(X)`).
+  * `names` is the table of the DTD that declared it, which numbers every
+  * name the element mentions. */
 final case class ElementDef(
     name: String,
     omitStart: Boolean,
@@ -88,22 +90,26 @@ final case class ElementDef(
     content: ContentKind,
     inclusions: Set[String] = Set.empty,
     exclusions: Set[String] = Set.empty,
-    attrs: Map[String, AttrDecl] = Map.empty) {
+    attrs: Map[String, AttrDecl] = Map.empty,
+    names: Names) {
+
+  @transient lazy val id: Int = names.id(name)
 
   /** Compiled once and cached — mirrors `model.c`'s per-element state-engine
-    * cache [V]. @transient: recompiled lazily per JVM rather than shipped
-    * (a ParserConfig carrying a catalog Resolver closes over Dtd values). */
-  @transient lazy val dfa: Option[Dfa] = content match {
-    case ContentKind.Modelled(m) => Some(Dfa.compile(m))
-    case _                       => None
+    * cache [V]; null without a content model. @transient: recompiled
+    * lazily per JVM rather than shipped (a ParserConfig carrying a catalog
+    * Resolver closes over Dtd values). */
+  @transient lazy val dfa: Dfa = content match {
+    case ContentKind.Modelled(m) => Dfa.compile(m, names)
+    case _                       => null
   }
 
-  /** Names this element's model can ever contain (omitted-tag repair). */
-  lazy val containable: Set[String] = content match {
-    case ContentKind.Modelled(m) => Dfa.symbols(m)
-    case ContentKind.Any         => Set.empty // ANY: handled as accept-all
-    case _                       => Set.empty
-  }
+  @transient lazy val inclusionIds: java.util.BitSet = names.bits(inclusions)
+  @transient lazy val exclusionIds: java.util.BitSet = names.bits(exclusions)
+
+  /** Can this element ever contain element `id` (omitted-tag repair)? */
+  def canContain(id: Int): Boolean =
+    content == ContentKind.Any || (dfa != null && dfa.positions(id) != null)
 
   /** Does the content model admit character data? */
   lazy val mixed: Boolean = content match {
@@ -143,31 +149,35 @@ object ElementDef {
 /** Immutable DTD — element map + entity tables (`dtd.h — struct dtd` [V]).
   * `shortrefs`/`useMaps` carry the SHORTREF feature (T14): map name →
   * ordered (delimiter, entity) pairs, and element name → map name (""
-  * encodes `#EMPTY` = deactivate). */
+  * encodes `#EMPTY` = deactivate). `names` numbers every element name the
+  * DTD mentions. */
 final case class Dtd(
     doctype: Option[String],
     elements: Map[String, ElementDef],
     entities: Map[String, String],       // general entities → replacement text
     paramEntities: Map[String, String],
     shortrefs: Map[String, List[(String, String)]] = Map.empty,
-    useMaps: Map[String, String] = Map.empty) {
+    useMaps: Map[String, String] = Map.empty,
+    names: Names = Names.empty) {
 
-  /** Hot-path lookup: a Java hash map probe is cheaper than immutable
-    * `Map.get` (measured hotspot; `util.c`'s interned-symbol table plays
-    * the same role in the reference [V]). */
-  @transient private lazy val elemIndex: java.util.HashMap[String, ElementDef] = {
-    val m = new java.util.HashMap[String, ElementDef](elements.size * 2)
-    elements.foreach { case (k, v) => m.put(k, v) }
-    m
+  @transient private lazy val defs: Array[ElementDef] = {
+    val a = new Array[ElementDef](names.size)
+    elements.foreach { case (n, e) => a(names.id(n)) = e }
+    a
   }
-  def element(name: String): Option[ElementDef] = Option(elemIndex.get(name))
+
+  /** The id of element name `name`; -1 when the DTD never mentions it. */
+  def id(name: String): Int = names.id(name)
+  /** The definition of element `id`; null when it is not declared. */
+  def element(id: Int): ElementDef = if (id < 0) null else defs(id)
+  def element(name: String): Option[ElementDef] = Option(element(id(name)))
 
   /** Elements whose start tag is omissible (HTML4: html/head/body/tbody),
     * in stable name order. The omitted-tag repair search iterates these
     * FEW and probes the DFA per candidate — instead of scanning every
-    * enabled symbol of the failing model and hash-looking-up each
-    * (measured at ~23% of kernel CPU on the old path: a failed `<p>`
-    * inside `<p>` scanned the ~40-symbol inline group twice per doc). */
+    * enabled symbol of the failing model (measured at ~23% of kernel CPU
+    * on the old path: a failed `<p>` inside `<p>` scanned the ~40-symbol
+    * inline group twice per doc). */
   @transient lazy val omitStartElems: Array[ElementDef] =
     // Tie-break contract: candidates are probed in ALPHABETICAL name
     // order, not content-model order. When several omissible-start
@@ -192,14 +202,55 @@ final case class Dtd(
     }
 
   /** Merge: `this` takes priority for doctype; for declarations SGML keeps
-    * the FIRST declaration seen, so existing entries in `this` win. */
-  def merge(other: Dtd): Dtd = Dtd(
-    doctype.orElse(other.doctype),
-    other.elements ++ elements,
-    other.entities ++ entities,
-    other.paramEntities ++ paramEntities,
-    other.shortrefs ++ shortrefs,
-    other.useMaps ++ useMaps)
+    * the FIRST declaration seen, so existing entries in `this` win. The
+    * merged table extends this one; `other`'s definitions, numbered by
+    * their own table, are rebuilt on it unless that table is the merged
+    * one. */
+  def merge(other: Dtd): Dtd = {
+    val ns = if (names.size == 0 || (other.names eq names)) other.names else names ++ other.names.ordered
+    val theirs = if (ns eq other.names) other.elements
+      else other.elements.map { case (n, e) => n -> e.copy(names = ns) }
+    Dtd(
+      doctype.orElse(other.doctype),
+      theirs ++ elements,
+      other.entities ++ entities,
+      other.paramEntities ++ paramEntities,
+      other.shortrefs ++ shortrefs,
+      other.useMaps ++ useMaps,
+      ns)
+  }
+}
+
+/** The element names of a DTD, each numbered by an int id (`dtd.h —
+  * dtd_symbol_table` [V]): every declared element and every name a
+  * content model or an exception group mentions. A DTD derived from
+  * another — by a subset, an in-instance declaration or a merge — extends
+  * its table, so an id keeps its name for the rest of a parse. */
+final class Names private (private val ids: Map[String, Int]) extends Serializable {
+  @transient private lazy val index: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer](ids.size * 2)
+    ids.foreach { case (n, i) => m.put(n, i) }
+    m
+  }
+
+  def size: Int = ids.size
+  /** The id of `name`; -1 when the table does not hold it. */
+  def id(name: String): Int = { val i = index.get(name); if (i == null) -1 else i }
+  /** This table, extended by the names it lacks, numbered in order. */
+  def ++(more: IterableOnce[String]): Names = {
+    val m = more.iterator.foldLeft(ids)((m, n) => if (m.contains(n)) m else m.updated(n, m.size))
+    if (m.size == ids.size) this else new Names(m)
+  }
+  def ordered: Seq[String] = ids.toSeq.sortBy(_._2).map(_._1)
+  def bits(ns: Set[String]): java.util.BitSet = {
+    val b = new java.util.BitSet
+    ns.foreach(n => b.set(id(n)))
+    b
+  }
+}
+
+object Names {
+  val empty: Names = new Names(Map.empty)
 }
 
 object Dtd {
@@ -216,7 +267,7 @@ final class DtdHolder(var dtd: Dtd) {
   var activeShortrefs: Array[Shortref.Rule] = null
 }
 
-/** Glushkov automaton over child-element names. Immutable; per-element
+/** Glushkov automaton over child-element ids. Immutable; per-element
   * runs live in [[DfaRun]]. Spark-side analogue of `model.c —
   * make_state_engine` [V]. */
 final class Dfa private[sgml] (
@@ -224,24 +275,30 @@ final class Dfa private[sgml] (
     val first: Array[Int],
     private val lastBits: Array[Boolean],
     val follow: Array[Array[Int]],
-    val symOf: Array[String]) extends Serializable {
+    symOf: Array[Int]) {
 
   def isLast(p: Int): Boolean = lastBits(p)
   def size: Int = symOf.length
   @transient lazy val isFirst: Array[Boolean] = Array.tabulate(size)(first.contains)
 
-  /** Positions per symbol name — one hash probe per step instead of a
-    * string-compare scan over all candidates (hot path). */
-  @transient lazy val posOfSym: java.util.HashMap[String, Array[Int]] = {
-    val m = new java.util.HashMap[String, Array[Int]]()
-    var p = 0
-    while (p < symOf.length) {
-      val prev = m.get(symOf(p))
-      m.put(symOf(p), if (prev == null) Array(p) else prev :+ p)
-      p += 1
-    }
-    m
+  // Positions per symbol id, open-addressed by id in twice as many slots
+  // as positions (an empty slot holds -1 and null): a step reads two int
+  // arrays, and the table grows with the model, not with the DTD.
+  private val symKeys = Array.fill(Integer.highestOneBit(2 * size + 1) * 2)(-1)
+  private val symPos = new Array[Array[Int]](symKeys.length)
+  private def slot(sym: Int): Int = {
+    var i = sym & (symKeys.length - 1)
+    while (symKeys(i) >= 0 && symKeys(i) != sym) i = (i + 1) & (symKeys.length - 1)
+    i
   }
+  symOf.indices.foreach { p =>
+    val i = slot(symOf(p))
+    symKeys(i) = symOf(p)
+    symPos(i) = if (symPos(i) == null) Array(p) else symPos(i) :+ p
+  }
+
+  /** The positions of symbol id `sym`; null when the model never names it. */
+  def positions(sym: Int): Array[Int] = symPos(slot(sym))
 }
 
 object Dfa {
@@ -277,7 +334,7 @@ object Dfa {
   /** Glushkov construction: positions / nullable / first / last / follow.
     * `&`-groups normalize to `(a|b|…)*`; #PCDATA leaves are dropped (text
     * admission is checked via `ElementDef.mixed`). */
-  def compile(model: Model): Dfa = {
+  def compile(model: Model, names: Names): Dfa = {
     def norm(m: Model): Option[Model] = (m: @unchecked) match {
       case PcData  => None
       case r: Ref  => Some(r)
@@ -307,9 +364,9 @@ object Dfa {
       case None =>
         new Dfa(true, Array.empty, Array.empty, Array.empty, Array.empty)
       case Some(m0) =>
-        val syms = mutable.ArrayBuffer.empty[String]
+        val syms = mutable.ArrayBuffer.empty[Int]
         def number(mm: Model): Model = mm match {
-          case Ref(n)   => syms += n; RefP(n, syms.size - 1)
+          case Ref(n)   => syms += names.id(n); RefP(n, syms.size - 1)
           case MSeq(ms) => MSeq(ms.map(number))
           case Alt(ms)  => Alt(ms.map(number))
           case Opt(x)   => Opt(number(x))
@@ -403,9 +460,9 @@ final class DfaRun {
 
   private def isCand(p: Int): Boolean = if (onFirst) dfa.isFirst(p) else candMark(p)
 
-  /** Try to consume a child element name; false = not allowed here. */
-  def step(sym: String): Boolean = {
-    val ps = dfa.posOfSym.get(sym)
+  /** Try to consume child element id `sym`; false = not allowed here. */
+  def step(sym: Int): Boolean = {
+    val ps = dfa.positions(sym)
     if (ps == null) return false
     // a position whose follow set is the candidate set: nothing to rebuild
     if (ps.length == 1 && (dfa.follow(ps(0)) eq from) && isCand(ps(0))) {
@@ -448,8 +505,8 @@ final class DfaRun {
   }
 
   /** Would `step(sym)` succeed, without consuming? */
-  def canStep(sym: String): Boolean = {
-    val ps = dfa.posOfSym.get(sym)
+  def canStep(sym: Int): Boolean = {
+    val ps = dfa.positions(sym)
     if (ps == null) return false
     var i = 0
     while (i < ps.length) { if (isCand(ps(i))) return true; i += 1 }

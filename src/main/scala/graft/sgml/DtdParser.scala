@@ -140,19 +140,24 @@ object DtdParser {
             case _ => lx.restore(); more = false
           }
         }
+        val mentioned = content match {
+          case ContentKind.Modelled(m) => Dfa.symbols(m)
+          case _ => Set.empty[String]
+        }
+        val table = dtd.names ++ (names.iterator ++ mentioned ++ incl ++ excl)
         val defs = names.map { nm =>
           nm -> ElementDef(nm, omitStart, omitEnd, content, incl, excl,
-            dtd.elements.get(nm).map(_.attrs).getOrElse(Map.empty))
+            dtd.elements.get(nm).map(_.attrs).getOrElse(Map.empty), table)
         }
         // first declaration wins (SGML); don't overwrite existing models
         val merged = defs.foldLeft(dtd.elements) { case (m, (k, v)) =>
           m.get(k) match {
-            case Some(old) if old.content != ContentKind.Any || old.containable.nonEmpty => m
+            case Some(old) if old.content != ContentKind.Any => m
             case Some(old) => m.updated(k, v.copy(attrs = old.attrs))
             case None => m.updated(k, v)
           }
         }
-        dtd.copy(elements = merged)
+        dtd.copy(elements = merged, names = table)
 
       case "ATTLIST" =>
         val names = elementNames(lx, fold)
@@ -168,13 +173,14 @@ object DtdParser {
               decls += an -> AttrDecl(an, tpe, dflt)
           }
         }
+        val table = dtd.names ++ names
         val els = names.foldLeft(dtd.elements) { (m, nm) =>
           val old = m.getOrElse(nm,
-            ElementDef(nm, omitStart = false, omitEnd = false, ContentKind.Any))
+            ElementDef(nm, omitStart = false, omitEnd = false, ContentKind.Any, names = table))
           m.updated(nm, old.copy(attrs = old.attrs ++ decls.filterNot {
             case (k, _) => old.attrs.contains(k) }))
         }
-        dtd.copy(elements = els)
+        dtd.copy(elements = els, names = table)
 
       case "ENTITY" =>
         lx.save()

@@ -7,9 +7,9 @@ package graft.sgml
   * A real corpus uses a few dozen distinct names; interning the FOLDED
   * name straight off the tokenizer's StringBuilder means one String
   * allocation per distinct name per parser instead of one per tag, the
-  * String hashCode is memoized once ever, and every downstream map probe
-  * (DTD element lookup, DFA posOfSym, stack-name compares) hits the
-  * reference-equality fast path.
+  * String hashCode is memoized once ever, stack-name compares hit the
+  * reference-equality fast path, and a stored name keeps its DTD id, so a
+  * start tag resolves in the DTD without a hash probe.
   *
   * Open addressing, power-of-two table, linear probing. Capacity is
   * CAPPED: an adversarial document with unbounded distinct names stops
@@ -24,6 +24,13 @@ final class NameTable(fold: Boolean) {
   private val MaxEntries = Size / 2
   private val keys = new Array[String](Size)
   private var n = 0
+  // the slot of the name `intern` returned last (-1: not stored); per
+  // slot, the id of its name in `table` when its generation is `gen`
+  private var last = -1
+  private var table: Names = null
+  private var gen = 0L
+  private val idGen = new Array[Long](Size)
+  private val ids = new Array[Int](Size)
 
   // Per-CHAR case folding (Character.toLowerCase), not String.toLowerCase:
   // identical for ASCII and for the non-ASCII letters that appear in real
@@ -47,14 +54,26 @@ final class NameTable(fold: Boolean) {
       val k = keys(idx)
       if (k == null) {
         val s = materialize(sb, len)
-        if (n < MaxEntries) { keys(idx) = s; n += 1 }
+        if (n < MaxEntries) { keys(idx) = s; n += 1; last = idx } else last = -1
         return s
       }
-      if (k.length == len && sameFolded(k, sb, len)) return k
+      if (k.length == len && sameFolded(k, sb, len)) { last = idx; return k }
       idx = (idx + 1) & (Size - 1)
       probes += 1
     }
+    last = -1
     materialize(sb, len) // table pathologically full: still correct
+  }
+
+  /** The id of `name`, the name `intern` returned last, in `t`: one hash
+    * probe per stored name while `t` stays the table asked, then an array
+    * read. Only that one table is held. */
+  def id(name: String, t: Names): Int = {
+    if (t ne table) { table = t; gen += 1 }
+    val s = last
+    if (s < 0 || (keys(s) ne name)) return t.id(name)
+    if (idGen(s) != gen) { ids(s) = t.id(name); idGen(s) = gen }
+    ids(s)
   }
 
   private def sameFolded(k: String, sb: java.lang.StringBuilder, len: Int): Boolean = {

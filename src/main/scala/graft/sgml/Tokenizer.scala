@@ -564,21 +564,16 @@ final class Tokenizer(cfg: ParserConfig, holder: DtdHolder, sink: Event => Unit,
 
   private def finishOpen(selfClosingMark: Boolean): Unit = {
     val name = names.intern(nameBuf)
-    sink(Event.Open(name, attrs.reverse, selfClosingMark, tagStart))
+    val id = names.id(name, holder.dtd.names)
+    val edef = holder.dtd.element(id)
+    sink(Event.Open(name, attrs.reverse, selfClosingMark, tagStart, id, edef))
     attrs = Nil
     state = S_TEXT
-    if (!selfClosingMark) {
-      holder.dtd.element(name).map(_.content) match {
-        case Some(ContentKind.Cdata) =>
-          rawBuf.setLength(0); rawStart = pos + 1
-          rawIsCdata = true; rawEndTag = name
-          state = S_RAW
-        case Some(ContentKind.Rcdata) =>
-          rawBuf.setLength(0); rawStart = pos + 1
-          rawIsCdata = false; rawEndTag = name
-          state = S_RAW
-        case _ =>
-      }
+    if (!selfClosingMark && edef != null &&
+        (edef.content == ContentKind.Cdata || edef.content == ContentKind.Rcdata)) {
+      rawBuf.setLength(0); rawStart = pos + 1
+      rawIsCdata = edef.content == ContentKind.Cdata; rawEndTag = name
+      state = S_RAW
     }
   }
 
@@ -804,5 +799,6 @@ final class ErrorLog(max: Int) {
   }
   def count: Int = n
   def result(): Vector[ParseErr] = b.result()
-  def reset(): Unit = { b.clear(); n = 0; overflowed = false }
+  // a log that stayed empty has nothing to clear (a clear allocates)
+  def reset(): Unit = if (n > 0) { b.clear(); n = 0; overflowed = false }
 }

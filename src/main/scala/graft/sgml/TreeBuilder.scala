@@ -1,5 +1,6 @@
 package graft.sgml
 
+import java.util.BitSet
 import scala.collection.mutable
 
 /** Event stream → content with DTD-driven structural repair, committed
@@ -24,16 +25,18 @@ import scala.collection.mutable
 final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
     sink: ContentSink = new DomSink) {
 
+  import TreeBuilder._
+
   /** An open element: what repair, the space rules and SHORTREF read.
     * One frame per stack depth, reused by every element opened there. */
   private final class Frame {
     var name = ""
     var off = 0
-    var edef: Option[ElementDef] = None
-    var dfa: DfaRun = null // null = no content model (hot path: no Option probe)
+    var edef: ElementDef = null // null = undeclared, or the document level
+    var dfa: DfaRun = null // null = no content model
     val run = new DfaRun   // what `dfa` points at when there is a model
-    var exclusions = Set.empty[String]
-    var inclusions = Set.empty[String]
+    var exclusions = NoIds // element ids, own and inherited
+    var inclusions = NoIds
     var nsScope = Map.empty[String, String] // prefix → uri ("" = default)
     var spacePreserve = false
     /** SHORTREF map active in this element's content (T14); inherited by
@@ -52,6 +55,11 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
   // or lose the newline before an end tag; null = none.
   private var pending: String = null
   private var pendingOff = 0
+  /** #CURRENT attribute state (per document): declaration → most recently
+    * specified value. IdentityHashMap because the key IS the declaration
+    * instance (shared across a name-grouped attlist). Empty for HTML/XML
+    * (no #CURRENT in those DTDs) — one null-check per defaulted attr. */
+  private val currentVals = new java.util.IdentityHashMap[AttrDecl, String]()
   reset()
 
   private def top: Frame = frames(depth)
@@ -59,7 +67,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
   def accept(ev: Event): Unit = {
     if (log.overflowed) return
     ev match {
-      case Event.Open(n, as, sc, off) => onOpen(n, as, sc, off)
+      case Event.Open(n, as, sc, off, id, ed) => onOpen(n, as, sc, off, id, ed)
       case Event.Close(n, off)        => onClose(n, off)
       case Event.Text(s, raw, off)    => onText(s, raw, off)
       case Event.Pi(s, off)           => addChild(); sink.pi(s, off)
@@ -83,6 +91,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
   def reset(): Unit = {
     if (frames.size > TreeBuilder.KeptFrames) frames.dropRightInPlace(frames.size - TreeBuilder.KeptFrames)
     depth = 0; rootHasElem = false; pending = null
+    if (!currentVals.isEmpty) currentVals.clear()
     val root = top
     root.spacePreserve = cfg.space == SpaceMode.Preserve || cfg.space == SpaceMode.Strict
     root.srMap = null
@@ -94,7 +103,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
   // ----------------------------------------------------------- open/close
 
   private def onOpen(rawName: String, rawAttrs: List[RawAttr],
-      selfClosing: Boolean, off: Int): Unit = {
+      selfClosing: Boolean, off: Int, rawId: Int, rawDef: ElementDef): Unit = {
     // 1. namespace scope from xmlns attrs (D7); name qualification
     var scope = top.nsScope
     if (cfg.dialect.namespaces) {
@@ -107,22 +116,25 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
     }
     val name = qualify(rawName, scope, isAttr = false, off)
 
-    // 2. typed attribute values + defaulting (T4/T5)
+    // 2. typed attribute values + defaulting (T4/T5); the tokenizer
+    // resolved the tag's own name, so only a prefixed one is looked up
     val lookup = if (cfg.dialect.namespaces) localOf(rawName) else rawName
-    val edef = holder.dtd.element(lookup)
+    val edef = if (lookup == rawName) rawDef else holder.dtd.element(holder.dtd.id(lookup))
     val attrs = typedAttrs(rawName, rawAttrs, edef, scope, off)
 
     // 3. structural repair (D3) — may implicitly close/open elements
-    repairFor(localOf(name), off)
+    val local = localOf(name)
+    val id = if (local == rawName) rawId else holder.dtd.id(local)
+    repairFor(local, id, off)
 
     // 4. advance parent's DFA
-    stepParent(localOf(name))
+    stepParent(id)
 
     // 5. push or immediately close (D4). A SPECIFIED #CONREF attribute
     // makes the element's content empty (ISO 8879 content reference —
     // the attribute points at the content, so no end tag is expected).
-    val isEmpty = edef.isDefined && (edef.get.content == ContentKind.Empty ||
-      (edef.get.conrefAttrs.length > 0 && edef.get.conrefAttrs.exists(n =>
+    val isEmpty = edef != null && (edef.content == ContentKind.Empty ||
+      (edef.conrefAttrs.length > 0 && edef.conrefAttrs.exists(n =>
         rawAttrs.exists(ra => localOf(ra.name) == n))))
     if (selfClosing || isEmpty) { openChild(name, attrs, off); sink.close() }
     else pushFrame(name, attrs, off, edef, lookup, scope,
@@ -141,7 +153,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
     * the exception sets merged with the parent's, its namespace scope,
     * space flag and SHORTREF map (`lookup` is its DTD name). */
   private def pushFrame(name: String, attrs: List[Attr], off: Int,
-      edef: Option[ElementDef], lookup: String, scope: Map[String, String],
+      edef: ElementDef, lookup: String, scope: Map[String, String],
       preserve: Boolean): Unit = {
     openChild(name, attrs, off)
     val parent = top
@@ -150,10 +162,13 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
     if (depth == frames.size) frames += new Frame
     val f = top
     f.name = name; f.off = off; f.edef = edef
-    val model = if (edef.isDefined) edef.get.dfa.orNull else null
+    val model = if (edef == null) null else edef.dfa
     f.dfa = if (model == null) null else f.run.start(model)
-    f.exclusions = mergedSet(parent.exclusions, edef.map(_.exclusions).getOrElse(Set.empty))
-    f.inclusions = mergedSet(parent.inclusions, edef.map(_.inclusions).getOrElse(Set.empty))
+    if (edef == null) { f.exclusions = parent.exclusions; f.inclusions = parent.inclusions }
+    else {
+      f.exclusions = union(parent.exclusions, edef.exclusionIds)
+      f.inclusions = union(parent.inclusions, edef.inclusionIds)
+    }
     f.nsScope = scope; f.spacePreserve = preserve; f.srMap = srm
     f.started = false
     holder.activeShortrefs = srm
@@ -202,7 +217,7 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
   private def closeAbove(keep: Int, at: Int): Unit =
     while (depth > keep) {
       val f = top
-      if (f.edef.forall(!_.omitEnd))
+      if (f.edef == null || !f.edef.omitEnd)
         log.add("unclosed-element", if (at < 0) f.off else at, f.name)
       popFrame()
     }
@@ -225,41 +240,26 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
 
   // --------------------------------------------------------------- repair
 
-  /** Can `frame` directly accept a child element `local`? */
-  private def accepts(f: Frame, local: String): Boolean = {
-    if (f.exclusions.contains(local)) return false
-    if (f.inclusions.contains(local)) return true
-    f.edef match {
-      case None => true // unknown element / no DTD: transparent
-      case Some(ed) => ed.content match {
-        case ContentKind.Any => true
-        case ContentKind.Modelled(_) =>
-          (f.dfa != null && f.dfa.canStep(local)) ||
-            // lenient: allow re-entry for repeatable members the DFA lost
-            // track of due to the All-approximation
-            (f.dfa == null && ed.containable.contains(local))
-        case _ => false // EMPTY/CDATA/RCDATA cannot contain elements
-      }
-    }
-  }
+  /** Can `frame` directly accept child element `id`? An unknown element
+    * (or no DTD) is transparent; EMPTY/CDATA/RCDATA content takes none. */
+  private def accepts(f: Frame, id: Int): Boolean =
+    if (has(f.exclusions, id)) false
+    else has(f.inclusions, id) || f.edef == null || f.edef.content == ContentKind.Any ||
+      canStepTo(f, id)
 
-  private def acceptsText(f: Frame, wsOnly: Boolean): Boolean = {
-    f.edef match {
-      case None     => true
-      case Some(ed) => ed.mixed || (wsOnly && ed.content != ContentKind.Empty)
-    }
-  }
+  private def acceptsText(f: Frame, wsOnly: Boolean): Boolean =
+    f.edef == null || f.edef.mixed || (wsOnly && f.edef.content != ContentKind.Empty)
 
   /** D3 — omitted-tag inference: make the top frame able to accept
     * `local`, closing omit-end elements and opening omit-start elements
     * as the reference does; bounded, never throws. */
-  private def repairFor(local: String, off: Int): Unit = {
+  private def repairFor(local: String, id: Int, off: Int): Unit = {
     var guard = depth + 9
     var relaxedUsed = false
     while (guard > 0) {
       guard -= 1
       val f = top
-      if (f.edef.isEmpty) {
+      if (f.edef == null) {
         // Virtual document frame (or an undeclared element): upstream
         // OMITTAG inference starts at the DOCTYPE root, so `<p>…` with the
         // HTML DTD materializes the full `<html><head></head><body>` chain
@@ -270,30 +270,29 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
         // a second chain — and only when the declared root is omissible
         // and not the element itself; the loop then repairs downward.
         if (depth == 0) {
-          val rootName = holder.dtd.doctype.orNull
-          val implyRoot = rootName != null && rootName != local &&
-            holder.dtd.element(rootName).exists(_.omitStart) && !rootHasElem
-          if (!implyRoot) return
-          impliedOpen(rootName, off)
+          val root = holder.dtd.doctype.filter(r => r != local && !rootHasElem)
+            .flatMap(r => holder.dtd.element(r)).filter(_.omitStart)
+          if (root.isEmpty) return
+          impliedOpen(root.get, off)
           // restart the loop: repair continues against the implied root
         } else return
       }
-      else if (accepts(f, local)) return
+      else if (accepts(f, id)) return
       else {
         // (a) implied open: an enabled child with omitted start tag that
         //     can contain `local` (e.g. <table><tr> → insert <tbody>)
-        var via = impliable(f, holder.dtd.omitStartElems, local)
+        var via = impliable(f, holder.dtd.omitStartElems, id)
         // (a') one-shot relaxed open: step through a fully-omissible
         //      required element that cannot itself hold `local` — e.g.
         //      `<html><body>` materializes the empty `head` (its close
         //      is implied next iteration, advancing html's DFA to body)
         if (via == null && !relaxedUsed) {
-          via = impliable(f, holder.dtd.omitStartEndElems, null)
+          via = impliable(f, holder.dtd.omitStartEndElems, AnyChild)
           relaxedUsed = via != null
         }
         if (via != null) impliedOpen(via, off)
         // (b) implied close: `<li>` implies `</li>` when li omit-end
-        else if (f.edef.exists(_.omitEnd) && depth > 0) popFrame()
+        else if (f.edef.omitEnd && depth > 0) popFrame()
         else {
           if (cfg.validate) log.add("not-allowed-here", off, local)
           return // accept in place (lenient)
@@ -304,24 +303,21 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
 
   /** The first of `cands` — omissible-start elements — that frame `f` does
     * not exclude, that `f`'s model can step to, and that can contain
-    * `local` (any, when null); null = none. The search is inverted for
-    * speed: the DTD's few omissible elements, one DFA probe each, never
-    * the full enabled-symbol set. */
-  private def impliable(f: Frame, cands: Array[ElementDef], local: String): String = {
+    * element `id` (any, when [[AnyChild]]); null = none. The search is
+    * inverted for speed: the DTD's few omissible elements, one DFA probe
+    * each, never the full enabled-symbol set. */
+  private def impliable(f: Frame, cands: Array[ElementDef], id: Int): ElementDef = {
     var i = 0
     while (i < cands.length) {
       val xd = cands(i)
-      if ((local == null || xd.containable.contains(local) || xd.content == ContentKind.Any) &&
-          !f.exclusions.contains(xd.name) && canStepTo(f, xd.name)) return xd.name
+      if ((id == AnyChild || xd.canContain(id)) && !has(f.exclusions, xd.id) &&
+          canStepTo(f, xd.id)) return xd
       i += 1
     }
     null
   }
 
-  private def canStepTo(f: Frame, sym: String): Boolean = {
-    val run = f.dfa
-    run != null && run.canStep(sym)
-  }
+  private def canStepTo(f: Frame, id: Int): Boolean = f.dfa != null && f.dfa.canStep(id)
 
   /** Text repair — same search, driven by `mixed` instead of a name. */
   private def repairForText(off: Int): Unit = {
@@ -330,10 +326,10 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
       guard -= 1
       val f = top
       if (acceptsText(f, wsOnly = false)) return
-      val via = impliable(f, holder.dtd.omitStartMixedElems, null)
+      val via = impliable(f, holder.dtd.omitStartMixedElems, AnyChild)
       if (via != null) impliedOpen(via, off)
       else {
-        if (f.edef.exists(_.omitEnd) && depth > 0) popFrame()
+        if (f.edef.omitEnd && depth > 0) popFrame()
         else {
           if (cfg.validate) log.add("cdata-not-allowed", off, f.name)
           return
@@ -342,25 +338,27 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
     }
   }
 
-  private def impliedOpen(local: String, off: Int): Unit = {
-    stepParent(local)
-    val edef = holder.dtd.element(local)
+  private def impliedOpen(xd: ElementDef, off: Int): Unit = {
+    stepParent(xd.id)
     val scope = top.nsScope
-    pushFrame(qualify(local, scope, isAttr = false, off), typedAttrs(local, Nil, edef, scope, off),
-      off, edef, local, scope, top.spacePreserve)
+    pushFrame(qualify(xd.name, scope, isAttr = false, off), typedAttrs(xd.name, Nil, xd, scope, off),
+      off, xd, xd.name, scope, top.spacePreserve)
   }
 
-  /** Avoid Set concat allocation in the common no-exceptions case (HTML4:
-    * most elements declare no inclusions/exclusions). */
-  private def mergedSet(parent: Set[String], own: Set[String]): Set[String] =
-    if (own.isEmpty) parent else if (parent.isEmpty) own else parent ++ own
+  /** Share, not copy, in the common no-exceptions case (HTML4: most
+    * elements declare no inclusions/exclusions). */
+  private def union(parent: BitSet, own: BitSet): BitSet =
+    if (own.isEmpty) parent else if (parent.isEmpty) own
+    else { val u = parent.clone().asInstanceOf[BitSet]; u.or(own); u }
 
-  /** Advance the top frame's content model past child `local`; inclusions
+  private def has(ids: BitSet, id: Int): Boolean = id >= 0 && ids.get(id)
+
+  /** Advance the top frame's content model past child `id`; inclusions
     * do not advance it. A child it cannot take is one repair gave up on,
     * which logged it. */
-  private def stepParent(local: String): Unit = {
+  private def stepParent(id: Int): Unit = {
     val f = top
-    if (f.dfa != null && !f.inclusions.contains(local)) f.dfa.step(local)
+    if (f.dfa != null && !has(f.inclusions, id)) f.dfa.step(id)
   }
 
   // ----------------------------------------------------------------- text
@@ -376,11 +374,11 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
       // `<!DOCTYPE …>\n<root>` drops the separator newline (upstream
       // treats prolog/epilog whitespace as markup separation [V])
       if (wsOnly && depth == 0) return
-      if (wsOnly && top.edef.exists(ed => !ed.mixed)) {
+      if (wsOnly && top.edef != null && !top.edef.mixed) {
         if (cfg.space == SpaceMode.Strict) log.add("whitespace-not-allowed", off, top.name)
         return
       }
-      if (wsOnly && !acceptsText(top, wsOnly = true) && top.edef.isDefined) return
+      if (wsOnly && !acceptsText(top, wsOnly = true) && top.edef != null) return
 
       if (!wsOnly && !acceptsText(top, wsOnly = false)) repairForText(off)
 
@@ -424,16 +422,13 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
   // ----------------------------------------------------- attributes (T4/T5)
 
   private def typedAttrs(rawName: String, rawAttrs: List[RawAttr],
-      edef: Option[ElementDef], scope: Map[String, String], off: Int): List[Attr] = {
+      edef: ElementDef, scope: Map[String, String], off: Int): List[Attr] = {
     // fast path: no attrs on the tag and nothing to inject/enforce — the
     // common case even with the bundled attlists (core attrs are all
     // #IMPLIED, which requires no action when absent)
-    val actions = edef match {
-      case Some(e) => e.actionAttrs
-      case None => ElementDef.noActions
-    }
+    val actions = if (edef == null) ElementDef.noActions else edef.actionAttrs
     if (rawAttrs.isEmpty && actions.length == 0) return Nil
-    val decls = edef.map(_.attrs).getOrElse(Map.empty)
+    val decls = if (edef == null) Map.empty[String, AttrDecl] else edef.attrs
     // tags carry a handful of attrs — an order-preserving array with a
     // linear dup scan beats per-name hashing (LinkedHashMap's anyHash was
     // a measured ~5% of kernel CPU with the bundled attlists active); a
@@ -484,12 +479,6 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
     }
     out.toList
   }
-
-  /** #CURRENT attribute state (per document): declaration → most recently
-    * specified value. IdentityHashMap because the key IS the declaration
-    * instance (shared across a name-grouped attlist). Empty for HTML/XML
-    * (no #CURRENT in those DTDs) — one null-check per defaulted attr. */
-  private val currentVals = new java.util.IdentityHashMap[AttrDecl, String]()
 
   private def convertAttr(v0: String, decl: Option[AttrDecl], off: Int): AttrValue = {
     import AttrType._
@@ -654,6 +643,12 @@ final class TreeBuilder(cfg: ParserConfig, holder: DtdHolder, log: ErrorLog,
 }
 
 object TreeBuilder {
+  /** The empty id set: a frame's exceptions when no element declares any. */
+  private val NoIds = new BitSet
+
+  /** `impliable`'s wildcard child: an element that can contain anything. */
+  private final val AnyChild = -2
+
   /** Declarations applied to the DTD when they appear in the instance. */
   private val InstanceDecls = Seq("ELEMENT", "ATTLIST", "ENTITY", "SHORTREF", "NOTATION")
 

@@ -127,7 +127,11 @@ final case class RawAttr(name: String, value: Option[String], off: Int)
   * (`sgml2pl.c — on_begin/on_end/on_cdata/on_entity/on_pi/on_decl` [V]). */
 sealed trait Event { def off: Int }
 object Event {
-  final case class Open(name: String, attrs: List[RawAttr], selfClosing: Boolean, off: Int) extends Event
+  /** `id` and `edef` are `name` resolved in the DTD in effect: its id (-1
+    * when the DTD never mentions it) and its definition (null when not
+    * declared). */
+  final case class Open(name: String, attrs: List[RawAttr], selfClosing: Boolean, off: Int,
+      id: Int, edef: ElementDef) extends Event
   final case class Close(name: String, off: Int) extends Event
   /** raw=true: CDATA section / declared-CDATA element content. */
   final case class Text(s: String, raw: Boolean, off: Int) extends Event

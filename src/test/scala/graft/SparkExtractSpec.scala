@@ -383,6 +383,68 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(column.getMessage.contains("spec must be a string literal"), column.getMessage)
   }
 
+  test("codegen ≡ interpreted: every kernel projection gives the same rows in three codegen modes, inside one whole-stage stage") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.graft.Catalyst
+    import graft.functions.ExtractSpansExpr
+    val dir = java.nio.file.Files.createTempDirectory("codegen-modes").resolve("docs").toString
+    Seq(
+      Doc("normal", Seq(Span("text", "<p>fine<p>two", null, 0))),
+      Doc("null-spans", null),
+      Doc("null-span", Seq(Span("text", "<ul><li>a", null, 0), null, Span("text", "<li>b</ul>", null, 9))),
+      Doc("media", Seq(Span("text", "<table><tr><td>a", null, 0),
+        Span("media", "", "img.png", 16), Span("text", "b</table>", null, 16))),
+      Doc("big", Seq(Span("text", "<p>" + ("x" * 100), null, 0))),
+      Doc("noisy", Seq(Span("text", "<p>" + ("x</b>" * 10) + "</p>", null, 0))),
+      Doc("bad", Seq(Span("text", "<p>x", null, 0)))).toDS().write.parquet(dir)
+    val small = cfg.copy(maxDocChars = 60, maxErrors = 3)
+    SgmlExtract.registerUdfs(spark)
+    def outputs(): Seq[(String, DataFrame)] = {
+      // the malformed row reaches the kernel without a row copy in between
+      val docs = spark.read.parquet(dir).withColumn("spans",
+        when(col("doc_id") === "bad", Catalyst.column(MalformedSpans)).otherwise(col("spans")))
+      Seq(
+        "extractDf" -> SgmlExtract.extractDf(docs, small),
+        "serializeCanonical" -> SgmlExtract.serializeCanonical(docs, small),
+        "sgml_xpath" -> docs.selectExpr("doc_id",
+          "sgml_xpath(concat_ws('', spans.text), '//li/text', 'html4') AS r"))
+    }
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.getString(0))
+    val modes = Seq(Map.empty[String, String], Map("spark.sql.codegen.wholeStage" -> "false"),
+      Map("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    val got = modes.map { mode =>
+      mode.foreach { case (k, v) => spark.conf.set(k, v) }
+      try outputs().map { case (name, df) => name -> rows(df) }
+      finally mode.keys.foreach(spark.conf.unset)
+    }
+    assert(got(1) === got(0))
+    assert(got(2) === got(0))
+    val extracted = got(0).head._2.map(r => r.getString(0) -> r).toMap
+    def codes(id: String): Seq[String] = extracted(id).getSeq[Row](2).map(_.getString(0))
+    assert(extracted("null-spans").isNullAt(1))
+    assert(codes("big") === Seq("doc-too-large"))
+    assert(codes("noisy").last === "max-errors")
+    assert(extracted("bad").getSeq[Row](2).map(e => (e.getString(0), e.getString(2))) ===
+      Seq(("internal-error", "java.lang.IllegalStateException: malformed offset")))
+    assert(extracted("media").getSeq[Row](1).map(_.getString(0)) === Seq("text", "media", "text"))
+    assert(got(0)(2)._2.map(r => r.getString(0) -> r.getSeq[String](1)).toMap.apply("null-span") === Seq("a", "b"))
+    // the kernel runs inside a whole-stage stage, not behind a row copy
+    def kernelFused(p: SparkPlan, fused: Boolean): Seq[Boolean] = p match {
+      case a: AdaptiveSparkPlanExec => kernelFused(a.executedPlan, fused)
+      case w: WholeStageCodegenExec => kernelFused(w.child, fused = true)
+      case i: InputAdapter => kernelFused(i.child, fused = false)
+      case _ =>
+        (if (p.expressions.exists(_.exists(_.isInstanceOf[ExtractSpansExpr]))) Seq(fused) else Nil) ++
+          p.children.flatMap(kernelFused(_, fused))
+    }
+    for ((name, df) <- outputs())
+      assert(kernelFused(df.queryExecution.executedPlan, fused = false) === Seq(true),
+        s"$name: ${df.queryExecution.executedPlan}")
+  }
+
   test("library calls build their kernel nodes: a fresh session stays unregistered") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
@@ -1055,4 +1117,22 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.length ==
       MediaOps.syntheticAssets(SgmlExtract.documents(spark, sf)).filter(_.mime == "audio/wav").count())
   }
+}
+
+/** A span array whose `offset` slot cannot be read as an int, which
+  * makes the kernel's feed throw: its row is an `internal-error` row. A
+  * leaf, so a whole-stage stage keeps it. */
+private case object MalformedSpans extends org.apache.spark.sql.catalyst.expressions.LeafExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  import org.apache.spark.unsafe.types.UTF8String
+  override def nullable: Boolean = false
+  override def dataType: org.apache.spark.sql.types.DataType =
+    org.apache.spark.sql.types.ArrayType(graft.functions.ExtractSpansExpr.SpanType)
+  override def eval(input: InternalRow): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(Array[Any](
+      new GenericInternalRow(Array[Any](UTF8String.fromString("text"), UTF8String.fromString("<p>x"), null, 0)) {
+        override def getInt(i: Int): Int = throw new IllegalStateException("malformed offset")
+      }))
 }
