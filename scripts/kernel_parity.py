@@ -15,8 +15,10 @@ families, each under several (dialect, space, strip, validate) configs.
 Prints the number of parses, how many are identical, and every kind of
 difference: whether the spans differ, and the error codes only one side
 reports, with the count and `--show` examples of each. With `--reuse`,
-each tree also parses the corpus in shuffled order through one reused
-`ParseDriver` per config, and that dump is compared with the tree's
+each tree also parses the corpus in shuffled order through one
+`SgmlParser(cfg, SpanSink.spans(cfg))` per config, reused through
+`reset` as a Spark thread reuses its parser (a parse that throws drops
+its parser), and that dump is compared with the tree's
 fresh-parser dump, and the parent's with the change's. Every config
 resolves a catalog DTD with `#CURRENT` and SHORTREF, which some
 documents name. Exits 1 when any parse differs, 0 otherwise. Writes nothing in either tree except
@@ -57,16 +59,19 @@ object KernelDump {
     val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
       new java.io.FileOutputStream(args(1)), "UTF-8"))
     val src = scala.io.Source.fromFile(args(0), "UTF-8")
-    // "reuse": one driver per config, as a Spark thread reuses its parser
-    val drivers = scala.collection.mutable.Map.empty[ParserConfig, (ParseDriver, SpanSink[Span])]
+    // "reuse": one parser per config, as a Spark thread reuses its parser
+    val parsers = scala.collection.mutable.Map.empty[ParserConfig, (SgmlParser, SpanSink[Span])]
     for (line <- src.getLines()) {
       val Array(id, dialect, space, strip, validate, hex) = line.split("\t", -1)
       val cfg = ParserConfig(dialect = Dialect.parse(dialect), space = SpaceMode.parse(space),
         boilerplate = strip == "1", validate = validate == "1", catalog = catalog)
       val row = try {
         val (spans, errs) = if (args.length < 3) SgmlParser.spans(unhex(hex), cfg) else {
-          val (d, sink) = drivers.getOrElseUpdate(cfg, { val s = SpanSink.spans(cfg); (new ParseDriver(cfg, s), s) })
-          d(_.feed(unhex(hex), 0))(r => (sink.result, r.errors)).fold(e => throw new Exception(e), identity)
+          // checked out: only a completed parse puts its parser back
+          val (p, sink) = parsers.remove(cfg).getOrElse { val s = SpanSink.spans(cfg); (new SgmlParser(cfg, s), s) }
+          val r = p.reset().feed(unhex(hex), 0).finish()
+          parsers(cfg) = (p, sink)
+          (sink.result, r.errors)
         }
         spans.map(s => s"${s.kind}|${esc(s.text)}|${esc(s.media_ref)}|${s.offset}").mkString(";") +
           "\t" + errs.map(e => s"${e.code}|${e.offset}|${esc(e.detail)}").mkString(";")
@@ -202,7 +207,7 @@ def java():
 
 def dump(tree, work, name, corpus_files):
     """The fresh dump of corpus_files[0], and with a second (shuffled)
-    corpus file also its reused-driver dump."""
+    corpus file also its reused-parser dump."""
     cp = classpath(tree)
     classes = os.path.join(work, name + "-classes")
     os.makedirs(classes)
@@ -258,7 +263,7 @@ def main():
     ap.add_argument("--show", type=int, default=3, help="examples per kind of difference")
     ap.add_argument("--keep", action="store_true", help="keep the corpus and the dumps")
     ap.add_argument("--reuse", action="store_true",
-                    help="also parse in shuffled order through one reused driver per config")
+                    help="also parse in shuffled order through one reused parser per config")
     a = ap.parse_args()
 
     rows = corpus(a.seed)

@@ -197,23 +197,6 @@ object SgmlExtract {
     Catalyst.column(ExtractSpansExpr(Catalyst.expression(spans), config, projection))
   }
 
-  /** SQL surface: the kernel functions (`extract_spans`, `sgml_spans`,
-    * `sgml_canonical`, `sgml_table_cells`, `sgml_xpath` — SURVEY.md §2.7
-    * UDF surface, §2.4 Q1-Q9), `bucket_collect` and `pwp_render`. The
-    * library's own calls never need it. */
-  def registerUdfs(spark: SparkSession): Unit = {
-    ExtractSpansExpr.register(spark)
-    // PWP template rendering with scalar bindings (SURVEY.md §2.5; the
-    // row-set pwp:ask form needs nested columns — graft.ops.PwpOps.render)
-    val pwp = (template: String, scalars: Map[String, String]) =>
-      Pwp.renderXml(
-        if (template == null) "" else template,
-        if (scalars == null) Map.empty[String, Pwp.Val]
-        else scalars.map { case (k, v) =>
-          k -> (Pwp.Scalar(if (v == null) "" else v): Pwp.Val) })
-    spark.udf.register("pwp_render", pwp)
-  }
-
   /** Size-aware repartition for skewed giant docs (north rule; SURVEY.md
     * §4.1): whales (≥ whaleChars) are placed ROUND-ROBIN on exact
     * partitions — a deterministic ≤⌈W/P⌉ whales-per-task bound, where

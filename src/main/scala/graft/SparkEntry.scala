@@ -358,14 +358,14 @@ object SparkEntry {
 
     // ---- SQL kernel surface (text-only query, registered functions) ------
     "k1_sql_kernels" -> ((s, dir) => {
-      // the OpsFunctions surface under the oracle gate end-to-end: the
+      // the SQL function table under the oracle gate end-to-end: the
       // query is exactly what a SQL-first user types — TEXT ONLY, every
       // kernel via a registered function (simhash64 / minhash_sig /
       // text_shingles / doc_fingerprint / ngram_jaccard); DuckDB replays
       // each kernel from the shared closed-form arithmetic. try_element_at
       // (1-based) keeps empty fingerprints null under ANSI mode, matching
       // the oracle's out-of-range list index.
-      OpsFunctions.register(s)
+      graft.functions.ExtractSpansExpr.register(s)
       documents(s, dir).createOrReplaceTempView("k1_documents")
       s.sql("""
         SELECT a.doc_id,

@@ -1,21 +1,25 @@
 package graft.functions
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.graft.Catalyst
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, GetArrayItem, GetStructField, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, GetArrayItem, GetStructField, Literal, ScalaUDF, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.{BaseGenericInternalRow, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sgml.{ParseDriver, ParseErr, ParseResult, ParserConfig, SgmlParser, Serializer, Span, SpanEmitter, SpanSink, XPathSpec}
+import graft.sgml.{ContentSink, DomSink, ParseErr, ParseResult, ParserConfig, Pwp, SgmlParser, Serializer, Span, SpanSink, XPathSpec}
 import graft.SgmlExtract
-import graft.ops.TableOps
+import graft.ops.{Dedup, MediaOps, TableOps, TextOps}
 
 /** Native Catalyst expression for the extraction kernel:
   * `extract_spans(spans_array [, dialect [, space [, boilerplate
@@ -31,15 +35,16 @@ import graft.ops.TableOps
   * so the scan, the parse and the projections after it fuse into one
   * whole-stage codegen stage.
   *
-  * Every parse is this one expression: its [[Projection]] picks what the
-  * parse commits to and turns the finished parse into the first field of
-  * the output — spans straight from a span sink, no tree; canonical XML,
-  * table cells or xpath solutions from the DOM. The feed, the driver, the
-  * input check and the `errors` field are shared.
+  * Every parse is this one expression: its [[Projection]] names the sink
+  * the parse commits to and turns the finished parse into the first field
+  * of the output — spans straight from a span sink, no tree; canonical
+  * XML, table cells or xpath solutions from the DOM. The feed, the
+  * lifecycle ([[ExtractSpansExpr.Kernel]]), the input check and the
+  * `errors` field are shared.
   *
   * Reference lifecycle mirrored per SURVEY.md §3 E1 (`sgml2pl.c —
-  * pl_new_sgml_parser / pl_sgml_parse` [V]) through [[ParseDriver]]: one
-  * parser per thread, reset per row. A null input array yields null.
+  * pl_new_sgml_parser / pl_sgml_parse` [V]): one parser per thread, reset
+  * per row. A null input array yields null.
   */
 case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
     projection: ExtractSpansExpr.Projection = ExtractSpansExpr.Spans)
@@ -65,21 +70,17 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
           s"field `${f.name}` is ${types.get(f.name).fold("missing")(_.sql)}"))
   }
 
-  @transient private lazy val idx: (Int, Int, Int, Int, Int) = {
-    val st = child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-    (st.fieldIndex("kind"), st.fieldIndex("text"),
-      st.fieldIndex("media_ref"), st.fieldIndex("offset"), st.size)
-  }
-
-  @transient private lazy val cfg: ParserConfig = config.toParserConfig
-
   // One kernel per thread: expression instances can be shared across the
   // tasks of a local-mode executor, and the parser is stateful. The last
   // caller's kernel is kept in a field, so a row costs a thread compare
-  // instead of a ThreadLocal probe; its fields are final, so another
-  // thread reading it sees a kernel that is not its own, never a torn one.
-  @transient private lazy val kernels: ThreadLocal[Kernel] =
-    ThreadLocal.withInitial(() => projection.kernel(cfg))
+  // instead of a ThreadLocal probe. Another thread that reads that field
+  // reads only the kernel's final `thread` field, and so takes its own
+  // kernel; the kernel's other state is touched only by its own thread.
+  @transient private lazy val kernels: ThreadLocal[Kernel] = {
+    val cfg = config.toParserConfig
+    val input = child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    ThreadLocal.withInitial(() => new Kernel(cfg, projection, input))
+  }
   @transient private var last: Kernel = _
 
   override protected def nullSafeEval(v: Any): Any = parse(v.asInstanceOf[ArrayData])
@@ -93,49 +94,74 @@ case class ExtractSpansExpr(child: Expression, config: SgmlExtract.Config,
   def parse(arr: ArrayData): InternalRow = {
     var k = last
     if (k == null || (k.thread ne Thread.currentThread())) { k = kernels.get(); last = k }
-    k.driver(feed(arr, _)) { r =>
-      new GenericInternalRow(Array[Any](k.value(r), errRows(r.errors)))
-    }.fold(errorRow, identity)
+    k(arr)
   }
-
-  // The one feed of a parser from data. Text goes in via
-  // `UTF8String.toString`: measured 5-15% faster than decoding into a
-  // reused char[] (compact strings, intrinsified decoder).
-  private def feed(arr: ArrayData, p: SgmlParser): Unit = {
-    val (kindI, textI, refI, offI, nFields) = idx
-    val nIn = arr.numElements()
-    var i = 0
-    while (i < nIn) {
-      val row = arr.getStruct(i, nFields)
-      if (row != null) {
-        val kind = row.getUTF8String(kindI)
-        val off = if (row.isNullAt(offI)) 0 else row.getInt(offI)
-        if (kind != null && MediaKind.equals(kind)) {
-          val ref = row.getUTF8String(refI)
-          p.media(if (ref == null) null else ref.toString, off)
-        } else {
-          val t = row.getUTF8String(textI)
-          if (t != null) p.feed(t.toString, off)
-        }
-      }
-      i += 1
-    }
-  }
-
-  // a failed parse: the projection's empty value and one internal-error
-  private def errorRow(detail: String): InternalRow =
-    new GenericInternalRow(Array[Any](projection.failed(cfg),
-      errRows(Vector(ParseErr("internal-error", 0, detail)))))
 
   override protected def withNewChildInternal(newChild: Expression): ExtractSpansExpr =
     copy(child = newChild)
 }
 
 object ExtractSpansExpr {
-  /** The calling thread's parse for one expression: a driver, and the
-    * field's value of a parse it finished. */
-  private[graft] final class Kernel(val driver: ParseDriver, val value: ParseResult => Any) {
+  /** The calling thread's parse lifecycle for one expression: the
+    * projection's sink and ONE parser committing to it, reused across the
+    * rows of the thread (per-row parser construction dominated small-doc
+    * throughput). `input` is the element type of the span array.
+    *
+    * A non-fatal throw anywhere in the feed, the finish or the projection
+    * gives the projection's failed value and one `internal-error` whose
+    * detail is the throwable's class name: in hot code HotSpot throws the
+    * JVM's implicit exceptions without a message, so a message would
+    * differ from run to run. The parser, whose state is then unknown, is
+    * dropped and the next row gets a fresh one; fatal errors
+    * (`VirtualMachineError`, `InterruptedException`, …) propagate and
+    * drop it too. Not thread-safe: one kernel per thread. */
+  private[graft] final class Kernel(cfg: ParserConfig, projection: Projection, input: StructType) {
     val thread: Thread = Thread.currentThread()
+    private[functions] val sink: ContentSink = projection.sink(cfg)
+    private var parser: SgmlParser = _
+    private val kindI = input.fieldIndex("kind")
+    private val textI = input.fieldIndex("text")
+    private val refI = input.fieldIndex("media_ref")
+    private val offI = input.fieldIndex("offset")
+    private val nFields = input.size
+
+    /** The output struct of one non-null span array. */
+    def apply(arr: ArrayData): InternalRow =
+      try {
+        val p = if (parser == null) new SgmlParser(cfg, sink) else parser
+        parser = null // checked out: only a completed parse returns it
+        p.reset()
+        feed(arr, p)
+        val r = p.finish()
+        val row = new GenericInternalRow(Array[Any](projection(r, sink), errRows(r.errors)))
+        parser = p
+        row
+      } catch {
+        case NonFatal(e) => new GenericInternalRow(Array[Any](projection.failed(cfg),
+          errRows(Vector(ParseErr("internal-error", 0, e.getClass.getName)))))
+      }
+
+    // Text goes in via `UTF8String.toString`: measured 5-15% faster than
+    // decoding into a reused char[] (compact strings, intrinsified decoder).
+    private def feed(arr: ArrayData, p: SgmlParser): Unit = {
+      val nIn = arr.numElements()
+      var i = 0
+      while (i < nIn) {
+        val row = arr.getStruct(i, nFields)
+        if (row != null) {
+          val kind = row.getUTF8String(kindI)
+          val off = if (row.isNullAt(offI)) 0 else row.getInt(offI)
+          if (kind != null && MediaKind.equals(kind)) {
+            val ref = row.getUTF8String(refI)
+            p.media(if (ref == null) null else ref.toString, off)
+          } else {
+            val t = row.getUTF8String(textI)
+            if (t != null) p.feed(t.toString, off)
+          }
+        }
+        i += 1
+      }
+    }
   }
 
   private val MediaKind = UTF8String.fromString("media")
@@ -145,18 +171,19 @@ object ExtractSpansExpr {
   val SpanType: StructType = Encoders.product[Span].schema
   val ErrType: StructType = Encoders.product[ParseErr].schema
 
-  /** What a finished parse becomes: the first field of the output
-    * struct, `field`, of the SQL function `name`, and that field's value
-    * when the parse failed — by default the projection of an empty
-    * document. */
+  /** What a parse commits to and becomes: the first field of the output
+    * struct, `field`, of the SQL function `name`. */
   sealed abstract class Projection(val name: String, val field: StructField)
       extends Serializable {
-    def apply(r: ParseResult, cfg: ParserConfig): Any
-    def failed(cfg: ParserConfig): Any = apply(ParseResult(Vector.empty, Vector.empty), cfg)
-    /** The calling thread's kernel — by default a tree, projected by
-      * `apply`. */
-    private[graft] def kernel(cfg: ParserConfig): Kernel =
-      new Kernel(new ParseDriver(cfg), apply(_, cfg))
+    /** The sink a parse commits to — by default a tree, which `apply`
+      * reads from the finished parse. */
+    private[graft] def sink(cfg: ParserConfig): ContentSink = new DomSink
+    /** The field's value of a finished parse that committed to `sink`. */
+    private[graft] def apply(r: ParseResult, sink: ContentSink): Any
+    /** The field's value when the parse failed — by default the
+      * projection of an empty document, committed to a fresh sink. */
+    private[graft] def failed(cfg: ParserConfig): Any =
+      apply(ParseResult(Vector.empty, Vector.empty), sink(cfg))
   }
 
   /** `extract_spans`: the span sequence, each span a row made when the
@@ -164,21 +191,12 @@ object ExtractSpansExpr {
   case object Spans extends Projection("extract_spans", StructField("spans", ArrayType(SpanType))) {
     private val kinds = SpanSink.Kinds.map(UTF8String.fromString)
 
-    private def sink(cfg: ParserConfig): SpanSink[Any] = new SpanSink[Any](cfg) {
+    override private[graft] def sink(cfg: ParserConfig): ContentSink = new SpanSink[Any](cfg) {
       protected def span(kind: Int, text: String, ref: String, off: Int): Any =
         new SpanRow(kinds(kind), utf8(text), utf8(ref), off)
     }
-
-    override private[graft] def kernel(cfg: ParserConfig): Kernel = {
-      val s = sink(cfg)
-      new Kernel(new ParseDriver(cfg, s), _ => new GenericArrayData(s.toArray))
-    }
-
-    def apply(r: ParseResult, cfg: ParserConfig): Any = {
-      val s = sink(cfg)
-      SpanEmitter.walk(r.content, s)
-      new GenericArrayData(s.toArray)
-    }
+    private[graft] def apply(r: ParseResult, sink: ContentSink): Any =
+      new GenericArrayData(sink.asInstanceOf[SpanSink[_]].toArray)
 
     private def utf8(t: String): UTF8String = if (t == null) null else UTF8String.fromString(t)
   }
@@ -198,15 +216,15 @@ object ExtractSpansExpr {
   /** `sgml_canonical`: canonical XML (attributes name-sorted, no
     * self-closing elements); null when the parse failed. */
   case object Canonical extends Projection("sgml_canonical", StructField("xml", StringType)) {
-    def apply(r: ParseResult, cfg: ParserConfig): Any =
+    private[graft] def apply(r: ParseResult, sink: ContentSink): Any =
       UTF8String.fromString(Serializer.xml(r.content, canonical = true))
-    override def failed(cfg: ParserConfig): Any = null
+    override private[graft] def failed(cfg: ParserConfig): Any = null
   }
 
   /** `sgml_table_cells`: one row per table cell (TableOps.cellsOf). */
   case object Cells
       extends Projection("sgml_table_cells", StructField("cells", ArrayType(TableOps.CellType))) {
-    def apply(r: ParseResult, cfg: ParserConfig): Any = TableOps.cellsOf(r)
+    private[graft] def apply(r: ParseResult, sink: ContentSink): Any = TableOps.cellsOf(r)
   }
 
   /** `sgml_xpath`: every solution of each xpath.pl-style spec, in
@@ -217,7 +235,7 @@ object ExtractSpansExpr {
       StructField("solutions", ArrayType(ArrayType(StringType)))) {
     private val paths = specs.map(spec => XPathSpec.parse(spec).fold(
       e => throw new IllegalArgumentException(s"sgml_xpath: spec '$spec': $e"), identity))
-    def apply(r: ParseResult, cfg: ParserConfig): Any = new GenericArrayData(paths.map(p =>
+    private[graft] def apply(r: ParseResult, sink: ContentSink): Any = new GenericArrayData(paths.map(p =>
       new GenericArrayData(XPathSpec.evalStrings(r.content, p).map(UTF8String.fromString).toArray[Any])).toArray[Any])
   }
 
@@ -281,24 +299,70 @@ object ExtractSpansExpr {
       fromArgs(Seq(spansOf(args.head), args(2), Literal("preserve")), xpath), 0), Literal(0))
   }
 
-  /** The function-registry entries of the kernel and `bucket_collect`,
-    * shared by `register` and GraftExtensions. Lazy: the projections'
-    * own initialization reads this object's span types. */
-  lazy val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+  /** The SQL function table, which `register` and `GraftExtensions` read
+    * whole: the kernel functions and `bucket_collect` as their own
+    * expression nodes, then scalar UDFs — `pwp_render` (PWP template
+    * rendering with scalar bindings, SURVEY.md §2.5; the row-set pwp:ask
+    * form is graft.ops.PwpOps.render) and the training-data kernels the
+    * d/t/m operators build on (SURVEY.md §2.7 UDF surface). Those are
+    * pure and bit-deterministic, so a SQL-built pipeline verifies against
+    * the same DuckDB oracles as the operators. Lazy: the projections' own
+    * initialization reads this object's span types. */
+  lazy val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def scalar(name: String, arity: Int, f: UserDefinedFunction) =
+      (name, classOf[ScalaUDF], (args: Seq[Expression]) => {
+        if (args.length != arity) throw new IllegalArgumentException(s"$name takes $arity argument(s)")
+        Catalyst.expression(f.withName(name)(args.map(Catalyst.column): _*))
+      })
     Seq[(String, Class[_], Seq[Expression] => Expression)](
       (Spans.name, classOf[ExtractSpansExpr], fromArgs(_, Spans)),
       ("sgml_spans", classOf[ExtractSpansExpr], spansOfText),
       (Canonical.name, classOf[ExtractSpansExpr], fromArgs(_, Canonical)),
       (Cells.name, classOf[ExtractSpansExpr], fromArgs(_, Cells)),
       ("sgml_xpath", classOf[ExtractSpansExpr], xpathOfText),
-      ("bucket_collect", classOf[BucketCollect], BucketCollect.fromArgs)
+      ("bucket_collect", classOf[BucketCollect], BucketCollect.fromArgs),
+      scalar("pwp_render", 2, udf((template: String, scalars: Map[String, String]) =>
+        Pwp.renderXml(if (template == null) "" else template,
+          if (scalars == null) Map.empty[String, Pwp.Val]
+          else scalars.map { case (k, v) => k -> (Pwp.Scalar(if (v == null) "" else v): Pwp.Val) }))),
+      // word 3-shingles (LATERAL VIEW explode-able), and their oracle hash
+      scalar("text_shingles", 1, udf((t: String) => Dedup.shingles(t).toSeq.sorted)),
+      scalar("shingle_hash", 1, udf((s: String) => Dedup.shingleHash(if (s == null) "" else s))),
+      // minhash signature / LSH band hashes — identical to d2's columns
+      scalar("minhash_sig", 1, udf((t: String) => Dedup.minhash(t))),
+      scalar("simhash64", 1, udf((t: String) => Dedup.simhash(t))),
+      // exact n-gram Jaccard (the d3/d6 verification kernel)
+      scalar("ngram_jaccard", 2, udf((a: String, b: String) => Dedup.ngramJaccard(a, b))),
+      // winnowing fingerprint (t5)
+      scalar("doc_fingerprint", 1, udf((t: String) => TextOps.fingerprint(t))),
+      scalar("media_meta", 1, udf(mediaMeta _))
     ).map { case (name, cls, builder) =>
       (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
     }
+  }
 
-  /** Late registration on an existing session (tests / REPL / SQL users;
-    * production sessions use `spark.sql.extensions=graft.GraftExtensions`).
-    * Library calls build their nodes directly and never register. */
+  /** Media metadata from real header bytes (m1's kernel): a mime guess
+    * plus the dimensions, channels and rate read out of the payload. */
+  private def mediaMeta(b: Array[Byte]): MediaOps.MediaMeta = {
+    val img = MediaOps.sniffImage(b)
+    val wav = if (img.isEmpty) MediaOps.sniffWav(b) else None
+    val mp4 = if (img.isEmpty && wav.isEmpty) MediaOps.sniffMp4(b) else None
+    MediaOps.MediaMeta(
+      media_ref = null,
+      mime = img.map(_._1).orElse(wav.map(_ => "audio/wav")).orElse(mp4.map(_ => "video/mp4")).orNull,
+      byte_len = if (b == null) 0 else b.length,
+      width = img.map(_._2).orElse(mp4.map(_._1)).getOrElse(0),
+      height = img.map(_._3).orElse(mp4.map(_._2)).getOrElse(0),
+      n_frames = mp4.map(_._3).getOrElse(1),
+      channels = wav.map(_._1).getOrElse(0),
+      sample_rate = wav.map(_._2).getOrElse(0),
+      feature = Array.empty[Float])
+  }
+
+  /** Registration on an existing session (tests / REPL / SQL users;
+    * production sessions use
+    * `spark.sql.extensions=graft.functions.GraftExtensions`). Library
+    * calls build their nodes directly and never register. */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)

@@ -21,34 +21,35 @@ abstract class ContentSink {
   def reset(): Unit
 }
 
-/** The DOM (D5, `sgml2pl.c — term build` [V]): each open element's
-  * children are collected until it closes. */
+/** The DOM (D5, `sgml2pl.c — term build` [V]): an open element keeps
+  * its name, attributes and offset beside its children until it closes;
+  * its `Node.Elem` is built then, once. */
 final class DomSink extends ContentSink {
-  private val elems = new mutable.ArrayBuffer[Node.Elem](16) // open, children unset
-  private val kids = mutable.ArrayBuffer(new mutable.ArrayBuffer[Node](16)) // (0): document
+  private val stack = mutable.ArrayBuffer(new DomSink.Open(null, Nil, 0)) // (0): document
 
-  def open(name: String, attrs: List[Attr], off: Int): Unit = {
-    elems += Node.Elem(name, attrs, TreeBuilder.NoChildren, off)
-    kids += new mutable.ArrayBuffer[Node](4)
-  }
+  def open(name: String, attrs: List[Attr], off: Int): Unit = stack += new DomSink.Open(name, attrs, off)
   def close(): Unit = {
-    val e = elems.remove(elems.size - 1)
-    val ch = kids.remove(kids.size - 1)
-    add(if (ch.isEmpty) e else e.copy(children = DomSink.seq(ch)))
+    val e = stack.remove(stack.size - 1)
+    add(Node.Elem(e.name, e.attrs, if (e.isEmpty) TreeBuilder.NoChildren else DomSink.seq(e), e.off))
   }
   def text(s: String, raw: Boolean, off: Int): Unit = add(Node.Text(s, raw, off))
   def pi(s: String, off: Int): Unit = add(Node.Pi(s, off))
   def entity(name: String, off: Int): Unit = add(Node.EntityRef(name, off))
   def media(ref: String, off: Int): Unit = add(Node.Media(ref, off))
-  def reset(): Unit = { elems.clear(); kids.dropRightInPlace(kids.size - 1); kids(0).clear() }
+  def reset(): Unit = { stack.dropRightInPlace(stack.size - 1); stack(0).clear() }
 
   /** The document content committed so far. */
-  def content: IndexedSeq[Node] = DomSink.seq(kids(0))
+  def content: IndexedSeq[Node] = DomSink.seq(stack(0))
 
-  private def add(n: Node): Unit = kids(kids.size - 1) += n
+  private def add(n: Node): Unit = stack(stack.size - 1) += n
 }
 
 object DomSink {
+  /** An open element: its name, attributes and offset, and its children
+    * so far. */
+  private final class Open(val name: String, val attrs: List[Attr], val off: Int)
+      extends mutable.ArrayBuffer[Node](4)
+
   /** Hoisted ClassTag: `toArray` runs once per closed element, and the
     * implicit `ClassTag[Node]` at the call site costs a ClassValue map
     * probe per call (jstack-measured ~5% of kernel CPU). */

@@ -1,7 +1,5 @@
 package graft.sgml
 
-import scala.util.control.NonFatal
-
 /** Facade: one parser instance per document, committing its content to
   * `sink` — a tree ([[DomSink]]) unless a caller wants only the spans.
   *
@@ -10,7 +8,7 @@ import scala.util.control.NonFatal
   * pl_new_sgml_parser / pl_sgml_parse` [V]; SURVEY.md §3 E1/E2): the
   * push API makes chunked feeds and interleaved text+media spans
   * first-class. Pure Scala. Spark-layer code reuses parsers only
-  * through [[ParseDriver]].
+  * through the Catalyst kernel (`graft.functions.ExtractSpansExpr`).
   */
 final class SgmlParser(cfg: ParserConfig, sink: ContentSink = new DomSink) {
 
@@ -73,39 +71,4 @@ object SgmlParser {
     val r = new SgmlParser(cfg, sink).feed(text, 0).finish()
     (sink.result, r.errors)
   }
-}
-
-/** The one parse lifecycle of the Spark layer: reset → feed → finish, with
-  * ONE parser reused across the documents of a thread (per-doc parser
-  * construction dominated small-doc throughput) and one failure policy.
-  *
-  * A non-fatal throw anywhere in the feed, the finish or the projection
-  * becomes `Left(detail)` — the exception class, then its message — and
-  * the parser, whose state is now unknown, is dropped: the next document
-  * gets a fresh one. Fatal errors (`VirtualMachineError`,
-  * `InterruptedException`, …) propagate and drop the parser too.
-  *
-  * Every parser of a driver commits to the one `sink` (a tree unless
-  * given), which `use` reads. Not thread-safe: one driver per thread (or
-  * per partition).
-  */
-final class ParseDriver(cfg: ParserConfig, sink: ContentSink = new DomSink) {
-
-  private var idle: SgmlParser = null
-
-  /** Parse one document: `feed` pushes its spans into the reset parser,
-    * `use` projects the finished result. */
-  def apply[A](feed: SgmlParser => Unit)(use: ParseResult => A): Either[String, A] =
-    try {
-      val p = if (idle == null) new SgmlParser(cfg, sink) else idle
-      idle = null // checked out: only a completed parse returns it
-      p.reset()
-      feed(p)
-      val out = use(p.finish())
-      idle = p
-      Right(out)
-    } catch {
-      case NonFatal(e) =>
-        Left(s"${e.getClass.getName}: ${e.getMessage}".take(200))
-    }
 }

@@ -144,7 +144,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("deep nesting: 5,000 and 50,000 nested divs are one row each, no failed task") {
     import spark.implicits._
-    SgmlExtract.registerUdfs(spark)
+    graft.functions.ExtractSpansExpr.register(spark)
     // local[4] runs each task once, so a task that threw would fail the job
     for (dialect <- Seq("xml", "html4"); depth <- Seq(5000, 50000)) {
       val doc = "<div>" * depth + "deep" + "</div>" * depth
@@ -226,7 +226,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sgml_spans UDF surface (LATERAL VIEW ergonomics)") {
-    SgmlExtract.registerUdfs(spark)
+    graft.functions.ExtractSpansExpr.register(spark)
     val n = spark.sql(
       """SELECT s.kind, s.text FROM (SELECT '<ul><li>a<li>b</ul>' AS m)
         |LATERAL VIEW explode(sgml_spans(m, 'html4', 'sgml')) t AS s""".stripMargin)
@@ -287,7 +287,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sgml_spans is extract_spans over one text span: literal options; a throwing parse gives []") {
     import graft.functions.ExtractSpansExpr
-    SgmlExtract.registerUdfs(spark)
+    graft.functions.ExtractSpansExpr.register(spark)
     val plan = spark.sql("SELECT sgml_spans(m, 'xml', 'remove') AS s FROM (SELECT '<d/>' AS m)")
       .queryExecution.analyzed
     val kernels = plan.expressions.flatMap(_.collect { case e: ExtractSpansExpr => e })
@@ -300,7 +300,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dflt = spark.sql("SELECT sgml_spans(m) AS s FROM (SELECT '<p>a\n<p>b' AS m)")
       .selectExpr("transform(s, x -> x.text)").collect()(0).getSeq[String](0)
     assert(dflt === Seq("a\n", "b"))
-    // a parse that throws is caught by the kernel's driver: the span array
+    // a parse that throws is caught by the kernel: the span array
     // is empty and the row is an error row. No text input is known to make
     // the kernel throw, so an input whose offset slot holds a string under
     // the contract type makes the feed throw, in the expression sgml_spans
@@ -368,7 +368,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("xml_out").as[String].collect().toSeq
     assert(xml === Seq("<html><head></head><body><p>fine</p></body></html>"))
     // sgml_xpath: one kernel expression, its spec parsed at analysis
-    SgmlExtract.registerUdfs(spark)
+    graft.functions.ExtractSpansExpr.register(spark)
     val xq = spark.sql("SELECT sgml_xpath(m, '//li(2)/text', 'html4') AS r " +
       "FROM (SELECT '<ul><li>a<li>b</ul>' AS m)")
     assert(kernels(xq.queryExecution.analyzed).length === 1)
@@ -401,7 +401,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       Doc("noisy", Seq(Span("text", "<p>" + ("x</b>" * 10) + "</p>", null, 0))),
       Doc("bad", Seq(Span("text", "<p>x", null, 0)))).toDS().write.parquet(dir)
     val small = cfg.copy(maxDocChars = 60, maxErrors = 3)
-    SgmlExtract.registerUdfs(spark)
+    graft.functions.ExtractSpansExpr.register(spark)
     def outputs(): Seq[(String, DataFrame)] = {
       // the malformed row reaches the kernel without a row copy in between
       val docs = spark.read.parquet(dir).withColumn("spans",
@@ -428,7 +428,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(codes("big") === Seq("doc-too-large"))
     assert(codes("noisy").last === "max-errors")
     assert(extracted("bad").getSeq[Row](2).map(e => (e.getString(0), e.getString(2))) ===
-      Seq(("internal-error", "java.lang.IllegalStateException: malformed offset")))
+      Seq(("internal-error", "java.lang.IllegalStateException")))
     assert(extracted("media").getSeq[Row](1).map(_.getString(0)) === Seq("text", "media", "text"))
     assert(got(0)(2)._2.map(r => r.getString(0) -> r.getSeq[String](1)).toMap.apply("null-span") === Seq("a", "b"))
     // the kernel runs inside a whole-stage stage, not behind a row copy
@@ -473,6 +473,54 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(df.collect().nonEmpty, name)
       assert(registered.isEmpty, name)
     }
+  }
+
+  test("a session built with GraftExtensions resolves every function of the table and runs each as register does") {
+    import org.apache.spark.sql.Row
+    import graft.functions.{ExtractSpansExpr, GraftExtensions}
+    import graft.ops.MediaOps
+    spark.sparkContext // the shared session and its context exist first
+    // `spark.sql.extensions` is a static conf, so only a new session
+    // applies an extension: clear the shared sessions around the builder
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+      finally { active.foreach(SparkSession.setActiveSession); default.foreach(SparkSession.setDefaultSession) }
+    assert(ext ne spark)
+    val names = ExtractSpansExpr.functions.map(_._1.funcName)
+    assert(names.distinct.length === 14)
+    assert(names.filterNot(ext.catalog.functionExists) === Nil)
+    val span = "array(named_struct('kind', 'text', 'text', m, 'media_ref', CAST(NULL AS STRING), 'offset', 0))"
+    val calls = Seq(
+      "extract_spans" -> s"extract_spans($span).spans.text",
+      "sgml_spans" -> "sgml_spans(m).text",
+      "sgml_canonical" -> s"sgml_canonical($span).xml",
+      "sgml_table_cells" -> s"sgml_table_cells($span).cells.cell",
+      "sgml_xpath" -> "sgml_xpath(m, '//li(2)/text', 'html4')",
+      "pwp_render" -> "pwp_render('<d a=\"$x\" pwp:use=\"$x\"></d>', map('x', 'V'))",
+      "text_shingles" -> "text_shingles(t)",
+      "shingle_hash" -> "shingle_hash('quick brown fox')",
+      "minhash_sig" -> "minhash_sig(t)",
+      "simhash64" -> "simhash64(t)",
+      "ngram_jaccard" -> "ngram_jaccard(t, m)",
+      "doc_fingerprint" -> "doc_fingerprint(t)",
+      "media_meta" -> "media_meta(b)")
+    def run(s: SparkSession): (Row, Row) = {
+      s.createDataFrame(Seq(("<ul><li>a<li>b</ul><table><tr><td>c<td>d</table>", "the quick brown fox jumps over the lazy dog",
+        MediaOps.pngEncode(20, 30, 7L)))).toDF("m", "t", "b").createOrReplaceTempView("ext_v")
+      (s.sql(calls.map { case (name, call) => s"$call AS $name" }.mkString("SELECT ", ", ", " FROM ext_v")).head(),
+        s.sql("SELECT bucket_collect(id, 2) AS b FROM range(5)").head())
+    }
+    assert((calls.map(_._1) :+ "bucket_collect").sorted === names.sorted)
+    val (row, bucket) = run(ext)
+    assert(row.getAs[String]("pwp_render") === "<d a=\"V\">V</d>")
+    assert(row.getAs[Seq[String]]("sgml_xpath") === Seq("b"))
+    assert(row.getAs[Seq[String]]("sgml_table_cells") === Seq("c", "d"))
+    assert(row.getAs[Row]("media_meta").getAs[Int]("width") === 20)
+    assert(bucket.getStruct(0).getLong(0) === 5L)
+    graft.functions.ExtractSpansExpr.register(spark)
+    assert(run(spark) === (row, bucket))
   }
 
   test("xq5 parses each region doc once: one kernel expression, rows as the window query") {
@@ -912,8 +960,8 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL kernel surface: registered functions ≡ the operator kernels") {
-    import graft.ops.{Dedup, MediaOps, OpsFunctions, TextOps}
-    OpsFunctions.register(spark)
+    import graft.ops.{Dedup, MediaOps, TextOps}
+    graft.functions.ExtractSpansExpr.register(spark)
     val t = "the quick brown fox jumps over the lazy dog again and again"
     spark.createDataFrame(Seq(Tuple1(t))).toDF("text")
       .createOrReplaceTempView("sqlkernel_v")
