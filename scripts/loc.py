@@ -12,7 +12,8 @@ Prints four numbers:
 
 Then the main figure split by package, so a change's net LoC shows
 where the lines went: graft/sgml (the parse kernel), graft/ops,
-graft/functions, and the rest of src/main/scala.
+graft/functions, graft/pdf (the PDF reader and writer), and the rest of
+src/main/scala.
 
 A line counts as code unless it is blank, a `//` line, or part of a
 `/* ... */` block that starts the line (scaladoc included).
@@ -110,7 +111,7 @@ def public_ops(root):
     return defs, slots
 
 
-PACKAGES = ("graft/sgml", "graft/ops", "graft/functions")
+PACKAGES = ("graft/sgml", "graft/ops", "graft/functions", "graft/pdf")
 
 
 def main():

@@ -88,7 +88,9 @@ object Resume {
       // is sized to occupy the cluster, so caching one chunk at a time is
       // bounded (MEMORY_AND_DISK: eviction falls back to a narrow
       // recompute, never a wrong answer).
-      val extracted = SgmlExtract.wrapDocsDf(spark.read.parquet(files: _*))
+      // `files` are URI strings (`%20` for a space); read each by its path
+      val paths = files.map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)).toString)
+      val extracted = SgmlExtract.wrapDocsDf(spark.read.parquet(paths: _*))
         .withColumn("__file", input_file_name())
         .select(col("doc_id"), SgmlExtract.kernel(col("spans"), cfg).as("r"), col("__file"))
         .select(col("doc_id"), col("r.*"), col("__file"), spark_partition_id().as("__pid"))
@@ -118,11 +120,9 @@ object Resume {
         val chunkErrors = g.map(_.getLong(5)).sum
         val perFile: Map[String, Long] = g.groupBy(_.getString(0)).view
           .mapValues(_.map(_.getLong(2)).sum).toMap
-        def fileDocs(f: String): Long =
-          perFile.collectFirst { case (k, v) if k.endsWith(f) || f.endsWith(k.stripPrefix("file:")) => v }
-            .getOrElse(perFile.getOrElse(f, 0L))
         val wallMs = (System.nanoTime() - t0) / 1000000
-        val rows = files.map(f => ManifestRow(runId, cid, f, fileDocs(f),
+        // input_file_name() gives the same URI string as inputFiles
+        val rows = files.map(f => ManifestRow(runId, cid, f, perFile.getOrElse(f, 0L),
           chunkDocs, chunkSpans, chunkErrors, wallMs))
         // manifest append LAST: a crash before this line leaves the chunk
         // unrecorded → next attempt redoes it (idempotent overwrite above)

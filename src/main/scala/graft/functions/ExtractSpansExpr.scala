@@ -341,23 +341,12 @@ object ExtractSpansExpr {
     }
   }
 
-  /** Media metadata from real header bytes (m1's kernel): a mime guess
-    * plus the dimensions, channels and rate read out of the payload. */
-  private def mediaMeta(b: Array[Byte]): MediaOps.MediaMeta = {
-    val img = MediaOps.sniffImage(b)
-    val wav = if (img.isEmpty) MediaOps.sniffWav(b) else None
-    val mp4 = if (img.isEmpty && wav.isEmpty) MediaOps.sniffMp4(b) else None
-    MediaOps.MediaMeta(
-      media_ref = null,
-      mime = img.map(_._1).orElse(wav.map(_ => "audio/wav")).orElse(mp4.map(_ => "video/mp4")).orNull,
-      byte_len = if (b == null) 0 else b.length,
-      width = img.map(_._2).orElse(mp4.map(_._1)).getOrElse(0),
-      height = img.map(_._3).orElse(mp4.map(_._2)).getOrElse(0),
-      n_frames = mp4.map(_._3).getOrElse(1),
-      channels = wav.map(_._1).getOrElse(0),
-      sample_rate = wav.map(_._2).getOrElse(0),
-      feature = Array.empty[Float])
-  }
+  /** Media metadata from real header bytes (m1's kernel): the sniffed
+    * mime plus the dimensions, channels and rate read out of the payload;
+    * a null mime when no header matches. */
+  private def mediaMeta(b: Array[Byte]): MediaOps.MediaMeta =
+    MediaOps.sniff(b).getOrElse(MediaOps.MediaMeta(null, null, if (b == null) 0 else b.length,
+      0, 0, 1, 0, 0, Array.emptyFloatArray))
 
   /** Registration on an existing session (tests / REPL / SQL users;
     * production sessions use

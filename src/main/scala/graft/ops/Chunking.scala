@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.RangePartitioner
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -179,18 +179,29 @@ object Chunking {
     val d = docs
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("tokens", size(col("toks")).cast(LongType))
+    blocks(d, blockSize, inOrder(col("t"), " ").as("block_text"))
+  }
+
+  /** c2's and c3's shared tail. `d` holds each doc's `toks` array (`t`
+    * per entry) and its size `tokens`; c1's offsets place every token at
+    * its global position, and ONE shuffle keyed by block id gathers each
+    * block's n_tokens and the `values` columns, which `inOrder` reads in
+    * position order. */
+  private def blocks(d: DataFrame, blockSize: Long, values: Column*): DataFrame =
     withPackIds(d, "doc_id", "tokens", blockSize)
-      .select(col("seq_start"), posexplode(col("toks")).as(Seq("i", "tok")))
+      .select(col("seq_start"), posexplode(col("toks")).as(Seq("i", "t")))
       .withColumn("pos", col("seq_start") + col("i"))
       // `div` (IntegralDivide), not floor(/): long division stays exact
       // past 2^53 global tokens, matching withPackIds' start/blockSize
       .groupBy(expr(s"pos div $blockSize").as("block_id"))
-      .agg(
-        count(lit(1)).cast("int").as("n_tokens"),
-        array_join(
-          sort_array(collect_list(struct(col("pos"), col("tok")))).getField("tok"),
-          " ").as("block_text"))
-  }
+      .agg(count(lit(1)).cast("int").as("n_tokens"), values: _*)
+
+  /** A block's non-null values of `c`, in token position order, joined
+    * with `sep`. */
+  private def inOrder(c: Column, sep: String): Column =
+    array_join(
+      sort_array(collect_list(when(c.isNotNull, struct(col("pos"), c.as("v"))))).getField("v"),
+      sep)
 
   // ---- c3: interleaved multimodal training blocks --------------------------
 
@@ -245,20 +256,7 @@ object Chunking {
             t => struct(t.as("tok"),
               lit(null).cast("string").as("ref")))))).as("toks"))
       .withColumn("tokens", size(col("toks")).cast(LongType))
-    withPackIds(d, "doc_id", "tokens", blockSize)
-      .select(col("seq_start"), posexplode(col("toks")).as(Seq("i", "t")))
-      .select((col("seq_start") + col("i")).as("pos"),
-        col("t.tok").as("tok"), col("t.ref").as("ref"))
-      .groupBy(expr(s"pos div $blockSize").as("block_id")) // exact long div
-      .agg(
-        count(lit(1)).cast("int").as("n_tokens"),
-        array_join(
-          sort_array(collect_list(struct(col("pos"), col("tok")))).getField("tok"),
-          " ").as("block_text"),
-        array_join(
-          sort_array(collect_list( // null for text tokens → dropped
-            when(col("ref").isNotNull, struct(col("pos"), col("ref")))))
-            .getField("ref"),
-          ",").as("media_refs"))
+    blocks(d, blockSize, inOrder(col("t.tok"), " ").as("block_text"),
+      inOrder(col("t.ref"), ",").as("media_refs")) // null for text tokens → dropped
   }
 }

@@ -1,5 +1,8 @@
 package graft.ops
 
+import java.nio.ByteBuffer
+import java.nio.ByteOrder.{BIG_ENDIAN, LITTLE_ENDIAN}
+import java.nio.charset.StandardCharsets.US_ASCII
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -21,6 +24,13 @@ import org.apache.spark.sql.functions._
   * Everything Spark-side is real and tested either way: schema, batch
   * iteration shape (mapPartitions over row batches ≈ the Pandas-UDF
   * batch contract), partitioning, and the join back to extracted spans.
+  *
+  * Each format is written in one place and read in one place: PNG by
+  * `pngEncode` (whose first 33 bytes are `pngHeader`), GIF by
+  * `gifEncodeFrames`, WAV by `wavHeader` and MP4 by `mp4Header`; headers
+  * are read by `sniffImage`, `sniffWav` and `sniffMp4`, tried in that
+  * order by `sniff`, and rasters by `rgbBytes`, fingerprinted by
+  * `rasterHash`. `assetOf` is the one seed chain of the synthetic assets.
   */
 object MediaOps {
 
@@ -57,67 +67,57 @@ object MediaOps {
     (8 + (seed % 16).toInt, 8 + (seed / 16 % 16).toInt)
   private def gifFrameCount(seed: Long): Int = 1 + (seed / 256 % 120).toInt
 
+  // Every multi-byte field is written and read through a
+  // `java.nio.ByteBuffer` in the format's byte order (big-endian by
+  // default; WAV and GIF are little-endian); four-char codes and
+  // signatures go through these two.
+  private def tag(s: String): Array[Byte] = s.getBytes(US_ASCII)
+  /** Whether `b` holds the ASCII `tag` at `off` (false past the end). */
+  private def tagAt(b: Array[Byte], off: Int, tag: String): Boolean =
+    off + tag.length <= b.length && tag.indices.forall(i => b(off + i) == tag.charAt(i).toByte)
+
   /** Canonical 44-byte PCM RIFF/WAVE header (fmt + data chunk headers)
     * with the given channel count and sample rate — what any WAV metadata
     * sniffer reads. `totalLen` sizes the RIFF/data fields honestly. */
-  def wavHeader(channels: Int, sampleRate: Int, totalLen: Int): Array[Byte] = {
-    val out = new Array[Byte](44)
-    def ascii(off: Int, s: String): Unit = {
-      var i = 0
-      while (i < s.length) { out(off + i) = s.charAt(i).toByte; i += 1 }
-    }
-    def le32(off: Int, v: Long): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >>> 8).toByte
-      out(off + 2) = (v >>> 16).toByte; out(off + 3) = (v >>> 24).toByte
-    }
-    def le16(off: Int, v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >>> 8).toByte
-    }
-    val bytesPerSec = sampleRate.toLong * channels * 2
-    ascii(0, "RIFF"); le32(4, totalLen - 8L); ascii(8, "WAVE")
-    ascii(12, "fmt "); le32(16, 16L)
-    le16(20, 1) // PCM
-    le16(22, channels); le32(24, sampleRate.toLong)
-    le32(28, bytesPerSec); le16(32, channels * 2); le16(34, 16) // block align, bits
-    ascii(36, "data"); le32(40, totalLen - 44L)
-    out
-  }
+  def wavHeader(channels: Int, sampleRate: Int, totalLen: Int): Array[Byte] =
+    ByteBuffer.allocate(44).order(LITTLE_ENDIAN)
+      .put(tag("RIFF")).putInt(totalLen - 8).put(tag("WAVE"))
+      .put(tag("fmt ")).putInt(16)
+      .putShort(1.toShort) // PCM
+      .putShort(channels.toShort).putInt(sampleRate)
+      .putInt(sampleRate * channels * 2) // bytes per second
+      .putShort((channels * 2).toShort).putShort(16.toShort) // block align, bits
+      .put(tag("data")).putInt(totalLen - 44)
+      .array
 
   /** Minimal real MP4 box prefix: ftyp(16) + moov{ mvhd(108) + trak{
-    * tkhd(92) } } = 240 bytes. mvhd carries timescale=30 and
+    * tkhd(92) } } = 232 bytes. mvhd carries timescale=30 and
     * duration=frames (so frame count reads straight out of the real box
     * at 30 fps), tkhd carries width/height as 16.16 fixed point. */
   private val Mp4HeaderLen = 232 // ftyp(16) + moov(8 + mvhd 108 + trak(8 + tkhd 92))
   def mp4Header(w: Int, h: Int, frames: Int): Array[Byte] = {
-    val out = new Array[Byte](Mp4HeaderLen)
-    var p = 0
-    def ascii(s: String): Unit = { var i = 0; while (i < s.length) { out(p) = s.charAt(i).toByte; p += 1; i += 1 } }
-    def be32(v: Long): Unit = {
-      out(p) = (v >>> 24).toByte; out(p + 1) = (v >>> 16).toByte
-      out(p + 2) = (v >>> 8).toByte; out(p + 3) = v.toByte; p += 4
-    }
-    def skip(n: Int): Unit = p += n // zeroed fields
-    be32(16L); ascii("ftyp"); ascii("isom"); be32(512L) // brand + version
-    be32(8L + 108 + 8 + 92); ascii("moov")
-    be32(108L); ascii("mvhd")
-    skip(4) // version+flags
-    skip(8) // creation + modification
-    be32(30L) // timescale: 30 ticks/s
-    be32(frames.toLong) // duration in ticks = frame count at 30 fps
-    be32(0x00010000L) // rate 1.0
+    val b = ByteBuffer.allocate(Mp4HeaderLen) // big-endian; skipped fields stay zero
+    def box(size: Int, typ: String): Unit = b.putInt(size).put(tag(typ))
+    def skip(n: Int): Unit = b.position(b.position() + n)
+    box(16, "ftyp"); b.put(tag("isom")).putInt(512) // brand + version
+    box(8 + 108 + 8 + 92, "moov")
+    box(108, "mvhd")
+    skip(4 + 8) // version+flags, creation + modification
+    b.putInt(30) // timescale: 30 ticks/s
+    b.putInt(frames) // duration in ticks = frame count at 30 fps
+    b.putInt(0x00010000) // rate 1.0
     skip(2 + 2 + 8) // volume, reserved
     skip(36) // matrix (identity omitted — zeros are fine for a sniffer)
     skip(24 + 4) // predefined + next track id
-    be32(8L + 92); ascii("trak")
-    be32(92L); ascii("tkhd")
-    skip(4) // version+flags
-    skip(8) // creation + modification
-    be32(1L) // track id
+    box(8 + 92, "trak")
+    box(92, "tkhd")
+    skip(4 + 8) // version+flags, creation + modification
+    b.putInt(1) // track id
     skip(4) // reserved
-    be32(frames.toLong) // duration
+    b.putInt(frames) // duration
     skip(8 + 2 + 2 + 2 + 2 + 36) // reserved, layer, group, volume, rsvd, matrix
-    be32(w.toLong << 16); be32(h.toLong << 16) // 16.16 fixed
-    out
+    b.putInt(w << 16).putInt(h << 16) // 16.16 fixed
+    b.array
   }
 
   /** Closed-form channel value at flat raster index `idx` (= (y·w+x)·3+c,
@@ -149,47 +149,39 @@ object MediaOps {
       y += 1
     }
     require(raw.length <= 65535, s"stored deflate block overflow: ${raw.length}")
-    val zlib = new Array[Byte](2 + 5 + raw.length + 4)
-    zlib(0) = 0x78; zlib(1) = 0x01 // CMF/FLG, (0x7801 % 31 == 0)
-    zlib(2) = 0x01 // final stored block
-    zlib(3) = raw.length.toByte; zlib(4) = (raw.length >>> 8).toByte
-    zlib(5) = (~raw.length).toByte; zlib(6) = ((~raw.length) >>> 8).toByte
-    System.arraycopy(raw, 0, zlib, 7, raw.length)
     val adler = new java.util.zip.Adler32()
     adler.update(raw)
-    val a = adler.getValue
-    zlib(zlib.length - 4) = (a >>> 24).toByte
-    zlib(zlib.length - 3) = (a >>> 16).toByte
-    zlib(zlib.length - 2) = (a >>> 8).toByte
-    zlib(zlib.length - 1) = a.toByte
-    val out = new java.io.ByteArrayOutputStream(68 + raw.length)
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      val buf = new Array[Byte](8 + data.length + 4)
-      def be32(off: Int, v: Long): Unit = {
-        buf(off) = (v >>> 24).toByte; buf(off + 1) = (v >>> 16).toByte
-        buf(off + 2) = (v >>> 8).toByte; buf(off + 3) = v.toByte
-      }
-      be32(0, data.length.toLong)
-      var i = 0
-      while (i < 4) { buf(4 + i) = typ.charAt(i).toByte; i += 1 }
-      System.arraycopy(data, 0, buf, 8, data.length)
-      val crc = new java.util.zip.CRC32()
-      crc.update(buf, 4, 4 + data.length)
-      be32(8 + data.length, crc.getValue)
-      out.write(buf)
-    }
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = (w >>> 24).toByte; ihdr(1) = (w >>> 16).toByte
-    ihdr(2) = (w >>> 8).toByte; ihdr(3) = w.toByte
-    ihdr(4) = (h >>> 24).toByte; ihdr(5) = (h >>> 16).toByte
-    ihdr(6) = (h >>> 8).toByte; ihdr(7) = h.toByte
-    ihdr(8) = 8; ihdr(9) = 2 // bit depth 8, truecolor
-    chunk("IHDR", ihdr)
-    chunk("IDAT", zlib)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
+    val zlib = ByteBuffer.allocate(2 + 5 + raw.length + 4).order(LITTLE_ENDIAN)
+      .put(0x78.toByte).put(0x01.toByte) // CMF/FLG, (0x7801 % 31 == 0)
+      .put(0x01.toByte) // final stored block
+      .putShort(raw.length.toShort).putShort((~raw.length).toShort) // LEN, NLEN
+      .put(raw)
+      .order(BIG_ENDIAN).putInt(adler.getValue.toInt)
+    Array.concat(pngHeader(w, h), pngChunk("IDAT", zlib.array),
+      pngChunk("IEND", Array.emptyByteArray))
   }
+
+  /** The PNG file signature + IHDR chunk of a truecolor 8-bit w×h image
+    * — exactly what any conforming dimension sniffer reads, and the first
+    * 33 bytes of `pngEncode`. */
+  def pngHeader(w: Int, h: Int): Array[Byte] = {
+    val ihdr = ByteBuffer.allocate(13).putInt(w).putInt(h)
+      .put(8.toByte).put(2.toByte) // bit depth 8, truecolor
+    // compression = filter = interlace = 0 (already zeroed)
+    PngSignature ++ pngChunk("IHDR", ihdr.array)
+  }
+
+  private val PngSignature = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
+
+  /** One PNG chunk: big-endian data length, type, data, and the CRC-32
+    * of type + data. */
+  private def pngChunk(typ: String, data: Array[Byte]): Array[Byte] = {
+    val b = ByteBuffer.allocate(8 + data.length + 4).putInt(data.length).put(tag(typ)).put(data)
+    val crc = new java.util.zip.CRC32()
+    crc.update(b.array, 4, 4 + data.length)
+    b.putInt(crc.getValue.toInt).array
+  }
+
   /** Closed-form total length of a `pngEncode` file. */
   def pngByteLen(w: Int, h: Int): Int = 68 + h * (1 + 3 * w)
 
@@ -211,20 +203,24 @@ object MediaOps {
     * single-frame writer (`gifEncode` = nFrames 1). */
   def gifEncodeFrames(w: Int, h: Int, seed: Long, nFrames: Int): Array[Byte] = {
     require(w > 0 && h > 0 && w <= 0xFFFF && h <= 0xFFFF,
-      s"GIF dimensions are unsigned 16-bit: ${w}x$h") // le16 would truncate
+      s"GIF dimensions are unsigned 16-bit: ${w}x$h") // putShort would truncate
     require(nFrames >= 1, s"nFrames must be >= 1, got $nFrames")
     val out = new java.io.ByteArrayOutputStream(w * h * nFrames * 2 + 800)
-    def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >>> 8) & 0xFF) }
-    out.write("GIF87a".getBytes("ASCII"))
-    le16(w); le16(h)
-    out.write(0xF7) // global color table, 8-bit, 256 entries
-    out.write(0); out.write(0) // background index, aspect
-    var i = 0
-    while (i < 256) { out.write(i); out.write(i); out.write(i); i += 1 }
+    val screen = ByteBuffer.allocate(13 + 3 * 256).order(LITTLE_ENDIAN)
+      .put(tag("GIF87a")).putShort(w.toShort).putShort(h.toShort)
+      .put(0xF7.toByte) // global color table, 8-bit, 256 entries
+      .put(0.toByte).put(0.toByte) // background index, aspect
+    (0 until 256).foreach(i => screen.put(i.toByte).put(i.toByte).put(i.toByte)) // gray ramp
+    out.write(screen.array)
+    // every frame's image descriptor is the same: full-screen, no local table
+    val image = ByteBuffer.allocate(11).order(LITTLE_ENDIAN)
+      .put(0x2C.toByte).putShort(0.toShort).putShort(0.toShort)
+      .putShort(w.toShort).putShort(h.toShort).put(0.toByte)
+      .put(8.toByte) // LZW minimum code size → 9-bit codes
+      .array
     var f = 0
     while (f < nFrames) {
-      out.write(0x2C); le16(0); le16(0); le16(w); le16(h); out.write(0)
-      out.write(8) // LZW minimum code size → 9-bit codes
+      out.write(image)
       writeGifLzwBody(out, w, h, seed, f.toLong * w * h)
       f += 1
     }
@@ -241,10 +237,9 @@ object MediaOps {
     var blockLen = 0
     var bitBuf = 0L
     var bitCnt = 0
-    val body = new java.io.ByteArrayOutputStream()
     def flushBlock(): Unit =
       if (blockLen > 0) {
-        body.write(blockLen); body.write(block, 0, blockLen); blockLen = 0
+        out.write(blockLen); out.write(block, 0, blockLen); blockLen = 0
       }
     def putCode(c: Int): Unit = {
       bitBuf |= c.toLong << bitCnt
@@ -276,29 +271,20 @@ object MediaOps {
       blockLen += 1
     }
     flushBlock()
-    body.write(0) // block terminator
-    out.write(body.toByteArray)
+    out.write(0) // block terminator
   }
 
   /** WAV metadata from real header bytes: walk RIFF chunks to `fmt `,
     * read channels + sample rate. None when not a RIFF/WAVE stream. */
   def sniffWav(b: Array[Byte]): Option[(Int, Int)] = {
     if (b == null || b.length < 36) return None
-    def ascii(off: Int, s: String): Boolean = {
-      var i = 0
-      while (i < s.length) { if (b(off + i) != s.charAt(i).toByte) return false; i += 1 }
-      true
-    }
-    @inline def le16(off: Int): Int = (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
-    @inline def le32(off: Int): Long =
-      (b(off) & 0xFFL) | ((b(off + 1) & 0xFFL) << 8) |
-        ((b(off + 2) & 0xFFL) << 16) | ((b(off + 3) & 0xFFL) << 24)
-    if (!ascii(0, "RIFF") || !ascii(8, "WAVE")) return None
+    val le = ByteBuffer.wrap(b).order(LITTLE_ENDIAN)
+    if (!tagAt(b, 0, "RIFF") || !tagAt(b, 8, "WAVE")) return None
     var p = 12
     while (p + 8 <= b.length) {
-      val size = le32(p + 4)
-      if (ascii(p, "fmt ") && p + 16 <= b.length)
-        return Some((le16(p + 10), le32(p + 12).toInt))
+      val size = le.getInt(p + 4) & 0xFFFFFFFFL
+      if (tagAt(b, p, "fmt ") && p + 16 <= b.length)
+        return Some((le.getShort(p + 10) & 0xFFFF, le.getInt(p + 12)))
       p += 8 + size.toInt + (size.toInt & 1) // chunks are word-aligned
       if (size < 0 || size > b.length) return None
     }
@@ -311,16 +297,8 @@ object MediaOps {
     * None when no ftyp/moov signature. */
   def sniffMp4(b: Array[Byte]): Option[(Int, Int, Int)] = {
     if (b == null || b.length < 16) return None
-    def ascii(off: Int, s: String): Boolean = {
-      if (off + s.length > b.length) return false
-      var i = 0
-      while (i < s.length) { if (b(off + i) != s.charAt(i).toByte) return false; i += 1 }
-      true
-    }
-    @inline def be32(off: Int): Long =
-      ((b(off) & 0xFFL) << 24) | ((b(off + 1) & 0xFFL) << 16) |
-        ((b(off + 2) & 0xFFL) << 8) | (b(off + 3) & 0xFFL)
-    if (!ascii(4, "ftyp")) return None
+    val be = ByteBuffer.wrap(b)
+    if (!tagAt(b, 4, "ftyp")) return None
     var frames = 0
     var w = 0
     var h = 0
@@ -328,47 +306,23 @@ object MediaOps {
       if (depth > 8) return
       var p = start
       while (p + 8 <= end) {
-        val size = be32(p)
-        if (size < 8 || p + size > end) return
-        if (ascii(p + 4, "moov") || ascii(p + 4, "trak"))
-          walk(p + 8, p + size.toInt, depth + 1)
-        else if (ascii(p + 4, "mvhd") && p + 28 <= end) {
-          val timescale = be32(p + 20)
-          val duration = be32(p + 24)
-          if (timescale > 0) frames = duration.toInt // ticks ARE frames at ts=30fps convention
-        } else if (ascii(p + 4, "tkhd") && p + 92 <= end) {
-          w = (be32(p + 84) >>> 16).toInt
-          h = (be32(p + 88) >>> 16).toInt
+        val size = be.getInt(p) // a size ≥ 2^31 reads negative: fails `size < 8`
+        if (size < 8 || size > end - p) return
+        if (tagAt(b, p + 4, "moov") || tagAt(b, p + 4, "trak"))
+          walk(p + 8, p + size, depth + 1)
+        else if (tagAt(b, p + 4, "mvhd") && p + 28 <= end) {
+          val timescale = be.getInt(p + 20)
+          val duration = be.getInt(p + 24)
+          if (timescale != 0) frames = duration // ticks ARE frames at ts=30fps convention
+        } else if (tagAt(b, p + 4, "tkhd") && p + 92 <= end) {
+          w = be.getInt(p + 84) >>> 16
+          h = be.getInt(p + 88) >>> 16
         }
-        p += size.toInt
+        p += size
       }
     }
     walk(0, b.length, 0)
     if (frames == 0 && w == 0) None else Some((w, h, math.max(1, frames)))
-  }
-
-  /** Minimal real PNG header: 8-byte signature + IHDR chunk (13-byte data,
-    * real CRC32) — exactly what any conforming dimension sniffer reads.
-    * 33 bytes. */
-  def pngHeader(w: Int, h: Int): Array[Byte] = {
-    val out = new Array[Byte](33)
-    val sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-    var i = 0
-    while (i < 8) { out(i) = sig(i).toByte; i += 1 }
-    def be32(off: Int, v: Long): Unit = {
-      out(off) = (v >>> 24).toByte; out(off + 1) = (v >>> 16).toByte
-      out(off + 2) = (v >>> 8).toByte; out(off + 3) = v.toByte
-    }
-    be32(8, 13L) // IHDR data length
-    out(12) = 'I'; out(13) = 'H'; out(14) = 'D'; out(15) = 'R'
-    be32(16, w.toLong); be32(20, h.toLong)
-    out(24) = 8 // bit depth
-    out(25) = 2 // color type: truecolor
-    // compression = filter = interlace = 0 (already zeroed)
-    val crc = new java.util.zip.CRC32()
-    crc.update(out, 12, 17) // type + data
-    be32(29, crc.getValue)
-    out
   }
 
   /** Synthetic deterministic media-asset table derived from the doc_id
@@ -384,12 +338,7 @@ object MediaOps {
     ids.select(col("doc_id").cast("string"))
       .as[String]
       .map { id =>
-        val seed = Dedup.shingleHash(id) // base-31 poly mod 2^32 over digits
-        val mime = (seed % 3) match {
-          case 0 => "image/png"
-          case 1 => "audio/wav"
-          case _ => "video/mp4"
-        }
+        val (ref, seed, mime) = assetOf(id)
         val bytes =
           if (mime == "image/png") {
             // a COMPLETE decodable PNG: real pixels, closed-form length
@@ -399,12 +348,7 @@ object MediaOps {
             val len =
               if (mime == "video/mp4") 256 + (seed % 192).toInt
               else 64 + (seed % 192).toInt
-            val b = new Array[Byte](len)
-            var j = 0
-            while (j < len) {
-              b(j) = (((seed + (j + 1) * MediaK) % MediaP % 256) - 128).toByte
-              j += 1
-            }
+            val b = Array.tabulate(len)(j => (pngPixel(seed, j) - 128).toByte)
             val (w, h) = assetDims(seed)
             val header = mime match {
               case "audio/wav" => wavHeader(wavChannels(seed), wavSampleRate(seed), len)
@@ -413,44 +357,51 @@ object MediaOps {
             System.arraycopy(header, 0, b, 0, header.length)
             b
           }
-        MediaRow(graft.SgmlExtract.AssetPrefix + id + graft.SgmlExtract.AssetSuffix,
-          bytes, mime)
+        MediaRow(ref, bytes, mime)
       }
+  }
+
+  /** Doc `id`'s synthetic asset: (media_ref, seed, mime). The seed is the
+    * base-31 poly mod 2^32 over the id's digits, and `seed % 3` picks the
+    * mime: PNG, WAV or MP4 (whose docs also get a GIF rendition). */
+  private def assetOf(id: String): (String, Long, String) = {
+    val seed = Dedup.shingleHash(id)
+    val mime = (seed % 3) match {
+      case 0 => "image/png"
+      case 1 => "audio/wav"
+      case _ => "video/mp4"
+    }
+    (graft.SgmlExtract.AssetPrefix + id + graft.SgmlExtract.AssetSuffix, seed, mime)
   }
 
   /** Image dimension sniffing from REAL header bytes — pure JVM, no codec
     * libraries: PNG (IHDR), GIF87a/89a (logical screen descriptor,
     * little-endian), JPEG (segment scan to the first SOFn frame header).
-    * Returns (mime, width, height); None when no image signature matches
-    * (the caller falls back to the documented stub). Runs per row inside
-    * mapPartitions — narrow, allocation-free. */
+    * Returns (mime, width, height); None when no image signature matches.
+    * Runs per row inside mapPartitions — narrow, no decode. */
   def sniffImage(b: Array[Byte]): Option[(String, Int, Int)] = {
     if (b == null) return None
-    @inline def u8(i: Int): Int = b(i) & 0xFF
-    @inline def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    @inline def be32(i: Int): Int =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    @inline def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    if (b.length >= 24 && u8(0) == 0x89 && b(1) == 'P' && b(2) == 'N' &&
-        b(3) == 'G' && b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R')
-      Some(("image/png", be32(16), be32(20)))
-    else if (b.length >= 10 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
-        b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a')
-      Some(("image/gif", le16(6), le16(8)))
-    else if (b.length >= 4 && u8(0) == 0xFF && u8(1) == 0xD8) {
+    val be = ByteBuffer.wrap(b)
+    if (b.length >= 24 && java.util.Arrays.equals(b, 0, 4, PngSignature, 0, 4) &&
+        tagAt(b, 12, "IHDR"))
+      Some(("image/png", be.getInt(16), be.getInt(20)))
+    else if (b.length >= 10 && (tagAt(b, 0, "GIF87a") || tagAt(b, 0, "GIF89a"))) {
+      val le = be.order(LITTLE_ENDIAN)
+      Some(("image/gif", le.getShort(6) & 0xFFFF, le.getShort(8) & 0xFFFF))
+    } else if (b.length >= 4 && (b(0) & 0xFF) == 0xFF && (b(1) & 0xFF) == 0xD8) {
       // JPEG: walk marker segments to the first SOFn (C0–CF minus the
       // non-frame C4/C8/CC); SOF layout = len(2) precision(1) h(2) w(2)
       var i = 2
-      while (i + 9 < b.length && u8(i) == 0xFF) {
-        val marker = u8(i + 1)
+      while (i + 9 < b.length && (b(i) & 0xFF) == 0xFF) {
+        val marker = b(i + 1) & 0xFF
         if (marker == 0xFF) i += 1 // fill byte
         else if (marker == 0x01 || (marker >= 0xD0 && marker <= 0xD9)) i += 2 // standalone
         else {
-          val segLen = be16(i + 2)
+          val segLen = be.getShort(i + 2) & 0xFFFF
           if (segLen < 2) return None
           if (marker >= 0xC0 && marker <= 0xCF &&
               marker != 0xC4 && marker != 0xC8 && marker != 0xCC)
-            return Some(("image/jpeg", be16(i + 7), be16(i + 5)))
+            return Some(("image/jpeg", be.getShort(i + 7) & 0xFFFF, be.getShort(i + 5) & 0xFFFF))
           i += 2 + segLen
         }
       }
@@ -458,49 +409,50 @@ object MediaOps {
     } else None
   }
 
-  /** Header-level metadata pass (the m1 shape): `sniffImage` (PNG/GIF/
-    * JPEG dimensions), `sniffWav` (channels + sample rate), `sniffMp4`
-    * (mvhd frame count + tkhd dimensions) all parse the actual bytes, no
-    * codec libraries needed — a metadata scan must not pay full decode.
-    * Content decode lives in `resizePixels` (real pixels via ImageIO) and
-    * `audioStats` (real PCM via javax.sound); only VIDEO frame decode is
-    * a stub (no AV codecs in the JDK). The 8-dim "feature" here is a byte
-    * histogram, and unrecognized payloads fall back to hash-derived
-    * dimensions. Batched per partition like a Pandas UDF batch. */
+  /** The one header sniff chain: `sniffImage`, then `sniffWav`, then
+    * `sniffMp4`. The header's fields as a `MediaMeta` with the sniffed
+    * mime (n_frames 1 unless MP4; no media_ref, no feature); None when
+    * no header matches. */
+  private[graft] def sniff(b: Array[Byte]): Option[MediaMeta] = {
+    def meta(mime: String, w: Int = 0, h: Int = 0, frames: Int = 1,
+        channels: Int = 0, rate: Int = 0) =
+      MediaMeta(null, mime, b.length, w, h, frames, channels, rate, Array.emptyFloatArray)
+    sniffImage(b).map { case (mime, w, h) => meta(mime, w, h) }
+      .orElse(sniffWav(b).map { case (ch, sr) => meta("audio/wav", channels = ch, rate = sr) })
+      .orElse(sniffMp4(b).map { case (w, h, fr) => meta("video/mp4", w, h, fr) })
+  }
+
+  /** Header-level metadata pass (the m1 shape): `sniff` reads PNG/GIF/
+    * JPEG dimensions, WAV channels + sample rate, or the MP4 mvhd frame
+    * count + tkhd dimensions out of the actual bytes, no codec libraries
+    * needed — a metadata scan must not pay full decode. The asset's own
+    * mime is kept. Content decode lives in `resizePixels` (real pixels via
+    * ImageIO) and `audioStats` (real PCM via javax.sound); only VIDEO
+    * frame decode is a stub (no AV codecs in the JDK). The 8-dim
+    * "feature" here is a byte histogram, and unrecognized payloads fall
+    * back to hash-derived dimensions. Batched per partition like a
+    * Pandas UDF batch. */
   def decodeStub(assets: Dataset[MediaRow]): Dataset[MediaMeta] = {
     import assets.sparkSession.implicits._
     assets.mapPartitions { it =>
       it.map { m =>
-        // base-31 poly over UNSIGNED byte values mod P (oracle-replicable)
-        var h = 0L
-        var i = 0
-        while (i < m.bytes.length) { h = (h * 31 + (m.bytes(i) + 128)) % MediaP; i += 1 }
-        var w = 0
-        var ht = 0
-        var frames = 1
-        var channels = 0
-        var rate = 0
-        sniffImage(m.bytes) match {
-          case Some((_, iw, ih)) => w = iw; ht = ih
-          case None => sniffWav(m.bytes) match {
-            case Some((ch, sr)) => channels = ch; rate = sr
-            case None => sniffMp4(m.bytes) match {
-              case Some((mw, mh, fr)) => w = mw; ht = mh; frames = fr
-              case None => // STUB fallback for unrecognized payloads
-                w = 16 + (h % 1024).toInt
-                ht = 16 + (h / 1024 % 1024).toInt
-                if (m.mime.startsWith("video")) frames = 1 + (h / 1048576 % 300).toInt
-            }
-          }
-        }
         val feat = new Array[Float](8)
-        i = 0
+        var i = 0
         while (i < m.bytes.length) {
           feat(i % 8) += (m.bytes(i) & 0xFF) / 255.0f
           i += 1
         }
-        MediaMeta(m.media_ref, m.mime, m.bytes.length, w, ht, frames,
-          channels, rate, feat)
+        sniff(m.bytes) match {
+          case Some(s) => s.copy(media_ref = m.media_ref, mime = m.mime, feature = feat)
+          case None => // STUB fallback for unrecognized payloads
+            // base-31 poly over byte + 128 (signed bytes shifted to 0..255) mod P
+            var h = 0L
+            i = 0
+            while (i < m.bytes.length) { h = (h * 31 + (m.bytes(i) + 128)) % MediaP; i += 1 }
+            val frames = if (m.mime.startsWith("video")) 1 + (h / 1048576 % 300).toInt else 1
+            MediaMeta(m.media_ref, m.mime, m.bytes.length, 16 + (h % 1024).toInt,
+              16 + (h / 1024 % 1024).toInt, frames, 0, 0, feat)
+        }
       }
     }
   }
@@ -515,7 +467,11 @@ object MediaOps {
     val img =
       try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
       catch { case _: java.io.IOException => null }
-    if (img == null) return None
+    if (img == null) None else Some((img.getWidth, img.getHeight, rgbBytes(img)))
+  }
+
+  /** A decoded raster as row-major RGB bytes. */
+  private def rgbBytes(img: java.awt.image.BufferedImage): Array[Byte] = {
     val w = img.getWidth
     val h = img.getHeight
     val out = new Array[Byte](w * h * 3)
@@ -531,17 +487,42 @@ object MediaOps {
       }
       y += 1
     }
-    Some((w, h, out))
+    out
+  }
+
+  /** The raster hash m2 and m5 share: resample a w×h RGB raster to
+    * rw×rh by nearest neighbor (integer source indices sx=⌊rx·w/rw⌋,
+    * sy=⌊ry·h/rh⌋ — exact, SQL-replicable; rw=w, rh=h is the raster
+    * itself) and fold the channel values in row-major order with the
+    * base-31 poly mod P the oracles replay. */
+  private def rasterHash(w: Int, h: Int, px: Array[Byte], rw: Int, rh: Int): Long = {
+    var hash = 0L
+    var ry = 0
+    while (ry < rh) {
+      val sy = ry * h / rh
+      var rx = 0
+      while (rx < rw) {
+        val sx = rx * w / rw
+        val base = (sy * w + sx) * 3
+        var c = 0
+        while (c < 3) {
+          hash = (hash * 31 + (px(base + c) & 0xFF)) % MediaP
+          c += 1
+        }
+        rx += 1
+      }
+      ry += 1
+    }
+    hash
   }
 
   /** m2's REAL pixel path: decode each image via `decodeImage`, resize by
-    * nearest-neighbor over the ACTUAL raster (integer source indices
-    * sx=⌊rx·w/rw⌋, sy=⌊ry·h/rh⌋ — exact, SQL-replicable), and fingerprint
-    * the resized pixel stream with the base-31 fold the oracles share.
-    * Geometry matches `resizeMeta` bit for bit (same fixed-point-via-
-    * double scale). Non-decodable payloads are skipped (flatMap) — at
-    * scale this stage follows the m1 metadata pass, which already
-    * classified them. Narrow mapPartitions, no shuffle. */
+    * nearest-neighbor over the ACTUAL raster, and fingerprint the resized
+    * pixel stream with `rasterHash`. Geometry matches `resizeMeta` bit
+    * for bit (same fixed-point-via-double scale). Non-decodable payloads
+    * are skipped (flatMap) — at scale this stage follows the m1 metadata
+    * pass, which already classified them. Narrow mapPartitions, no
+    * shuffle. */
   def resizePixels(assets: Dataset[MediaRow],
       maxW: Int = 256, maxH: Int = 256): DataFrame = {
     import assets.sparkSession.implicits._
@@ -551,24 +532,7 @@ object MediaOps {
           maxH * 1000000L.toDouble / h), 1000000.0)
         val rw = math.max(1, (w * s / 1000000L).toInt)
         val rh = math.max(1, (h * s / 1000000L).toInt)
-        var hash = 0L
-        var ry = 0
-        while (ry < rh) {
-          val sy = ry * h / rh
-          var rx = 0
-          while (rx < rw) {
-            val sx = rx * w / rw
-            val base = (sy * w + sx) * 3
-            var c = 0
-            while (c < 3) {
-              hash = (hash * 31 + (px(base + c) & 0xFF)) % MediaP
-              c += 1
-            }
-            rx += 1
-          }
-          ry += 1
-        }
-        (m.media_ref, w, h, rw, rh, hash)
+        (m.media_ref, w, h, rw, rh, rasterHash(w, h, px, rw, rh))
       }
     }.toDF("media_ref", "width", "height", "resized_w", "resized_h",
       "pixel_hash")
@@ -659,13 +623,11 @@ object MediaOps {
     ids.select(col("doc_id").cast("string"))
       .as[String]
       .flatMap { id =>
-        val seed = Dedup.shingleHash(id)
-        if (seed % 3 != 2) None // GIF twin exists only for the video docs
+        val (ref, seed, mime) = assetOf(id)
+        if (mime != "video/mp4") None // GIF twin exists only for the video docs
         else {
           val (w, h) = gifDims(seed)
-          Some(MediaRow(
-            graft.SgmlExtract.AssetPrefix + id + graft.SgmlExtract.AssetSuffix,
-            gifEncodeFrames(w, h, seed, gifFrameCount(seed)), "video/gif"))
+          Some(MediaRow(ref, gifEncodeFrames(w, h, seed, gifFrameCount(seed)), "video/gif"))
         }
       }
   }
@@ -673,7 +635,7 @@ object MediaOps {
   /** REAL video-frame decode (m5): sample every `stride`-th frame up to
     * `maxFrames` (same policy as `sampleFrames`), decode ONLY those frames
     * via ImageIO's multi-image reader, and fingerprint each decoded raster
-    * with the shared base-31 RGB fold (same hash as m2's resize path).
+    * with `rasterHash` at its own size (m2's hash without the resize).
     * Frame count comes from the reader — real container metadata, not the
     * generator. Narrow flatMap, no shuffle; decode work is bounded by the
     * sampling policy, never the full frame count — at 100 TB the point of
@@ -694,20 +656,8 @@ object MediaOps {
           val nFrames = reader.getNumImages(true) // real container metadata
           (0 until nFrames by stride).take(maxFrames).map { fi =>
             val img = reader.read(fi)
-            var hash = 0L
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                val rgb = img.getRGB(x, y)
-                hash = (hash * 31 + ((rgb >>> 16) & 0xFF)) % MediaP
-                hash = (hash * 31 + ((rgb >>> 8) & 0xFF)) % MediaP
-                hash = (hash * 31 + (rgb & 0xFF)) % MediaP
-                x += 1
-              }
-              y += 1
-            }
-            (m.media_ref, nFrames.toLong, fi.toLong, hash)
+            val (w, h) = (img.getWidth, img.getHeight)
+            (m.media_ref, nFrames.toLong, fi.toLong, rasterHash(w, h, rgbBytes(img), w, h))
           }
         } catch {
           case _: java.io.IOException => Nil

@@ -6,49 +6,62 @@ import scala.collection.mutable
 /** Deterministic minimal PDF writer — the test/corpus twin of [[Pdf]].
   *
   * Emits structurally valid PDF 1.4: catalog → page tree → one content
-  * stream per page (Helvetica, one Tj per line, Td line advances), a
-  * correct xref table and trailer. Text encodes as ASCII-safe literal
-  * strings (octal escapes for non-printables, Latin-1 range) or, when a
-  * line contains characters above U+00FF, as a BOM-prefixed UTF-16BE hex
-  * string — both forms round-trip exactly through `Pdf.extractText`.
-  * `compress = true` Flate-encodes content streams (java.util.zip
-  * .Deflater, fixed level → byte-deterministic for a given input).
+  * stream per page (one Tj per line, Td line advances), a correct xref
+  * table and trailer. One routine, `file`, lays out every file the three
+  * page shapes make (Helvetica text, a CMap'd Type0 font, a
+  * /Differences-encoded simple font); one, `literal`, escapes every
+  * literal string. Text encodes as ASCII-safe literal strings (octal
+  * escapes for non-printables, Latin-1 range) or, when a line contains
+  * characters above U+00FF, as a BOM-prefixed UTF-16BE hex string — both
+  * forms round-trip exactly through `Pdf.extractText`. `compress = true`
+  * Flate-encodes every stream (java.util.zip.Deflater, fixed level →
+  * byte-deterministic for a given input).
   */
 object PdfWriter {
 
   def singlePage(text: String, compress: Boolean = true): Array[Byte] =
-    document(Seq(if (text == null) "" else text), compress)
+    document(Seq(text), compress)
 
-  def document(pages: Seq[String], compress: Boolean = true): Array[Byte] = {
+  def document(pages: Seq[String], compress: Boolean = true): Array[Byte] =
+    file(Seq(Left("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")),
+      pages.map(text => content(Option(text).getOrElse("").split("\n", -1).map(encodeString): _*)),
+      compress)
+
+  /** An object body: `Left` a dictionary, `Right` a stream's data. */
+  private type Obj = Either[String, Array[Byte]]
+
+  /** The one file layout: header; catalog (1); page tree (2); the font's
+    * objects from 3 on (object 3 is /F1); a page and its content stream
+    * per entry of `contents`; xref; trailer. Streams are Flate-encoded
+    * when `compress`. */
+  private def file(font: Seq[Obj], contents: Seq[Array[Byte]], compress: Boolean): Array[Byte] = {
+    val pageNums = contents.indices.map(i => 3 + font.length + 2 * i)
+    val objs: Seq[Obj] =
+      Seq(Left("<< /Type /Catalog /Pages 2 0 R >>"),
+        Left(pageNums.map(n => s"$n 0 R").mkString("<< /Type /Pages /Kids [", " ",
+          s"] /Count ${contents.length} >>"))) ++
+      font ++
+      contents.zip(pageNums).flatMap { case (data, n) =>
+        Seq(Left("<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+          s"/Resources << /Font << /F1 3 0 R >> >> /Contents ${n + 1} 0 R >>"), Right(data))
+      }
     val out = new java.io.ByteArrayOutputStream(1024)
     def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    val offsets = mutable.ArrayBuffer.empty[Int] // index = objNum - 1
-    def beginObj(n: Int): Unit = { offsets += out.size(); w(s"$n 0 obj\n") }
-
-    val nPages = pages.length
-    // numbering: 1 catalog, 2 pages root, 3 font, then (page, content) pairs
-    def pageObj(i: Int) = 4 + 2 * i
-    def contentObj(i: Int) = 5 + 2 * i
-
     w("%PDF-1.4\n")
-    beginObj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    beginObj(2)
-    w("<< /Type /Pages /Kids [" +
-      (0 until nPages).map(i => s"${pageObj(i)} 0 R").mkString(" ") +
-      s"] /Count $nPages >>\nendobj\n")
-    beginObj(3)
-    w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    pages.zipWithIndex.foreach { case (text, i) =>
-      beginObj(pageObj(i))
-      w("<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-        s"/Resources << /Font << /F1 3 0 R >> >> /Contents ${contentObj(i)} 0 R >>\nendobj\n")
-      val raw = contentFor(if (text == null) "" else text)
-      val (data, filter) =
-        if (compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
-      beginObj(contentObj(i))
-      w(s"<< /Length ${data.length}$filter >>\nstream\n")
-      out.write(data)
-      w("\nendstream\nendobj\n")
+    val offsets = objs.zipWithIndex.map { case (obj, i) =>
+      val at = out.size()
+      w(s"${i + 1} 0 obj\n")
+      obj match {
+        case Left(dict) => w(dict)
+        case Right(raw) =>
+          val (data, filter) =
+            if (compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
+          w(s"<< /Length ${data.length}$filter >>\nstream\n")
+          out.write(data)
+          w("\nendstream")
+      }
+      w("\nendobj\n")
+      at
     }
     val xrefAt = out.size()
     w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
@@ -60,52 +73,30 @@ object PdfWriter {
     out.toByteArray
   }
 
-  /** One content stream: BT, first line at (72,720), then -14pt advances. */
-  private def contentFor(text: String): Array[Byte] = {
-    val lines = text.split("\n", -1)
-    val sb = new java.lang.StringBuilder(text.length + 64)
-    sb.append("BT /F1 11 Tf 72 720 Td ")
-    var i = 0
-    while (i < lines.length) {
-      if (i > 0) sb.append(" 0 -14 Td ")
-      sb.append(encodeString(lines(i))).append(" Tj")
-      i += 1
-    }
-    sb.append(" ET")
-    sb.toString.getBytes(ISO_8859_1)
-  }
+  /** One content stream: BT, first string at (72,720), then -14pt
+    * advances, one Tj per (already encoded) string. */
+  private def content(strings: String*): Array[Byte] =
+    strings.map(_ + " Tj").mkString("BT /F1 11 Tf 72 720 Td ", " 0 -14 Td ", " ET")
+      .getBytes(ISO_8859_1)
 
   /** ASCII-safe literal string, or UTF-16BE hex string past Latin-1. */
-  private[pdf] def encodeString(s: String): String = {
-    var wide = false
-    var i = 0
-    while (i < s.length && !wide) { if (s.charAt(i) > 0xFF) wide = true; i += 1 }
-    if (wide) {
-      val sb = new java.lang.StringBuilder(s.length * 4 + 6)
-      sb.append("<FEFF")
-      val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
-      bytes.foreach(b => sb.append(f"${b & 0xFF}%02X"))
-      sb.append('>')
-      sb.toString
-    } else {
-      val sb = new java.lang.StringBuilder(s.length + 8)
-      sb.append('(')
-      var j = 0
-      while (j < s.length) {
-        val c = s.charAt(j)
-        c match {
-          case '(' => sb.append("\\(")
-          case ')' => sb.append("\\)")
-          case '\\' => sb.append("\\\\")
-          case c0 if c0 < 0x20 || c0 > 0x7E =>
-            sb.append('\\').append(f"${c0.toInt}%03o") // always 3 digits
-          case c0 => sb.append(c0)
-        }
-        j += 1
-      }
-      sb.append(')')
-      sb.toString
+  private[pdf] def encodeString(s: String): String =
+    if (s.forall(_ <= 0xFF)) literal(s)
+    else s.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
+      .map(b => f"${b & 0xFF}%02X").mkString("<FEFF", "", ">")
+
+  /** The one literal-string writer: `(`, `)` and `\` escaped, and every
+    * char outside printable ASCII written as the 3-digit octal escape of
+    * its byte, `code(c)`. */
+  private def literal(s: String, code: Char => Int = _.toInt): String = {
+    val sb = new java.lang.StringBuilder(s.length + 8)
+    sb.append('(')
+    s.foreach {
+      case c @ ('(' | ')' | '\\') => sb.append('\\').append(c)
+      case c if c < 0x20 || c > 0x7E => sb.append('\\').append(f"${code(c)}%03o") // always 3 digits
+      case c => sb.append(c)
     }
+    sb.append(')').toString
   }
 
   /** CMap'd-font twin: one page whose text is written as 2-byte codes
@@ -142,43 +133,15 @@ object PdfWriter {
     cmap.append(s"${bfrange.length} beginbfrange\n")
     bfrange.foreach(l => cmap.append(l).append('\n'))
     cmap.append("endbfrange\nendcmap\nend\n")
-    val cmapBytes = cmap.toString.getBytes(ISO_8859_1)
 
     val codesHex = new java.lang.StringBuilder(chars.length * 4 + 2)
     codesHex.append('<')
     var k = 0
     while (k < chars.length) { codesHex.append(f"${k + 1}%04X"); k += 1 }
     codesHex.append('>')
-    val content = s"BT /F1 11 Tf 72 720 Td $codesHex Tj ET".getBytes(ISO_8859_1)
-
-    val out = new java.io.ByteArrayOutputStream(1024)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    val offsets = mutable.ArrayBuffer.empty[Int]
-    def beginObj(n: Int): Unit = { offsets += out.size(); w(s"$n 0 obj\n") }
-    def streamObj(n: Int, raw: Array[Byte]): Unit = {
-      val (data, filter) =
-        if (compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
-      beginObj(n)
-      w(s"<< /Length ${data.length}$filter >>\nstream\n")
-      out.write(data)
-      w("\nendstream\nendobj\n")
-    }
-    w("%PDF-1.4\n")
-    beginObj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    beginObj(2); w("<< /Type /Pages /Kids [5 0 R] /Count 1 >>\nendobj\n")
-    beginObj(3)
-    w("<< /Type /Font /Subtype /Type0 /BaseFont /Synthetic /ToUnicode 4 0 R >>\nendobj\n")
-    streamObj(4, cmapBytes)
-    beginObj(5)
-    w("<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 3 0 R >> >> /Contents 6 0 R >>\nendobj\n")
-    streamObj(6, content)
-    val xrefAt = out.size()
-    w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n")
-    w("%%EOF\n")
-    out.toByteArray
+    file(Seq(Left("<< /Type /Font /Subtype /Type0 /BaseFont /Synthetic /ToUnicode 4 0 R >>"),
+      Right(cmap.toString.getBytes(ISO_8859_1))),
+      Seq(content(codesHex.toString)), compress)
   }
 
   /** /Differences-encoded twin: one page whose non-ASCII characters are
@@ -198,46 +161,11 @@ object PdfWriter {
       val g = aglNames.getOrElse(c, f"uni${c.toInt}%04X")
       s"$code /$g"
     }.mkString(" ")
-    // content string: ASCII verbatim (escaped), non-ASCII as octal codes
-    val lit = new java.lang.StringBuilder(text.length + 16)
-    lit.append('(')
-    text.foreach {
-      case '(' => lit.append("\\(")
-      case ')' => lit.append("\\)")
-      case '\\' => lit.append("\\\\")
-      case c if c > 0x7E => lit.append('\\').append(f"${codeOf(c)}%03o")
-      case c if c < 0x20 => lit.append('\\').append(f"${c.toInt}%03o")
-      case c => lit.append(c)
-    }
-    lit.append(')')
-    val content = s"BT /F1 11 Tf 72 720 Td $lit Tj ET".getBytes(ISO_8859_1)
-
-    val out = new java.io.ByteArrayOutputStream(1024)
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    val offsets = mutable.ArrayBuffer.empty[Int]
-    def beginObj(n: Int): Unit = { offsets += out.size(); w(s"$n 0 obj\n") }
-    w("%PDF-1.4\n")
-    beginObj(1); w("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    beginObj(2); w("<< /Type /Pages /Kids [4 0 R] /Count 1 >>\nendobj\n")
-    beginObj(3)
-    w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
+    file(Seq(Left("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
       "/Encoding << /Type /Encoding /BaseEncoding /WinAnsiEncoding " +
-      s"/Differences [ $diffs ] >> >>\nendobj\n")
-    beginObj(4)
-    w("<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 3 0 R >> >> /Contents 5 0 R >>\nendobj\n")
-    val (data, filter) =
-      if (compress) (deflate(content), " /Filter /FlateDecode") else (content, "")
-    beginObj(5)
-    w(s"<< /Length ${data.length}$filter >>\nstream\n")
-    out.write(data)
-    w("\nendstream\nendobj\n")
-    val xrefAt = out.size()
-    w(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => w(f"$o%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xrefAt\n")
-    w("%%EOF\n")
-    out.toByteArray
+      s"/Differences [ $diffs ] >> >>")),
+      // content string: ASCII verbatim (escaped), non-ASCII as octal codes
+      Seq(content(literal(text, c => codeOf.getOrElse(c, c.toInt)))), compress)
   }
 
   def deflate(data: Array[Byte]): Array[Byte] = {

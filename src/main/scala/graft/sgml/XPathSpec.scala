@@ -74,6 +74,16 @@ object XPathSpec {
       while (i < s.length && isNameChar(s.charAt(i))) i += 1
       s.substring(b, i)
     }
+    // a quoted value, or a bare name
+    def value(): Either[String, String] =
+      if (peek != '\'' && peek != '"') Right(name())
+      else {
+        val q = peek; i += 1
+        val b = i
+        while (i < s.length && s.charAt(i) != q) i += 1
+        if (i >= s.length) Left("unterminated quoted value")
+        else { i += 1; Right(s.substring(b, i - 1)) }
+      }
     def filterList(): Either[String, List[Filter]] = {
       // on '(' — parse comma-separated filters to ')'
       i += 1
@@ -88,13 +98,7 @@ object XPathSpec {
           if (peek != '=') return Left(s"expected '=' in @$an condition")
           i += 1
           while (peek == ' ') i += 1
-          val v = if (peek == '\'' || peek == '"') {
-            val q = peek; i += 1
-            val b = i
-            while (i < s.length && s.charAt(i) != q) i += 1
-            if (i >= s.length) return Left("unterminated quoted value")
-            val r = s.substring(b, i); i += 1; r
-          } else name()
+          val v = value() match { case Right(v) => v; case Left(e) => return Left(e) }
           fs += AttrEq(an, v)
         } else if (peek.isDigit) {
           val b = i
@@ -116,13 +120,7 @@ object XPathSpec {
             if (peek != ',') return Left("expected ',' in contains()")
             i += 1
             while (peek == ' ') i += 1
-            val v = if (peek == '\'' || peek == '"') {
-              val q = peek; i += 1
-              val b = i
-              while (i < s.length && s.charAt(i) != q) i += 1
-              if (i >= s.length) return Left("unterminated quoted value")
-              val r = s.substring(b, i); i += 1; r
-            } else name()
+            val v = value() match { case Right(v) => v; case Left(e) => return Left(e) }
             while (peek == ' ') i += 1
             if (peek != ')') return Left("expected ')' closing contains()")
             i += 1

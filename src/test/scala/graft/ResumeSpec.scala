@@ -76,6 +76,25 @@ class ResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lineage.agg(sum("docs")).collect()(0).getLong(0) === 100)
   }
 
+  test("resume: an input directory whose name holds a space and a '%' resumes to the full count") {
+    // the listed files are URI strings (`%20`, `%25`); each chunk must
+    // read its files by their decoded paths
+    val tmp = Files.createTempDirectory("resume4").toString
+    val in = s"$tmp/res in/docs %x"; val out = s"$tmp/out"
+    mkInput(in, nFiles = 2, docsPerFile = 10)
+    val input = tableOf(in)
+
+    val crash = intercept[Exception] {
+      Resume.runAttempt(spark, input, out, filesPerChunk = 1, failAfterChunks = 1)
+    }
+    assert(crash.getMessage.startsWith("injected failure"), crash.getMessage)
+    assert(Resume.runAttempt(spark, input, out, filesPerChunk = 1) === 1)
+
+    assert(Resume.output(spark, out).count() === 20)
+    val manifest = spark.read.parquet(Resume.manifestPath(out))
+    assert(manifest.agg(sum("file_docs")).collect()(0).getLong(0) === 20)
+  }
+
   test("resume: torn chunk (data written, manifest missing) is rewritten idempotently") {
     val tmp = Files.createTempDirectory("resume2").toString
     val in = s"$tmp/in"; val out = s"$tmp/out"
